@@ -1,10 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship end-to-end Engine build on sf0.001.
-``queries()`` exposes one named query per implemented operator family
+``queries()`` exposes one named gate per implemented operator family
 (SURVEY.md §2 + LLM-pipeline extensions); ``oracle_sql()`` carries the
-DuckDB-equivalent SQL for each (omitted only for approximate ANN ops,
-which have no exact SQL oracle).
+DuckDB-equivalent SQL for each, ANN gates included.  ``oracles.ORACLES``
+is the one registry: a gate is live exactly when it has an oracle.
 
 Determinism rules used throughout (both engines):
 - money sums go through integer cents (``cast(round(x*10000) as bigint)``)
@@ -2524,9 +2524,7 @@ def ivfpq_index_lifecycle_embeddings(
     batch through the probed-cells ADC scan
     (operators/similarity.py:ivfpq_index_build/delete/search).  The
     oracle is the ivfpq_search replay with only the candidate scan
-    filtered to survivors — standing-model semantics, not a rebuild.
-
-    STAGED for the round-12 gate window (oracles.ORACLES_STAGED_R12)."""
+    filtered to survivors — standing-model semantics, not a rebuild."""
     from dbt_core_spark.operators.similarity import (
         ivfpq_index_build,
         ivfpq_index_delete,
@@ -2556,9 +2554,7 @@ def ivfpq_index_append_embeddings(
     (operators/similarity.py:ivfpq_index_append).  The oracle replays
     the search with the coarse seeds and codebook seeds drawn from
     the HISTORY slice only, while assignment/encode/scan cover the
-    full corpus — standing-model ingest semantics.
-
-    STAGED for the round-12 gate window (oracles.ORACLES_STAGED_R12)."""
+    full corpus — standing-model ingest semantics."""
     from dbt_core_spark.operators.similarity import (
         ivfpq_index_append,
         ivfpq_index_build,
@@ -2895,10 +2891,7 @@ def hybrid_retrieval_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     reciprocal-rank fusion with an exact dense cosine top-5 over the
     matching embedding queries.  Integer-exact end to end — BM25
     micro-unit scores, floor(1e9/(60+rank)) bigint RRF terms — so the
-    fused ranking hashes identically across engines.
-
-    WIRED into the round-8 gate window (r7-staged; pre-verified in
-    pytest against the same SQL through the validator's compare)."""
+    fused ranking hashes identically across engines."""
     from dbt_core_spark.operators.similarity import cosine_topk
     from dbt_core_spark.operators.textstats import (
         bm25_index,
@@ -2927,9 +2920,7 @@ def bm25_index_append_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus constants are refreshed from merged integer postings — and
     then serves the standard query workload.  The oracle is the full
     one-shot BM25 over the union, so the gate pins
-    append ≡ rebuild end to end.
-
-    WIRED into the round-8 gate window (r7-staged, pre-verified)."""
+    append ≡ rebuild end to end."""
     from dbt_core_spark.operators.textstats import (
         bm25_index,
         bm25_index_append,
@@ -2970,9 +2961,7 @@ def streaming_decontaminate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     confirmed by a stream-static join — stateless/append-mode, drained
     AvailableNow.  Emits the (doc_id, shingle) match stream, which is
     deterministic under ANY micro-batch split and equals the batch
-    recipe's matches (streaming/structured.py:streaming_decontaminate).
-
-    WIRED into the round-8 gate window (r7-staged, pre-verified)."""
+    recipe's matches (streaming/structured.py:streaming_decontaminate)."""
     from dbt_core_spark.streaming.structured import (
         run_to_memory,
         stream_source,
@@ -3001,9 +2990,7 @@ def perceptron_language_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-free integer batch update, so the DuckDB oracle replays the
     full training loop and the served scores bit-for-bit
     (operators/textstats.py:perceptron_train,perceptron_apply; the
-    kmeans_fixed replayed-training precedent).
-
-    WIRED into the round-8 gate window (r7-staged, pre-verified)."""
+    kmeans_fixed replayed-training precedent)."""
     from dbt_core_spark.operators.textstats import (
         perceptron_apply,
         perceptron_train,
@@ -3025,9 +3012,7 @@ def pr_curve_language_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     classification_metrics per threshold, pytest-pinned).  Cumulative
     bigint confusion counts down the threshold lattice, micro-unit
     ratios; the DuckDB oracle replays the perceptron training AND the
-    sweep's windows.
-
-    STAGED for the round-11 gate window (oracles.ORACLES_STAGED_R11)."""
+    sweep's windows."""
     from dbt_core_spark.operators.textstats import (
         perceptron_apply,
         perceptron_train,
@@ -3050,9 +3035,7 @@ def threshold_select_language_docs(spark: SparkSession, sf_dir: str) -> DataFram
     recall at equal F1; operators/textstats.py:select_threshold —
     one min-struct aggregate over the distinct-threshold-sized
     curve).  The DuckDB oracle replays the training, the sweep, and
-    the argmax.
-
-    STAGED for the round-12 gate window (oracles.ORACLES_STAGED_R12)."""
+    the argmax."""
     from dbt_core_spark.operators.textstats import (
         perceptron_apply,
         perceptron_train,
@@ -3081,9 +3064,7 @@ def bpe_train_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     The DuckDB oracle replays all 8 training steps ONE MERGE AT A
     TIME: per-step zipped-unnest pair counts, (count desc,
     lexicographic) argmax, and the boundary-safe double-space merge
-    replace — so the gate cross-checks the batching itself.
-
-    Wired into the round-11 gate window (r11 rotation)."""
+    replace — so the gate cross-checks the batching itself."""
     from dbt_core_spark.operators.corpus import bpe_train_batched
 
     docs = _t(spark, sf_dir, "documents")
@@ -3099,9 +3080,7 @@ def auc_language_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     en ids — Mann-Whitney U with midrank ties, all bigint (a constant
     scorer yields exactly 500000)
     (operators/textstats.py:auc_score).  The DuckDB oracle replays the
-    training, the distinct-score midrank windows, and the final fold.
-
-    STAGED for the round-11 gate window (oracles.ORACLES_STAGED_R11)."""
+    training, the distinct-score midrank windows, and the final fold."""
     from dbt_core_spark.operators.textstats import (
         auc_score,
         perceptron_apply,
@@ -3124,9 +3103,7 @@ def calibration_language_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     score — the does-the-score-mean-anything check run before a
     pr_curve threshold is picked
     (operators/textstats.py:score_calibration).  All integer; the
-    oracle replays binning, rates, and the floor-exact mean.
-
-    STAGED for the round-11 gate window (oracles.ORACLES_STAGED_R11)."""
+    oracle replays binning, rates, and the floor-exact mean."""
     from dbt_core_spark.operators.textstats import (
         perceptron_apply,
         perceptron_train,
@@ -3150,13 +3127,7 @@ def perceptron_ovr_language_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is routed to its argmax class (ties break by class name).
     Integer-exact; the DuckDB oracle replays all five training loops
     and the argmax serve bit-for-bit
-    (operators/textstats.py:perceptron_train_ovr,perceptron_apply_ovr).
-
-    STAGED for the round-9 gate window (oracles.ORACLES_STAGED_R9; the
-    r8 window is booked by the r7 verdict's staleness mandate) — until
-    wired, correctness evidence is the pytest pre-verification driving
-    this exact function against the staged SQL through the validator's
-    compare."""
+    (operators/textstats.py:perceptron_train_ovr,perceptron_apply_ovr)."""
     from dbt_core_spark.operators.textstats import (
         perceptron_apply_ovr,
         perceptron_train_ovr,
@@ -3176,10 +3147,7 @@ def perceptron_avg_language_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigint SUM of the per-epoch weight snapshots — Freund-Schapire
     averaging without division, still integer-exact, the oracle
     replays every epoch and sums the snapshot CTEs
-    (operators/textstats.py:perceptron_train_averaged).
-
-    STAGED for the round-9 gate window (oracles.ORACLES_STAGED_R9; see
-    perceptron_ovr_language_docs)."""
+    (operators/textstats.py:perceptron_train_averaged)."""
     from dbt_core_spark.operators.textstats import (
         perceptron_apply,
         perceptron_train_averaged,
@@ -3201,10 +3169,7 @@ def decontaminate_cut_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     text, keep the doc" action real pipelines want instead of
     whole-doc drops.  Returns (doc_id, text_clean, n_words,
     n_removed); exact DuckDB oracle replays grams → probe membership →
-    island merge → positional cut.
-
-    STAGED for the round-9 gate window (oracles.ORACLES_STAGED_R9; see
-    perceptron_ovr_language_docs)."""
+    island merge → positional cut."""
     from dbt_core_spark.operators.dedup import (
         contamination_spans,
         cut_dup_spans,
@@ -3226,10 +3191,7 @@ def ann_ivf_rebalance_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax); the emitted (vec_id, cell) table is the next index
     snapshot, exact in both engines including the deterministic fresh
     cell numbering (operators/similarity.py:ivf_index_rebalance —
-    completes the build/search/append lifecycle).
-
-    STAGED for the round-9 gate window (oracles.ORACLES_STAGED_R9; see
-    perceptron_ovr_language_docs)."""
+    completes the build/search/append lifecycle)."""
     from dbt_core_spark.operators.similarity import (
         ivf_index_build,
         ivf_index_rebalance,
@@ -3252,10 +3214,7 @@ def corpus_diff_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     old = docs without the %17==3 residue, new = docs without the
     %17==5 residue with every %13==0 text amended — exercising all
     four statuses (added/removed/changed/unchanged) through the single
-    hash-before-join full-outer plan (operators/corpus.py:corpus_diff).
-
-    STAGED for the round-9 gate window (oracles.ORACLES_STAGED_R9; see
-    perceptron_ovr_language_docs)."""
+    hash-before-join full-outer plan (operators/corpus.py:corpus_diff)."""
     from dbt_core_spark.operators.corpus import corpus_diff
 
     docs = _t(spark, sf_dir, "documents")
@@ -3277,10 +3236,7 @@ def ngram_loops_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     that repeats back-to-back ≥4 times (the prepended copies plus the
     original opening), exactly the LLM loop failure shape.
     ngram_loop_runs(n=4, min_repeats=3) must emit identical maximal
-    runs in both engines (operators/corpus.py:ngram_loop_runs).
-
-    STAGED for the round-9 gate window (oracles.ORACLES_STAGED_R9; see
-    perceptron_ovr_language_docs)."""
+    runs in both engines (operators/corpus.py:ngram_loop_runs)."""
     from dbt_core_spark.operators.corpus import ngram_loop_runs
     from dbt_core_spark.operators.dedup import normalized_words
 
@@ -3300,10 +3256,7 @@ def vocab_drift_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Term-distribution drift between the corpus_diff_docs snapshots
     (old = %17!=3, new = %17!=5 with %13 texts amended): top-50 terms
     by absolute contribution to KL(new‖old), micro-nat integers
-    (operators/corpus.py:vocab_drift).
-
-    STAGED for the round-9 gate window (oracles.ORACLES_STAGED_R9; see
-    perceptron_ovr_language_docs)."""
+    (operators/corpus.py:vocab_drift)."""
     from dbt_core_spark.operators.corpus import vocab_drift
 
     docs = _t(spark, sf_dir, "documents")
@@ -3326,10 +3279,7 @@ def streaming_bm25_serve_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/structured.py:stream_serve_foreach_batch).  Per-query
     top-k is request-row-local, so the drained union is identical to
     the one-shot batch ranking under ANY micro-batch split — the
-    oracle IS bm25_rank over the same corpus and queries.
-
-    STAGED for the round-9 gate window (oracles.ORACLES_STAGED_R9; see
-    perceptron_ovr_language_docs)."""
+    oracle IS bm25_rank over the same corpus and queries."""
     import tempfile
 
     from dbt_core_spark.operators.textstats import (
@@ -3382,10 +3332,7 @@ def multimodal_phash_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/multimodal.py:phash_media/phash_dup_pairs).  WAV rows
     hash to NULL and drop.  Everything is integer, so the DuckDB
     oracle replays the whole pipeline exactly from the gradient
-    formula.
-
-    STAGED for the round-10 gate window (oracles.ORACLES_STAGED_R10;
-    see streaming_ann_serve_embeddings)."""
+    formula."""
     from dbt_core_spark.operators.multimodal import (
         phash_dup_pairs,
         phash_media,
@@ -3425,11 +3372,7 @@ def streaming_ann_serve_embeddings(spark: SparkSession, sf_dir: str) -> DataFram
     rebuilt per batch; per-batch cost is the batch's probed cells
     only).  Per-query top-k is request-row-local, so the drained union
     is identical to the one-shot search under ANY micro-batch split —
-    the oracle IS ann_ivf_index_query_embeddings.
-
-    STAGED for the round-10 gate window (oracles.ORACLES_STAGED_R10);
-    pre-verified at two scales + forced-split pin + hostile-corpus
-    fuzz before wiring (the r8→r9 staging protocol)."""
+    the oracle IS ann_ivf_index_query_embeddings."""
     import tempfile
 
     from dbt_core_spark.operators.similarity import (
@@ -3490,10 +3433,7 @@ def multimodal_video_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     never all-pairs (operators/multimodal.py:synth_video/
     video_frame_hashes/video_dup_pairs; the aHash core is shared with
     phash_media).  Everything is integer, so the DuckDB oracle replays
-    the whole pipeline from the gradient formula.
-
-    STAGED for the round-10 gate window (oracles.ORACLES_STAGED_R10;
-    see streaming_ann_serve_embeddings)."""
+    the whole pipeline from the gradient formula."""
     from dbt_core_spark.operators.multimodal import (
         synth_video,
         video_dup_pairs,
@@ -3522,9 +3462,7 @@ def multimodal_video_align_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair surfaces at one consistent offset with nf-1 matched frames
     (operators/multimodal.py:video_dup_pairs_aligned).  All integer;
     the DuckDB oracle replays hashes, offset grouping, and the
-    best-offset window from the gradient formula.
-
-    STAGED for the round-11 gate window (oracles.ORACLES_STAGED_R11)."""
+    best-offset window from the gradient formula."""
     from dbt_core_spark.operators.multimodal import (
         synth_video,
         video_dup_pairs_aligned,
@@ -3547,10 +3485,7 @@ def bm25_index_delete_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the two corpus scalars re-aggregate from surviving postings —
     bit-identical to rebuilding on the remaining corpus, which is what
     the oracle replays), then serve the %13 query batch from the
-    shrunken index (operators/textstats.py:bm25_index_delete).
-
-    STAGED for the round-10 gate window (oracles.ORACLES_STAGED_R10;
-    see streaming_ann_serve_embeddings)."""
+    shrunken index (operators/textstats.py:bm25_index_delete)."""
     from dbt_core_spark.operators.textstats import (
         bm25_index,
         bm25_index_delete,
@@ -3573,10 +3508,7 @@ def ann_ivf_index_delete_embeddings(
     no assignment shift; FAISS remove_ids), then serve the %20 query
     batch — exactly the full-index ranking with deleted neighbors gone
     (operators/similarity.py:ivf_index_delete; the oracle replays
-    standing-centroid semantics, not a rebuild).
-
-    STAGED for the round-10 gate window (oracles.ORACLES_STAGED_R10;
-    see streaming_ann_serve_embeddings)."""
+    standing-centroid semantics, not a rebuild)."""
     from dbt_core_spark.operators.similarity import (
         ivf_index_build,
         ivf_index_delete,
@@ -3608,9 +3540,7 @@ def ann_ivf_lifecycle_embeddings(
     — what this gate pins is their COMPOSITION: the oracle replays
     delete → rebalance → search end-to-end in one SQL query
     (operators/similarity.py:ivf_index_delete,ivf_index_rebalance,
-    ivf_index_search).
-
-    STAGED for the round-11 gate window (oracles.ORACLES_STAGED_R11)."""
+    ivf_index_search)."""
     from dbt_core_spark.operators.similarity import (
         ivf_index_build,
         ivf_index_delete,
@@ -3640,10 +3570,7 @@ def classifier_eval_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the gold ``lang`` labels — per-class confusion counts and
     precision/recall/F1 in exact integer micro units
     (operators/textstats.py:classification_metrics; F1 via the
-    2tp/(2tp+fp+fn) identity so it stays one bigint division).
-
-    STAGED for the round-10 gate window (oracles.ORACLES_STAGED_R10;
-    see streaming_ann_serve_embeddings)."""
+    2tp/(2tp+fp+fn) identity so it stays one bigint division)."""
     from dbt_core_spark.operators.textstats import classification_metrics
 
     docs = _t(spark, sf_dir, "documents")
@@ -3669,9 +3596,7 @@ def credit_card_detect_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate regex accepts single spaces between digit groups, so a
     document whose text END in digits would otherwise merge with the
     appended card into one >19-digit non-candidate and mask the
-    planted positive on both engines.
-
-    Wired in the round-10 gate window (r10 rotation)."""
+    planted positive on both engines."""
     from dbt_core_spark.operators.textstats import detect_credit_cards
 
     docs = _t(spark, sf_dir, "documents").filter(
@@ -3698,10 +3623,7 @@ def naive_bayes_incremental_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     %3==0 slice — bit-identical to retraining on the union, so the
     oracle IS naive_bayes_language_docs (the bm25_index_append
     append-≡-rebuild contract, applied to model training;
-    operators/textstats.py:naive_bayes_counts/merge/finalize).
-
-    STAGED for the round-10 gate window (oracles.ORACLES_STAGED_R10;
-    see streaming_ann_serve_embeddings)."""
+    operators/textstats.py:naive_bayes_counts/merge/finalize)."""
     from dbt_core_spark.operators.textstats import (
         naive_bayes_apply,
         naive_bayes_counts,
@@ -3730,10 +3652,7 @@ def retrieval_eval_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     relevant set is the doc_id%11==3 slice sharing its ``source`` —
     with per-query MRR@5 / recall@5 / NDCG@5 in exact integer micro
     units (operators/textstats.py:retrieval_metrics; discounts floored
-    per term, ratios as bigint division).
-
-    STAGED for the round-10 gate window (oracles.ORACLES_STAGED_R10;
-    see streaming_ann_serve_embeddings)."""
+    per term, ratios as bigint division)."""
     from dbt_core_spark.operators.textstats import (
         bm25_rank,
         retrieval_metrics,
@@ -3762,10 +3681,7 @@ def oov_rate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     even-doc slice, OOV counts/rate over EVERY document — rising OOV on
     fresh slices is the retrain-the-tokenizer trigger
     (operators/corpus.py:oov_rate on textstats.build_vocab output).
-    Pure integer arithmetic end to end (bigint div, no floats).
-
-    STAGED for the round-10 gate window (oracles.ORACLES_STAGED_R10;
-    see streaming_ann_serve_embeddings)."""
+    Pure integer arithmetic end to end (bigint div, no floats)."""
     from dbt_core_spark.operators.corpus import oov_rate
     from dbt_core_spark.operators.textstats import build_vocab
 
@@ -3789,10 +3705,7 @@ def audio_fingerprint_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     never all-pairs (operators/multimodal.py:audio_energy_frames/
     audio_fingerprint/audio_dup_pairs).  Everything after the PCM16
     decode is exact int64, so the DuckDB oracle replays the pipeline
-    from the 'am' synthesis formula.
-
-    STAGED for the round-10 gate window (oracles.ORACLES_STAGED_R10;
-    see streaming_ann_serve_embeddings)."""
+    from the 'am' synthesis formula."""
     from dbt_core_spark.operators.multimodal import (
         audio_dup_pairs,
         audio_energy_frames,
@@ -3820,10 +3733,7 @@ def naive_bayes_language_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     weight is a floor-rounded micro-nat bigint and serving scores are
     exact bigint sums, so the DuckDB oracle replays training + serving
     bit-for-bit (operators/textstats.py:naive_bayes_train/apply — the
-    count-based complement of the perceptron tier).
-
-    STAGED for the round-10 gate window (oracles.ORACLES_STAGED_R10;
-    see streaming_ann_serve_embeddings)."""
+    count-based complement of the perceptron tier)."""
     from dbt_core_spark.operators.textstats import (
         naive_bayes_apply,
         naive_bayes_train,
@@ -3850,9 +3760,7 @@ def minhash_index_delete_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     then match the doc_id >= 400 batch against the SHRUNK index through
     the banded candidate join + exact-Jaccard verify.  The DuckDB
     oracle replays the match over the surviving corpus — a tombstoned
-    doc appearing in any pair fails the gate.
-
-    STAGED for the round-12 gate window (oracles.ORACLES_STAGED_R12)."""
+    doc appearing in any pair fails the gate."""
     from dbt_core_spark.operators.dedup import (
         minhash_index,
         minhash_index_delete,
@@ -3879,9 +3787,7 @@ def langid_nb_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor-rounded micro-nat bigint and serving scores are exact bigint
     sums, so the DuckDB oracle replays training + serving bit-for-bit
     (operators/textstats.py:char_ngrams/langid_train/langid_apply —
-    naive_bayes_train with the char-n-gram tokenizer).
-
-    STAGED for the round-12 gate window (oracles.ORACLES_STAGED_R12)."""
+    naive_bayes_train with the char-n-gram tokenizer)."""
     from dbt_core_spark.operators.textstats import langid_apply, langid_train
 
     docs = _t(spark, sf_dir, "documents")
@@ -3899,9 +3805,7 @@ def langid_eval_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     predictions on the held-out third scored against the gold ``lang``
     labels — per-class confusion counts and precision/recall/F1 in
     exact integer micro units (the classifier_eval_docs lattice,
-    closing the eval loop on the r11 langid upgrade).
-
-    STAGED for the round-12 gate window (oracles.ORACLES_STAGED_R12)."""
+    closing the eval loop on the r11 langid upgrade)."""
     from dbt_core_spark.operators.textstats import classification_metrics
 
     docs = _t(spark, sf_dir, "documents")
@@ -3922,9 +3826,7 @@ def knn_classify_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     matmul-batched ``cosine_topk_blas`` path (round-9dp rank
     contract); the vote tie-break is pinned votes DESC → best rank
     ASC → label ASC, so the DuckDB oracle replays search + vote
-    bit-for-bit (operators/similarity.py:knn_classify).
-
-    STAGED for the round-12 gate window (oracles.ORACLES_STAGED_R12)."""
+    bit-for-bit (operators/similarity.py:knn_classify)."""
     from dbt_core_spark.operators.similarity import knn_classify
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -3939,9 +3841,7 @@ def knn_eval_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``label`` column — per-class confusion counts and
     precision/recall/F1 in exact integer micro units (the
     classifier_eval_docs lattice closing the eval loop on the kNN
-    family, as langid_eval does for the trained langid).
-
-    STAGED for the round-12 gate window (oracles.ORACLES_STAGED_R12)."""
+    family, as langid_eval does for the trained langid)."""
     from dbt_core_spark.operators.textstats import classification_metrics
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -3968,9 +3868,7 @@ def knn_classify_ivf_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ANN neighbor frame — classification cost per query drops by
     ~n_cells/n_probe with no corpus pass at serve time
     (operators/similarity.py:ivf_index_build/ivf_index_search/
-    knn_classify with ``neighbors=``).
-
-    STAGED for the round-12 gate window (oracles.ORACLES_STAGED_R12)."""
+    knn_classify with ``neighbors=``)."""
     from dbt_core_spark.operators.similarity import (
         ivf_index_build,
         ivf_index_search,
@@ -4018,9 +3916,7 @@ def stump_train_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break is pinned (error ASC → feature ASC → threshold ASC),
     so the DuckDB oracle replays the whole search bit-for-bit — the
     learned-threshold upgrade over hand-set Gopher-style cutoffs
-    (operators/textstats.py:stump_train).
-
-    STAGED for the round-12 gate window (oracles.ORACLES_STAGED_R12)."""
+    (operators/textstats.py:stump_train)."""
     from dbt_core_spark.operators.textstats import stump_train
 
     feats = _stump_features(spark, sf_dir).filter("doc_id % 3 != 0")
@@ -4032,9 +3928,7 @@ def stump_classify_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the held-out doc_id%3=0 slice through the learned
     ``value <= threshold`` rule — whole-stage-codegen CASE, no
     driver collect, NULL chosen-feature → NULL pred (surfaced, not
-    guessed) (operators/textstats.py:stump_apply).
-
-    STAGED for the round-12 gate window (oracles.ORACLES_STAGED_R12)."""
+    guessed) (operators/textstats.py:stump_apply)."""
     from dbt_core_spark.operators.textstats import stump_apply
 
     stump = stump_train_docs(spark, sf_dir)
@@ -4052,9 +3946,7 @@ def group_split_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     machinery); singletons hash as their own group, so the
     distribution degrades exactly to assign_splits as the pair graph
     thins (operators/textstats.py:group_split).  Oracle = recursive-
-    CTE components + the shared md5-bucket lattice.
-
-    STAGED for the round-12 gate window (oracles.ORACLES_STAGED_R12)."""
+    CTE components + the shared md5-bucket lattice."""
     from dbt_core_spark.operators.dedup import ngram_jaccard_pairs
     from dbt_core_spark.operators.textstats import group_split
 
@@ -4070,9 +3962,7 @@ def classifier_summary_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     accuracy alone rewards majority-class prediction).  Exact integer
     identities over the per-class frame: Σtp·1e6 div Σn_gold and
     per-class-micro means with floor division
-    (operators/textstats.py:classification_summary).
-
-    STAGED for the round-12 gate window (oracles.ORACLES_STAGED_R12)."""
+    (operators/textstats.py:classification_summary)."""
     from dbt_core_spark.operators.textstats import classification_summary
 
     docs = _t(spark, sf_dir, "documents")
@@ -4093,9 +3983,7 @@ def strip_html_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     script/style/comment contents gone, tags → spaces, the six
     standard entities decoded with &amp; last (double-escape rule),
     whitespace collapsed.  Pure JVM regexp chain, zero shuffles
-    (operators/textstats.py:strip_html).
-
-    STAGED for the round-12 gate window (oracles.ORACLES_STAGED_R12)."""
+    (operators/textstats.py:strip_html)."""
     from dbt_core_spark.operators.textstats import strip_html
 
     docs = _t(spark, sf_dir, "documents")
@@ -4120,9 +4008,7 @@ def pagerank_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup clusters (the graph-tier verb on top of
     connected_components).  Fixed-iteration integer semantics make
     the DuckDB oracle an exact 3-step unroll — float PageRank has no
-    such oracle (operators/graphs.py:pagerank).
-
-    STAGED for the round-12 gate window (oracles.ORACLES_STAGED_R12)."""
+    such oracle (operators/graphs.py:pagerank)."""
     from dbt_core_spark.operators.dedup import ngram_jaccard_pairs
     from dbt_core_spark.operators.graphs import pagerank
 
@@ -4145,9 +4031,7 @@ def ppr_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-seeds earn mass only through in-edges, so disconnected
     non-seeds stay exactly 0 (operators/graphs.py:pagerank with
     ``seeds=``).  Oracle = the same exact 3-sweep unroll with the
-    seed predicate in the base/restart terms.
-
-    STAGED for the round-12 gate window (oracles.ORACLES_STAGED_R12)."""
+    seed predicate in the base/restart terms."""
     from dbt_core_spark.operators.dedup import ngram_jaccard_pairs
     from dbt_core_spark.operators.graphs import pagerank
 
@@ -4167,9 +4051,7 @@ def group_kfold_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-safe K-fold assignment (r11): fold = md5 bucket of the
     duplicate-cluster root mod 5 — GroupKFold semantics over learned
     dup groups, the cross-validation sibling of group_split_docs
-    (operators/textstats.py:group_kfold).
-
-    STAGED for the round-12 gate window (oracles.ORACLES_STAGED_R12)."""
+    (operators/textstats.py:group_kfold)."""
     from dbt_core_spark.operators.dedup import ngram_jaccard_pairs
     from dbt_core_spark.operators.textstats import group_kfold
 
@@ -4190,9 +4072,7 @@ def streaming_knn_serve_embeddings(
     the one-shot classification under ANY micro-batch split — the
     oracle IS knn_classify_ivf_embeddings' 3-scale-verified replay
     (operators/similarity.py + streaming/structured.py:
-    stream_serve_foreach_batch — batch_id-keyed idempotent writes).
-
-    STAGED for the round-12 gate window (oracles.ORACLES_STAGED_R12)."""
+    stream_serve_foreach_batch — batch_id-keyed idempotent writes)."""
     import tempfile
 
     from dbt_core_spark.operators.similarity import (
@@ -4262,9 +4142,7 @@ def corpus_profile_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     registry publishes next to each source and diffs across snapshots
     (operators/corpus.py:corpus_profile; datasheets-for-datasets
     practice).  A NULL source profiles as its own group; its top_lang
-    is NULL via standard join semantics on both engines.
-
-    STAGED for the round-12 gate window (oracles.ORACLES_STAGED_R12)."""
+    is NULL via standard join semantics on both engines."""
     from dbt_core_spark.operators.corpus import corpus_profile
 
     return corpus_profile(_t(spark, sf_dir, "documents"))
@@ -4280,9 +4158,7 @@ def centroid_classify_embeddings(
     the embedding-classifier family (kNN = corpus search; this =
     constant-size model).  Integer-exact end-to-end, oracle replays
     training + serving bit-for-bit
-    (operators/similarity.py:centroid_classify).
-
-    STAGED for the round-12 gate window (oracles.ORACLES_STAGED_R12)."""
+    (operators/similarity.py:centroid_classify)."""
     from dbt_core_spark.operators.similarity import centroid_classify
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -4295,250 +4171,11 @@ def centroid_classify_embeddings(
 # =========================================================================
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # NOTE on ordering: the driver's correctness gate checks the FIRST 50
-    # keys (insertion order).  Rotation policy (pinned by the
-    # rotation-guard tests in tests/test_plans.py): the window leads
-    # with (a) never-driver-verified queries, then (b) the
-    # least-recently-driver-green rows, OLDEST FIRST — the r5 verdict
-    # upgraded (b) to a mechanical invariant: with 158 queries and a
-    # 50-row gate the steady-state rotation period is ~3 rounds, so the
-    # window must always be exactly the staleness cohort (no in-window
-    # row may be fresher than any out-of-window ever-verified row).
-    # ROUND-12 WINDOW (executed this round, r11 verdict item 4): the 11
-    # staged gates on optimizer-touched code paths are WIRED (their SQL
-    # moved from ORACLES_STAGED_R12 into ORACLES — each pre-verified at
-    # 3 scales + TZ/fuzz); the window leads with the optimizer-touched
-    # families the driver never re-oracled post-r11-change — those 11
-    # plus the 5 touched r9-green rows — then the ENTIRE 34-row
-    # r8-green remainder (the staleness cohort, 4 rounds stale entering
-    # r12, mandatory in-window).  The original "20 staged + 30 r8" plan
-    # recorded here in r11 is NOT executable under the rotation guards:
-    # every never-verified wired row must sit in-window AND the whole
-    # r8 cohort must too — 20 + 34 > 50 (and 30 r8 in-window leaves 4
-    # rows ≥4 rounds stale outside, the hard bound).  The 9 untouched
-    # staged gates therefore stay in ORACLES_STAGED_R12 and wire with
-    # the r13 rotation.  The 5 touched r10-green rows rotate in with
-    # the r10 cohort (r14); the r9 cohort leads r13.
-    return {
-        # ---- ROUND-12 WINDOW (r11 verdict item 4): leads with the
-        # ---- optimizer-touched families the driver never re-oracled
-        # ---- post-change — 11 never-driver-verified staged gates +
-        # ---- 5 touched r9-green rows.  The 5 touched r10-green rows
-        # ---- (naive_bayes_language/incremental, bm25_index_delete,
-        # ---- bm25_rank, streaming_ann_serve) CANNOT enter without
-        # ---- violating the oldest-first invariant while r9 rows wait
-        # ---- (test_gate_window_max_staleness_invariant); they rotate
-        # ---- in with the r10 cohort.  minhash_lsh_docs (r9, touched
-        # ---- only by the entry-9 lazy seal; its machinery is covered
-        # ---- in-window by incremental_dedup + minhash_index_delete)
-        # ---- yields its slot and leads the r13 window at 51. ----
-        "langid_nb_docs": langid_nb_docs,
-        "langid_eval_docs": langid_eval_docs,
-        "classifier_summary_docs": classifier_summary_docs,
-        "threshold_select_language_docs": threshold_select_language_docs,
-        "cc_dedup_docs": cc_dedup_docs,
-        "group_split_docs": group_split_docs,
-        "group_kfold_docs": group_kfold_docs,
-        "incremental_dedup_docs": incremental_dedup_docs,
-        "minhash_index_delete_docs": minhash_index_delete_docs,
-        "pagerank_docs": pagerank_docs,
-        "ppr_docs": ppr_docs,
-        "streaming_bm25_serve_docs": streaming_bm25_serve_docs,
-        "streaming_knn_serve_embeddings": streaming_knn_serve_embeddings,
-        "knn_classify_ivf_embeddings": knn_classify_ivf_embeddings,
-        "perceptron_ovr_language_docs": perceptron_ovr_language_docs,
-        "perceptron_avg_language_docs": perceptron_avg_language_docs,
-        # ---- last green r8: the ENTIRE 34-row remainder — the
-        # ---- staleness cohort (4 rounds stale entering r12,
-        # ---- MANDATORY in-window per the rotation invariant) ----
-        "ann_ivf_index_append_embeddings": ann_ivf_index_append_embeddings,
-        "webdataset_pipeline_docs": webdataset_pipeline_docs,
-        "semantic_dedup_incremental_embeddings": semantic_dedup_incremental_embeddings,
-        "hash_embed_docs": hash_embed_docs,
-        "ann_ivf_index_query_embeddings": ann_ivf_index_query_embeddings,
-        "dsir_score_docs": dsir_score_docs,
-        "dup_span_docs": dup_span_docs,
-        "interarrival_stats_events": interarrival_stats_events,
-        "funnel_stream_events": funnel_stream_events,
-        "range_join_events": range_join_events,
-        "contrastive_pairs_docs": contrastive_pairs_docs,
-        "funnel_events": funnel_events,
-        "engine_snapshot_scd2": engine_snapshot_scd2,
-        "engine_microbatch_day": engine_microbatch_day,
-        "engine_generic_test_failures": engine_generic_test_failures,
-        "engine_insert_overwrite": engine_insert_overwrite,
-        "engine_python_model": engine_python_model,
-        "engine_view_table_ephemeral": engine_view_table_ephemeral,
-        "dedup_exact_docs": dedup_exact_docs,
-        "pipeline_clean_corpus": pipeline_clean_corpus,
-        "dedup_fingerprint_docs": dedup_fingerprint_docs,
-        "ngram_jaccard_docs": ngram_jaccard_docs,
-        "winnow_fingerprint_docs": winnow_fingerprint_docs,
-        "pii_scrub_docs": pii_scrub_docs,
-        "chunk_documents_docs": chunk_documents_docs,
-        "assign_splits_docs": assign_splits_docs,
-        "text_quality_docs": text_quality_docs,
-        "language_id_docs": language_id_docs,
-        "token_counts_docs": token_counts_docs,
-        "cosine_pairs_embeddings": cosine_pairs_embeddings,
-        "cosine_topk_blas_embeddings": cosine_topk_blas_embeddings,
-        "streaming_hourly_rollup": streaming_hourly_rollup,
-        "multimodal_features_docs": multimodal_features_docs,
-        "quantile_sketch_events": quantile_sketch_events,
-        # ---------------- past the 50-query gate cap ----------------
-        # ---- r13 window leads: the touched r9 row that did not fit
-        # ---- (the 9 remaining staged gates stay in ORACLES_STAGED_R12
-        # ---- — wiring them now would strand never-verified rows
-        # ---- outside the window, see the oracles.py rotation note —
-        # ---- and wire with the r13 rotation), then the r9 cohort ----
-        "minhash_lsh_docs": minhash_lsh_docs,
-        # ---- remaining rows, prior order (r11-green window rows,
-        # ---- then the r9 and r10 cohorts) ----
-        "multimodal_video_align_docs": multimodal_video_align_docs,
-        "pr_curve_language_docs": pr_curve_language_docs,
-        "ann_ivf_lifecycle_embeddings": ann_ivf_lifecycle_embeddings,
-        "auc_language_docs": auc_language_docs,
-        "calibration_language_docs": calibration_language_docs,
-        "bpe_train_docs": bpe_train_docs,
-        "kmv_jaccard_sources": kmv_jaccard_sources,
-        "count_anomalies_events": count_anomalies_events,
-        "pipeline_quality_docs": pipeline_quality_docs,
-        "ivfpq_search_embeddings": ivfpq_search_embeddings,
-        "multimodal_resize_ppm": multimodal_resize_ppm,
-        "wav_spectrogram_docs": wav_spectrogram_docs,
-        "curriculum_order_docs": curriculum_order_docs,
-        "pmi_collocations_docs": pmi_collocations_docs,
-        "tfidf_cosine_pairs_docs": tfidf_cosine_pairs_docs,
-        "asof_tolerance_events": asof_tolerance_events,
-        "cohort_retention_events": cohort_retention_events,
-        "detect_script_docs": detect_script_docs,
-        "cms_merge_halves": cms_merge_halves,
-        "journey_paths_events": journey_paths_events,
-        "percentiles_by_group": percentiles_by_group,
-        "q22_global_avg_filter": q22_global_avg_filter,
-        "hourly_event_rollup": hourly_event_rollup,
-        "map_struct_status_counts": map_struct_status_counts,
-        "running_revenue_by_customer": running_revenue_by_customer,
-        "rolling_7day_order_totals": rolling_7day_order_totals,
-        "multi_granularity_rollup": multi_granularity_rollup,
-        "stats_by_returnflag": stats_by_returnflag,
-        "dynamic_pivot_events": dynamic_pivot_events,
-        "q19_or_predicates": q19_or_predicates,
-        "customers_without_orders": customers_without_orders,
-        "rollup_quantity": rollup_quantity,
-        "unpivot_status_counts": unpivot_status_counts,
-        "set_ops_statuses": set_ops_statuses,
-        "generate_series_powers": generate_series_powers,
-        "hybrid_retrieval_docs": hybrid_retrieval_docs,
-        "bm25_index_append_docs": bm25_index_append_docs,
-        "streaming_decontaminate_docs": streaming_decontaminate_docs,
-        "perceptron_language_docs": perceptron_language_docs,
-        "engine_compaction": engine_compaction,
-        "q4_order_priority": q4_order_priority,
-        "q13_customer_distribution": q13_customer_distribution,
-        "q14_promo_revenue_ratio": q14_promo_revenue_ratio,
-        "q17_small_quantity_revenue": q17_small_quantity_revenue,
-        "kmeans_embeddings": kmeans_embeddings,
-        "cluster_curation_embeddings": cluster_curation_embeddings,
-        "kmeans_incremental_embeddings": kmeans_incremental_embeddings,
-        "dup_span_cut_docs": dup_span_cut_docs,
-        "containment_pairs_docs": containment_pairs_docs,
-        "ann_recall_ivf_embeddings": ann_recall_ivf_embeddings,
-        "decontaminate_cut_docs": decontaminate_cut_docs,
-        "corpus_diff_docs": corpus_diff_docs,
-        "ngram_loops_docs": ngram_loops_docs,
-        "vocab_drift_docs": vocab_drift_docs,
-        "ann_ivf_rebalance_embeddings": ann_ivf_rebalance_embeddings,
-        "engine_streaming_table": engine_streaming_table,
-        "dedup_embedding_docs": dedup_embedding_docs,
-        "simhash_pairs_docs": simhash_pairs_docs,
-        "streaming_session_rollup": streaming_session_rollup,
-        "multimodal_frame_sample": multimodal_frame_sample,
-        "gopher_repetition_docs": gopher_repetition_docs,
-        "source_cap_docs": source_cap_docs,
-        "boilerplate_ngram_docs": boilerplate_ngram_docs,
-        "decontaminate_docs": decontaminate_docs,
-        "tfidf_top_terms_docs": tfidf_top_terms_docs,
-        "ngram_lm_docs": ngram_lm_docs,
-        "pool_embeddings_by_label": pool_embeddings_by_label,
-        "stratified_sample_docs": stratified_sample_docs,
-        "pack_sequences_docs": pack_sequences_docs,
-        "xdb_datetime_functions": xdb_datetime_functions,
-        "simhash_docs": simhash_docs,
-        "cosine_topk_embeddings": cosine_topk_embeddings,
-        "q1_pricing_summary": q1_pricing_summary,
-        "q2_min_price_supplier": q2_min_price_supplier,
-        "q3_shipping_priority": q3_shipping_priority,
-        "q5_local_supplier_volume": q5_local_supplier_volume,
-        "q6_forecast_revenue": q6_forecast_revenue,
-        "q7_volume_shipping": q7_volume_shipping,
-        "q8_market_share": q8_market_share,
-        "q9_product_profit": q9_product_profit,
-        "q10_returned_items": q10_returned_items,
-        "q11_important_parts": q11_important_parts,
-        "q12_late_priority_lines": q12_late_priority_lines,
-        "q15_top_supplier": q15_top_supplier,
-        "q16_supplier_count": q16_supplier_count,
-        "q18_large_orders": q18_large_orders,
-        "q20_part_share_suppliers": q20_part_share_suppliers,
-        "q21_waiting_suppliers": q21_waiting_suppliers,
-        "xdb_string_functions": xdb_string_functions,
-        "xdb_listagg_nations": xdb_listagg_nations,
-        "xdb_date_spine": xdb_date_spine,
-        "xdb_arrays": xdb_arrays,
-        "engine_incremental_merge": engine_incremental_merge,
-        "line_dedup_docs": line_dedup_docs,
-        "streaming_ann_serve_embeddings": streaming_ann_serve_embeddings,
-        "multimodal_phash_dedup_docs": multimodal_phash_dedup_docs,
-        "naive_bayes_language_docs": naive_bayes_language_docs,
-        "naive_bayes_incremental_docs": naive_bayes_incremental_docs,
-        "audio_fingerprint_dedup_docs": audio_fingerprint_dedup_docs,
-        "oov_rate_docs": oov_rate_docs,
-        "retrieval_eval_docs": retrieval_eval_docs,
-        "credit_card_detect_docs": credit_card_detect_docs,
-        "classifier_eval_docs": classifier_eval_docs,
-        "bm25_index_delete_docs": bm25_index_delete_docs,
-        "ann_ivf_index_delete_embeddings": ann_ivf_index_delete_embeddings,
-        "multimodal_video_dedup_docs": multimodal_video_dedup_docs,
-        "epoch_shuffle_docs": epoch_shuffle_docs,
-        "bpe_pair_docs": bpe_pair_docs,
-        "tokenize_docs": tokenize_docs,
-        "build_vocab_docs": build_vocab_docs,
-        "bloom_membership_docs": bloom_membership_docs,
-        "hll_distinct_events": hll_distinct_events,
-        "kmv_distinct_users": kmv_distinct_users,
-        "quantize_embeddings_int8": quantize_embeddings_int8,
-        "mixture_sample_docs": mixture_sample_docs,
-        "multimodal_decode_wav_ppm": multimodal_decode_wav_ppm,
-        "pandas_udf_text_features": pandas_udf_text_features,
-        "sessionize_events": sessionize_events,
-        "asof_join_events_orders": asof_join_events_orders,
-        "pivot_status_by_priority": pivot_status_by_priority,
-        "json_extract_props": json_extract_props,
-        "lateral_top3_orders_per_segment": lateral_top3_orders_per_segment,
-        "recursive_month_revenue": recursive_month_revenue,
-        "window_top3_orders_per_customer": window_top3_orders_per_customer,
-        "bm25_rank_docs": bm25_rank_docs,
-        "decontaminate_bloom_docs": decontaminate_bloom_docs,
-        "ann_ivf_topk_embeddings": ann_ivf_topk_embeddings,
-        "ann_ivf_blas_topk_embeddings": ann_ivf_blas_topk_embeddings,
-        "ann_lsh_topk_embeddings": ann_lsh_topk_embeddings,
-        "semantic_dedup_embeddings": semantic_dedup_embeddings,
-        "semantic_dedup_blas_embeddings": semantic_dedup_blas_embeddings,
-        "zorder_orders": zorder_orders,
-        "skew_report_events": skew_report_events,
-        "event_transitions_events": event_transitions_events,
-        "lexical_stats_docs": lexical_stats_docs,
-        "classifier_score_docs": classifier_score_docs,
-        "cms_heavy_words": cms_heavy_words,
-        "pq_encode_embeddings": pq_encode_embeddings,
-        "pq_search_embeddings": pq_search_embeddings,
-        "normalize_text_docs": normalize_text_docs,
-        "gram_matrix_embeddings": gram_matrix_embeddings,
-        "random_projection_embeddings": random_projection_embeddings,
-        "bpe_token_counts_docs": bpe_token_counts_docs,
-        "streaming_cms_events": streaming_cms_events,
-    }
+    """Every gate, keyed by name: exactly the names ``oracle_sql()``
+    carries, each bound to the same-named function in this module."""
+    from oracles import ORACLES  # repo-root oracles.py
+
+    return {name: globals()[name] for name in ORACLES}
 
 
 def oracle_sql() -> dict[str, str]:

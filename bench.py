@@ -4,11 +4,11 @@
 Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-The headline set covers each operator family once: heavy relational
-(q1/q3/q5), windows (top-3, sessionize), time rollup, engine
-materialization end-to-end (view+ephemeral+table), incremental merge,
-microbatch, dedup (minhash LSH), similarity (LSH ANN — the scale path,
-not brute force), text stats, and the multimodal mapInPandas path.
+The headline set is a fixed 72-gate sample of the registry, kept
+unchanged so per-query medians stay comparable across BENCH records:
+heavy relational TPC-H, windows and time rollups, the engine
+materializations, dedup, similarity and ANN serving, retrieval, trained
+classifiers, streaming, and the multimodal mapInPandas paths.
 
 Additionally reports ``parse_ms_per_model`` — the analog of the
 reference's only published benchmark (dbt parse of 2000 trivial models,
@@ -46,82 +46,41 @@ HEADLINE = [
     "cosine_topk_blas_embeddings",
     "text_quality_docs",
     "multimodal_features_docs",
-    # round-2 gated additions: snapshot SCD-2, connected-components
-    # dedup, real WAV/PPM decode
     "engine_snapshot_scd2",
     "cc_dedup_docs",
     "multimodal_decode_wav_ppm",
-    # session-3 additions: TF-IDF (corpus wordcount + WindowGroupLimit
-    # top-k) and the deterministic HLL sketch
     "tfidf_top_terms_docs",
     "hll_distinct_events",
-    # round-3 corpus-composition additions: line-level boilerplate
-    # removal, corpus-trained bigram LM scoring, SemDeDup
     "line_dedup_docs",
     "ngram_lm_docs",
     "semantic_dedup_blas_embeddings",
-    # round-4 additions: the composed mixture->shuffle->tar->readback
-    # loader contract, build-once/search-many IVF, and hashing-trick
-    # embeddings
     "webdataset_pipeline_docs",
     "ann_ivf_index_query_embeddings",
     "hash_embed_docs",
-    # late-r4 additions: substring-level duplicate spans and DSIR
-    # hashed-unigram importance scoring
     "dup_span_docs",
     "dsir_score_docs",
-    # session-5 additions: PQ/ADC search (the compressed-storage ANN
-    # tier), bucketed range join, funnel fold, CMS heavy hitters,
-    # and the combined IVFADC architecture
     "pq_search_embeddings",
     "range_join_events",
     "funnel_events",
     "cms_heavy_words",
     "ivfpq_search_embeddings",
-    # round-5 addition: the streaming stateful funnel drained
-    # AvailableNow (applyInPandasWithState end-to-end)
     "funnel_stream_events",
-    # round-5 second-session addition: integer-exact k-means +
-    # cluster-balanced sample/outlier curation (zero-shuffle
-    # assignment, k·d-bounded update shuffle)
     "cluster_curation_embeddings",
-    # round-7 additions: the ranked-retrieval tier — BM25 one-shot,
-    # Bloom-prefiltered decontamination, and the composed hybrid
-    # (bm25_index→bm25_query + dense cosine → RRF) production path
-    # (hybrid is r8-staged: resolved from the module, not queries())
     "bm25_rank_docs",
     "decontaminate_bloom_docs",
     "hybrid_retrieval_docs",
-    # round-9 additions: the r8 operator families wired this round —
-    # dataset-management (snapshot diff + vocab drift), streaming
-    # index serving, and IVF hot-cell rebalance (NOTE: totals are not
-    # comparable to r8's 39-query set; compare per-query medians)
     "corpus_diff_docs",
     "vocab_drift_docs",
     "streaming_bm25_serve_docs",
     "ann_ivf_rebalance_embeddings",
-    # round-9 second wave (r10-staged, resolved from the module): the
-    # single-pass trainable filter and the audio half of multimodal
-    # dedup (NOTE: totals grow again — compare per-query medians)
     "naive_bayes_language_docs",
     "audio_fingerprint_dedup_docs",
-    # round-10 additions (wired this round): the image and video
-    # halves of multimodal dedup, streaming dense serving, and the
-    # index-deletion lifecycle (NOTE: totals grow again — compare
-    # per-query medians)
     "multimodal_phash_dedup_docs",
     "multimodal_video_dedup_docs",
     "streaming_ann_serve_embeddings",
     "bm25_index_delete_docs",
-    # round-10 second wave (r11-staged, resolved from the module):
-    # temporal-offset video alignment and the composed
-    # delete->rebalance->serve lifecycle
     "multimodal_video_align_docs",
     "ann_ivf_lifecycle_embeddings",
-    # r11 additions: the newly wired r11 eval/training gates plus the
-    # staged r12 gates (langid tier + minhash delete) — staged gates
-    # are benched the round they are built so their first driver BENCH
-    # rows land the round they are wired (the staged-gate convention)
     "pr_curve_language_docs",
     "auc_language_docs",
     "bpe_train_docs",
@@ -131,9 +90,6 @@ HEADLINE = [
     "threshold_select_language_docs",
     "ivfpq_index_lifecycle_embeddings",
     "ivfpq_index_append_embeddings",
-    # r11 second wave (r12-staged): kNN classification (exact + the
-    # IVF-accelerated serve shape), the decision-stump trained filter,
-    # and the leakage-safe group split
     "knn_classify_embeddings",
     "knn_classify_ivf_embeddings",
     "stump_classify_docs",
@@ -237,10 +193,7 @@ def main() -> None:
     import gc
 
     for name in only or HEADLINE:
-        # staged-for-next-round gates aren't in queries() yet but are
-        # real module callables — bench them so their first driver
-        # BENCH row lands the same round they're wired
-        fn = qs.get(name) or getattr(entrymod, name)
+        fn = qs[name]
         spark.sparkContext.setJobDescription(f"bench:{name}")  # guide §1.5
         samples = []
         for _ in range(repeats):

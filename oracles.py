@@ -1,9 +1,12 @@
-"""DuckDB oracle SQL for every entry in ``__spark_entry__.queries()``.
+"""DuckDB oracle SQL, one row per gate: ``ORACLES`` maps a gate name to
+its SQL and is the gate registry — ``__spark_entry__.queries()`` holds
+exactly the functions named here.
 
 Each oracle mirrors the Spark query's math exactly (same fold orders,
 same integer-cents aggregation, same tie-breakers) so the driver's
-value-hash comparison matches bit-for-bit.  Approximate ANN queries
-(`ann_*`) are deliberately absent — no exact SQL oracle exists.
+value-hash comparison matches bit-for-bit.  That includes the ANN gates
+(`ann_*`): each oracle replays the index's deterministic seeding,
+assignment and probe rules, so the approximate result is itself exact.
 """
 
 from __future__ import annotations
@@ -3328,9 +3331,7 @@ select vec_id, cell as cluster, d2 as dist2_e8 from bf where rn = 1
 
 
 # ---------------------------------------------------------------------------
-# The r6 retrieval tier (staged through ORACLES_STAGED_R7 during round 6,
-# promoted to the live registry at the r7 window recomposition — r6
-# verdict item 1).
+# Retrieval tier: BM25 ranking and Bloom-filtered decontamination.
 # ---------------------------------------------------------------------------
 
 ORACLES["bm25_rank_docs"] = f"""
@@ -3361,7 +3362,7 @@ from sc qualify rank <= 5
 
 # decontaminate_bloom is bit-identical to exact decontaminate by
 # construction (the confirm join kills every false positive), so its
-# staged oracle IS the decontaminate oracle with the same probe split
+# oracle IS the decontaminate oracle with the same probe split
 # the gate function will use (probes = doc_id % 7 = 0).
 ORACLES["decontaminate_bloom_docs"] = f"""
 with corpus as (
@@ -3389,21 +3390,10 @@ group by 1
 
 
 # ---------------------------------------------------------------------------
-# STAGED FOR ROUND 8 (not in ORACLES — the r7 gate window is fully booked
-# by the r6 verdict's staleness mandate, and never-verified rows must lead
-# the window).  Four r7 gates carry pytest-level DuckDB equivalence this
-# round (tests/test_corpus_ops.py::test_staged_r8_gates_match_oracles
-# drives each exact __spark_entry__ callable against its exact SQL through
-# the validator's compare): hybrid_retrieval_docs, bm25_index_append_docs,
-# streaming_decontaminate_docs, and perceptron_language_docs.  The r8
-# session: move these into ORACLES under the same keys and put the four
-# rows inside the 50-row window, leading (never-verified first), ahead of
-# the 4 displaced TPC-H rows (q4/q13/q14/q17) and the oldest r5-stale
-# fill.
+# Retrieval and perceptron depth: hybrid BM25+dense fusion, incremental
+# index append, streaming decontamination, and the binary perceptron.
 # ---------------------------------------------------------------------------
-ORACLES_STAGED_R8: dict[str, str] = {}
-
-ORACLES_STAGED_R8["hybrid_retrieval_docs"] = f"""
+ORACLES["hybrid_retrieval_docs"] = f"""
 with w as (select doc_id as id, unnest({_WORDS}) as term
            from documents where text is not null),
 tf as (select id, term, cast(count(*) as bigint) as tf from w group by 1, 2),
@@ -3459,19 +3449,19 @@ select query_id, doc_id, rrf_nano,
 from fused qualify rank <= 5
 """
 
-# append ≡ rebuild: the staged append gate serves the standard query
+# append ≡ rebuild: the append gate serves the standard query
 # workload from an index that absorbed an ingest batch incrementally,
 # so its oracle IS the one-shot BM25 over the full corpus (same SQL as
 # bm25_rank_docs) — any divergence in merged postings, refreshed idf,
 # or constants surfaces as a score/rank mismatch.
-ORACLES_STAGED_R8["bm25_index_append_docs"] = ORACLES["bm25_rank_docs"]
+ORACLES["bm25_index_append_docs"] = ORACLES["bm25_rank_docs"]
 
 
 # ingest-time decontamination: the streaming leg is stateless, so its
 # AvailableNow drain equals the batch 5-gram match pairs regardless of
 # micro-batch split — the oracle is the plain corpus×probe shingle join
 # at match granularity (batch decontaminate's pre-aggregation rows).
-ORACLES_STAGED_R8["streaming_decontaminate_docs"] = f"""
+ORACLES["streaming_decontaminate_docs"] = f"""
 with sh as (
     select doc_id, unnest(list_distinct(
         list_transform(range(1, greatest(len(w) - 3, 1)),
@@ -3568,22 +3558,8 @@ group by a.doc_id""")
 # epochs and the serving pass in SQL — any divergence in feature
 # hashing, the y·dot<=0 rule, or the batch update surfaces as a
 # score/pred mismatch.
-ORACLES_STAGED_R8["perceptron_language_docs"] = _perceptron_sql(
+ORACLES["perceptron_language_docs"] = _perceptron_sql(
     dim=64, epochs=3)
-
-
-# ---------------------------------------------------------------------------
-# ROUND 8: the four staged gates are wired (r7 verdict item 2) — the SQL
-# above moves into the live registry under the same keys; each row was
-# pre-verified end-to-end in pytest during r7 (the staged-gate compare
-# test) so the move introduces no new behavior.  Nothing is staged for
-# round 9 yet; new-operator gates that miss the r8 window go into
-# ORACLES_STAGED_R9 with the same pre-verification protocol.
-# ---------------------------------------------------------------------------
-ORACLES.update(ORACLES_STAGED_R8)
-ORACLES_STAGED_R8 = {}
-
-ORACLES_STAGED_R9: dict[str, str] = {}
 
 
 def _perceptron_ovr_sql(dim: int = 64, epochs: int = 3,
@@ -3665,19 +3641,19 @@ where rn = 1""")
 
 
 # r8 perceptron-family depth (r7 verdict item 5): multi-class one-vs-
-# rest training, staged for the round-9 window — the gate replays all
+# rest training — the gate replays all
 # five per-class training loops and the argmax routing in SQL.
-ORACLES_STAGED_R9["perceptron_ovr_language_docs"] = _perceptron_ovr_sql(
+ORACLES["perceptron_ovr_language_docs"] = _perceptron_ovr_sql(
     dim=64, epochs=3)
 
 
 # r8 decontamination-family depth: span-level decontamination — detect
 # probe 5-gram spans in the training corpus, cut them, keep the docs.
-# Staged for the round-9 window; replays grams → probe membership →
+# Replays grams → probe membership →
 # gaps-and-islands merge → positional cut (the dup_span_docs +
 # dup_span_cut_docs oracle machinery with probe membership in place of
 # the global dup count).
-ORACLES_STAGED_R9["decontaminate_cut_docs"] = f"""
+ORACLES["decontaminate_cut_docs"] = f"""
 with w as (select doc_id, {_WORDS} as ws from documents
            where text is not null and doc_id % 11 <> 0),
 g as (
@@ -3726,8 +3702,8 @@ from flag group by doc_id
 
 # r8 dataset-versioning verb: snapshot diff by content fingerprint —
 # hash per side BEFORE the full-outer join, NULL text marked distinct
-# from empty.  Staged for the round-9 window.
-ORACLES_STAGED_R9["corpus_diff_docs"] = """
+# from empty.
+ORACLES["corpus_diff_docs"] = """
 with o as (
   select doc_id as id,
          case when text is null then '<null>' else md5(text) end as old_md5
@@ -3752,8 +3728,8 @@ from o full outer join n on o.id = n.id
 # r8 degenerate-repetition (model-loop) detection: deterministic loops
 # injected (%19 docs get their first four normalized words prepended
 # three times), then maximal stride-4 equal-gram runs via a
-# per-(doc, phase) lag window and gaps-and-islands.  Staged r9.
-ORACLES_STAGED_R9["ngram_loops_docs"] = f"""
+# per-(doc, phase) lag window and gaps-and-islands.
+ORACLES["ngram_loops_docs"] = f"""
 with base as (
   select doc_id,
          case when doc_id % 19 = 0 and text is not null then
@@ -3798,8 +3774,8 @@ having count(*) >= 3
 # between the corpus_diff snapshots.  The double expression mirrors the
 # Spark operator's association exactly (double casts of exact integer
 # counts, one multiply per side, one divide, one ln, one final product
-# floored) so identical doubles floor identically.  Staged r9.
-ORACLES_STAGED_R9["vocab_drift_docs"] = f"""
+# floored) so identical doubles floor identically.
+ORACLES["vocab_drift_docs"] = f"""
 with osrc as (select text from documents
               where doc_id % 17 <> 3 and text is not null),
 ow as (select unnest({_WORDS}) as term from osrc),
@@ -3837,14 +3813,14 @@ where rn <= 50
 # r8 streaming serving: a standing BM25 index serving a query STREAM
 # via foreachBatch — per-query top-k is request-row-local, so the
 # drained union equals the one-shot ranking and the oracle IS
-# bm25_rank over the same corpus/queries.  Staged r9.
-ORACLES_STAGED_R9["streaming_bm25_serve_docs"] = ORACLES["bm25_rank_docs"]
+# bm25_rank over the same corpus/queries.
+ORACLES["streaming_bm25_serve_docs"] = ORACLES["bm25_rank_docs"]
 
 
 # r8 perceptron depth, second step: the AVERAGED batch perceptron —
 # served weights are the bigint sum of per-epoch snapshots (Freund &
-# Schapire averaging, sign-equivalent without division).  Staged r9.
-ORACLES_STAGED_R9["perceptron_avg_language_docs"] = _perceptron_sql(
+# Schapire averaging, sign-equivalent without division).
+ORACLES["perceptron_avg_language_docs"] = _perceptron_sql(
     dim=64, epochs=3, averaged=True)
 
 
@@ -3858,8 +3834,8 @@ ORACLES_STAGED_R9["perceptron_avg_language_docs"] = _perceptron_sql(
 # order — the base is the cents CTE, not the assignments, mirroring
 # the operator (a centroid cell with zero members must not collide
 # with a fresh id; r9 advice fix).  Cold members pass through
-# verbatim.  Staged r9.
-ORACLES_STAGED_R9["ann_ivf_rebalance_embeddings"] = f"""
+# verbatim.
+ORACLES["ann_ivf_rebalance_embeddings"] = f"""
 with v0 as (
     select vec_id, embedding::DOUBLE[] as e from embeddings
 ), v as (
@@ -3915,22 +3891,11 @@ from assign a left join hot h using (cell) where h.cell is null
 """
 
 
-# ---- round-9 rotation: the 8 staged gates are WIRED (the r8 window
-# precedent) — their SQL moves into ORACLES verbatim; each was
-# pre-verified at three scales, arrow-type-linted, and fuzz-covered
-# before this move, so the rotation adds no new behavior.  Gates
-# staged DURING round 9 land in ORACLES_STAGED_R10 with the same
-# pre-verification protocol.
-ORACLES.update(ORACLES_STAGED_R9)
-ORACLES_STAGED_R9 = {}
-
-ORACLES_STAGED_R10: dict[str, str] = {}
-
 # r9 dense-serving parity: a standing IVF index serving a query-vector
 # STREAM via foreachBatch — per-query top-k is request-row-local, so
 # the drained union equals the one-shot search and the oracle IS
-# ann_ivf_index_query over the same corpus/queries.  Staged r10.
-ORACLES_STAGED_R10["streaming_ann_serve_embeddings"] = ORACLES[
+# ann_ivf_index_query over the same corpus/queries.
+ORACLES["streaming_ann_serve_embeddings"] = ORACLES[
     "ann_ivf_index_query_embeddings"]
 
 
@@ -3939,8 +3904,8 @@ ORACLES_STAGED_R10["streaming_ann_serve_embeddings"] = ORACLES[
 # neighbor grid with the resize_media floor-index convention, gray =
 # channel sum = 3*(formula value), bit = 64*g > total, 4x16-bit bands,
 # band-blocked pairs confirmed at Hamming <= 3.  Mirrors
-# multimodal.phash_media + phash_dup_pairs exactly.  Staged r10.
-ORACLES_STAGED_R10["multimodal_phash_dedup_docs"] = """
+# multimodal.phash_media + phash_dup_pairs exactly.
+ORACLES["multimodal_phash_dedup_docs"] = """
 with corpus as (
   select doc_id from documents where doc_id % 23 = 1 and doc_id % 2 = 1
 ), img as (
@@ -3997,8 +3962,8 @@ where bit_count(xor(a.h0, b.h0)) + bit_count(xor(a.h1, b.h1))
 # discipline); a smoothed-zero (class, term) weight equals the class
 # OOV default exactly, so the sparse weights table is lossless and the
 # serving identity needs no vocabulary lookup.  Winner by max score,
-# ties to the lexically smaller class.  Staged r10.
-ORACLES_STAGED_R10["naive_bayes_language_docs"] = f"""
+# ties to the lexically smaller class.
+ORACLES["naive_bayes_language_docs"] = f"""
 with train as (
   select doc_id, lang, {_WORDS} as words from documents
   where doc_id % 3 <> 0 and lang is not null and text is not null
@@ -4074,8 +4039,8 @@ where r = 1
 # peak); each peak fans out to <=3 landmark pairs within dt<=16; keys
 # quantize energies by //64; clips sharing >=4 DISTINCT keys are
 # near-dups.  Mirrors multimodal.audio_energy_frames/audio_fingerprint/
-# audio_dup_pairs exactly.  Staged r10.
-ORACLES_STAGED_R10["audio_fingerprint_dedup_docs"] = """
+# audio_dup_pairs exactly.
+ORACLES["audio_fingerprint_dedup_docs"] = """
 with corpus as (
   select doc_id, coalesce(length(text), 0) as tl from documents
   where doc_id % 23 = 2 and doc_id % 2 = 0
@@ -4126,8 +4091,8 @@ having count(*) >= 4
 # slice (count desc, term asc), per-doc OOV counts over every document;
 # oov_micro = n_oov*1e6 div n_tokens in pure bigint arithmetic (NULL
 # for zero-token docs).  Mirrors corpus.oov_rate over
-# textstats.build_vocab.  Staged r10.
-ORACLES_STAGED_R10["oov_rate_docs"] = f"""
+# textstats.build_vocab.
+ORACLES["oov_rate_docs"] = f"""
 with vcounts as (
   select term, cast(count(*) as bigint) as n
   from (
@@ -4164,8 +4129,8 @@ from base b left join oov o using (id)
 # docs).  Discounted gains are floored to micro-units PER TERM
 # (floor(1e6/log2(rank+1))), DCG/IDCG are exact bigint sums, and
 # MRR/recall/NDCG are bigint divisions — replays bit-for-bit.
-# Mirrors textstats.retrieval_metrics over bm25_rank.  Staged r10.
-ORACLES_STAGED_R10["retrieval_eval_docs"] = f"""
+# Mirrors textstats.retrieval_metrics over bm25_rank.
+ORACLES["retrieval_eval_docs"] = f"""
 with w as (select doc_id as id, unnest({_WORDS}) as term
            from documents where text is not null),
 tf as (select id, term, cast(count(*) as bigint) as tf from w group by 1, 2),
@@ -4229,7 +4194,7 @@ left join h using (query_id)
 # r9 incremental NB: batch statistics merged by exact bigint addition
 # finalize bit-identically to retraining on the union — the oracle IS
 # the one-shot training replay (the bm25_index_append precedent).
-ORACLES_STAGED_R10["naive_bayes_incremental_docs"] = ORACLES_STAGED_R10[
+ORACLES["naive_bayes_incremental_docs"] = ORACLES[
     "naive_bayes_language_docs"]
 
 
@@ -4237,8 +4202,8 @@ ORACLES_STAGED_R10["naive_bayes_incremental_docs"] = ORACLES_STAGED_R10[
 # mod 1e16, dash-grouped on even docs) extracted by the RE2-compatible
 # candidate regex and Luhn-verified digit by digit (indexed fold from
 # the right, double-every-second, mod 10).  Mirrors
-# textstats.detect_credit_cards.  Staged r10.
-ORACLES_STAGED_R10["credit_card_detect_docs"] = r"""
+# textstats.detect_credit_cards.
+ORACLES["credit_card_detect_docs"] = r"""
 with aug as (
   select doc_id,
          text || ' #' || case when doc_id % 2 = 0
@@ -4277,10 +4242,10 @@ from d
 # r9 classifier evaluation: the NB predictions replay (above) joined
 # to gold lang labels; per-class confusion + precision/recall/F1 as
 # bigint micro divisions (F1 = 2tp/(2tp+fp+fn), one division).
-# Mirrors textstats.classification_metrics.  Staged r10.
-ORACLES_STAGED_R10["classifier_eval_docs"] = f"""
+# Mirrors textstats.classification_metrics.
+ORACLES["classifier_eval_docs"] = f"""
 with preds as (
-  select * from ({ORACLES_STAGED_R10["naive_bayes_language_docs"]}) nbp
+  select * from ({ORACLES["naive_bayes_language_docs"]}) nbp
 ), gold as (
   select doc_id, lang as g from documents
   where doc_id % 3 = 0 and lang is not null
@@ -4327,7 +4292,7 @@ _bm25_del = ORACLES["bm25_rank_docs"].replace(
     "from documents where text is not null and doc_id % 6 <> 0),",
     1)
 assert _bm25_del != ORACLES["bm25_rank_docs"]
-ORACLES_STAGED_R10["bm25_index_delete_docs"] = _bm25_del
+ORACLES["bm25_index_delete_docs"] = _bm25_del
 del _bm25_del
 
 # IVF: STANDING-centroid semantics — deleted ids leave the
@@ -4339,7 +4304,7 @@ _ivf_del = ORACLES["ann_ivf_index_query_embeddings"].replace(
     "select id, cell from ranked where r = 1 and id % 6 <> 0",
     1)
 assert _ivf_del != ORACLES["ann_ivf_index_query_embeddings"]
-ORACLES_STAGED_R10["ann_ivf_index_delete_embeddings"] = _ivf_del
+ORACLES["ann_ivf_index_delete_embeddings"] = _ivf_del
 del _ivf_del
 
 
@@ -4349,8 +4314,7 @@ del _ivf_del
 # Per-frame aHash replays the phash grid math with the +11f term;
 # pairs share >=2 exact (frame position, h0..h3) keys.  Mirrors
 # multimodal.synth_video/video_frame_hashes/video_dup_pairs.
-# Staged r10.
-ORACLES_STAGED_R10["multimodal_video_dedup_docs"] = """
+ORACLES["multimodal_video_dedup_docs"] = """
 with corpus as (
   select doc_id from documents where doc_id % 19 = 4
 ), clip as (
@@ -4402,18 +4366,6 @@ having count(*) >= 2
 """
 
 
-# ---- round-10 rotation: the 12 staged gates are WIRED (the r8/r9
-# window precedent) — their SQL moves into ORACLES verbatim; each was
-# pre-verified at multiple scales, arrow-type-linted, and fuzz-covered
-# before this move (and independently re-verified 12/12 by the r9
-# judge), so the rotation adds no new behavior.  Gates staged DURING
-# round 10 land in ORACLES_STAGED_R11 with the same protocol.
-ORACLES.update(ORACLES_STAGED_R10)
-ORACLES_STAGED_R10 = {}
-
-ORACLES_STAGED_R11: dict[str, str] = {}
-
-
 # r10 temporal-offset video alignment: the video gate's gradient-clip
 # corpus plus TRIMMED clones (first frame dropped, container positions
 # re-based to 0, ids under +1e9).  Per-frame aHash replays the video
@@ -4422,8 +4374,8 @@ ORACLES_STAGED_R11: dict[str, str] = {}
 # candidates join on the full 64-bit hash with position deliberately
 # out of the key, group by the position delta, and keep the best
 # offset per pair (count desc, offset asc — the
-# video_dup_pairs_aligned window).  Staged r11.
-ORACLES_STAGED_R11["multimodal_video_align_docs"] = """
+# video_dup_pairs_aligned window).
+ORACLES["multimodal_video_align_docs"] = """
 with corpus as (
   select doc_id from documents where doc_id % 19 = 4
 ), clip as (
@@ -4486,8 +4438,8 @@ qualify row_number() over (partition by id_a, id_b
 # threshold against the gold en-language ids.  Cumulative bigint
 # confusion counts via desc-ordered windows over the DISTINCT
 # threshold lattice; micro-unit ratios with the classification_metrics
-# divisions (f1 = 2tp·1e6 div (2tp+fp+fn)).  Staged r11.
-ORACLES_STAGED_R11["pr_curve_language_docs"] = f"""
+# divisions (f1 = 2tp·1e6 div (2tp+fp+fn)).
+ORACLES["pr_curve_language_docs"] = f"""
 with scored as (
   select * from ({ORACLES["perceptron_language_docs"]}) s0
 ), pos as (
@@ -4530,8 +4482,8 @@ from cum
 # stride-spread survivor seeding, fresh ids from max(centroid cell)+1)
 # run over the SURVIVORS; the search replay then ranks the %20 query
 # batch against the post-rebalance centroid set (standing cold cells +
-# normalized sub-centroids) and probes 4 cells.  Staged r11.
-ORACLES_STAGED_R11["ann_ivf_lifecycle_embeddings"] = f"""
+# normalized sub-centroids) and probes 4 cells.
+ORACLES["ann_ivf_lifecycle_embeddings"] = f"""
 with v0 as (
     select vec_id, embedding::DOUBLE[] as e from embeddings
 ), v as (
@@ -4622,8 +4574,8 @@ qualify rank <= 3
 # r10 exact ROC-AUC: Mann-Whitney with midrank ties over the binary
 # perceptron's served scores vs the gold en ids — doubled midranks
 # clear the halves, so AUC is one bigint expression; a constant scorer
-# yields exactly 500000.  Staged r11.
-ORACLES_STAGED_R11["auc_language_docs"] = f"""
+# yields exactly 500000.
+ORACLES["auc_language_docs"] = f"""
 with scored as (
   select * from ({ORACLES["perceptron_language_docs"]}) s0
 ), pos as (
@@ -4659,8 +4611,8 @@ from agg
 # r10 calibration table: 10 equal-width bigint score bins over the
 # observed [lo, hi]; bigint micro positive rates and a FLOOR-exact
 # mean (positive-residue subtraction makes the quotient exact, immune
-# to div-rounding differences).  Staged r11.
-ORACLES_STAGED_R11["calibration_language_docs"] = f"""
+# to div-rounding differences).
+ORACLES["calibration_language_docs"] = f"""
 with scored as (
   select * from ({ORACLES["perceptron_language_docs"]}) s0
 ), pos as (
@@ -4700,7 +4652,7 @@ from g, rng r
 # parallel unnest of the token list's two offset slices), takes the
 # (count desc, lexicographic) argmax, and applies the ' a  b ' ->
 # ' ab ' replace — guarded so a corpus that runs out of pairs carries
-# the vocabulary forward unchanged instead of NULLing it.  Staged r11.
+# the vocabulary forward unchanged instead of NULLing it.
 def _bpe_train_sql(n_steps: int = 8) -> str:
     parts = [f"""
 with w as (
@@ -4743,20 +4695,7 @@ with w as (
     return "".join(parts)
 
 
-ORACLES_STAGED_R11["bpe_train_docs"] = _bpe_train_sql(8)
-
-
-# ---- round-11 rotation: the 6 staged gates are WIRED (the r8/r9/r10
-# window precedent) — their SQL moves into ORACLES verbatim; each was
-# pre-verified at multiple scales, arrow-type-linted, fuzz-covered
-# (tests/test_fuzz_staged_r11.py), AND independently re-verified 6/6
-# by the r10 judge before this move, so the rotation adds no new
-# behavior.  Gates staged DURING round 11 land in ORACLES_STAGED_R12
-# with the same protocol.
-ORACLES.update(ORACLES_STAGED_R11)
-ORACLES_STAGED_R11 = {}
-
-ORACLES_STAGED_R12: dict[str, str] = {}
+ORACLES["bpe_train_docs"] = _bpe_train_sql(8)
 
 
 # r11 TRAINED language ID: multinomial NB over char TRIGRAMS of the
@@ -4766,14 +4705,14 @@ ORACLES_STAGED_R12: dict[str, str] = {}
 # replays training AND serving bit-for-bit: same add-1 smoothing, same
 # floor(ln·1e6) weights, same sparse-model oov identity, same
 # (score desc, cls asc) argmax.  A no-words document yields zero grams
-# (two pad spaces < 3) and scores prior-only.  Staged r12.
+# (two pad spaces < 3) and scores prior-only.
 _CNG3 = (
     "case when length(s) >= 3 then "
     "[substring(s, i, 3) for i in generate_series(1, length(s) - 2)] "
     "else [] end"
 )
 
-ORACLES_STAGED_R12["langid_nb_docs"] = f"""
+ORACLES["langid_nb_docs"] = f"""
 with train0 as (
   select doc_id, lang,
          ' ' || array_to_string({_WORDS}, ' ') || ' ' as s
@@ -4853,10 +4792,10 @@ where r = 1
 # r11 langid evaluation: classification_metrics over the trained
 # langid predictions vs gold lang on the held-out third — the same
 # confusion/P/R/F1 micro lattice as classifier_eval_docs, closing the
-# eval loop on the langid upgrade.  Staged r12.
-ORACLES_STAGED_R12["langid_eval_docs"] = f"""
+# eval loop on the langid upgrade.
+ORACLES["langid_eval_docs"] = f"""
 with preds as (
-  select * from ({ORACLES_STAGED_R12["langid_nb_docs"]}) lp
+  select * from ({ORACLES["langid_nb_docs"]}) lp
 ), gold as (
   select doc_id, lang as g from documents
   where doc_id % 3 = 0 and lang is not null
@@ -4899,9 +4838,8 @@ from m
 # the shrunk index.  A MinHash signature row is entirely
 # per-document, so delete ≡ rebuild bit-identically and the oracle IS
 # the incremental_dedup replay with the corpus side additionally
-# filtered to the survivors (dedup.py:minhash_index_delete).  Staged
-# r12.
-ORACLES_STAGED_R12["minhash_index_delete_docs"] = f"""
+# filtered to the survivors (dedup.py:minhash_index_delete).
+ORACLES["minhash_index_delete_docs"] = f"""
 with sh0 as (
     select doc_id as id, {_WORDS} as words from documents
 ), sh as (
@@ -4929,8 +4867,8 @@ where s.shared / (nc.n_sh + nb.n_sh - s.shared) >= 0.7
 # r11 operating-point selection: the F1-argmax row of the perceptron
 # language filter's pr_curve sweep, ties to the LOWEST threshold
 # (prefer recall at equal F1) — the oracle wraps the (already exact)
-# pr_curve replay in the deterministic argmax.  Staged r12.
-ORACLES_STAGED_R12["threshold_select_language_docs"] = f"""
+# pr_curve replay in the deterministic argmax.
+ORACLES["threshold_select_language_docs"] = f"""
 select threshold, n_pred, tp, fp, fn,
        precision_micro, recall_micro, f1_micro
 from ({ORACLES["pr_curve_language_docs"]}) curve
@@ -4943,13 +4881,13 @@ limit 1
 # deleted ids leave the integer code table; the coarse centroids and
 # the PQ codebook (trained artifacts, seeded from the FULL corpus) do
 # not move.  The oracle is the ivfpq_search replay with only the
-# candidate scan filtered to survivors.  Staged r12.
+# candidate scan filtered to survivors.
 _ivfpq_del = ORACLES["ivfpq_search_embeddings"].replace(
     "where l.query_id <> e.vec_id",
     "where l.query_id <> e.vec_id and e.vec_id % 6 <> 0",
     1)
 assert _ivfpq_del != ORACLES["ivfpq_search_embeddings"]
-ORACLES_STAGED_R12["ivfpq_index_lifecycle_embeddings"] = _ivfpq_del
+ORACLES["ivfpq_index_lifecycle_embeddings"] = _ivfpq_del
 del _ivfpq_del
 
 
@@ -4958,7 +4896,6 @@ del _ivfpq_del
 # (vec_id % 7 <> 0) only, while assignment, encode, and the candidate
 # scan cover the full corpus (history + appended batch).  The oracle
 # is the ivfpq_search replay with just the two seed CTEs filtered.
-# Staged r12.
 _ivfpq_app = ORACLES["ivfpq_search_embeddings"].replace(
     "from (select * from v0 order by vec_id limit 16)",
     "from (select * from v0 where vec_id % 7 <> 0 "
@@ -4969,7 +4906,7 @@ _ivfpq_app = ORACLES["ivfpq_search_embeddings"].replace(
     "order by vec_id limit 16)",
     1)
 assert _ivfpq_app.count("% 7 <> 0") == 2
-ORACLES_STAGED_R12["ivfpq_index_append_embeddings"] = _ivfpq_app
+ORACLES["ivfpq_index_append_embeddings"] = _ivfpq_app
 del _ivfpq_app
 
 
@@ -4978,7 +4915,7 @@ del _ivfpq_app
 # split, then the majority vote with the pinned tie-break (votes DESC
 # → best rank ASC → label ASC).  NULL-labeled corpus rows are
 # excluded BEFORE search (they cannot vote and must not displace
-# votable neighbors from the top-k).  Staged r12.
+# votable neighbors from the top-k).
 _KNN_VOTE = """
 votes as (
     select query_id, lbl, count(*) as votes, min(rank) as best_rank
@@ -4991,7 +4928,7 @@ qualify row_number() over (partition by query_id
                            order by votes desc, best_rank, lbl) = 1
 """
 
-ORACLES_STAGED_R12["knn_classify_embeddings"] = f"""
+ORACLES["knn_classify_embeddings"] = f"""
 with v0 as (
     select vec_id, embedding::DOUBLE[] as e, label from embeddings
 ), v as (
@@ -5019,11 +4956,11 @@ with v0 as (
 
 # r11 kNN evaluation: the knn_classify predictions on the held-out
 # third vs the gold label column — the classifier_eval_docs
-# confusion/P/R/F1 micro lattice.  Staged r12.
-ORACLES_STAGED_R12["knn_eval_embeddings"] = f"""
+# confusion/P/R/F1 micro lattice.
+ORACLES["knn_eval_embeddings"] = f"""
 with preds as (
   select query_id as vec_id, pred_label
-  from ({ORACLES_STAGED_R12["knn_classify_embeddings"]}) kp
+  from ({ORACLES["knn_classify_embeddings"]}) kp
 ), gold as (
   select vec_id, label as g from embeddings
   where vec_id % 3 = 0 and label is not null
@@ -5066,8 +5003,8 @@ from m
 # replay (kmeans_iters=0 centroid seeds, round-6dp assignment and
 # ranking) with seeds/assignments drawn from the LABELED slice only,
 # probes from the query batch, k=5 / n_probe=4 — then the same
-# pinned majority vote over the ANN neighbor frame.  Staged r12.
-ORACLES_STAGED_R12["knn_classify_ivf_embeddings"] = f"""
+# pinned majority vote over the ANN neighbor frame.
+ORACLES["knn_classify_ivf_embeddings"] = f"""
 with v0 as (
     select vec_id, embedding::DOUBLE[] as e, label from embeddings
 ), v as (
@@ -5127,7 +5064,7 @@ with v0 as (
 # The oracle replays the whole search: per-(feature, value) class
 # counts → cumulative left/right counts → majority leaves (tie → 1)
 # → misclassification error → pinned argmin (error ASC → feature ASC
-# → threshold ASC).  Staged r12.
+# → threshold ASC).
 _STUMP_FEATS = f"""
 feats as (
     select doc_id,
@@ -5182,9 +5119,9 @@ from scored
 qualify row_number() over (order by train_error, feature, threshold) = 1
 """
 
-ORACLES_STAGED_R12["stump_train_docs"] = _STUMP_TRAIN
+ORACLES["stump_train_docs"] = _STUMP_TRAIN
 
-ORACLES_STAGED_R12["stump_classify_docs"] = f"""
+ORACLES["stump_classify_docs"] = f"""
 with stump as (
     select * from ({_STUMP_TRAIN}) s
 ), {_STUMP_FEATS.strip()}
@@ -5207,10 +5144,10 @@ where f.doc_id % 3 = 0
 # r11 leakage-safe group split: the cc_dedup recursive-CTE components
 # give each doc its Jaccard≥0.5 cluster root (singletons = own id),
 # then the shared md5-bucket lattice hashes the ROOT — every cluster
-# member lands in the same split.  Staged r12.
+# member lands in the same split.
 _GSPLIT_BUCKET = _hex2int("md5('gsplit:' || cast(grp as varchar))")
 
-ORACLES_STAGED_R12["group_split_docs"] = f"""
+ORACLES["group_split_docs"] = f"""
 with recursive pairs as (
     select id_a, id_b from ({_JACCARD_BASE.format(thr=0.5)}) tp
 ), edges as (
@@ -5242,8 +5179,8 @@ from grouped
 # into one row — micro accuracy (Σtp·1e6 div Σn_gold; Σn_gold =
 # n_scored since each scored id has exactly one gold class) and
 # macro P/R/F1 (floor-div mean of the per-class micro values over the
-# union class set).  Staged r12.
-ORACLES_STAGED_R12["classifier_summary_docs"] = f"""
+# union class set).
+ORACLES["classifier_summary_docs"] = f"""
 with m as (
   select * from ({ORACLES["classifier_eval_docs"]}) cm
 )
@@ -5271,8 +5208,8 @@ from m
 # regexp/replace chain — blocks-with-content first, tag count on the
 # block-stripped intermediate, tags → spaces, entities with &amp;
 # LAST, whitespace collapse.  NULL text propagates NULL throughout
-# (|| and regexp on NULL are NULL on both engines).  Staged r12.
-ORACLES_STAGED_R12["strip_html_docs"] = r"""
+# (|| and regexp on NULL are NULL on both engines).
+ORACLES["strip_html_docs"] = r"""
 with h as (
     select doc_id,
            (case when doc_id % 2 = 0
@@ -5319,8 +5256,8 @@ from s3
 # the oracle is an exact per-sweep unroll (give = pr // out_deg;
 # pr' = 150000 + (850000 · Σ give) // 1e6; dangling mass evaporates).
 # HUGEINT carries the damped product exactly, mirroring the Spark
-# side's decimal(38,0).  Staged r12.
-ORACLES_STAGED_R12["pagerank_docs"] = f"""
+# side's decimal(38,0).
+ORACLES["pagerank_docs"] = f"""
 with pairs as (
     select id_a, id_b from ({_JACCARD_BASE.format(thr=0.5)}) tp
 ), edges as (
@@ -5368,7 +5305,6 @@ select node as doc_id, pr as pagerank_micro from pr3
 # pagerank_docs with the teleport confined to the doc_id%10=0 seed
 # set — seeds start at 1e6 and carry the 150000 restart term;
 # non-seeds start at 0 and earn mass only through in-edges.
-# Staged r12.
 def _ppr_sweep(prev: str, out: str) -> str:
     return f"""c_{out} as (
     select ewd.d as node, sum(pr // dg) as s_in
@@ -5382,7 +5318,7 @@ def _ppr_sweep(prev: str, out: str) -> str:
 )"""
 
 
-ORACLES_STAGED_R12["ppr_docs"] = f"""
+ORACLES["ppr_docs"] = f"""
 with pairs as (
     select id_a, id_b from ({_JACCARD_BASE.format(thr=0.5)}) tp
 ), edges as (
@@ -5407,10 +5343,10 @@ select node as doc_id, pr as pagerank_micro from pr3
 
 
 # r11 leakage-safe k-fold: the group_split components lattice with
-# fold = md5('gfold:' || root) % 10000 % 5.  Staged r12.
+# fold = md5('gfold:' || root) % 10000 % 5.
 _GFOLD_BUCKET = _hex2int("md5('gfold:' || cast(grp as varchar))")
 
-ORACLES_STAGED_R12["group_kfold_docs"] = f"""
+ORACLES["group_kfold_docs"] = f"""
 with recursive pairs as (
     select id_a, id_b from ({_JACCARD_BASE.format(thr=0.5)}) tp
 ), edges as (
@@ -5438,17 +5374,16 @@ from grouped
 # r11 streaming kNN classification serving: the per-query vote is
 # request-row-local, so the drained foreachBatch union equals the
 # one-shot ANN-served classification under any micro-batch split —
-# the oracle IS the knn_classify_ivf replay.  Staged r12.
-ORACLES_STAGED_R12["streaming_knn_serve_embeddings"] = \
-    ORACLES_STAGED_R12["knn_classify_ivf_embeddings"]
+# the oracle IS the knn_classify_ivf replay.
+ORACLES["streaming_knn_serve_embeddings"] = \
+    ORACLES["knn_classify_ivf_embeddings"]
 
 
 # r11 per-source dataset-card profile: exact integer volume / length
 # / exact-dup / language-mix statistics per source; top_lang ties →
 # lang ASC; a NULL source groups alone and takes a NULL top_lang via
 # standard (non-null-safe) join semantics on both engines.
-# Staged r12.
-ORACLES_STAGED_R12["corpus_profile_docs"] = """
+ORACLES["corpus_profile_docs"] = """
 with per_source as (
     select source,
            cast(count(*) as bigint) as n_docs,
@@ -5491,8 +5426,8 @@ from ext e left join top t on e.source = t.source
 # truncate toward zero — verified), bigint squared-L2 serving,
 # ties → distance ASC then label ASC.  Empty vectors keep the fold's
 # init-0 finiteness (coalesce) and contribute no positions on either
-# engine.  Staged r12.
-ORACLES_STAGED_R12["centroid_classify_embeddings"] = """
+# engine.
+ORACLES["centroid_classify_embeddings"] = """
 with v as (
   select vec_id, label,
          list_transform(embedding, x -> cast(x as double)) as e
@@ -5529,19 +5464,3 @@ qualify row_number() over (partition by query_id
                            order by d2, lbl) = 1
 """
 
-# ---- round-12 rotation (r11 verdict item 4): the 11 staged gates on
-# optimizer-touched code paths are wired (their SQL becomes first-class
-# ORACLES rows) so the driver window can lead with them.  The other 9
-# staged gates CANNOT be wired this round: the rotation guards require
-# every never-driver-verified wired query inside the 50-row window AND
-# the entire 34-row r8 staleness cohort inside it — 20 + 34 > 50.  They
-# stay staged (pre-verified, fuzz-covered) and wire with the r13
-# rotation, where the re-greened r12 window frees the slots.
-for _n in (
-    "langid_nb_docs", "langid_eval_docs", "classifier_summary_docs",
-    "threshold_select_language_docs", "group_split_docs",
-    "group_kfold_docs", "minhash_index_delete_docs", "pagerank_docs",
-    "ppr_docs", "streaming_knn_serve_embeddings",
-    "knn_classify_ivf_embeddings",
-):
-    ORACLES[_n] = ORACLES_STAGED_R12.pop(_n)

@@ -258,51 +258,51 @@ PICKS = {
         "partials, argmax via one min-struct aggregate — no window, "
         "no per-class pass."),
     "multimodal_phash_dedup_docs": (
-        "Multimodal near-dup pairs (r10-staged) — fingerprinting is "
+        "Multimodal near-dup pairs — fingerprinting is "
         "one Arrow mapInPandas pass (project-only: the binary payload "
         "never reaches an exchange); candidates are an equi-join on "
         "the exploded (band, value) key — never a cartesian — and the "
         "exact Hamming confirm is integer XOR/popcount on the carried "
         "band columns."),
     "naive_bayes_language_docs": (
-        "Naive Bayes train+serve (r10-staged) — training is ONE "
+        "Naive Bayes train+serve — training is ONE "
         "(cls, term) wordcount shuffle with map-side partial agg; "
         "serving joins token counts to the sparse weights on term and "
         "broadcasts the k-row class stats (BroadcastNestedLoopJoin on "
         "the deliberate doc×class expansion); text never crosses an "
         "exchange."),
     "audio_fingerprint_dedup_docs": (
-        "Audio near-dup pairs (r10-staged) — decode is one Arrow pass "
+        "Audio near-dup pairs — decode is one Arrow pass "
         "emitting int64 frame energies (binary payload never reaches "
         "an exchange); peaks/landmarks are per-clip windows + a "
         "peaks×fanout self-join; candidates are an equi-join on the "
         "(eq1, eq2, dt) landmark key — never a cartesian."),
     "oov_rate_docs": (
-        "OOV-rate monitor (r10-staged) — token counts are row-local; "
+        "OOV-rate monitor — token counts are row-local; "
         "the vocabulary anti-joins as a BROADCAST, and the only "
         "corpus-keyed exchange is the per-doc OOV aggregate (id rows, "
         "never text)."),
     "retrieval_eval_docs": (
-        "Retrieval evaluation (r10-staged) — downstream of the BM25 "
+        "Retrieval evaluation — downstream of the BM25 "
         "ranking everything is queries×k-scale: qrels equi-join, "
         "per-query aggregate, broadcast k-row discount table for "
         "IDCG; discounts floored per term so DCG sums are exact "
         "bigints."),
     "credit_card_detect_docs": (
-        "Luhn-validated card PII (r10-staged) — zero-shuffle row-local "
+        "Luhn-validated card PII — zero-shuffle row-local "
         "map: regexp_extract_all candidates + the checksum fold all "
         "inside WholeStageCodegen; no exchange anywhere."),
     "bm25_index_delete_docs": (
-        "BM25 deletion (r10-staged) — one anti-join against the "
+        "BM25 deletion — one anti-join against the "
         "tombstones, then the vocabulary-sized df/idf re-aggregation; "
         "the corpus tokenize (the dominant build cost) is never "
         "re-paid, and serving is the standard pruned postings join."),
     "ann_ivf_index_delete_embeddings": (
-        "IVF deletion (r10-staged) — assignments anti-join with "
+        "IVF deletion — assignments anti-join with "
         "standing centroids: no re-seeding pass, no assignment "
         "shuffle; search probes only surviving cells."),
     "multimodal_video_dedup_docs": (
-        "Video near-dup pairs (r10-staged) — the container walk is "
+        "Video near-dup pairs — the container walk is "
         "one Arrow pass (binary payload never reaches an exchange); "
         "candidates equi-join on the exact (frame position, 64-bit "
         "hash) key — never a cartesian."),
@@ -320,52 +320,52 @@ PICKS = {
         "(top-K collect, driver-bounded), applying up to 8 "
         "provably-exact merges per scan."),
     "minhash_index_delete_docs": (
-        "MinHash index deletion (r11-staged) — tombstones anti-join "
+        "MinHash index deletion — tombstones anti-join "
         "the per-document signature rows (delete ≡ rebuild "
         "bit-identically); the batch match stays a banded candidate "
         "equi-join + exact-Jaccard verify, never corpus×corpus."),
     "ivfpq_index_lifecycle_embeddings": (
-        "Persisted-IVFPQ deletion lifecycle (r11-staged) — tombstones "
+        "Persisted-IVFPQ deletion lifecycle — tombstones "
         "anti-join the integer code table; standing centroids + "
         "codebook broadcast; the ADC scan joins codes to the "
         "(query, cell) LUT on (cell, sub, code) — raw vectors never "
         "rescanned at query time."),
     "threshold_select_language_docs": (
-        "F1-optimal threshold (r11-staged) — the pr_curve pass "
+        "F1-optimal threshold — the pr_curve pass "
         "(corpus never enters a window; cumulative sums over DISTINCT "
         "thresholds only) closed by one min-struct argmax aggregate "
         "over the curve."),
     "knn_classify_embeddings": (
-        "kNN classification (r11-staged) — ONE Arrow mapInPandas "
+        "kNN classification — ONE Arrow mapInPandas "
         "matmul search pass; the label join is hash-equi on the id "
         "(AQE broadcast at model scale); the vote window runs over "
         "(query, label) AGGREGATE rows — nothing corpus-scale in the "
         "final exchange."),
     "knn_classify_ivf_embeddings": (
-        "ANN-accelerated kNN classification (r11-staged) — persisted "
+        "ANN-accelerated kNN classification — persisted "
         "IVF index (broadcast centroids, probed-cells-only scoring) "
         "feeds the same aggregate-rows vote; serve cost per query "
         "drops by ~n_cells/n_probe with no corpus pass."),
     "stump_classify_docs": (
-        "Decision-stump train+serve (r11-staged) — candidate frame is "
+        "Decision-stump train+serve — candidate frame is "
         "Σ distinct values (never corpus rows) via one partial-agg "
         "groupBy + per-feature cumulative windows; the per-feature "
         "argmin shrinks to |features| rows before the only global "
         "window; serving is a broadcast nested-loop cross join of the "
         "1-row model with a pure-codegen CASE."),
     "group_split_docs": (
-        "Leakage-safe group split (r11-staged) — connected components "
+        "Leakage-safe group split — connected components "
         "iterate over the PAIR graph only; the corpus sees one "
         "id-equi left join + a per-row md5 lattice (no Python, no "
         "window, no extra shuffle over assign_splits)."),
     "pagerank_docs": (
-        "Integer PageRank (r11-staged) — per sweep: one src-keyed "
+        "Integer PageRank — per sweep: one src-keyed "
         "equi-join + one dst-keyed partial-aggregated groupBy + a "
         "left join onto the node set, sealed per round "
         "(localCheckpoint) so sweep N never replays sweeps 1..N-1; "
         "damped sums carried in decimal(38,0)."),
     "strip_html_docs": (
-        "HTML→text extraction (r11-staged) — pure JVM regexp/replace "
+        "HTML→text extraction — pure JVM regexp/replace "
         "chain in one whole-stage-codegen project over the scan: "
         "zero exchanges, zero Python."),
 }
@@ -378,8 +378,7 @@ out = ["# PLANS — captured physical-plan evidence (sf0.1, local[32])",
        "is a test failure, not just a slower run.", ""]
 qs = e.queries()
 for name, blurb in PICKS.items():
-    fn = qs.get(name) or getattr(e, name)  # staged gates live on the module
-    plan = fmt(fn(spark, sf))
+    plan = fmt(qs[name](spark, sf))
     # keep the operator tree + the scan details; drop the (long) codegen ids
     lines = plan.splitlines()
     keep = []
@@ -417,7 +416,7 @@ SERVE_PICKS = {
         "cells."),
     "streaming_knn_serve_embeddings": (
         "Inner per-batch plan of the kNN classification serve gate "
-        "(r11-staged, captured from a drained micro-batch): the "
+        "(captured from a drained micro-batch): the "
         "probed-cells ANN search feeds the (query, label) vote "
         "aggregate + 1-row-per-query window — the label join rides "
         "the standing labeled projection, nothing corpus-scale per "
@@ -429,7 +428,7 @@ for name, blurb in SERVE_PICKS.items():
         lambda result, batch_id: captured.append(fmt(result))
         if not captured else None)
     try:
-        getattr(e, name)(spark, sf).count()
+        qs[name](spark, sf).count()
     finally:
         _structured._ON_BATCH_RESULT = None
     out.append(f"## {name} — inner per-batch serving plan")

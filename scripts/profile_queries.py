@@ -50,7 +50,7 @@ def main() -> None:
     tracker = spark.sparkContext.statusTracker()
     out = {}
     for name in names:
-        fn = qs.get(name) or getattr(entrymod, name)
+        fn = qs[name]
         rec = None
         for it in range(repeats):
             group = f"prof_{name}_{it}"

@@ -48,10 +48,7 @@ def main() -> None:
             # whose final frame is a table read — the audit would see
             # only the read; skip (their plans are in PLANS.md)
             continue
-        # r8-staged gates (benched, not yet in queries()) resolve
-        # from the module
-        fn = qs.get(name) or getattr(entrymod, name)
-        df = fn(spark, sf_dir)
+        df = qs[name](spark, sf_dir)
         # collect() (not count()) so the audited queryExecution is the
         # one that actually ran — count() plans and executes a separate
         # aggregate whose metrics would stay at zero here

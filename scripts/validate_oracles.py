@@ -146,17 +146,9 @@ def main() -> int:
         print(f"ERROR: sf_dir {sf_dir!r} is not a directory "
               "(usage: validate_oracles.py [SF_DIR] [QUERY ...])")
         return 2
-    # staged-for-next-round gates are real module callables with
-    # oracles in ORACLES_STAGED_R12 — allow validating them by name
-    # (the optimization rounds touch operator internals shared by
-    # wired AND staged gates; both must stay oracle-green)
-    from oracles import ORACLES_STAGED_R12
-    staged = {
-        n: getattr(entrymod, n)
-        for n in (only & set(ORACLES_STAGED_R12))
-        if n not in entrymod.queries() and hasattr(entrymod, n)
-    }
-    unknown = only - set(entrymod.queries()) - set(staged)
+    qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    unknown = only - set(qs)
     if unknown:
         print(f"ERROR: unknown query filter(s): {sorted(unknown)}")
         return 2
@@ -165,10 +157,6 @@ def main() -> int:
         extra_conf={"spark.sql.warehouse.dir": f"/tmp/oracle_wh_{os.getpid()}"},
     )
     con = duck_connect(sf_dir)
-    qs = dict(entrymod.queries())
-    oracles = dict(entrymod.oracle_sql())
-    qs.update(staged)
-    oracles.update({n: ORACLES_STAGED_R12[n] for n in staged})
     import gc
 
     failures = []
@@ -179,17 +167,8 @@ def main() -> int:
         # localCheckpoint RDDs (same session-accumulation fix as
         # bench.py — late queries otherwise pay GC pressure)
         gc.collect()
-        sql = oracles.get(name)
-        if sql is None:
-            try:
-                n = fn(spark, sf_dir).count()
-                print(f"  ~ {name}: no oracle (rows-only) → {n} rows")
-            except Exception as e:
-                failures.append(name)
-                print(f"  ✗ {name}: EXEC ERROR {type(e).__name__}: {e}")
-            continue
         try:
-            ok, msg = compare(name, spark, con, sf_dir, fn, sql)
+            ok, msg = compare(name, spark, con, sf_dir, fn, oracles[name])
         except Exception as e:
             import traceback
 

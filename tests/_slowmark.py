@@ -6,9 +6,10 @@ turned the per-round safety net into a permanent "unknown".  pytest-xdist
 is not available in this environment, so the suite is split into tiers
 instead:
 
-- **quick tier** (the default for a plain ``pytest tests/``): registry
-  and rotation pins, plan-shape assertions, unit and contract tests —
-  everything sub-~3 s.  This is what the driver's gate runs.
+- **quick tier** (the default for a plain ``pytest tests/``): the
+  registry pin, the oracle type lint, plan-shape assertions, unit and
+  contract tests — almost all sub-~3 s.  This is what the driver's gate
+  runs.
 - **slow tier** (``@_mark_slow``): the hypothesis fuzz sweeps, the
   cross-engine equivalence replays, property tests, and multi-second
   end-to-end compositions — the builder's own floor, run every round

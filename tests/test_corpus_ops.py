@@ -10,6 +10,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+import __spark_entry__ as em
 from dbt_core_spark.operators import corpus as C
 from dbt_core_spark.operators.similarity import semantic_dedup
 from _slowmark import _mark_slow  # noqa: E402
@@ -1330,43 +1331,6 @@ def test_rrf_fuse_tie_saturated_property(spark):
     run()
 
 
-@pytest.mark.parametrize("gate_name", [
-    "hybrid_retrieval_docs",
-    "bm25_index_append_docs",
-    "streaming_decontaminate_docs",
-    "perceptron_language_docs",
-])
-@_mark_slow
-def test_r8_wired_gates_match_oracles(spark, sf_dir, gate_name):
-    """The four r7-staged gates, wired into the live registry in r8:
-    keep the end-to-end pytest compare (exact __spark_entry__ callable
-    vs the exact oracles.ORACLES SQL, through the validator's own
-    compare — types + row hash — on the real sf corpus) so the rows
-    carry in-suite correctness evidence between driver runs."""
-    import importlib.util
-    import os
-
-    import duckdb
-
-    import __spark_entry__ as em
-    from oracles import ORACLES
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "_vo_staged", os.path.join(root, "scripts", "validate_oracles.py"))
-    vo = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(vo)
-
-    con = duckdb.connect()
-    for tbl in ("documents", "embeddings"):
-        con.execute(
-            f"create view {tbl} as select * from '{sf_dir}/{tbl}.parquet'")
-    ok, msg = vo.compare(
-        gate_name, spark, con, sf_dir,
-        getattr(em, gate_name), ORACLES[gate_name])
-    assert ok, msg
-
-
 @_mark_slow
 def test_bm25_bucketed_index_roundtrip_and_append(spark, sf_dir, tmp_path):
     """Term-hash-bucketed index (n_buckets): query results are
@@ -1763,166 +1727,6 @@ def test_perceptron_ovr_label_skew_and_empty(spark):
     assert m0.count() == 17 and m0.filter("w != 0").count() == 0
     m_auto = perceptron_train_ovr(empty, "lang", dim=16)  # derived classes
     assert m_auto.count() == 0
-
-
-@pytest.mark.parametrize("staged_name", [
-    "perceptron_ovr_language_docs",
-    "decontaminate_cut_docs",
-    "corpus_diff_docs",
-    "ngram_loops_docs",
-    "vocab_drift_docs",
-    "streaming_bm25_serve_docs",
-    "perceptron_avg_language_docs",
-    "ann_ivf_rebalance_embeddings",
-])
-@_mark_slow
-def test_r9_wired_gates_match_oracles(spark, sf_dir, staged_name):
-    """The 8 round-9-wired gate rows end to end: the exact
-    __spark_entry__ callable vs the exact ORACLES SQL, through the
-    validator's own compare (types + row hash), on the real sf corpus.
-    (Was the r9 pre-verification test; kept post-wiring as the pytest
-    anchor for the newest gate cohort.)"""
-    import importlib.util
-    import os
-
-    import duckdb
-
-    import __spark_entry__ as em
-    from oracles import ORACLES
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "_vo_staged9", os.path.join(root, "scripts", "validate_oracles.py"))
-    vo = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(vo)
-
-    con = duckdb.connect()
-    for tbl in ("documents", "embeddings"):
-        con.execute(
-            f"create view {tbl} as select * from '{sf_dir}/{tbl}.parquet'")
-    ok, msg = vo.compare(
-        staged_name, spark, con, sf_dir,
-        getattr(em, staged_name), ORACLES[staged_name])
-    assert ok, msg
-
-
-@pytest.mark.parametrize("staged_name", [
-    "streaming_ann_serve_embeddings",
-    "multimodal_phash_dedup_docs",
-    "naive_bayes_language_docs",
-    "audio_fingerprint_dedup_docs",
-    "oov_rate_docs",
-    "retrieval_eval_docs",
-    "naive_bayes_incremental_docs",
-    "credit_card_detect_docs",
-    "classifier_eval_docs",
-    "bm25_index_delete_docs",
-    "ann_ivf_index_delete_embeddings",
-    "multimodal_video_dedup_docs",
-])
-@_mark_slow
-def test_staged_r10_gates_match_oracles(spark, sf_dir, staged_name):
-    """Verifies every round-10-wired gate row end to end: the
-    exact __spark_entry__ callable vs the exact
-    oracle SQL (wired into ORACLES at the r10 rotation), through the validator's own
-    compare (types + row hash), on the real sf corpus — the same compare the r10 rotation shipped under."""
-    import importlib.util
-    import os
-
-    import duckdb
-
-    import __spark_entry__ as em
-    from oracles import ORACLES as _R10_ORACLES
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "_vo_staged10", os.path.join(root, "scripts", "validate_oracles.py"))
-    vo = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(vo)
-
-    con = duckdb.connect()
-    for tbl in ("documents", "embeddings"):
-        con.execute(
-            f"create view {tbl} as select * from '{sf_dir}/{tbl}.parquet'")
-    ok, msg = vo.compare(
-        staged_name, spark, con, sf_dir,
-        getattr(em, staged_name), _R10_ORACLES[staged_name])
-    assert ok, msg
-
-
-@pytest.mark.parametrize("staged_name", [
-    "multimodal_video_align_docs",
-    "pr_curve_language_docs",
-    "ann_ivf_lifecycle_embeddings",
-    "auc_language_docs",
-    "calibration_language_docs",
-    "bpe_train_docs",
-])
-@_mark_slow
-def test_staged_r11_gates_match_oracles(spark, sf_dir, staged_name):
-    """Verifies every round-11-wired gate row end to end: the exact
-    __spark_entry__ callable vs the exact oracle SQL (wired into
-    ORACLES at the r11 rotation), through the validator's own compare
-    (types + row hash), on the real sf corpus — the same compare the
-    r11 rotation shipped under."""
-    import importlib.util
-    import os
-
-    import duckdb
-
-    import __spark_entry__ as em
-    from oracles import ORACLES as _R11_ORACLES
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "_vo_staged11", os.path.join(root, "scripts", "validate_oracles.py"))
-    vo = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(vo)
-
-    con = duckdb.connect()
-    for tbl in ("documents", "embeddings"):
-        con.execute(
-            f"create view {tbl} as select * from '{sf_dir}/{tbl}.parquet'")
-    ok, msg = vo.compare(
-        staged_name, spark, con, sf_dir,
-        getattr(em, staged_name), _R11_ORACLES[staged_name])
-    assert ok, msg
-
-
-@_mark_slow
-def test_staged_r12_gates_match_oracles(spark, sf_dir):
-    """Pre-verifies every STAGED round-12 gate row end to end: the
-    exact __spark_entry__ callable vs the exact
-    oracles.ORACLES_STAGED_R12 SQL, through the validator's own
-    compare (types + row hash), on the real sf corpus — so wiring
-    them into the r12 window is a pure dict move with no new
-    behavior.  Iterates the dict (not a pinned param list) so gates
-    staged later this round are covered the moment they land."""
-    import importlib.util
-    import os
-
-    import duckdb
-
-    import __spark_entry__ as em
-    from oracles import ORACLES_STAGED_R12
-
-    if not ORACLES_STAGED_R12:
-        pytest.skip("no staged r12 gates yet")
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "_vo_staged12", os.path.join(root, "scripts", "validate_oracles.py"))
-    vo = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(vo)
-
-    con = duckdb.connect()
-    for tbl in ("documents", "embeddings"):
-        con.execute(
-            f"create view {tbl} as select * from '{sf_dir}/{tbl}.parquet'")
-    for staged_name in ORACLES_STAGED_R12:
-        ok, msg = vo.compare(
-            staged_name, spark, con, sf_dir,
-            getattr(em, staged_name), ORACLES_STAGED_R12[staged_name])
-        assert ok, f"{staged_name}: {msg}"
 
 
 def test_corpus_diff_hand_computed(spark):
@@ -3458,3 +3262,33 @@ def test_stump_binned_extreme_range_no_overflow(spark):
     df = spark.createDataFrame(rows, "doc_id long, f long, y int")
     s = stump_train(df, ["f"], label_col="y", max_bins=4).collect()[0]
     assert s.train_error == 0
+
+
+@pytest.fixture(scope="module")
+def oracle_con(sf_dir):
+    """(validator module, DuckDB connection over every testdata table)."""
+    import importlib.util
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "_validate_oracles",
+        os.path.join(root, "scripts", "validate_oracles.py"))
+    vo = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(vo)
+    con = vo.duck_connect(sf_dir)
+    yield vo, con
+    con.close()
+
+
+@pytest.mark.parametrize("gate_name", list(em.queries()))
+@_mark_slow
+def test_gate_matches_oracle(spark, sf_dir, oracle_con, gate_name):
+    """Every registry gate end to end: the __spark_entry__ callable vs
+    its oracles.ORACLES SQL through the validator's own compare (column
+    names, arrow type families, sorted row values) on the sf corpus."""
+    vo, con = oracle_con
+    ok, msg = vo.compare(
+        gate_name, spark, con, sf_dir,
+        em.queries()[gate_name], em.oracle_sql()[gate_name])
+    assert ok, msg

@@ -1316,11 +1316,11 @@ def test_embedding_gates_with_nonfinite_components(
 
 
 # ---------------------------------------------------------------------------
-# round-8 tier: the four newly wired gates (r7 verdict item 3) — every
-# registry gate stays fuzz-covered as the window rotates
+# retrieval, training, lifecycle, classification and graph gates
 # ---------------------------------------------------------------------------
 
-R8_DOC_GATES = ["bm25_index_append_docs", "perceptron_language_docs"]
+APPEND_PERCEPTRON_GATES = [
+    "bm25_index_append_docs", "perceptron_language_docs"]
 
 
 @settings(
@@ -1330,7 +1330,9 @@ R8_DOC_GATES = ["bm25_index_append_docs", "perceptron_language_docs"]
 )
 @given(rows=_docs_rows,
        skew=st.sampled_from(["as_drawn", "all_en", "no_en"]))
-def test_r8_doc_gates_on_hostile_corpora(spark, tmp_path_factory, rows, skew):
+def test_append_and_perceptron_gates_on_hostile_corpora(
+    spark, tmp_path_factory, rows, skew
+):
     """bm25_index_append + perceptron training on hostile corpora.
     Append: tiny corpora naturally produce empty standing indexes
     (every id % 10 == 0) and empty batches; Unicode/NULL/empty texts
@@ -1344,7 +1346,7 @@ def test_r8_doc_gates_on_hostile_corpora(spark, tmp_path_factory, rows, skew):
         rows = [(t, lg if lg != "en" else "xx") for t, lg in rows]
     tmpdir = str(tmp_path_factory.mktemp("fuzz_r8doc"))
     con = _write_docs(tmpdir, rows)
-    _check(spark, tmpdir, con, R8_DOC_GATES)
+    _check(spark, tmpdir, con, APPEND_PERCEPTRON_GATES)
 
 
 def test_perceptron_gate_deterministic_hostile_classes(
@@ -1425,28 +1427,23 @@ def test_hybrid_gate_on_hostile_corpora(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(rows=_docs_rows, dup=st.booleans())
-def test_r9_doc_gates_on_hostile_corpora(
+def test_span_cut_diff_and_ovr_gates_on_hostile_corpora(
     spark, tmp_path_factory, rows, dup
 ):
-    """Fuzz the round-9-wired doc gates (the module callable vs the
-    ORACLES SQL through the validator's compare): span-cut
-    decontamination on duplicate-heavy Unicode corpora, snapshot diff
-    with NULL/empty texts crossing the residue splits, loop detection
-    where the injected prefix meets hostile text, and OVR training
-    under whatever label skew hypothesis draws."""
-    from oracles import ORACLES
-
+    """Fuzz span-cut decontamination on duplicate-heavy Unicode
+    corpora, snapshot diff with NULL/empty texts crossing the residue
+    splits, loop detection where the injected prefix meets hostile
+    text, and OVR training under whatever label skew hypothesis
+    draws."""
     if dup and rows:  # duplicated texts: probe/corpus twins for the cut
         rows = rows + rows[: len(rows) // 2 + 1]
     tmpdir = str(tmp_path_factory.mktemp("fuzz_r9"))
     con = _write_docs(tmpdir, rows)
-    for name in ("decontaminate_cut_docs", "corpus_diff_docs",
-                 "ngram_loops_docs", "perceptron_ovr_language_docs",
-                 "vocab_drift_docs", "perceptron_avg_language_docs"):
-        ok, msg = _vo.compare(
-            name, spark, con, tmpdir,
-            getattr(em, name), ORACLES[name])
-        assert ok, f"{name}: {msg}"
+    _check(spark, tmpdir, con, [
+        "decontaminate_cut_docs", "corpus_diff_docs",
+        "ngram_loops_docs", "perceptron_ovr_language_docs",
+        "vocab_drift_docs", "perceptron_avg_language_docs",
+    ])
 
 
 @settings(
@@ -1455,25 +1452,19 @@ def test_r9_doc_gates_on_hostile_corpora(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(vecs=_emb_rows_nullable, dup=st.booleans())
-def test_r9_rebalance_gate_on_hostile_corpora(
+def test_ivf_rebalance_gate_on_hostile_corpora(
     spark, tmp_path_factory, vecs, dup
 ):
-    """The round-9-wired IVF-rebalance gate on hostile embeddings:
+    """The IVF-rebalance gate on hostile embeddings:
     NULL / zero-norm vectors (excluded by the build's entry contract on
     both engines), duplicate vectors (argmax and seed-order ties), and
     tiny corpora where no cell is hot (rebalance no-ops and the gate is
     the plain build assignment)."""
-    from oracles import ORACLES
-
     if dup and vecs:
         vecs = vecs + vecs[:3]
     tmpdir = str(tmp_path_factory.mktemp("fuzz_r9reb"))
     con = _write_embeddings(tmpdir, [v for v in vecs])
-    ok, msg = _vo.compare(
-        "ann_ivf_rebalance_embeddings", spark, con, tmpdir,
-        em.ann_ivf_rebalance_embeddings,
-        ORACLES["ann_ivf_rebalance_embeddings"])
-    assert ok, msg
+    _check(spark, tmpdir, con, ["ann_ivf_rebalance_embeddings"])
 
 
 @settings(
@@ -1482,26 +1473,22 @@ def test_r9_rebalance_gate_on_hostile_corpora(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(vecs=_emb_rows_nullable, dup=st.booleans())
-def test_staged_r10_ann_serve_gate_on_hostile_corpora(
+def test_ann_serve_and_delete_gates_on_hostile_corpora(
     spark, tmp_path_factory, vecs, dup
 ):
-    """The round-10 (wired r10) streaming ANN serve gate on hostile
+    """The streaming ANN serve and IVF delete gates on hostile
     embeddings: NULL / zero-norm / non-finite query vectors (dropped
     inside the assignment kernel on the Spark side, by the v CTE in
     the oracle), duplicate vectors (argmax ties), and corpora so small
     that some micro-batches carry zero query rows."""
-    from oracles import ORACLES as _R10_ORACLES
-
     if dup and vecs:
         vecs = vecs + vecs[:3]
     tmpdir = str(tmp_path_factory.mktemp("fuzz_r10serve"))
     con = _write_embeddings(tmpdir, [v for v in vecs])
-    for name in ("streaming_ann_serve_embeddings",
-                 "ann_ivf_index_delete_embeddings"):
-        ok, msg = _vo.compare(
-            name, spark, con, tmpdir,
-            getattr(em, name), _R10_ORACLES[name])
-        assert ok, f"{name}: {msg}"
+    _check(spark, tmpdir, con, [
+        "streaming_ann_serve_embeddings",
+        "ann_ivf_index_delete_embeddings",
+    ])
 
 
 @settings(
@@ -1510,25 +1497,19 @@ def test_staged_r10_ann_serve_gate_on_hostile_corpora(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(rows=_docs_rows, dup=st.booleans())
-def test_staged_r10_phash_gate_on_hostile_corpora(
+def test_phash_dedup_gate_on_hostile_corpora(
     spark, tmp_path_factory, rows, dup
 ):
-    """The round-10 (wired r10) multimodal phash dedup gate on hostile doc
+    """The multimodal phash dedup gate on hostile doc
     corpora: tiny corpora where the %23 slice is empty (empty contract
     frame), duplicated doc rows, and whatever ids hypothesis draws —
     the hash depends only on doc_id (text feeds the WAV rows, which
     hash NULL and drop)."""
-    from oracles import ORACLES as _R10_ORACLES
-
     if dup and rows:
         rows = rows + rows[: len(rows) // 2 + 1]
     tmpdir = str(tmp_path_factory.mktemp("fuzz_r10ph"))
     con = _write_docs(tmpdir, rows)
-    ok, msg = _vo.compare(
-        "multimodal_phash_dedup_docs", spark, con, tmpdir,
-        em.multimodal_phash_dedup_docs,
-        _R10_ORACLES["multimodal_phash_dedup_docs"])
-    assert ok, msg
+    _check(spark, tmpdir, con, ["multimodal_phash_dedup_docs"])
 
 
 @settings(
@@ -1537,33 +1518,28 @@ def test_staged_r10_phash_gate_on_hostile_corpora(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(rows=_docs_rows, dup=st.booleans())
-def test_staged_r10_doc_gates_on_hostile_corpora(
+def test_nb_vocab_eval_and_media_gates_on_hostile_corpora(
     spark, tmp_path_factory, rows, dup
 ):
-    """The r9-built doc gates (wired r10) on hostile corpora: Naive Bayes
-    where hypothesis may draw all-NULL labels (empty training set →
-    empty output), all-empty-token training docs (V = 0 → priors-only
-    serving, the case guard on both engines), and label skew; OOV rate
-    where the even vocab slice may be empty (everything OOV) or docs
-    tokenize empty (NULL rate); audio fingerprint dedup where the
-    %23==2 even slice is usually empty on tiny corpora and clip
-    lengths hit the no-peak minimum."""
-    from oracles import ORACLES as _R10_ORACLES
-
+    """Trained-filter, vocab, eval and media doc gates on hostile
+    corpora: Naive Bayes where hypothesis may draw all-NULL labels
+    (empty training set → empty output), all-empty-token training docs
+    (V = 0 → priors-only serving, the case guard on both engines), and
+    label skew; OOV rate where the even vocab slice may be empty
+    (everything OOV) or docs tokenize empty (NULL rate); audio
+    fingerprint dedup where the %23==2 even slice is usually empty on
+    tiny corpora and clip lengths hit the no-peak minimum."""
     if dup and rows:
         rows = rows + rows[: len(rows) // 2 + 1]
     tmpdir = str(tmp_path_factory.mktemp("fuzz_r10doc"))
     con = _write_docs(tmpdir, rows)
-    for name in ("naive_bayes_language_docs", "oov_rate_docs",
-                 "audio_fingerprint_dedup_docs", "retrieval_eval_docs",
-                 "naive_bayes_incremental_docs",
-                 "credit_card_detect_docs", "classifier_eval_docs",
-                 "bm25_index_delete_docs",
-                 "multimodal_video_dedup_docs"):
-        ok, msg = _vo.compare(
-            name, spark, con, tmpdir,
-            getattr(em, name), _R10_ORACLES[name])
-        assert ok, f"{name}: {msg}"
+    _check(spark, tmpdir, con, [
+        "naive_bayes_language_docs", "oov_rate_docs",
+        "audio_fingerprint_dedup_docs", "retrieval_eval_docs",
+        "naive_bayes_incremental_docs", "credit_card_detect_docs",
+        "classifier_eval_docs", "bm25_index_delete_docs",
+        "multimodal_video_dedup_docs",
+    ])
 
 
 @settings(
@@ -1572,30 +1548,25 @@ def test_staged_r10_doc_gates_on_hostile_corpora(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(rows=_docs_rows, dup=st.booleans())
-def test_staged_r11_doc_gates_on_hostile_corpora(
+def test_score_eval_and_video_align_gates_on_hostile_corpora(
     spark, tmp_path_factory, rows, dup
 ):
-    """The round-11-wired doc gates on hostile corpora: the eval
+    """Score-eval and video-alignment doc gates on hostile corpora: the eval
     trio (PR curve / AUC / calibration) over perceptron scores where
     hypothesis may draw zero positives (recall/F1 zeros, AUC NULL),
     all-NULL text (no scored rows — empty curves), constant scores
     (one threshold row, AUC exactly 500000 when both classes exist),
     and heavy ties; video alignment where the %19 slice is usually
-    empty and duplicated doc rows hit clone structure.  (SQL moved
-    into ORACLES at the r11 rotation — same strings.)"""
-    from oracles import ORACLES as _R11_ORACLES
-
+    empty and duplicated doc rows hit clone structure."""
     if dup and rows:
         rows = rows + rows[: len(rows) // 2 + 1]
     tmpdir = str(tmp_path_factory.mktemp("fuzz_r11doc"))
     con = _write_docs(tmpdir, rows)
-    for name in ("pr_curve_language_docs", "auc_language_docs",
-                 "calibration_language_docs",
-                 "multimodal_video_align_docs", "bpe_train_docs"):
-        ok, msg = _vo.compare(
-            name, spark, con, tmpdir,
-            getattr(em, name), _R11_ORACLES[name])
-        assert ok, f"{name}: {msg}"
+    _check(spark, tmpdir, con, [
+        "pr_curve_language_docs", "auc_language_docs",
+        "calibration_language_docs", "multimodal_video_align_docs",
+        "bpe_train_docs",
+    ])
 
 
 @settings(
@@ -1604,25 +1575,18 @@ def test_staged_r11_doc_gates_on_hostile_corpora(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(vecs=_emb_rows_nullable, dup=st.booleans())
-def test_staged_r11_lifecycle_gate_on_hostile_corpora(
+def test_ivf_lifecycle_gate_on_hostile_corpora(
     spark, tmp_path_factory, vecs, dup
 ):
-    """The round-11-wired composed deletion-lifecycle gate on hostile
+    """The composed IVF deletion-lifecycle gate on hostile
     embeddings: NULL / empty / duplicate vectors, corpora small enough
     that the %6 delete empties cells or leaves nothing hot, and query
-    batches that may be entirely tombstoned ids.  (SQL moved into
-    ORACLES at the r11 rotation — same string.)"""
-    from oracles import ORACLES as _R11_ORACLES
-
+    batches that may be entirely tombstoned ids."""
     if dup and vecs:
         vecs = vecs + vecs[:3]
     tmpdir = str(tmp_path_factory.mktemp("fuzz_r11life"))
     con = _write_embeddings(tmpdir, [v for v in vecs])
-    ok, msg = _vo.compare(
-        "ann_ivf_lifecycle_embeddings", spark, con, tmpdir,
-        em.ann_ivf_lifecycle_embeddings,
-        _R11_ORACLES["ann_ivf_lifecycle_embeddings"])
-    assert ok, msg
+    _check(spark, tmpdir, con, ["ann_ivf_lifecycle_embeddings"])
 
 
 @settings(
@@ -1631,10 +1595,10 @@ def test_staged_r11_lifecycle_gate_on_hostile_corpora(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(rows=_docs_rows, dup=st.booleans())
-def test_staged_r12_langid_gates_on_hostile_corpora(
+def test_langid_and_minhash_delete_gates_on_hostile_corpora(
     spark, tmp_path_factory, rows, dup
 ):
-    """The STAGED round-12 doc gates on hostile corpora: trained
+    """Trained langid and MinHash-delete doc gates on hostile corpora: trained
     langid with all-NULL labels (empty training set → empty output),
     documents whose text normalizes to zero words (ZERO char grams —
     never a pad-only gram; V = 0 pins priors-only serving on both
@@ -1642,22 +1606,14 @@ def test_staged_r12_langid_gates_on_hostile_corpora(
     exercising the lower/İ normalization; MinHash index deletion
     where the corpus slice, the tombstone slice, or the batch slice
     is usually empty on tiny corpora."""
-    # wired in round 12: staged SQL lives in ORACLES now (the dict
-    # empties at wiring time) — fall through to the live registry
-    from oracles import ORACLES, ORACLES_STAGED_R12
-
     if dup and rows:
         rows = rows + rows[: len(rows) // 2 + 1]
     tmpdir = str(tmp_path_factory.mktemp("fuzz_r12langid"))
     con = _write_docs(tmpdir, rows)
-    for name in ("langid_nb_docs", "langid_eval_docs",
-                 "minhash_index_delete_docs",
-                 "threshold_select_language_docs"):
-        ok, msg = _vo.compare(
-            name, spark, con, tmpdir,
-            getattr(em, name),
-            ORACLES_STAGED_R12.get(name) or ORACLES[name])
-        assert ok, f"{name}: {msg}"
+    _check(spark, tmpdir, con, [
+        "langid_nb_docs", "langid_eval_docs",
+        "minhash_index_delete_docs", "threshold_select_language_docs",
+    ])
 
 
 @settings(
@@ -1666,30 +1622,23 @@ def test_staged_r12_langid_gates_on_hostile_corpora(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(vecs=_emb_rows_nullable, dup=st.booleans())
-def test_staged_r12_ivfpq_lifecycle_on_hostile_corpora(
+def test_ivfpq_lifecycle_gates_on_hostile_corpora(
     spark, tmp_path_factory, vecs, dup
 ):
-    """The STAGED round-12 persisted-IVFPQ deletion lifecycle on
+    """The persisted-IVFPQ deletion and append lifecycles on
     hostile embeddings: NULL / non-finite / duplicate vectors, corpora
     smaller than n_cells or ks (degenerate centroid/codebook seeds),
     %6 deletes that empty cells, and query batches that may be
     entirely tombstoned ids — standing-model semantics on both
     engines."""
-    # wired in round 12: staged SQL lives in ORACLES now (the dict
-    # empties at wiring time) — fall through to the live registry
-    from oracles import ORACLES, ORACLES_STAGED_R12
-
     if dup and vecs:
         vecs = vecs + vecs[:3]
     tmpdir = str(tmp_path_factory.mktemp("fuzz_r12ipql"))
     con = _write_embeddings(tmpdir, [v for v in vecs])
-    for name in ("ivfpq_index_lifecycle_embeddings",
-                 "ivfpq_index_append_embeddings"):
-        ok, msg = _vo.compare(
-            name, spark, con, tmpdir,
-            getattr(em, name),
-            ORACLES_STAGED_R12.get(name) or ORACLES[name])
-        assert ok, f"{name}: {msg}"
+    _check(spark, tmpdir, con, [
+        "ivfpq_index_lifecycle_embeddings",
+        "ivfpq_index_append_embeddings",
+    ])
 
 
 @settings(
@@ -1699,19 +1648,15 @@ def test_staged_r12_ivfpq_lifecycle_on_hostile_corpora(
 )
 @given(vecs=_emb_rows_nullable, label_seed=st.integers(0, 7),
        dup=st.booleans())
-def test_staged_r12_knn_gates_on_hostile_corpora(
+def test_knn_gates_on_hostile_corpora(
     spark, tmp_path_factory, vecs, label_seed, dup
 ):
-    """The STAGED round-12 kNN-classification gates on hostile
+    """The kNN-classification gates on hostile
     embeddings: NULL / empty / non-finite / duplicate vectors, NULL
     labels scattered through the corpus (possibly ALL labels NULL —
     empty votable corpus → empty predictions and an empty eval
     lattice on both engines), corpora smaller than k or n_cells, and
     query slices that may be entirely invalid vectors."""
-    # wired in round 12: staged SQL lives in ORACLES now (the dict
-    # empties at wiring time) — fall through to the live registry
-    from oracles import ORACLES, ORACLES_STAGED_R12
-
     if dup and vecs:
         vecs = vecs + vecs[:3]
     labels = [
@@ -1722,14 +1667,10 @@ def test_staged_r12_knn_gates_on_hostile_corpora(
         labels = [None] * len(vecs)
     tmpdir = str(tmp_path_factory.mktemp("fuzz_r12knn"))
     con = _write_embeddings(tmpdir, vecs, labels=labels)
-    for name in ("knn_classify_embeddings", "knn_eval_embeddings",
-                 "knn_classify_ivf_embeddings",
-                 "centroid_classify_embeddings"):
-        ok, msg = _vo.compare(
-            name, spark, con, tmpdir,
-            getattr(em, name),
-            ORACLES_STAGED_R12.get(name) or ORACLES[name])
-        assert ok, f"{name}: {msg}"
+    _check(spark, tmpdir, con, [
+        "knn_classify_embeddings", "knn_eval_embeddings",
+        "knn_classify_ivf_embeddings", "centroid_classify_embeddings",
+    ])
 
 
 @settings(
@@ -1738,10 +1679,10 @@ def test_staged_r12_knn_gates_on_hostile_corpora(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(rows=_docs_rows, dup=st.booleans())
-def test_staged_r12_stump_gates_on_hostile_corpora(
+def test_stump_and_summary_gates_on_hostile_corpora(
     spark, tmp_path_factory, rows, dup
 ):
-    """The STAGED round-12 decision-stump gates on hostile corpora:
+    """The decision-stump gates on hostile corpora:
     all-NULL langs (empty training set → empty model → empty
     predictions), single-class labels (every split has equal error —
     the pinned argmin must agree), NULL/empty texts (NULL n_words
@@ -1749,22 +1690,15 @@ def test_staged_r12_stump_gates_on_hostile_corpora(
     classifier summary must keep its exactly-one-row contract with
     all-zero counts on an empty evaluation; strip_html must agree on
     texts that themselves contain <, >, & and entity-like runs."""
-    # wired in round 12: staged SQL lives in ORACLES now (the dict
-    # empties at wiring time) — fall through to the live registry
-    from oracles import ORACLES, ORACLES_STAGED_R12
-
     if dup and rows:
         rows = rows + rows[: len(rows) // 2 + 1]
     tmpdir = str(tmp_path_factory.mktemp("fuzz_r12stump"))
     con = _write_docs(tmpdir, rows)
-    for name in ("stump_train_docs", "stump_classify_docs",
-                 "classifier_summary_docs", "strip_html_docs",
-                 "corpus_profile_docs"):
-        ok, msg = _vo.compare(
-            name, spark, con, tmpdir,
-            getattr(em, name),
-            ORACLES_STAGED_R12.get(name) or ORACLES[name])
-        assert ok, f"{name}: {msg}"
+    _check(spark, tmpdir, con, [
+        "stump_train_docs", "stump_classify_docs",
+        "classifier_summary_docs", "strip_html_docs",
+        "corpus_profile_docs",
+    ])
 
 
 @settings(
@@ -1773,28 +1707,21 @@ def test_staged_r12_stump_gates_on_hostile_corpora(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(rows=_docs_rows, dup=st.booleans())
-def test_staged_r12_group_split_on_hostile_corpora(
+def test_group_split_and_pagerank_gates_on_hostile_corpora(
     spark, tmp_path_factory, rows, dup
 ):
-    """The STAGED round-12 leakage-safe split gate on hostile corpora:
+    """The leakage-safe split and PageRank gates on hostile corpora:
     empty/NULL texts (no pairs → all singletons), duplicated rows
     (dense clusters), and tiny corpora where the pair graph is empty
     — recursive-CTE components + md5 lattice must agree with Spark's
     iterative propagation + hash on every draw; integer PageRank over
     the same pair graph must match the oracle's exact 3-sweep unroll
     (empty edge sets → every node at the damping floor)."""
-    # wired in round 12: staged SQL lives in ORACLES now (the dict
-    # empties at wiring time) — fall through to the live registry
-    from oracles import ORACLES, ORACLES_STAGED_R12
-
     if dup and rows:
         rows = rows + rows[: len(rows) // 2 + 1]
     tmpdir = str(tmp_path_factory.mktemp("fuzz_r12gsplit"))
     con = _write_docs(tmpdir, rows)
-    for name in ("group_split_docs", "pagerank_docs", "ppr_docs",
-                 "group_kfold_docs"):
-        ok, msg = _vo.compare(
-            name, spark, con, tmpdir,
-            getattr(em, name),
-            ORACLES_STAGED_R12.get(name) or ORACLES[name])
-        assert ok, f"{name}: {msg}"
+    _check(spark, tmpdir, con, [
+        "group_split_docs", "pagerank_docs", "ppr_docs",
+        "group_kfold_docs",
+    ])

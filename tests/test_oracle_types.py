@@ -11,6 +11,9 @@ rule (it also catches ``bigint * 1.953125`` DECIMAL promotion, which a
 
 Intentional-decimal oracles would go in ALLOWED_DECIMAL below; there are
 none today because the Spark side works exclusively in int64/double.
+
+DuckDB-only, so the whole registry lints in about a minute on 4 cores:
+quick tier.
 """
 
 from __future__ import annotations
@@ -22,7 +25,6 @@ import pyarrow as pa
 import pytest
 
 from oracles import ORACLES
-from _slowmark import _mark_slow  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TINY", "/root/testdata/sf0.001")
 TABLES = ("region nation customer supplier part orders lineitem events "
@@ -50,7 +52,6 @@ def con():
     c.close()
 
 
-@_mark_slow
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_no_decimal_outputs(con, name):
     if not os.path.exists(f"{SF_DIR}/region.parquet"):
@@ -67,26 +68,3 @@ def test_oracle_no_decimal_outputs(con, name):
         f"aggregate (e.g. cast(sum(...) as bigint)) per the repo convention"
     )
 
-
-# staged-for-next-round oracles get the same lint BEFORE they are
-# wired: a decimal output found at wiring time would cost a driver
-# round (the hash is type-tagged)
-from oracles import ORACLES_STAGED_R12  # noqa: E402
-
-
-@pytest.mark.parametrize(
-    "name",
-    sorted(ORACLES_STAGED_R12) or [None],  # param list may be empty
-)
-def test_staged_oracle_no_decimal_outputs(con, name):
-    if name is None:
-        pytest.skip("no staged oracles yet this round")
-    if not os.path.exists(f"{SF_DIR}/region.parquet"):
-        pytest.skip("testdata not present")
-    tbl = con.execute(ORACLES_STAGED_R12[name]).fetch_arrow_table()
-    bad = [
-        (f.name, str(f.type))
-        for f in tbl.schema
-        if _offending(f.type)
-    ]
-    assert not bad, f"{name}: decimal/hugeint outputs {bad}"

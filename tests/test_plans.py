@@ -355,136 +355,74 @@ def test_ann_recall_no_corpus_data_moves(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_gate_window_never_verified_rows_lead():
-    """Rotation-policy guard (r4 verdict item 2): the driver verifies
-    the FIRST 50 registry keys; every query with NO driver record in
-    any CORRECTNESS_r*.json must sit inside that window — never-verified
-    rows are always in-window, no exceptions."""
-    import glob
-    import json
+def test_registry_is_the_oracle_table():
+    """One gate registry: queries() is derived from oracles.ORACLES, so
+    a gate is live exactly when it has an oracle; every value is the
+    same-named module function, and no public function in
+    __spark_entry__ is left out of the registry (no unwired gate)."""
+    import inspect
 
-    import __spark_entry__ as e
-
-    qs = list(e.queries())
-    ever = set()
-    for path in glob.glob("/root/repo/CORRECTNESS_r*.json"):
-        ever.update(json.load(open(path)))
-    never = [q for q in qs if q not in ever]
-    window = set(qs[:50])
-    out = [q for q in never if q not in window]
-    assert not out, f"never-driver-verified queries outside the gate window: {out}"
-
-
-def _gate_ledger():
-    """(current_round, {query: last_driver_green_round}, latest_record_keys)
-    derived from the driver's CORRECTNESS_r*.json records (r5 verdict
-    item 1: the staleness invariant must be computed from the records,
-    not hand-maintained)."""
-    import glob
-    import json
-    import re
-
-    hist: dict[str, int] = {}
-    latest = 0
-    latest_keys: set[str] = set()
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
-        rec = json.load(open(path))
-        if rnd > latest:
-            latest, latest_keys = rnd, set(rec)
-        for k, v in rec.items():
-            ok = (
-                v.get("rows_match")
-                and v.get("schema_match")
-                and v.get("hash_match") in (True, None)
-                and not v.get("err")
-            )
-            if ok:
-                hist[k] = max(rnd, hist.get(k, 0))
-    return latest + 1, hist, latest_keys
+    qs = em.queries()
+    assert set(qs) == set(em.oracle_sql())
+    assert len(qs) == 204
+    for name, fn in qs.items():
+        assert inspect.isfunction(fn) and fn.__module__ == em.__name__, name
+        assert fn.__name__ == name and getattr(em, name) is fn, name
+    public = {
+        n for n, f in vars(em).items()
+        if inspect.isfunction(f) and f.__module__ == em.__name__
+        and not n.startswith("_")
+    }
+    assert public - set(qs) == {"entry", "queries", "oracle_sql"}
 
 
-def test_gate_window_max_staleness_invariant():
-    """The r5 verdict's rotation invariant, mechanically: (a) every row
-    whose driver-staleness entering this round is >= 4 rounds MUST be
-    in the 50-row window; (b) the window is filled strictly oldest-
-    first — no in-window row may be fresher (greater last-green round)
-    than any out-of-window ever-verified row.  With ~154 queries and a
-    50-row gate the steady-state period is ~3 rounds; this test keeps
-    the debt at that floor.
-
-    Pending-rotation grace (r6 verdict item 5): the instant the driver
-    drops CORRECTNESS_rN.json, the registry still encodes the
-    just-verified round-N window — rows that crossed the staleness
-    bound *in that record* are pending rotation, not a defect.  When
-    the current window is exactly the latest record's key set, the
-    oldest-first checks are deferred to the rotation commit and only a
-    hard >=5-round backstop is enforced (so a full round can never pass
-    without rotating)."""
-    import __spark_entry__ as e
-
-    current, hist, latest_keys = _gate_ledger()
-    qs = list(e.queries())
-    window, rest = qs[:50], qs[50:]
-    if set(window) == latest_keys:
-        # driver just verified this exact window — rotation pending;
-        # enforce only the hard backstop (one extra round of grace)
-        overdue = [q for q in rest if q in hist and current - hist[q] >= 5]
-        assert not overdue, (
-            f"rotation overdue a full round — rows >=5 rounds driver-stale "
-            f"outside the window: {overdue}"
-        )
-        return
-    # (a) hard staleness bound: nothing 4+ rounds stale stays outside
-    overdue = [q for q in rest if q in hist and current - hist[q] >= 4]
-    assert not overdue, f"rows >=4 rounds driver-stale outside the window: {overdue}"
-    # (b) oldest-first fill: in-window max last-green <= out-of-window min
-    in_green = [hist[q] for q in window if q in hist]
-    out_green = [hist[q] for q in rest if q in hist]
-    if in_green and out_green:
-        assert max(in_green) <= min(out_green), (
-            "gate window is not the staleness cohort: in-window row last "
-            f"green r{max(in_green)} > out-of-window row last green "
-            f"r{min(out_green)}"
-        )
+# gates that once led a hand-ordered verification window, and gates
+# that once waited in a separate staged-oracle dict; both are now plain
+# ORACLES rows and must stay live in the one registry
+_FORMER_WINDOW_LEAD = [
+    "langid_nb_docs", "langid_eval_docs", "classifier_summary_docs",
+    "threshold_select_language_docs", "cc_dedup_docs",
+    "group_split_docs", "group_kfold_docs", "incremental_dedup_docs",
+    "minhash_index_delete_docs", "pagerank_docs", "ppr_docs",
+    "streaming_bm25_serve_docs", "streaming_knn_serve_embeddings",
+    "knn_classify_ivf_embeddings", "perceptron_ovr_language_docs",
+    "perceptron_avg_language_docs",
+]
+_FORMER_STAGED = [
+    "centroid_classify_embeddings", "corpus_profile_docs",
+    "ivfpq_index_append_embeddings", "ivfpq_index_lifecycle_embeddings",
+    "knn_classify_embeddings", "knn_eval_embeddings", "strip_html_docs",
+    "stump_classify_docs", "stump_train_docs",
+]
 
 
 def test_gate_window_r12_composition():
-    """Pins the round-12 window (the r11 verdict, item 4 — lead with
-    the optimizer-touched families the driver never re-oracled after
-    their r11 rewrite): 11 never-driver-verified staged gates + the 5
-    touched r9-green rows lead, then the ENTIRE 34-row r8-green
-    remainder (the staleness cohort — 4 rounds stale entering r12,
-    mandatory in-window).  The 5 touched r10-green rows stay out (they
-    cannot enter without breaking the oldest-first invariant while r9
-    rows wait) and rotate in with the r10 cohort; minhash_lsh_docs
-    (r9, touched only by a lazy-seal; covered in-window by
-    incremental_dedup + minhash_index_delete) sits at 51 so it leads
-    round 13.  Only the 11 TOUCHED staged gates are wired this round:
-    wiring all 20 would strand never-verified rows outside the window
-    (20 + the mandatory 34 > 50 —
-    test_gate_window_never_verified_rows_lead forbids that); the other
-    9 stay in ORACLES_STAGED_R12 and wire with the r13 rotation."""
-    import __spark_entry__ as e
+    """The gates that led the old verification window are all live:
+    each is a registry row with an oracle, and the registry is exactly
+    the oracle table (no order policy is left to pin)."""
+    qs = em.queries()
+    oracles = em.oracle_sql()
+    assert set(qs) == set(oracles)
+    for name in _FORMER_WINDOW_LEAD:
+        assert name in qs, f"{name} dropped from the registry"
+        assert oracles[name].strip(), f"{name} has an empty oracle"
+    assert len(qs) == 204
 
-    qs = list(e.queries())
-    assert qs[:16] == [
-        "langid_nb_docs", "langid_eval_docs", "classifier_summary_docs",
-        "threshold_select_language_docs", "cc_dedup_docs",
-        "group_split_docs", "group_kfold_docs", "incremental_dedup_docs",
-        "minhash_index_delete_docs", "pagerank_docs", "ppr_docs",
-        "streaming_bm25_serve_docs", "streaming_knn_serve_embeddings",
-        "knn_classify_ivf_embeddings", "perceptron_ovr_language_docs",
-        "perceptron_avg_language_docs",
-    ]
-    # the whole r8 remainder is in-window (mandatory staleness cohort)
-    assert qs[16] == "ann_ivf_index_append_embeddings"
-    assert qs[49] == "quantile_sketch_events"
-    # r13 leads: the yielded r9 row
-    assert qs[50] == "minhash_lsh_docs"
-    # every registry row has an oracle (the exact-correctness invariant)
-    assert set(e.oracle_sql()) == set(qs)
-    assert len(qs) == 195  # 184 + the 11 touched r11-staged gates wired
+
+def test_staged_r12_gates_are_wirable():
+    """Every gate that used to sit in the staged-oracle dict is wired:
+    it resolves to the same-named module callable, is live in
+    queries(), and carries its oracle in ORACLES; no staged dict is
+    left behind."""
+    import oracles as oracles_mod
+    from oracles import ORACLES
+
+    qs = em.queries()
+    for name in _FORMER_STAGED:
+        assert callable(getattr(em, name, None)), name
+        assert qs[name] is getattr(em, name), f"{name} not wired"
+        assert name in ORACLES, f"{name} has no oracle"
+    assert not [n for n in vars(oracles_mod) if n.startswith("ORACLES_STAGED")]
 
 
 def test_bm25_inverted_index_shape(spark, sf_dir):
@@ -501,21 +439,6 @@ def test_bm25_inverted_index_shape(spark, sf_dir):
     assert "WindowGroupLimit" in plan
     fmt = _formatted(df)
     assert fmt.count("HashAggregate") >= 2
-
-
-def test_staged_r12_gates_are_wirable():
-    """Every ORACLES_STAGED_R12 key must resolve to a module callable
-    and collide with nothing live — so the r12 rotation is a pure dict
-    move: add the queries() entries, move the SQL into ORACLES,
-    recompose the window (never-verified rows lead)."""
-    import __spark_entry__ as e
-    from oracles import ORACLES, ORACLES_STAGED_R12
-
-    qs = e.queries()
-    for name in ORACLES_STAGED_R12:
-        assert callable(getattr(e, name, None)), name
-        assert name not in qs, f"{name} staged but already wired"
-        assert name not in ORACLES, f"{name} staged but already in ORACLES"
 
 
 @_mark_slow
