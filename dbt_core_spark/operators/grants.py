@@ -33,6 +33,8 @@ from typing import Optional
 
 from pyspark.sql import SparkSession
 
+from dbt_core_spark.operators.relations import table_property
+
 logger = logging.getLogger(__name__)
 
 GRANTS_TBLPROP = "dbt.grants"
@@ -127,13 +129,10 @@ def _acl_supported(spark: SparkSession) -> bool:
 
 def current_grants(spark: SparkSession, rel: str) -> dict:
     """Grant state recorded on the relation (``dbt.grants`` property)."""
-    try:
-        for r in spark.sql(f"SHOW TBLPROPERTIES {rel}").collect():
-            if r["key"] == GRANTS_TBLPROP:
-                return {k: _coerce(v) for k, v in json.loads(r["value"]).items()}
-    except Exception:
-        pass
-    return {}
+    raw = table_property(spark, rel, GRANTS_TBLPROP)
+    if raw is None:
+        return {}
+    return {k: _coerce(v) for k, v in json.loads(raw).items()}
 
 
 def _ident(name: str) -> str:

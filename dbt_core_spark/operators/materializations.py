@@ -506,16 +506,6 @@ def materialize_seed(spark: SparkSession, node: Node, rel: str) -> int:
 _MV_FP_PROP = "dbt_mv_fingerprint"
 
 
-def _table_property(spark: SparkSession, rel: str, key: str) -> str | None:
-    try:
-        for r in spark.sql(f"SHOW TBLPROPERTIES {rel}").collect():
-            if r["key"] == key:
-                return r["value"]
-    except Exception:
-        pass
-    return None
-
-
 def _mv_fingerprint(node: Node, sql: str) -> str:
     import hashlib
     import json as _json
@@ -548,21 +538,20 @@ def materialize_materialized_view(
     changeset."""
     fp = _mv_fingerprint(node, sql)
     on_change = node.config.get("on_configuration_change", "apply")
-    if R.relation_exists(spark, rel):
-        old = _table_property(spark, rel, _MV_FP_PROP)
-        if old is not None and old != fp:
-            if on_change == "continue":
-                logger.warning(
-                    "%s: materialized-view definition changed but "
-                    "on_configuration_change='continue' — keeping the "
-                    "existing relation (refresh skipped)", node.unique_id,
-                )
-                return 0
-            if on_change == "fail":
-                raise ExecutionError(
-                    f"{node.name}: materialized-view definition changed and "
-                    f"on_configuration_change='fail'"
-                )
+    old = R.table_property(spark, rel, _MV_FP_PROP)  # None if no relation
+    if old is not None and old != fp:
+        if on_change == "continue":
+            logger.warning(
+                "%s: materialized-view definition changed but "
+                "on_configuration_change='continue' — keeping the "
+                "existing relation (refresh skipped)", node.unique_id,
+            )
+            return 0
+        if on_change == "fail":
+            raise ExecutionError(
+                f"{node.name}: materialized-view definition changed and "
+                f"on_configuration_change='fail'"
+            )
     n = materialize_table(spark, node, rel, sql)
     spark.sql(
         f"ALTER TABLE {rel} SET TBLPROPERTIES('{_MV_FP_PROP}'='{fp}')"

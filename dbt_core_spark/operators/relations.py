@@ -1,7 +1,10 @@
 """Relation (table/view) management against the Spark catalog.
 
-Replaces the reference's adapter relation cache + rename/swap dance
-(ref: task/runnable.py:460-486 cache population; atomic-replace tests
+No relation cache (the reference fills one per run, ref:
+task/runnable.py:460-486): "does it exist, view or table?" is one
+in-process ``catalog.getTable`` lookup that launches no Spark job, so
+there is no state to invalidate on create, drop or rename.  Replacement
+is the reference's rename/swap (atomic-replace tests
 tests/functional/materializations/test_runtime_materialization.py).
 
 Local/test format is **parquet** with a drop+rename swap; on a real
@@ -15,6 +18,7 @@ import shutil
 from typing import Optional
 from urllib.parse import urlparse
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -27,14 +31,22 @@ def relation_exists(spark: SparkSession, rel: str) -> bool:
 
 
 def relation_type(spark: SparkSession, rel: str) -> Optional[str]:
-    """'table' | 'view' | None."""
-    if not spark.catalog.tableExists(rel):
+    """'table' | 'view' | None; temporary views count as 'table'."""
+    try:
+        table = spark.catalog.getTable(rel)
+    except AnalysisException:
         return None
-    db, _, name = rel.rpartition(".")
-    for t in spark.catalog.listTables(db or None):
-        if t.name == name.strip("`"):
-            return "view" if t.tableType == "VIEW" else "table"
-    return "table"
+    return "view" if table.tableType == "VIEW" else "table"
+
+
+def table_property(spark: SparkSession, rel: str, key: str) -> Optional[str]:
+    """Value of table property ``key`` on ``rel``; None when the
+    property or the relation is missing."""
+    try:
+        rows = spark.sql(f"SHOW TBLPROPERTIES {rel}").collect()
+    except AnalysisException:
+        return None
+    return next((r["value"] for r in rows if r["key"] == key), None)
 
 
 def drop_relation(spark: SparkSession, rel: str) -> None:
@@ -74,7 +86,7 @@ def write_table(
     broadcast decisions at real scale)."""
     rtype = relation_type(spark, rel)
     if rtype == "view":
-        drop_relation(spark, rel)
+        spark.sql(f"DROP VIEW IF EXISTS {rel}")
     if rtype is None:
         _clear_orphan_location(spark, rel)
     if sort_by and not (bucket_by and buckets):
@@ -143,7 +155,7 @@ def rebuild_table(
 
 def create_view(spark: SparkSession, rel: str, sql: str) -> None:
     if relation_type(spark, rel) == "table":
-        drop_relation(spark, rel)
+        spark.sql(f"DROP TABLE IF EXISTS {rel}")
     spark.sql(f"CREATE OR REPLACE VIEW {rel} AS {sql}")
 
 

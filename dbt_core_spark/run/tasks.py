@@ -44,9 +44,10 @@ def clone_relations(
             continue
         src = f"{state_schema}.{node.identifier}"
         dst = f"{target_schema}.{node.identifier}"
-        if not spark.catalog.tableExists(src):
+        rtype = R.relation_type(spark, src)
+        if rtype is None:
             continue
-        if R.relation_type(spark, src) == "view":
+        if rtype == "view":
             R.create_view(spark, dst, f"select * from {src}")
         else:
             R.drop_relation(spark, dst)

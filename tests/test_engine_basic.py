@@ -321,6 +321,37 @@ def test_sort_by_and_analyze_configs(spark, schema, sf_dir):
     assert kv.get("distinct_count") not in (None, "NULL")
 
 
+def test_relation_type_is_one_jobless_catalog_lookup(spark, schema):
+    """relation_type answers from one catalog lookup, not a scan of the
+    schema: right answers in a 24-relation schema, and no Spark job."""
+    from dbt_core_spark.operators import relations as R
+
+    spark.sql(f"create database {schema}")
+    for i in range(12):
+        spark.sql(f"create table {schema}.t{i} (id int) using parquet")
+        spark.sql(f"create view {schema}.v{i} as select 1 as id")
+    tmp = f"tmp_{schema}"
+    spark.createDataFrame([(1,)], "id int").createOrReplaceTempView(tmp)
+    sc = spark.sparkContext
+    group = f"relation_type_{schema}"
+    sc.setJobGroup(group, "relation_type lookups")
+    try:
+        got = {rel: R.relation_type(spark, rel) for rel in (
+            f"{schema}.t3", f"{schema}.v7", f"{schema}.missing",
+            f"no_such_db_{schema}.t3", tmp)}
+    finally:
+        sc.setJobGroup(None, None)
+        spark.catalog.dropTempView(tmp)
+    assert got == {
+        f"{schema}.t3": "table", f"{schema}.v7": "view",
+        f"{schema}.missing": None, f"no_such_db_{schema}.t3": None,
+        tmp: "table",  # temporary views keep mapping to "table"
+    }
+    # job starts reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def test_inject_ctes_preserves_with_recursive():
     """Ephemeral CTE injection into a model starting WITH RECURSIVE must
     splice AFTER the recursive keyword (it must stay first)."""
