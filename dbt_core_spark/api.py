@@ -181,7 +181,6 @@ class Engine:
         return out
 
     def _runner(self, full_refresh: bool = False, **kw) -> GraphRunner:
-        kw.setdefault("on_event", self._event_sink())
         kw.setdefault("event_manager", self.event_manager)
         return GraphRunner(
             self.spark, self.manifest, self.schema, cli_vars=self.cli_vars,
@@ -189,26 +188,6 @@ class Engine:
             on_run_start=self.project.on_run_start,
             on_run_end=self.project.on_run_end, **kw,
         )
-
-    def _event_sink(self):
-        """Structured-event sink (ref: events/EventManager): node
-        lifecycle events append to target/events.jsonl for dir-loaded
-        projects; in-memory projects get no sink unless the caller
-        passes on_event explicitly."""
-        if not self.project.project_root:
-            return None
-        import json as _json
-        import threading as _threading
-
-        path = os.path.join(self.project.project_root, "target", "events.jsonl")
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        lock = _threading.Lock()
-
-        def sink(ev: dict) -> None:
-            with lock, open(path, "a") as f:
-                f.write(_json.dumps(ev) + "\n")
-
-        return sink
 
     def resolve_selector(self, name: str) -> set[str]:
         """Named YAML selector → unique_ids (ref: selectors.yml;

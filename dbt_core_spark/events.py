@@ -65,9 +65,8 @@ class Event:
     thread: str = ""
 
     def to_dict(self) -> dict[str, Any]:
-        # flat dict: the JSON-line/file shape (and the shape passed to
-        # legacy on_event consumers — data keys promoted to the top
-        # level like the pre-typed node lifecycle dicts)
+        # flat dict: the JSON-line/file shape, data keys promoted to
+        # the top level
         return {
             "event": self.name, "code": self.code, "level": self.level,
             "msg": self.msg, "ts": self.ts, "thread": self.thread,

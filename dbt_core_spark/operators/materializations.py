@@ -126,7 +126,7 @@ def materialize_incremental(
             # full-partition rewrite (delta_compat.py seam)
             _delta_merge(spark, node, rel, df, unique_key)
             return -1
-        if partition_by and _table_partition_cols(spark, rel) == partition_by:
+        if partition_by and R.partition_columns(spark, rel) == partition_by:
             _partition_scoped_merge(
                 spark, node, rel, df, unique_key, partition_by, fmt
             )
@@ -231,26 +231,6 @@ def _warn_unpartitioned_full_rewrite(
             "Iceberg file_format for file-level MERGE.",
             node.unique_id, rel, size / 1024 ** 2,
         )
-
-
-def _table_partition_cols(spark: SparkSession, rel: str) -> list[str]:
-    """Partition columns of ``rel`` as recorded in the catalog."""
-    try:
-        rows = spark.sql(f"DESCRIBE TABLE {rel}").collect()
-    except Exception:
-        return []
-    cols: list[str] = []
-    in_part = False
-    for r in rows:
-        name = (r["col_name"] or "").strip()
-        if name.startswith("# Partition"):
-            in_part = True
-            continue
-        if in_part:
-            if not name or name.startswith("#"):
-                continue
-            cols.append(name)
-    return cols
 
 
 def _partition_literal(v) -> str:

@@ -49,6 +49,28 @@ def table_property(spark: SparkSession, rel: str, key: str) -> Optional[str]:
     return next((r["value"] for r in rows if r["key"] == key), None)
 
 
+def partition_columns(spark: SparkSession, rel: str) -> list[str]:
+    """Partition columns of ``rel`` as recorded in the catalog; [] when
+    it is unpartitioned or missing.  ``DESCRIBE TABLE`` launches no
+    Spark job; ``catalog.listColumns`` launches two."""
+    try:
+        rows = spark.sql(f"DESCRIBE TABLE {rel}").collect()
+    except AnalysisException:
+        return []
+    cols: list[str] = []
+    in_part = False
+    for r in rows:
+        name = (r["col_name"] or "").strip()
+        if name.startswith("# Partition"):
+            in_part = True
+            continue
+        if in_part:
+            if not name or name.startswith("#"):
+                continue
+            cols.append(name)
+    return cols
+
+
 def drop_relation(spark: SparkSession, rel: str) -> None:
     # Spark 4 raises WRONG_COMMAND_FOR_OBJECT_TYPE if DROP VIEW hits a
     # table (and vice versa) — inspect the catalog first.
@@ -199,8 +221,7 @@ def compact_table(
 
     # preserve hive-partition layout: compaction rewrites files WITHIN
     # the partition scheme, it must never flatten it
-    part_cols = [c.name for c in spark.catalog.listColumns(rel)
-                 if c.isPartition]
+    part_cols = partition_columns(spark, rel)
     df = spark.table(rel)
     if zorder_by:
         from dbt_core_spark.operators.layout import zorder_repartition

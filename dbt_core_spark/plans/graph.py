@@ -2,8 +2,9 @@
 
 - Linker (ref: core/dbt/compilation.py:120-272 — link_graph :176,
   find_cycles :132, add_test_edges :197-249)
-- GraphQueue (ref: core/dbt/graph/queue.py:19-214 — depth-score
-  priority :97-119, mark_done :176)
+- GraphQueue (ref: core/dbt/graph/queue.py:19-214 — in-degree ready
+  queue over the linked graph, depth-score priority :97-119,
+  mark_done :176)
 - Node selection (ref: core/dbt/graph/selector_spec.py:15-22 spec
   grammar; selector_methods.py:45-66; graph expansion graph.py:29-102;
   union/intersection cli.py:27-151)
@@ -11,6 +12,7 @@
 
 from __future__ import annotations
 
+import heapq
 import re
 import threading
 from typing import Optional
@@ -73,56 +75,65 @@ class Linker:
 
 
 class GraphQueue:
-    """Thread-safe ready-queue over the DAG, prioritized by graph depth
-    (ref: graph/queue.py — score = max depth to a sink, so deep chains
-    start early; :97-119)."""
+    """Thread-safe ready queue over the linked DAG (ref: graph/queue.py).
+
+    Each node of ``graph`` keeps a count of its unfinished parents;
+    ``mark_done`` decrements its children's counts.  Ready ``include``d
+    nodes wait in a heap and pop highest ``(score, uid)`` first, where
+    ``score`` counts the included nodes on the longest chain to a sink,
+    so deep chains start early (ref: :97-119).  A node outside
+    ``include`` (source, ephemeral, unselected node) is completed inside
+    the queue as soon as it is ready: ordering still flows through it,
+    and no worker receives it.  ``include=None`` includes every node."""
 
     def __init__(self, graph: nx.DiGraph, include: Optional[set[str]] = None):
-        self.graph = graph.subgraph(include).copy() if include is not None else graph.copy()
-        self._scores = self._compute_scores(self.graph)
-        self._lock = threading.Condition()
-        self._in_progress: set[str] = set()
-        self._done: set[str] = set()
-
-    @staticmethod
-    def _compute_scores(g: nx.DiGraph) -> dict[str, int]:
+        self.graph = graph
+        self._include = set(graph) if include is None else set(include)
         scores: dict[str, int] = {}
-        for uid in nx.topological_sort(g.reverse()):
-            succ = list(g.successors(uid))
-            scores[uid] = 1 + max((scores[s] for s in succ), default=0)
-        return scores
+        for uid in reversed(list(nx.topological_sort(graph))):
+            scores[uid] = (uid in self._include) + max(
+                (scores[c] for c in graph.successors(uid)), default=0)
+        by_priority = sorted(self._include, key=lambda u: (scores[u], u),
+                             reverse=True)
+        self._rank = {uid: i for i, uid in enumerate(by_priority)}
+        self._pending = dict(graph.in_degree())
+        self._ready: list[tuple[int, str]] = []
+        self._in_progress = 0
+        self._lock = threading.Condition()
+        roots = [uid for uid, n in self._pending.items() if n == 0]
+        for uid in roots:
+            if uid in self._include:
+                heapq.heappush(self._ready, (self._rank[uid], uid))
+        self._finish([uid for uid in roots if uid not in self._include])
+
+    def _finish(self, done: list[str]) -> None:
+        """Release the children of the ``done`` nodes, completing the
+        excluded ones that become ready in turn."""
+        while done:
+            for child in self.graph.successors(done.pop()):
+                self._pending[child] -= 1
+                if self._pending[child]:
+                    continue
+                if child in self._include:
+                    heapq.heappush(self._ready, (self._rank[child], child))
+                else:
+                    done.append(child)
 
     def get(self) -> Optional[str]:
         """Pop the highest-priority ready node; None when exhausted."""
         with self._lock:
-            while True:
-                ready = [
-                    uid
-                    for uid in self.graph.nodes
-                    if uid not in self._in_progress
-                    and uid not in self._done
-                    and all(p in self._done for p in self.graph.predecessors(uid))
-                ]
-                if ready:
-                    uid = max(ready, key=lambda u: (self._scores.get(u, 0), u))
-                    self._in_progress.add(uid)
-                    return uid
-                if len(self._done) + len(self._in_progress) >= self.graph.number_of_nodes():
-                    if not self._in_progress:
-                        return None
+            while not self._ready:
                 if not self._in_progress:
                     return None
-                self._lock.wait(timeout=0.5)
+                self._lock.wait()
+            self._in_progress += 1
+            return heapq.heappop(self._ready)[1]
 
     def mark_done(self, uid: str) -> None:
         with self._lock:
-            self._in_progress.discard(uid)
-            self._done.add(uid)
+            self._in_progress -= 1
+            self._finish([uid])
             self._lock.notify_all()
-
-    def empty(self) -> bool:
-        with self._lock:
-            return len(self._done) >= self.graph.number_of_nodes()
 
 
 _SPEC_RE = re.compile(

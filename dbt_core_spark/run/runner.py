@@ -2,10 +2,14 @@
 
 Re-expresses GraphRunnableTask.execute_nodes/run_queue (ref:
 core/dbt/task/runnable.py:308-441): a pool of worker threads pops ready
-nodes from the GraphQueue, compiles each (Jinja render at execution
-time, ref: compilation.py:541-571), runs its materialization, marks
-done to release children; failures skip all descendants
-(ref: _mark_dependent_errors task/runnable.py:445-458).
+nodes from the GraphQueue, the in-degree ready queue of
+core/dbt/graph/queue.py over the linked graph.  Each worker compiles
+its node (Jinja render at execution time, ref: compilation.py:541-571),
+runs its materialization and marks it done, which counts down its
+children.  Nodes the run does not execute (sources, ephemerals,
+unselected nodes) complete inside the queue.  A failure adds all its
+descendants to the failed set once; a popped node found there is
+skipped (ref: _mark_dependent_errors task/runnable.py:445-458).
 
 Spark-side concurrency: all workers share one SparkSession (job
 submission is thread-safe); each worker tags its jobs into a FAIR
@@ -22,8 +26,10 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Any, Optional
 
+import networkx as nx
 from pyspark.sql import SparkSession
 
+from dbt_core_spark import events as E
 from dbt_core_spark.exceptions import ExecutionError
 from dbt_core_spark.operators import relations as R
 from dbt_core_spark.operators.materializations import MATERIALIZATIONS
@@ -82,7 +88,6 @@ class GraphRunner:
         favor_state: bool = False,
         fail_fast: bool = False,
         warn_error: bool = False,
-        on_event: Optional[Any] = None,
         event_manager: Optional[Any] = None,
     ):
         self.spark = spark
@@ -100,44 +105,15 @@ class GraphRunner:
         self.favor_state = favor_state
         self.fail_fast = fail_fast
         self.warn_error = warn_error
-        # structured-event callback (ref: the events/EventManager system,
-        # core/dbt/events/ — reduced to node lifecycle dicts here):
-        # receives {"event", "ts", "unique_id", ...} per node start/finish
-        self.on_event = on_event
-        # typed-event fan-out (events.EventManager); on_event keeps the
-        # legacy flat-dict contract for existing consumers
+        # typed-event fan-out (events.EventManager; ref: core/dbt/events/)
         self.event_manager = event_manager
         self.relations: dict[str, str] = {}
 
-    def _emit(self, event: str, **data: Any) -> None:
-        """Fire a typed lifecycle event (events.py — reference codes) to
-        the EventManager when one is attached, and the same flat dict to
-        the legacy ``on_event`` callable.  Observability must never fail
-        the run."""
-        from dbt_core_spark import events as E
-
-        ctor = {
-            "NodeStart": lambda d: E.node_start(d.pop("unique_id"), **d),
-            "NodeFinish": lambda d: E.node_finished(
-                d.pop("unique_id"), d.pop("status"), **d),
-            "StatsLine": lambda d: E.stats_line(d.pop("stats")),
-            "RunResultError": lambda d: E.run_result_error(
-                d.pop("unique_id"), d.pop("message")),
-        }.get(event)
-        ev = ctor(dict(data)) if ctor else E.Event(
-            "Z999", "debug", event, event, dict(data))
+    def _emit(self, ev: E.Event) -> None:
+        """Fire a typed lifecycle event to the EventManager, when one is
+        attached (it keeps a failing sink from failing the run)."""
         if self.event_manager is not None:
             self.event_manager.fire(ev)
-        if self.on_event is None:
-            return
-        try:
-            # legacy contract: the flat dict keeps the ORIGINAL event
-            # name ("NodeFinish", not the typed "NodeFinished") so
-            # pre-typed consumers matching on it keep working; the
-            # typed code/level/msg keys are additive
-            self.on_event({**ev.to_dict(), "event": event})
-        except Exception:
-            pass  # observability must never fail the run
 
     # -- relation naming (ref: relation_name components.py:174-199) ---------
 
@@ -197,18 +173,7 @@ class GraphRunner:
         # expose the selection to compile contexts (ref:
         # selected_resources providers.py:1503)
         self.manifest.selected_resources = sorted(include)
-        # queue must include upstream placeholders so ordering works: build
-        # subgraph on included nodes with transitive edges preserved
-        full_order_graph = graph
-        import networkx as nx
-
-        condensed = nx.DiGraph()
-        condensed.add_nodes_from(include)
-        for uid in include:
-            for anc in nx.ancestors(full_order_graph, uid):
-                if anc in include:
-                    condensed.add_edge(anc, uid)
-        return GraphQueue(condensed), include
+        return GraphQueue(graph, include)
 
     # -- public entry points -------------------------------------------------
 
@@ -218,8 +183,8 @@ class GraphRunner:
             exclude: Optional[str] = None,
             indirect_selection: str = "eager") -> RunResults:
         t0 = time.time()
-        queue, _ = self._prepare(resource_types, select, add_test_edges, exclude,
-                                 indirect_selection)
+        queue = self._prepare(resource_types, select, add_test_edges, exclude,
+                              indirect_selection)
         results = RunResults()
         self._run_hooks(self.on_run_start, "on-run-start")
         failed: set[str] = set()
@@ -240,12 +205,10 @@ class GraphRunner:
                     )
                     queue.mark_done(uid)
                     continue
-                # skip if any ancestor failed (ref: runnable.py:445-458)
-                if any(p in failed for p in self._ancestors_in(queue.graph, uid)):
+                if uid in failed:
                     results.results.append(
                         NodeResult(uid, "skipped", message="upstream failure")
                     )
-                    failed.add(uid)
                     queue.mark_done(uid)
                     continue
                 self.spark.sparkContext.setLocalProperty("spark.scheduler.pool", uid)
@@ -253,8 +216,8 @@ class GraphRunner:
                 # tag Spark jobs with the node id for cluster-UI attribution
                 self.spark.sparkContext.setJobDescription(
                     f"{self.manifest.project_name}: {uid}")
-                self._emit("NodeStart", unique_id=uid,
-                           resource_type=node.resource_type.value)
+                self._emit(E.node_start(
+                    uid, resource_type=node.resource_type.value))
                 res = self._run_node(node)
                 if res.status == "warn" and self.warn_error:
                     # --warn-error: warnings are promoted to failures
@@ -263,11 +226,14 @@ class GraphRunner:
                                      res.message or "warning escalated by warn_error",
                                      res.relation, res.failures, res.batch_results)
                 if res.status in ("error", "fail"):
-                    failed.add(uid)
+                    # mark every descendant once, before mark_done can
+                    # release any of them (ref: runnable.py:445-458)
+                    failed.update(nx.descendants(queue.graph, uid))
                     if self.fail_fast:
                         aborted.append(True)
-                self._emit("NodeFinish", unique_id=uid, status=res.status,
-                           execution_time=round(res.execution_time, 3))
+                self._emit(E.node_finished(
+                    uid, res.status,
+                    execution_time=round(res.execution_time, 3)))
                 results.results.append(res)
                 queue.mark_done(uid)
 
@@ -285,22 +251,15 @@ class GraphRunner:
         for r in results.results:
             if r.status in ("error", "fail"):
                 counts["error"] += 1
-                self._emit("RunResultError", unique_id=r.unique_id,
-                           message=r.message or r.status)
+                self._emit(E.run_result_error(r.unique_id, r.message or r.status))
             elif r.status == "warn":
                 counts["warn"] += 1
             elif r.status == "skipped":
                 counts["skip"] += 1
             else:
                 counts["pass"] += 1
-        self._emit("StatsLine", stats=counts)
+        self._emit(E.stats_line(counts))
         return results
-
-    @staticmethod
-    def _ancestors_in(graph, uid) -> set:
-        import networkx as nx
-
-        return nx.ancestors(graph, uid)
 
     def _run_hooks(self, hooks: list[str], label: str) -> None:
         """ref: RunTask.safe_run_hooks task/run.py:621-716"""

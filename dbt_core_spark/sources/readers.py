@@ -39,8 +39,6 @@ def register_source(spark: SparkSession, node: Node, schema: str) -> str:
             spark.sql(f"CREATE TABLE {rel} USING {fmt} OPTIONS (path '{loc}')")
             # hive-style partitioned directories need partition discovery
             # before any rows are visible (the catalog tracks partitions)
-            try:
+            if R.partition_columns(spark, rel):
                 spark.sql(f"MSCK REPAIR TABLE {rel}")
-            except Exception:
-                pass  # unpartitioned layout — nothing to recover
     return rel

@@ -352,6 +352,30 @@ def test_relation_type_is_one_jobless_catalog_lookup(spark, schema):
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
+def test_partition_columns_is_jobless(spark, schema):
+    """partition_columns reads the catalog's DESCRIBE TABLE answer:
+    right columns for partitioned, unpartitioned and missing tables,
+    and no Spark job (catalog.listColumns launches one or two)."""
+    from dbt_core_spark.operators import relations as R
+
+    spark.sql(f"create database {schema}")
+    spark.sql(f"create table {schema}.flat (id int, d string) using parquet")
+    spark.sql(f"create table {schema}.part (id int, d string, h int) "
+              "using parquet partitioned by (d, h)")
+    sc = spark.sparkContext
+    group = f"partition_columns_{schema}"
+    sc.setJobGroup(group, "partition_columns lookups")
+    try:
+        got = {rel: R.partition_columns(spark, rel) for rel in (
+            f"{schema}.flat", f"{schema}.part", f"{schema}.missing")}
+    finally:
+        sc.setJobGroup(None, None)
+    assert got == {f"{schema}.flat": [], f"{schema}.part": ["d", "h"],
+                   f"{schema}.missing": []}
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def test_inject_ctes_preserves_with_recursive():
     """Ephemeral CTE injection into a model starting WITH RECURSIVE must
     splice AFTER the recursive keyword (it must stay first)."""

@@ -124,26 +124,3 @@ def test_invocation_id_stamped_and_rotates(tmp_path, spark, schema):
     path = write_run_results(res, str(tmp_path / "rr.json"))
     meta = json.load(open(path))["metadata"]
     assert meta["invocation_id"] == get_invocation_id()
-
-
-def test_on_event_keeps_legacy_names(spark, sf_dir):
-    """The legacy on_event sink must keep the pre-typed event names
-    ('NodeFinish', not the typed 'NodeFinished') so existing consumers
-    matching on them keep working; typed keys (code/level) are
-    additive."""
-    from dbt_core_spark import Engine, ProjectDef
-
-    p = ProjectDef(name="legacyev")
-    p.add_source("tpch", "region", f"{sf_dir}/region.parquet")
-    p.models = {"m": "select * from {{ source('tpch','region') }}"}
-    seen = []
-    eng = Engine(spark, p, schema="v_legacyev")
-    runner = eng._runner(on_event=seen.append)
-    assert runner.run().ok()
-    names = {e["event"] for e in seen}
-    assert "NodeFinish" in names and "NodeStart" in names
-    assert "NodeFinished" not in names
-    fin = next(e for e in seen if e["event"] == "NodeFinish")
-    assert "code" in fin and "status" in fin
-    spark.sql("DROP DATABASE IF EXISTS v_legacyev CASCADE")
-    spark.sql("DROP DATABASE IF EXISTS v_legacyev__sources CASCADE")

@@ -164,8 +164,8 @@ def test_on_disk_partial_parse(tmp_path, spark, schema):
 
 
 def test_run_events_jsonl(tmp_path, spark, schema):
-    """Dir-loaded projects append node lifecycle events to
-    target/events.jsonl (ref: events/EventManager, reduced)."""
+    """Dir-loaded projects append typed events to logs/dbt.jsonl
+    (ref: events/EventManager)."""
     import json
 
     from dbt_core_spark import Engine, ProjectDef
@@ -178,19 +178,19 @@ def test_run_events_jsonl(tmp_path, spark, schema):
         f.write("select 1 as x")
     eng = Engine(spark, ProjectDef.from_dir(root), schema=schema)
     assert eng.run().ok()
-    with open(os.path.join(root, "target", "events.jsonl")) as f:
+    with open(os.path.join(root, "logs", "dbt.jsonl")) as f:
         events = [json.loads(l) for l in f]
-    # the stream now also carries run-level events (StatsLine etc.) —
+    # the stream also carries run-level events (StatsLine etc.) —
     # node lifecycle lines are the ones with a unique_id
     kinds = [(e["event"], e["unique_id"]) for e in events if "unique_id" in e]
     assert ("NodeStart", "model.ev.m") in kinds
-    # the jsonl stream rides the legacy on_event sink, so node
-    # lifecycle lines keep the pre-typed names (NodeFinish)
-    fin = next(e for e in events if e["event"] == "NodeFinish")
+    assert ("NodeFinished", "model.ev.m") in kinds
+    fin = next(e for e in events if e["event"] == "NodeFinished")
     assert fin["status"] == "success" and "ts" in fin
-    # typed upgrade: every line carries a code and the run summary fires
+    # every line carries a code and the run summary fires
     assert all("code" in e for e in events)
     assert any(e["code"] == "Z023" for e in events)
+    assert not os.path.exists(os.path.join(root, "target", "events.jsonl"))
 
 
 def test_file_selector(tmp_path, spark, schema):
