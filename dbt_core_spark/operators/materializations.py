@@ -110,13 +110,9 @@ def materialize_incremental(
     if strategy == "insert_overwrite":
         # dynamic partition overwrite: idempotent per-partition replace —
         # the scale-correct strategy for event-time batches
-        old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
+        with R.dynamic_partition_overwrite(spark):
             target_cols = [f.name for f in spark.table(rel).schema.fields]
             df.select(*target_cols).write.mode("overwrite").insertInto(rel)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
         return -1
 
     if strategy in ("merge", "delete+insert", "microbatch"):
@@ -309,12 +305,8 @@ def _partition_scoped_merge(
     merged.select(*target_cols).write.format(file_format).saveAsTable(tmp)
     try:
         out = spark.table(tmp)
-        old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
+        with R.dynamic_partition_overwrite(spark):
             out.write.mode("overwrite").insertInto(rel)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
         out_parts = {tuple(r) for r in out.select(*partition_by).distinct().collect()}
         for vals in touched_vals:
             if tuple(vals) not in out_parts:

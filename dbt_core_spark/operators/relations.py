@@ -15,7 +15,9 @@ TABLE` for true atomicity — the strategy layer above is format-agnostic.
 from __future__ import annotations
 
 import shutil
-from typing import Optional
+import threading
+from contextlib import contextmanager
+from typing import Iterator, Optional
 from urllib.parse import urlparse
 
 from pyspark.errors import AnalysisException
@@ -69,6 +71,38 @@ def partition_columns(spark: SparkSession, rel: str) -> list[str]:
                 continue
             cols.append(name)
     return cols
+
+
+_OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
+_overwrite_lock = threading.Lock()
+_overwrite_scopes: dict = {}  # session -> [entrants, saved mode]
+
+
+@contextmanager
+def dynamic_partition_overwrite(spark: SparkSession) -> Iterator[None]:
+    """Run the body with ``partitionOverwriteMode=dynamic``, so an
+    ``insertInto(overwrite)`` replaces only the partitions it writes.
+
+    The mode is session-wide and runner threads share the session, so
+    the scope is reference-counted: the first entrant saves the mode
+    and sets ``dynamic``, the last one out restores the saved value.
+    One thread leaving cannot switch an overlapping writer back to
+    ``static``, which would replace its whole target table."""
+    with _overwrite_lock:
+        scope = _overwrite_scopes.get(spark)
+        if scope is None:
+            scope = _overwrite_scopes[spark] = [
+                0, spark.conf.get(_OVERWRITE_MODE, "static")]
+            spark.conf.set(_OVERWRITE_MODE, "dynamic")
+        scope[0] += 1
+    try:
+        yield
+    finally:
+        with _overwrite_lock:
+            scope[0] -= 1
+            if scope[0] == 0:
+                del _overwrite_scopes[spark]
+                spark.conf.set(_OVERWRITE_MODE, scope[1])
 
 
 def drop_relation(spark: SparkSession, rel: str) -> None:

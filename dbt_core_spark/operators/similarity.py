@@ -11,6 +11,18 @@ Engine extension (driver north star).  Three tiers:
   small ints, candidate sets shrink by ~2^planes.
 - ``ivf_topk`` — inverted-file: coarse-quantize to the nearest of k
   sampled centroids, search only the probe-nearest cells.
+
+The BLAS tier (``cosine_topk_blas``'s sharded path, ``ivf_topk_blas``,
+the ``ivf_index_*`` lifecycle and both BLAS semantic dedups) shares one
+kernel per job:
+
+- ``_fit_centroids`` — the bounded id-ordered sample and numpy Lloyd fit;
+- ``_assign_cells`` — the one nearest-centroid ``mapInPandas`` pass
+  (cells ranked on ``round(cos, 6)``, ties to the lowest index);
+- ``_topk_score_kernel`` — the per-group probe × member top-k matmul;
+- ``_pair_kernel`` + ``_keepers`` — the dedup pair block and its
+  lowest-id keeper aggregate;
+- ``_rounded_topk`` — the per-query rounded top-k window merge.
 """
 
 from __future__ import annotations
@@ -93,6 +105,19 @@ def _rounded_topk_cols(srow, kk: int, dp: int):
         b = np.partition(r, len(r) - kk)[len(r) - kk]
         cand = np.where(r >= b)[0]
     return cand[np.argsort(-r[cand], kind="stable")][:kk]
+
+
+def _rounded_topk(scored: DataFrame, k: int, dp: int) -> DataFrame:
+    """Merge (query_id, nbr_id, cosine) candidates into each query's
+    top-``k`` by (round(cosine, dp) DESC, nbr_id ASC) — the rounded-rank
+    contract of ``_rounded_topk_cols`` — emitting the rounded cosine."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.round("cosine", dp).desc(), F.col("nbr_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "nbr_id", F.round("cosine", dp).alias("cosine"), "rank")
+    )
 
 
 def with_unit_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -302,15 +327,13 @@ def _sharded_topk_blas(
 
     corpus → hash-sharded (~``shard_rows`` rows/shard); queries are
     replicated to EVERY shard (exactness requires visiting all of them);
-    each shard scores its queries×members block with one BLAS matmul in
-    ``applyInPandas``; a global window merges the ≤ shards·k candidates.
-    Cost: one shuffle of corpus, one shuffle of queries×S, no pairwise
-    row blowup.  Per-shard pandas blocks are bounded by ``shard_rows``
-    (members) and the query count per Arrow batch."""
+    each shard scores its queries×members block with the shared
+    ``_topk_score_kernel`` (9-dp rank, score matrix chunked to
+    ``_MATMUL_BUDGET`` cells); ``_rounded_topk`` merges the ≤ shards·k
+    candidates.  Cost: one shuffle of corpus, one shuffle of queries×S,
+    no pairwise row blowup.  Per-shard member blocks are bounded by
+    ``shard_rows``."""
     import math
-
-    import numpy as np
-    import pandas as pd
 
     spark = df.sparkSession
     n_shards = max(2, math.ceil(n_corpus / shard_rows))
@@ -328,45 +351,11 @@ def _sharded_topk_blas(
         .withColumn("is_member", F.lit(False))
     )
     routed = corpus.unionByName(q)
-
-    def score_shard(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        members = pdf[pdf["is_member"]]
-        qs = pdf[~pdf["is_member"]]
-        if len(members) == 0 or len(qs) == 0:
-            return pd.DataFrame(columns=["query_id", "nbr_id", "cosine"])
-        mid = members["id"].to_numpy()
-        M = np.array(members["v"].tolist(), dtype=np.float64)
-        # id-sort members so the rounded-rank tie-break (index asc ==
-        # id asc) holds for the local cut — a boundary tie dropped here
-        # could be the globally-ranked row
-        order = np.argsort(mid, kind="stable")
-        mid = mid[order]
-        Mn = (M / np.linalg.norm(M, axis=1, keepdims=True))[order]
-        qid = qs["id"].to_numpy()
-        Q = np.array(qs["v"].tolist(), dtype=np.float64)
-        Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-        S = Qn @ Mn.T
-        S[qid[:, None] == mid[None, :]] = -np.inf  # self-match
-        kk = min(k, S.shape[1])
-        rows = []
-        for i in range(len(qid)):
-            for c in _rounded_topk_cols(S[i], kk, 9):
-                if np.isfinite(S[i, c]):
-                    rows.append((int(qid[i]), int(mid[c]), float(S[i, c])))
-        return pd.DataFrame(rows, columns=["query_id", "nbr_id", "cosine"])
-
     scored = routed.groupBy("shard").applyInPandas(
-        score_shard, schema="query_id long, nbr_id long, cosine double"
+        _topk_score_kernel(k, int(_MATMUL_BUDGET), 9),
+        schema="query_id long, nbr_id long, cosine double",
     )
-    # rounded-rank contract: see _rounded_topk_cols
-    w = Window.partitionBy("query_id").orderBy(
-        F.round("cosine", 9).desc(), F.col("nbr_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", F.round("cosine", 9).alias("cosine"), "rank")
-    )
+    return _rounded_topk(scored, k, 9)
 
 
 # Score-matrix budget for the chunked BLAS kernels: ~16M float64 cells
@@ -447,8 +436,9 @@ def _np_finite_pos_rows(pdf):
     surviving rows and their unit-normalized float64 matrix — or
     ``(pdf, None)`` when nothing survives.
 
-    The serving paths (ivf_index_search / semantic_dedup_incremental /
-    ivf_index_append) used to pre-filter with the JVM HOF predicate;
+    ``_assign_cells`` applies it to every IVF assignment pass.  The
+    serving paths (ivf_index_search / semantic_dedup_incremental /
+    ivf_index_append) rely on it alone, with no JVM HOF pre-filter:
     the norm is computed inside the Arrow kernel anyway, so doing the
     validity mask here removes a whole plan node (HOF analysis +
     an extra evaluation over the batch) from every serving call —
@@ -611,13 +601,114 @@ def _skew_split_2d(
     return m.unionByName(p)
 
 
-def _topk_score_kernel(k: int, budget: int):
+def _fit_centroids(
+    df: DataFrame,
+    vec_col: str,
+    id_col: str,
+    n_cells: int,
+    kmeans_iters: int,
+    fit_sample: int,
+):
+    """Fit the coarse centroids on a bounded, id-ordered driver sample
+    (numpy Lloyd — FAISS trains on a sample the same way): the first
+    ``n_cells`` sample rows seed the cells, and each iteration moves a
+    centroid to the mean of the sample rows nearest it (an empty cell
+    keeps its centroid).  ``kmeans_iters=0`` keeps the deterministic
+    seed rows — what the SQL oracles replay.
+
+    Returns ``(Cn, seed_ids)``: the unit-normalized (cells, dim) matrix
+    and the seed rows' ids.  A sample smaller than ``n_cells`` gives one
+    cell per row; an empty corpus returns ``(None, None)`` (an empty
+    numpy array is 1-D and breaks the axis-1 ops — gate-fuzz)."""
+    import numpy as np
+
+    # sampled from the raw scan, not a repartitioned base: the fit is a
+    # driver-side limit job, parallelism buys it nothing
+    spdf = (
+        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+        .orderBy("id").limit(max(fit_sample, n_cells)).toPandas()
+    )
+    if len(spdf) == 0:
+        return None, None
+    sample = np.array(spdf["v"].tolist(), dtype=np.float64)
+    Sn = sample / np.linalg.norm(sample, axis=1, keepdims=True)
+    C = Sn[:n_cells].copy()
+    for _ in range(kmeans_iters):
+        Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
+        a = (Sn @ Cn.T).argmax(axis=1)
+        for c in range(len(C)):
+            m = Sn[a == c]
+            if len(m):
+                C[c] = m.mean(axis=0)
+    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
+    return Cn, spdf["id"].to_numpy()[:len(Cn)].astype("int64")
+
+
+def _assign_cells(frame: DataFrame, Cn, labels, n_probe: int | None = None) -> DataFrame:
+    """The one IVF cell-assignment pass: one Arrow ``mapInPandas`` over
+    an (id, v) frame, scoring each batch against the broadcast unit
+    centroids ``Cn`` with one matmul.
+
+    Cells rank on ``round(Vn @ Cn.T, 6)`` — stable descending, ties to
+    the lowest centroid index — so BLAS-vs-fold ulp noise cannot flip a
+    cell choice at a mathematical tie (the rounded-rank contract of
+    ``_rounded_topk_cols``), and an appended or searched vector lands
+    exactly where a rebuild would put it.  Invalid rows
+    (NULL/empty/zero-norm/NaN/Inf) drop inside the kernel
+    (``_np_finite_pos_rows``).  ``labels[i]`` is centroid ``i``'s cell
+    id; its dtype sets the ``cell`` column (int32 → int, int64 → long).
+
+    ``n_probe=None`` emits each vector's nearest cell: (id, v, cell).
+    An int emits its ``n_probe`` nearest cells, nearest first, plus
+    ``is_member`` marking the nearest: (id, v, cell, is_member)."""
+    import numpy as np
+    import pandas as pd
+
+    schema = "id long, v array<double>, cell " + (
+        "long" if labels.dtype == np.int64 else "int")
+    if n_probe is not None:
+        schema += ", is_member boolean"
+    bcast = frame.sparkSession.sparkContext.broadcast((Cn, labels))
+
+    def assign(batches):
+        Cb, cls = bcast.value
+        for pdf in batches:
+            pdf, Vn = _np_finite_pos_rows(pdf)
+            if Vn is None:
+                continue
+            S = np.round(Vn @ Cb.T, 6)
+            top = (S.argmax(axis=1)[:, None] if n_probe is None
+                   else np.argsort(-S, kind="stable", axis=1)[:, :n_probe])
+            rows = np.repeat(np.arange(len(pdf)), top.shape[1])
+            out = pd.DataFrame({
+                "id": pdf["id"].to_numpy().astype("int64")[rows],
+                "v": pdf["v"].to_numpy()[rows],
+                "cell": cls[top.ravel()],
+            })
+            if n_probe is not None:
+                out["is_member"] = np.tile(np.arange(top.shape[1]) == 0, len(pdf))
+            yield out
+
+    return frame.mapInPandas(assign, schema=schema)
+
+
+def _unit_block(side):
+    """(ids, unit-normalized float64 matrix) of a kernel frame side."""
+    import numpy as np
+
+    M = np.array(side["v"].tolist(), dtype=np.float64)
+    return side["id"].to_numpy(), M / np.linalg.norm(M, axis=1, keepdims=True)
+
+
+def _topk_score_kernel(k: int, budget: int, dp: int = 6):
     """Build the per-group applyInPandas kernel shared by
-    ``ivf_topk_blas`` and ``ivf_index_search``: score the group's
-    probes against its members with probe-chunked matmuls (score matrix
-    ≤ ``budget`` cells) and emit each probe's local top-k.  ``budget``
-    is captured as a plain value at DRIVER time so it serializes by
-    value with the closure (tests pin it deterministically)."""
+    ``ivf_topk_blas``, ``ivf_index_search`` and the sharded exact path:
+    score the group's probes (``is_member`` false) against its members
+    with probe-chunked matmuls (score matrix ≤ ``budget`` cells) and
+    emit each probe's local top-k on ``round(cosine, dp)``, self-matches
+    excluded.  ``budget`` is captured as a plain value at DRIVER time so
+    it serializes by value with the closure (tests pin it
+    deterministically)."""
     import numpy as np
     import pandas as pd
 
@@ -626,16 +717,12 @@ def _topk_score_kernel(k: int, budget: int):
         qs = pdf[~pdf["is_member"]]
         if len(members) == 0 or len(qs) == 0:
             return pd.DataFrame(columns=["query_id", "nbr_id", "cosine"])
-        mid = members["id"].to_numpy()
-        M = np.array(members["v"].tolist(), dtype=np.float64)
+        mid, Mn = _unit_block(members)
         # id-sort members: the rounded-rank local cut breaks ties by
         # index, which must mean ascending nbr_id (see _rounded_topk_cols)
         order = np.argsort(mid, kind="stable")
-        mid = mid[order]
-        Mn = (M / np.linalg.norm(M, axis=1, keepdims=True))[order]
-        qid_all = qs["id"].to_numpy()
-        Q = np.array(qs["v"].tolist(), dtype=np.float64)
-        Qn_all = Q / np.linalg.norm(Q, axis=1, keepdims=True)
+        mid, Mn = mid[order], Mn[order]
+        qid_all, Qn_all = _unit_block(qs)
         rows = []
         # chunk the probe side so the score matrix stays ~budget cells;
         # per-query top-k is unaffected (each query's full member row
@@ -647,12 +734,73 @@ def _topk_score_kernel(k: int, budget: int):
             S[qid[:, None] == mid[None, :]] = -np.inf
             kk = min(k, S.shape[1])
             for i in range(len(qid)):
-                for c in _rounded_topk_cols(S[i], kk, 6):
+                for c in _rounded_topk_cols(S[i], kk, dp):
                     if np.isfinite(S[i, c]):
                         rows.append((int(qid[i]), int(mid[c]), float(S[i, c])))
         return pd.DataFrame(rows, columns=["query_id", "nbr_id", "cosine"])
 
     return score_cell
+
+
+def _pair_kernel(tau: float, budget: int, id_rule):
+    """Build the per-group applyInPandas kernel shared by both BLAS
+    semantic dedups: every (member m, probe p) pair of the group with
+    ``round(cos, 6) >= tau`` and ``id_rule(m_id, p_id)`` becomes one
+    (id_a=m keeper, id_b=p duplicate, cosine, cell) row.  ``np.less``
+    gives the within-corpus dedup (lower id keeps; every unordered pair
+    is seen once, since each pair meets in exactly one block group per
+    side order); ``np.not_equal`` gives the batch-vs-index dedup (the
+    indexed member keeps; only a re-ingested id is a self-match).  The
+    probe side is chunked so the score matrix stays ≤ ``budget``
+    cells."""
+    import numpy as np
+    import pandas as pd
+
+    def pair_cell(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        mem = pdf[pdf["is_member"]]
+        pr = pdf[~pdf["is_member"]]
+        if len(mem) == 0 or len(pr) == 0:
+            return pd.DataFrame(
+                columns=["id_a", "id_b", "cosine", "cell"]
+            ).astype({"id_a": "int64", "id_b": "int64",
+                      "cosine": "float64", "cell": "int64"})
+        mid, Mn = _unit_block(mem)
+        pid_all, Pn_all = _unit_block(pr)
+        cell = int(pdf["cell"].iloc[0])
+        frames = []
+        step = max(1, budget // max(1, len(mid)))
+        for s in range(0, len(pid_all), step):
+            pid = pid_all[s:s + step]
+            S = Pn_all[s:s + step] @ Mn.T
+            ii, jj = np.nonzero(
+                (np.round(S, 6) >= tau) & id_rule(mid[None, :], pid[:, None]))
+            frames.append(pd.DataFrame({
+                "id_a": mid[jj].astype("int64"),
+                "id_b": pid[ii].astype("int64"),
+                "cosine": S[ii, jj],
+                "cell": np.full(len(ii), cell, dtype="int64"),
+            }))
+        return pd.concat(frames, ignore_index=True)
+
+    return pair_cell
+
+
+def _keepers(pairs: DataFrame, id_col: str) -> DataFrame:
+    """One row per duplicate ``id_b``: its keeper is the lowest
+    qualifying ``id_a`` (min-struct, partial agg — no sort window),
+    with that pair's 6-dp cosine and cell."""
+    return (
+        pairs.groupBy(F.col("id_b").alias(id_col))
+        .agg(
+            F.min(F.struct(F.col("id_a"), F.col("cosine"), F.col("cell"))).alias("k")
+        )
+        .select(
+            id_col,
+            F.col("k.id_a").alias("keeper_id"),
+            F.round(F.col("k.cosine"), 6).alias("cosine"),
+            F.col("k.cell").alias("cell"),
+        )
+    )
 
 
 def ivf_topk_blas(
@@ -699,67 +847,22 @@ def ivf_topk_blas(
     # cosine_pairs convention -- gate-fuzz finding)
     df = df.filter(_finite_pos_norm(F.col(vec_col)))
     import numpy as np
-    import pandas as pd
 
     from dbt_core_spark.operators.dedup import ensure_parallelism
 
     n_cells, _ = _resolve_n_cells(df, n_cells, max_cell_rows)
-    fit_sample = max(fit_sample, n_cells)  # seed needs ≥ n_cells rows
-    spark = df.sparkSession
+    # -- 1. fit centroids on a deterministic bounded sample ----------------
+    Cn, _ = _fit_centroids(df, vec_col, id_col, n_cells, kmeans_iters, fit_sample)
+    if Cn is None:
+        return df.sparkSession.createDataFrame(
+            [], "query_id long, nbr_id long, cosine double, rank int"
+        )
     base = ensure_parallelism(
         df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     )
-    # -- 1. fit centroids on a deterministic bounded sample ----------------
-    # (sampled from the raw scan, not the repartitioned base — the fit
-    # is a driver-side limit job, parallelism buys it nothing)
-    sample = np.array(
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .orderBy("id").limit(fit_sample).toPandas()["v"].tolist(),
-        dtype=np.float64,
-    )
-    # tiny/empty corpus guard (cells = rows; zero rows short-circuits —
-    # an empty numpy array is 1-D and breaks axis-1 ops): gate-fuzz
-    n_cells = min(n_cells, len(sample))
-    if n_cells == 0:
-        return spark.createDataFrame(
-            [], "query_id long, nbr_id long, cosine double, rank int"
-        )
-    Sn = sample / np.linalg.norm(sample, axis=1, keepdims=True)
-    C = Sn[:n_cells].copy()
-    for _ in range(kmeans_iters):
-        Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-        a = (Sn @ Cn.T).argmax(axis=1)
-        for c in range(n_cells):
-            m = Sn[a == c]
-            if len(m):
-                C[c] = m.mean(axis=0)
-    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-    bcast = spark.sparkContext.broadcast(Cn)
-
     # -- 2. assign + probe in one Arrow pass -------------------------------
-    def assign(batches):
-        Cb = bcast.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.array(pdf["v"].tolist(), dtype=np.float64)
-            Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-            # rounded cell-rank contract: probe/assign selection on
-            # round(cos, 6) so BLAS-vs-fold ulp noise cannot flip cell
-            # choice at mathematical ties (see _rounded_topk_cols)
-            S = np.round(Vn @ Cb.T, 6)
-            top = np.argsort(-S, kind="stable", axis=1)[:, :n_probe]
-            out = []
-            for i in range(len(pdf)):
-                for r, c in enumerate(top[i]):
-                    out.append((int(pdf["id"].iloc[i]), pdf["v"].iloc[i],
-                                int(c), r == 0))
-            yield pd.DataFrame(out, columns=["id", "v", "cell", "is_member"])
-
     routed = _seal(
-        base.mapInPandas(
-            assign, schema="id long, v array<double>, cell int, is_member boolean"
-        )
+        _assign_cells(base, Cn, np.arange(len(Cn), dtype="int32"), n_probe)
     )
 
     # -- 3. skew-capped per-cell matmul + local top-k -----------------------
@@ -782,17 +885,8 @@ def ivf_topk_blas(
         _topk_score_kernel(k, int(_MATMUL_BUDGET)),
         schema="query_id long, nbr_id long, cosine double",
     )
-
     # -- 4. merge candidates globally --------------------------------------
-    # rounded-rank contract: see _rounded_topk_cols
-    w = Window.partitionBy("query_id").orderBy(
-        F.round("cosine", 6).desc(), F.col("nbr_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    return _rounded_topk(scored, k, 6)
 
 
 def ivf_index_build(
@@ -832,62 +926,25 @@ def ivf_index_build(
     # cosine_pairs convention -- gate-fuzz finding)
     df = df.filter(_finite_pos_norm(F.col(vec_col)))
     import numpy as np
-    import pandas as pd
 
     from dbt_core_spark.operators.dedup import ensure_parallelism
 
     n_cells, _ = _resolve_n_cells(df, n_cells, max_cell_rows)
-    fit_sample = max(fit_sample, n_cells)
     spark = df.sparkSession
-    base = ensure_parallelism(
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    )
-    sample = np.array(
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .orderBy("id").limit(fit_sample).toPandas()["v"].tolist(),
-        dtype=np.float64,
-    )
-    # tiny/empty corpus: fewer seed rows than requested cells is fine
-    # (cells = rows), zero rows short-circuits (an empty numpy array is
-    # 1-D and breaks axis-1 ops) — gate-fuzz finding
-    n_cells = min(n_cells, len(sample))
-    if n_cells == 0:
+    Cn, _ = _fit_centroids(df, vec_col, id_col, n_cells, kmeans_iters, fit_sample)
+    if Cn is None:
         return (
             spark.createDataFrame([], "cell int, cv array<double>"),
             spark.createDataFrame([], "id long, v array<double>, cell int"),
         )
-    Sn = sample / np.linalg.norm(sample, axis=1, keepdims=True)
-    C = Sn[:n_cells].copy()
-    for _ in range(kmeans_iters):
-        Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-        a = (Sn @ Cn.T).argmax(axis=1)
-        for c in range(n_cells):
-            m = Sn[a == c]
-            if len(m):
-                C[c] = m.mean(axis=0)
-    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
     centroids = spark.createDataFrame(
-        [(int(i), [float(x) for x in Cn[i]]) for i in range(n_cells)],
+        [(i, [float(x) for x in row]) for i, row in enumerate(Cn)],
         "cell int, cv array<double>",
     )
-    bcast = spark.sparkContext.broadcast(Cn)
-
-    def assign(batches):
-        Cb = bcast.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.array(pdf["v"].tolist(), dtype=np.float64)
-            Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-            yield pd.DataFrame({
-                "id": pdf["id"].astype("int64"),
-                "v": pdf["v"],
-                "cell": np.round(Vn @ Cb.T, 6).argmax(axis=1).astype("int32"),
-            })
-
-    assignments = base.mapInPandas(
-        assign, schema="id long, v array<double>, cell int"
+    base = ensure_parallelism(
+        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     )
+    assignments = _assign_cells(base, Cn, np.arange(len(Cn), dtype="int32"))
     return centroids, assignments
 
 
@@ -943,9 +1000,6 @@ def ivf_index_search(
     # undefined) drop INSIDE the assignment kernel
     # (_np_finite_pos_rows): same exclusion set as _finite_pos_norm
     # with no JVM HOF pass over the batch
-    import numpy as np
-    import pandas as pd
-
     spark = queries.sparkSession
     Cn, cells = (centroid_matrix if centroid_matrix is not None
                  else _centroid_matrix(centroids))
@@ -953,28 +1007,7 @@ def ivf_index_search(
         return spark.createDataFrame(
             [], "query_id long, nbr_id long, cosine double, rank int"
         )
-    bcast = spark.sparkContext.broadcast((Cn, cells))
     qbase = queries.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-
-    def assign_q(batches):
-        Cb, cls = bcast.value
-        for pdf in batches:
-            pdf, Vn = _np_finite_pos_rows(pdf)
-            if Vn is None:
-                continue
-            # rounded cell-rank contract: probe/assign selection on
-            # round(cos, 6) so BLAS-vs-fold ulp noise cannot flip cell
-            # choice at mathematical ties (see _rounded_topk_cols)
-            S = np.round(Vn @ Cb.T, 6)
-            top = np.argsort(-S, kind="stable", axis=1)[:, :n_probe]
-            out = []
-            for i in range(len(pdf)):
-                for c in top[i]:
-                    out.append(
-                        (int(pdf["id"].iloc[i]), pdf["v"].iloc[i], int(cls[c]))
-                    )
-            yield pd.DataFrame(out, columns=["id", "v", "cell"])
-
     # the probe side is derived here and scanned twice (count + block
     # side): seal it — it is bounded by batch × n_probe.  The
     # ASSIGNMENTS side is caller-owned and usually table-backed (re-scan
@@ -983,8 +1016,7 @@ def ivf_index_search(
     # the build's assignment pass replays per branch.  Under
     # bounded_batch the probe frame has exactly ONE consumer (no count
     # branch, no probe split) — the seal would only add a persist pass.
-    probes = qbase.mapInPandas(
-        assign_q, schema="id long, v array<double>, cell int")
+    probes = _assign_cells(qbase, Cn, cells.astype("int32"), n_probe)
     if not bounded_batch:
         probes = _seal(probes)
     grouped = _skew_split_2d(
@@ -995,15 +1027,7 @@ def ivf_index_search(
         _topk_score_kernel(k, int(_MATMUL_BUDGET)),
         schema="query_id long, nbr_id long, cosine double",
     )
-    # rounded-rank contract: see _rounded_topk_cols
-    w = Window.partitionBy("query_id").orderBy(
-        F.round("cosine", 6).desc(), F.col("nbr_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    return _rounded_topk(scored, k, 6)
 
 
 def ivf_member_counts(assignments: DataFrame) -> DataFrame:
@@ -1066,7 +1090,6 @@ def semantic_dedup_incremental(
     # (_np_finite_pos_rows) — same exclusion set as _finite_pos_norm,
     # no JVM HOF pass over the batch
     import numpy as np
-    import pandas as pd
 
     spark = batch.sparkSession
     Cn, cells = _centroid_matrix(centroids)
@@ -1075,74 +1098,18 @@ def semantic_dedup_incremental(
             [],
             f"{id_col} long, keeper_id long, cosine double, cell long",
         )
-    bcast = spark.sparkContext.broadcast((Cn, cells))
     qbase = batch.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-
-    def assign_b(batches):
-        Cb, cls = bcast.value
-        for pdf in batches:
-            pdf, Vn = _np_finite_pos_rows(pdf)
-            if Vn is None:
-                continue
-            yield pd.DataFrame({
-                "id": pdf["id"].astype("int64"),
-                "v": pdf["v"],
-                "cell": cls[np.round(Vn @ Cb.T, 6).argmax(axis=1)].astype("int32"),
-            })
-
-    probes = _seal(
-        qbase.mapInPandas(assign_b, schema="id long, v array<double>, cell int")
-    )
+    probes = _seal(_assign_cells(qbase, Cn, cells.astype("int32")))
     grouped = _skew_split_2d(
         assignments.select("id", "v", "cell"), probes, max_cell_rows
     )
-
-    def pair_cell(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        mem = pdf[pdf["is_member"]]
-        pr = pdf[~pdf["is_member"]]
-        if len(mem) == 0 or len(pr) == 0:
-            return pd.DataFrame(
-                columns=["id_a", "id_b", "cosine", "cell"]
-            ).astype({"id_a": "int64", "id_b": "int64",
-                      "cosine": "float64", "cell": "int64"})
-        mid = mem["id"].to_numpy()
-        Mn = np.array(mem["v"].tolist(), dtype=np.float64)
-        Mn /= np.linalg.norm(Mn, axis=1, keepdims=True)
-        pid_all = pr["id"].to_numpy()
-        Pn_all = np.array(pr["v"].tolist(), dtype=np.float64)
-        Pn_all /= np.linalg.norm(Pn_all, axis=1, keepdims=True)
-        cell = int(pdf["cell"].iloc[0])
-        frames = []
-        step = max(1, int(_MATMUL_BUDGET) // max(1, len(mid)))
-        for s in range(0, len(pid_all), step):
-            pid = pid_all[s:s + step]
-            S = Pn_all[s:s + step] @ Mn.T
-            # batch id vs corpus id are distinct namespaces here; only a
-            # literally re-ingested id is a self-match to skip
-            ii, jj = np.nonzero((np.round(S, 6) >= tau) & (pid[:, None] != mid[None, :]))
-            frames.append(pd.DataFrame({
-                "id_a": mid[jj].astype("int64"),       # corpus keeper side
-                "id_b": pid[ii].astype("int64"),       # batch duplicate
-                "cosine": S[ii, jj],
-                "cell": np.full(len(ii), cell, dtype="int64"),
-            }))
-        return pd.concat(frames, ignore_index=True)
-
+    # batch id vs corpus id are distinct namespaces here; only a
+    # literally re-ingested id is a self-match to skip
     pairs = grouped.groupBy("cell", "msub", "psub").applyInPandas(
-        pair_cell, schema="id_a long, id_b long, cosine double, cell long"
+        _pair_kernel(tau, int(_MATMUL_BUDGET), np.not_equal),
+        schema="id_a long, id_b long, cosine double, cell long",
     )
-    return (
-        pairs.groupBy(F.col("id_b").alias(id_col))
-        .agg(
-            F.min(F.struct(F.col("id_a"), F.col("cosine"), F.col("cell"))).alias("k")
-        )
-        .select(
-            id_col,
-            F.col("k.id_a").alias("keeper_id"),
-            F.round(F.col("k.cosine"), 6).alias("cosine"),
-            F.col("k.cell").alias("cell"),
-        )
-    )
+    return _keepers(pairs, id_col)
 
 
 # --------------------------------------------------------------------------
@@ -1219,14 +1186,7 @@ def lsh_cosine_topk(
         "query_id", "nbr_id",
         (_dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn"))).alias("cosine"),
     )
-    # rounded-rank contract: see _rounded_topk_cols
-    w = Window.partitionBy("query_id").orderBy(
-        F.round("cosine", 6).desc(), F.col("nbr_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    return _rounded_topk(scored, k, 6)
 
 
 def _materialize_tiny(df: DataFrame) -> DataFrame:
@@ -1350,14 +1310,7 @@ def ivf_topk(
             (_dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("n"))).alias("cosine"),
         )
     )
-    # rounded-rank contract: see _rounded_topk_cols
-    w = Window.partitionBy("query_id").orderBy(
-        F.round("cosine", 6).desc(), F.col("nbr_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    return _rounded_topk(scored, k, 6)
 
 
 def quantize_embeddings(
@@ -1508,19 +1461,8 @@ def semantic_dedup(
         .filter(F.round(F.col("cosine"), 6) >= tau)
     )
     # duplicate = the higher id of each qualifying pair; keeper = lowest
-    # qualifying lower id (min-struct, partial agg — no sort window)
-    return (
-        pairs.groupBy(F.col("id_b").alias(id_col))
-        .agg(
-            F.min(F.struct(F.col("id_a"), F.col("cosine"), F.col("cell"))).alias("k")
-        )
-        .select(
-            id_col,
-            F.col("k.id_a").alias("keeper_id"),
-            F.round(F.col("k.cosine"), 6).alias("cosine"),
-            F.col("k.cell").alias("cell"),
-        )
-    )
+    # qualifying lower id
+    return _keepers(pairs, id_col)
 
 
 def semantic_dedup_blas(
@@ -1543,17 +1485,18 @@ def semantic_dedup_blas(
     2. one ``mapInPandas`` pass assigns every vector its best cell,
     3. ONE shuffle on ``(cell, msub, psub)``; ``applyInPandas`` computes
        each group's probe × member cosine block with chunked matmuls
-       and emits (lower_id, higher_id) pairs at ≥ tau.  **Skew cap
-       (2-D)**: a hot cell is blocked on BOTH sides by
-       ``_skew_split_2d`` — pair (a, b) with a < b is observed exactly
-       once, in group ``(cell, hash(b) % ns, hash(a) % np)`` — so the
+       (``_pair_kernel``) and emits (lower_id, higher_id) pairs at
+       ≥ tau.  **Skew cap (2-D)**: a hot cell is blocked on BOTH sides
+       by ``_skew_split_2d`` — pair (a, b) with a < b is observed
+       exactly once, as member a and probe b, in group
+       ``(cell, hash(a) % ns, hash(b) % np)`` — so the
        within-cell pair set stays complete while frames hold
        ~``max_cell_rows`` rows per side (hash-balanced expectation),
        and the score matrix is chunked to ``_MATMUL_BUDGET`` cells
        regardless.  The assignment
        pass is sealed (``_seal``) before branching so it executes once,
-    4. keeper selection is the same min-struct aggregate as the fold
-       variant.
+    4. keeper selection is the fold variant's min-struct aggregate
+       (``_keepers``).
 
     ``n_cells=None`` (default) auto-sizes to ``max(16, ceil(rows /
     max_cell_rows))`` — one count() job; pass n_cells to skip it.
@@ -1565,59 +1508,22 @@ def semantic_dedup_blas(
     # cosine_pairs convention -- gate-fuzz finding)
     df = df.filter(_finite_pos_norm(F.col(vec_col)))
     import numpy as np
-    import pandas as pd
 
     from dbt_core_spark.operators.dedup import ensure_parallelism
 
     n_cells, _ = _resolve_n_cells(df, n_cells, max_cell_rows)
-    fit_sample = max(fit_sample, n_cells)  # seed needs ≥ n_cells rows
-    spark = df.sparkSession
-    base = ensure_parallelism(
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    )
-    # sample from the raw scan, not the repartitioned base (driver-side
-    # limit job — parallelism buys it nothing)
-    spdf = (
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .orderBy("id").limit(fit_sample).toPandas()
-    )
-    if len(spdf) == 0:  # empty corpus: nothing to cluster or dedup
+    Cn, seed_ids = _fit_centroids(
+        df, vec_col, id_col, n_cells, kmeans_iters, fit_sample)
+    if Cn is None:  # empty corpus: nothing to cluster or dedup
         return df.sparkSession.createDataFrame(
             [], f"{id_col} long, keeper_id long, cosine double, cell long"
         )
-    sample = np.array(spdf["v"].tolist(), dtype=np.float64)
+    base = ensure_parallelism(
+        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    )
     # cells keep the fold variant's labels: the seed centroid's original
     # id (seed_cents convention — what the shared SQL oracle emits)
-    cell_ids = spdf["id"].to_numpy()[:n_cells].astype("int64")
-    Sn = sample / np.linalg.norm(sample, axis=1, keepdims=True)
-    C = Sn[:n_cells].copy()
-    for _ in range(kmeans_iters):
-        Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-        a = (Sn @ Cn.T).argmax(axis=1)
-        for c in range(n_cells):
-            m = Sn[a == c]
-            if len(m):
-                C[c] = m.mean(axis=0)
-    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-    bcast = spark.sparkContext.broadcast((Cn, cell_ids))
-
-    def assign(batches):
-        Cb, ids = bcast.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.array(pdf["v"].tolist(), dtype=np.float64)
-            Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-            cell = ids[np.round(Vn @ Cb.T, 6).argmax(axis=1)]
-            yield pd.DataFrame({
-                "id": pdf["id"].astype("int64"),
-                "v": pdf["v"],
-                "cell": cell,
-            })
-
-    routed = _seal(
-        base.mapInPandas(assign, schema="id long, v array<double>, cell long")
-    )
+    routed = _seal(_assign_cells(base, Cn, seed_ids))
 
     # members and probes are the SAME rows (within-cell all-pairs);
     # 2-D blocking keeps both sides of every frame bounded, with one
@@ -1627,54 +1533,11 @@ def semantic_dedup_blas(
         "_pc", F.col("_mc")
     )
     grouped = _skew_split_2d(sided, sided, max_cell_rows, counts=counts)
-    # captured as a plain value at driver time (serializes by value)
-    budget = int(_MATMUL_BUDGET)
-
-    def pair_cell(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        mem = pdf[pdf["is_member"]]
-        pr = pdf[~pdf["is_member"]]
-        if len(mem) == 0 or len(pr) == 0:
-            return pd.DataFrame(
-                columns=["id_a", "id_b", "cosine", "cell"]
-            ).astype({"id_a": "int64", "id_b": "int64",
-                      "cosine": "float64", "cell": "int64"})
-        mid = mem["id"].to_numpy()
-        Mn = np.array(mem["v"].tolist(), dtype=np.float64)
-        Mn /= np.linalg.norm(Mn, axis=1, keepdims=True)
-        pid_all = pr["id"].to_numpy()
-        Pn_all = np.array(pr["v"].tolist(), dtype=np.float64)
-        Pn_all /= np.linalg.norm(Pn_all, axis=1, keepdims=True)
-        cell = int(pdf["cell"].iloc[0])
-        frames = []
-        step = max(1, budget // max(1, len(mid)))
-        for s in range(0, len(pid_all), step):
-            pid = pid_all[s:s + step]
-            S = Pn_all[s:s + step] @ Mn.T
-            # ordered pairs only: probe id strictly below member id
-            ii, jj = np.nonzero((np.round(S, 6) >= tau) & (pid[:, None] < mid[None, :]))
-            frames.append(pd.DataFrame({
-                "id_a": pid[ii].astype("int64"),
-                "id_b": mid[jj].astype("int64"),
-                "cosine": S[ii, jj],
-                "cell": np.full(len(ii), cell, dtype="int64"),
-            }))
-        return pd.concat(frames, ignore_index=True)
-
     pairs = grouped.groupBy("cell", "msub", "psub").applyInPandas(
-        pair_cell, schema="id_a long, id_b long, cosine double, cell long"
+        _pair_kernel(tau, int(_MATMUL_BUDGET), np.less),
+        schema="id_a long, id_b long, cosine double, cell long",
     )
-    return (
-        pairs.groupBy(F.col("id_b").alias(id_col))
-        .agg(
-            F.min(F.struct(F.col("id_a"), F.col("cosine"), F.col("cell"))).alias("k")
-        )
-        .select(
-            id_col,
-            F.col("k.id_a").alias("keeper_id"),
-            F.round(F.col("k.cosine"), 6).alias("cosine"),
-            F.col("k.cell").alias("cell"),
-        )
-    )
+    return _keepers(pairs, id_col)
 
 
 def pool_embeddings(
@@ -1791,9 +1654,6 @@ def ivf_index_append(
     # invalid vectors drop INSIDE the assignment kernel
     # (_np_finite_pos_rows) — same exclusion set as _finite_pos_norm,
     # no JVM HOF pass over the batch
-    import numpy as np
-    import pandas as pd
-
     from dbt_core_spark.operators.dedup import ensure_parallelism
 
     spark = batch.sparkSession
@@ -1802,30 +1662,10 @@ def ivf_index_append(
         return spark.createDataFrame(
             [], "id long, v array<double>, cell int"
         )
-    bcast = spark.sparkContext.broadcast((Cn, cells))
     base = ensure_parallelism(
         batch.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     )
-
-    def assign(batches):
-        Cb, cl = bcast.value
-        for pdf in batches:
-            pdf, Vn = _np_finite_pos_rows(pdf)
-            if Vn is None:
-                continue
-            # rounded cell-assignment contract, SAME as build's assign:
-            # an unrounded argmax here could pick a different cell than
-            # a full rebuild at a mathematical tie (BLAS ulp noise),
-            # breaking the append==rebuild bit-identity claim
-            yield pd.DataFrame({
-                "id": pdf["id"].astype("int64"),
-                "v": pdf["v"],
-                "cell": cl[np.round(Vn @ Cb.T, 6).argmax(axis=1)].astype("int32"),
-            })
-
-    return base.mapInPandas(
-        assign, schema="id long, v array<double>, cell int"
-    )
+    return _assign_cells(base, Cn, cells.astype("int32"))
 
 
 def ivf_index_rebalance(

@@ -316,7 +316,12 @@ class GraphRunner:
                     failures=outcome.failures, relation=outcome.stored_at,
                 )
             elif node.language == "python":
-                status, msg = self._run_python_model(node, rel)
+                mat = node.config.get("materialized")
+                # the model's DataFrame lives only in this session, so a
+                # python model is never a view: table is the default
+                self._materialize(node, rel, "table" if mat == "view" else mat,
+                                  self._python_model_sql(node, rel))
+                status, msg = "success", "python"
             else:
                 mat = node.config.get("materialized", "view")
                 if mat == "streaming_table":
@@ -372,18 +377,7 @@ class GraphRunner:
                         and not self.full_refresh
                     )
                     sql = self._compile(node, is_incremental=is_inc)
-                    # contract shape check = Catalyst analysis only, no job
-                    # (ref: ContractConfig v1/config.py:34-36)
-                    from dbt_core_spark.operators.contracts import enforce_contract
-
-                    enforce_contract(self.spark, node, sql=sql)
-                    fn = MATERIALIZATIONS.get(mat)
-                    if fn is None:
-                        raise ExecutionError(f"unknown materialization '{mat}'")
-                    if mat == "incremental":
-                        fn(self.spark, node, rel, sql, full_refresh=self.full_refresh)
-                    else:
-                        fn(self.spark, node, rel, sql)
+                    self._materialize(node, rel, mat, sql)
                     status, msg = "success", mat
             self.relations[node.unique_id] = rel
             node.relation_name = rel
@@ -405,6 +399,22 @@ class GraphRunner:
                 node.unique_id, "error", time.time() - t0,
                 f"{type(e).__name__}: {e}\n{traceback.format_exc(limit=3)}",
             )
+
+    def _materialize(self, node: Node, rel: str, mat: str, sql: str) -> None:
+        """Contract check, then the ``MATERIALIZATIONS[mat]`` strategy —
+        the one write path of SQL and python models alike."""
+        # contract shape check = Catalyst analysis only, no job
+        # (ref: ContractConfig v1/config.py:34-36)
+        from dbt_core_spark.operators.contracts import enforce_contract
+
+        enforce_contract(self.spark, node, sql=sql)
+        fn = MATERIALIZATIONS.get(mat)
+        if fn is None:
+            raise ExecutionError(f"unknown materialization '{mat}'")
+        if mat == "incremental":
+            fn(self.spark, node, rel, sql, full_refresh=self.full_refresh)
+        else:
+            fn(self.spark, node, rel, sql)
 
     def _compile_with_stream_sources(self, node: Node) -> str:
         """Compile a streaming_table model: its ``stream: true`` sources
@@ -446,9 +456,11 @@ class GraphRunner:
 
     # -- python models (ref: ADR-004; submit_python_job providers.py:1512) ---
 
-    def _run_python_model(self, node: Node, rel: str) -> tuple[str, str]:
+    def _python_model_sql(self, node: Node, rel: str) -> str:
         """Python models are first-class here: ``session`` IS the live
-        SparkSession and ``dbt.ref()`` returns a real DataFrame."""
+        SparkSession and ``dbt.ref()`` returns a real DataFrame.  The
+        returned DataFrame is registered as the temp view ``__py_<name>``
+        and the model materializes through the SQL that selects it."""
         self.relations[node.unique_id] = rel
 
         runner = self
@@ -486,20 +498,8 @@ class GraphRunner:
                 return self._cfg.get(key, default)
 
         df = node.python_fn(_DbtObj(node), self.spark)  # type: ignore[attr-defined]
-        mat = node.config.get("materialized", "table")
-        if mat == "incremental" and R.relation_exists(self.spark, rel) and not self.full_refresh:
-            df.createOrReplaceTempView(f"__py_{node.name}")
-            MATERIALIZATIONS["incremental"](
-                self.spark, node, rel, f"select * from __py_{node.name}"
-            )
-        else:
-            from dbt_core_spark.operators.contracts import enforce_contract
-            from dbt_core_spark.operators.materializations import _as_list
-
-            enforce_contract(self.spark, node, df=df)
-            R.write_table(self.spark, rel, df, mode="overwrite",
-                          partition_by=_as_list(node.config.get("partition_by")))
-        return "success", "python"
+        df.createOrReplaceTempView(f"__py_{node.name}")
+        return f"select * from __py_{node.name}"
 
     # -- microbatch loop (ref: task/run.py:483-562) --------------------------
 
@@ -565,13 +565,10 @@ class GraphRunner:
                         "message": str(e)}
 
         batches = builder.build_batches(is_incremental=is_inc)
-        # dynamic overwrite set ONCE around the whole run: the session
-        # conf is process-global, so per-batch toggling would race under
+        # dynamic overwrite held ONCE around the whole run: the session
+        # conf is shared, so per-batch toggling would race under
         # concurrent batches
-        old_mode = self.spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static")
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
+        with R.dynamic_partition_overwrite(self.spark):
             out: list[dict] = []
             workers = int(cfg.get("concurrent_batches") or 1)
             if batches and not R.relation_exists(self.spark, rel):
@@ -592,6 +589,3 @@ class GraphRunner:
             else:
                 out.extend(run_one(b) for b in batches)
             return out
-        finally:
-            self.spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", old_mode)

@@ -39,7 +39,6 @@ def write_training_shards(
     ``partition_by`` adds user partition dirs ABOVE the shard level."""
     if n_shards <= 0:
         raise ValueError("n_shards must be positive")
-    spark = df.sparkSession
     out = df.withColumn(
         "shard", F.pmod(F.xxhash64(F.col(shard_key)), F.lit(n_shards))
     )
@@ -47,14 +46,9 @@ def write_training_shards(
     out = out.repartition(n_shards, *[F.col(c) for c in cluster])
     order = [F.col(c) for c in cluster] + [F.col(c) for c in (sort_by or [shard_key])]
     out = out.sortWithinPartitions(*order)
-    old = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
-        out.write.format(file_format).mode("overwrite").partitionBy(
-            *(partition_by or []), "shard"
-        ).save(path)
-    finally:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", old)
+    out.write.format(file_format).mode("overwrite").partitionBy(
+        *(partition_by or []), "shard"
+    ).save(path)
 
 
 def write_webdataset_shards(
@@ -86,10 +80,10 @@ def write_webdataset_shards(
     also SQL-derivable for end-to-end oracle checks).  A shard with no
     rows writes no tar (loaders tolerate missing indices).
 
-    Scale shape: one repartition on the shard column (AQE coalesce
-    disabled so exactly ``n_shards`` tasks), sortWithinPartitions, then
-    each task streams its shard(s) straight into tar files — no
-    driver-side collection.  ``path`` must be storage every executor
+    Scale shape: one repartition on the shard column (exactly
+    ``n_shards`` tasks: AQE never coalesces a ``repartition(n, col)``),
+    sortWithinPartitions, then each task streams its shard(s) straight
+    into tar files — no driver-side collection.  ``path`` must be storage every executor
     can write (local dir in tests; a mounted shared/object store on a
     cluster)."""
     if n_shards <= 0:
@@ -97,7 +91,6 @@ def write_webdataset_shards(
     meta_cols = meta_cols or [
         c for c in df.columns if c not in (payload_col,)
     ]
-    spark = df.sparkSession
     cols = list({key_col, *meta_cols,
                  *([payload_col] if payload_col else []),
                  *([shard_col] if shard_col else [])})
@@ -145,12 +138,7 @@ def write_webdataset_shards(
         if tf is not None:
             tf.close()
 
-    old = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
-        out.foreachPartition(write_partition)
-    finally:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", old)
+    out.foreachPartition(write_partition)
 
 
 def read_webdataset_shards(spark, path: str):

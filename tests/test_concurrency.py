@@ -71,3 +71,57 @@ def test_concurrent_compiles_share_ephemeral_upstream(spark, schema, sf_dir):
         assert "__dbt__cte__eph" in node.compiled_code
         assert node.compiled_code.lower().count("with ") >= 1
     assert spark.table(f"{schema}.c7").collect()[0]["x"] == 1
+
+
+def test_dynamic_overwrite_scope_is_refcounted(spark):
+    """Overlapping dynamic-overwrite scopes (two runner threads writing
+    at once) keep the session mode ``dynamic`` until the LAST one exits:
+    the first exit must not restore ``static`` under the other writer,
+    whose insertInto(overwrite) would then replace its whole table."""
+    from dbt_core_spark.operators.relations import dynamic_partition_overwrite
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key, "static")
+    a = dynamic_partition_overwrite(spark)
+    b = dynamic_partition_overwrite(spark)
+    a.__enter__()
+    b.__enter__()
+    assert spark.conf.get(key) == "dynamic"
+    a.__exit__(None, None, None)
+    assert spark.conf.get(key) == "dynamic"
+    b.__exit__(None, None, None)
+    assert spark.conf.get(key, "static") == before
+
+
+def test_dynamic_overwrite_scope_under_thread_stress(spark):
+    """More threads than cores enter and leave the scope with a short
+    switch interval: every thread inside a scope must read ``dynamic``
+    (a lost update to the entrant count would restore the saved mode
+    under a live writer), and the saved mode is back after all exit."""
+    import sys
+    import threading
+
+    from dbt_core_spark.operators.relations import dynamic_partition_overwrite
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key, "static")
+    seen: list[str] = []
+
+    def worker():
+        for _ in range(20):
+            with dynamic_partition_overwrite(spark):
+                seen.append(spark.conf.get(key))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(seen) == 160 and set(seen) == {"dynamic"}
+    assert spark.conf.get(key, "static") == before

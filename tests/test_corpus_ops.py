@@ -3281,8 +3281,33 @@ def oracle_con(sf_dir):
     con.close()
 
 
-@pytest.mark.parametrize("gate_name", list(em.queries()))
-@_mark_slow
+# The embedding-similarity (IVF/ANN/dedup/serve) gates run in the quick
+# tier: they re-prove the shared BLAS kernels of operators/similarity.py
+# against their oracles on every plain test run (~80 s of Spark time at
+# sf0.001 on 4 vCPUs).  Every other gate stays in the slow tier.
+_QUICK_GATES = {
+    "cosine_topk_blas_embeddings",
+    "ann_lsh_topk_embeddings",
+    "ann_ivf_topk_embeddings",
+    "ann_ivf_blas_topk_embeddings",
+    "ann_ivf_index_query_embeddings",
+    "ann_ivf_index_append_embeddings",
+    "ann_recall_ivf_embeddings",
+    "semantic_dedup_incremental_embeddings",
+    "semantic_dedup_blas_embeddings",
+    "ann_ivf_rebalance_embeddings",
+    "streaming_ann_serve_embeddings",
+    "ann_ivf_index_delete_embeddings",
+    "ann_ivf_lifecycle_embeddings",
+    "knn_classify_ivf_embeddings",
+    "streaming_knn_serve_embeddings",
+}
+
+
+@pytest.mark.parametrize("gate_name", [
+    pytest.param(g, marks=() if g in _QUICK_GATES else _mark_slow)
+    for g in em.queries()
+])
 def test_gate_matches_oracle(spark, sf_dir, oracle_con, gate_name):
     """Every registry gate end to end: the __spark_entry__ callable vs
     its oracles.ORACLES SQL through the validator's own compare (column

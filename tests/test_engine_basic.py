@@ -207,6 +207,27 @@ def test_python_model(spark, schema, sf_dir):
     assert eng.table("orders_by_status").count() > 0
 
 
+def test_python_table_model_uses_table_materialization(spark, schema, sf_dir):
+    """A python table model writes through the same table strategy as a
+    SQL model, so its bucket_by/buckets config reaches the catalog."""
+    p = tpch_project(sf_dir)
+
+    def bucketed(dbt, session):
+        return dbt.ref("stg_orders").select("order_id", "status")
+
+    p.python_models["bucketed"] = bucketed
+    p.model_configs["bucketed"] = {
+        "materialized": "table", "depends_on": ["stg_orders"],
+        "bucket_by": "order_id", "buckets": 4}
+    eng = Engine(spark, p, schema=schema)
+    res = eng.run()
+    assert res.ok(), [r.message for r in res.results if r.status == "error"]
+    detail = {r.col_name: r.data_type for r in spark.sql(
+        f"DESCRIBE EXTENDED {schema}.bucketed").collect()}
+    assert detail.get("Num Buckets") == "4", detail
+    assert detail.get("Bucket Columns") == "[`order_id`]", detail
+
+
 def test_seed_from_rows(spark, schema):
     p = ProjectDef(name="seeds")
     p.seeds["countries"] = [

@@ -33,6 +33,28 @@ def test_write_training_shards_fixed_count_and_deterministic(spark, sf_dir, tmp_
     assert total == docs.count()
 
 
+def test_write_training_shards_one_file_per_shard_dir(spark, tmp_path):
+    """Quick-tier cut of the layout check above: 200 rows into 16 shards
+    with AQE partition coalescing left on.  A ``repartition(n, col)`` is
+    never coalesced, so every ``shard=K`` dir gets exactly one file."""
+    from pyspark.sql import functions as F
+
+    from dbt_core_spark.sources.writers import write_training_shards
+
+    aqe = "spark.sql.adaptive.coalescePartitions.enabled"
+    assert spark.conf.get(aqe) == "true"
+    docs = spark.range(200).select(
+        F.col("id").alias("doc_id"), F.concat(F.lit("t"), "id").alias("text"))
+    path = str(tmp_path / "shards")
+    write_training_shards(docs, path, n_shards=16)
+    dirs = sorted(glob.glob(os.path.join(path, "shard=*")))
+    assert len(dirs) == 16
+    for d in dirs:
+        assert len(glob.glob(os.path.join(d, "part-*"))) == 1, d
+    assert spark.read.parquet(path).count() == 200
+    assert spark.conf.get(aqe) == "true"
+
+
 def test_webdataset_shards_roundtrip_and_byte_stable(tmp_path, spark):
     """WebDataset tar sink: sample grouping (<key>.json + <key>.bin),
     key-sorted order within shards, and byte-identical re-runs."""
