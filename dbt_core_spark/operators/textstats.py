@@ -1,7 +1,22 @@
-"""Text analysis operators: language-ID, quality scoring, token counting,
-fingerprinting.  Engine extensions (driver north star) — all built-in
-Spark SQL functions, no UDFs, so the whole surface runs inside
-WholeStageCodegen and scales linearly with partitions.
+"""Text operators for LLM-data pipelines: corpus curation (token
+counts, quality/repetition/boilerplate features, language and script
+detection, fingerprints, PII and card scrubbing, normalization,
+chunking, splits, sampling, vocabularies, packing), lexical retrieval
+(tf-idf, the BM25 index lifecycle, RRF fusion, retrieval metrics),
+trainable filters (hashed-feature scoring, binary / averaged /
+one-vs-rest perceptrons, Naive Bayes, char-n-gram language-ID,
+decision stumps) and their evaluation (classification metrics, the PR
+curve and threshold choice, ROC-AUC, calibration).
+
+Each shared job has ONE private helper: ``_hashed_buckets`` and
+``_bucket_dot`` (featurize, score), ``_perceptron_epochs`` (every
+perceptron trainer), ``_doc_term_tf`` (tokenize to term counts),
+``_bm25_idf`` and ``_bm25_snapshot`` (every BM25 snapshot),
+``_bm25_prune`` (bucketed serving), ``_flag_positives`` and
+``_micro_rates`` (evaluation).
+
+All built-in Spark SQL functions, no UDFs, so the whole surface runs
+inside WholeStageCodegen and scales linearly with partitions.
 """
 
 from __future__ import annotations
@@ -11,6 +26,7 @@ import functools
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from dbt_core_spark.exceptions import ExecutionError
 from dbt_core_spark.operators.dedup import normalized_words
 
 # Tiny built-in stopword lists for the n-gram/stopword language heuristic.
@@ -755,6 +771,27 @@ def _bucket_of(word: Column, dim: int, seed: str) -> Column:
     )
 
 
+def _hashed_buckets(text: Column, dim: int, seed: str) -> Column:
+    """The hashed bag-of-words feature array every perceptron trainer
+    and scorer shares: one ``_bucket_of`` bucket per normalized word
+    (bucket COUNTS are the multiplicities) plus the constant bias
+    bucket ``dim``."""
+    return F.concat(
+        F.transform(normalized_words(text), lambda x: _bucket_of(x, dim, seed)),
+        F.array(F.lit(dim).cast("bigint")),  # bias bucket
+    )
+
+
+def _bucket_dot(bkts: str, wrow: Column) -> Column:
+    """Σ over a doc's bucket array of ``wrow[bucket]`` (≡ Σ cnt·w[bucket])
+    — a NARROW higher-order ``aggregate`` against a ≤ dim+1 weight
+    literal (element_at is 1-based, buckets 0-based)."""
+    return F.aggregate(
+        bkts, F.lit(0).cast("bigint"),
+        lambda acc, b: acc + F.element_at(wrow, b.cast("int") + 1),
+    )
+
+
 def _derived_weight_e6(bucket: Column, wseed: str) -> Column:
     """Deterministic pseudo-weight for a bucket, integer micro-logits in
     [-1000, 1000] (md5-derived, like the LSH hyperplanes)."""
@@ -933,6 +970,21 @@ def strip_html(
     )
 
 
+def _doc_term_tf(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, term, tf) per non-NULL-text document — the one tokenize
+    pass of the BM25 build and append and of tfidf_cosine_pairs,
+    sealed: each caller reads it more than once (dl, df_t, the append
+    overlap probe, the postings or weights)."""
+    return (
+        df.filter(F.col(text_col).isNotNull())
+        .select(F.col(id_col).alias("id"),
+                F.explode(normalized_words(F.col(text_col))).alias("term"))
+        .groupBy("id", "term")
+        .agg(F.count("*").cast("bigint").alias("tf"))
+        .localCheckpoint(eager=False)
+    )
+
+
 def tfidf_cosine_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -957,14 +1009,7 @@ def tfidf_cosine_pairs(
     Returns (id_a, id_b, cosine) with id_a < id_b, cosine ≥ threshold
     applied on the ROUNDED value so engine float noise cannot flip the
     boundary."""
-    tf = (
-        df.filter(F.col(text_col).isNotNull())
-        .select(F.col(id_col).alias("id"),
-                F.explode(normalized_words(F.col(text_col))).alias("term"))
-        .groupBy("id", "term")
-        .agg(F.count("*").cast("bigint").alias("tf"))
-        .localCheckpoint(eager=False)  # feeds df-counts AND weights
-    )
+    tf = _doc_term_tf(df, text_col, id_col)  # feeds df-counts AND weights
     n_docs = tf.select("id").distinct().count()  # one tiny action
     max_df = int(n_docs * max_df_frac)
     idf = (
@@ -1103,6 +1148,60 @@ def _bm25_bucket(term: Column, n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(term), F.lit(n_buckets)).cast("int")
 
 
+def _bm25_idf(postings: DataFrame, n_docs: int) -> DataFrame:
+    """(term, idf_milli) — the Robertson/Lucene positive idf floored to
+    integer milli-nats, from postings whose (term, id) is unique, so
+    count(*) is df_t (integer columns only, no text).  Build, append
+    and delete all derive idf here — the rebuild bit-identity of
+    append and delete depends on one expression."""
+    return (
+        postings.groupBy("term")
+        .agg(F.count("*").cast("bigint").alias("df_t"))
+        .select(
+            "term",
+            F.floor(
+                F.log(
+                    F.lit(1.0)
+                    + (F.lit(float(n_docs)) - F.col("df_t") + F.lit(0.5))
+                    / (F.col("df_t") + F.lit(0.5))
+                )
+                * 1000
+            ).cast("bigint").alias("idf_milli"),
+        )
+    )
+
+
+def _bm25_snapshot(
+    postings: DataFrame, n_docs: int, total: int, chk: int | None,
+    n_buckets: int | None,
+) -> DataFrame:
+    """Finish an index snapshot from its (term, id, tf, dl, idf_milli)
+    postings: stamp the corpus scalars and the content-derived snap_id
+    and, when bucketed, the term-hash ``bucket`` / ``n_buckets`` pair
+    plus the one bucket-0 sentinel.  Zero documents yield the empty
+    contract frame."""
+    spark = postings.sparkSession
+    if n_docs == 0:
+        return spark.createDataFrame(
+            [], _BM25_INDEX_SCHEMA_BUCKETED if n_buckets
+            else _BM25_INDEX_SCHEMA)
+    snap = _bm25_snap_id(int(chk), n_docs, total, n_buckets)
+    out = postings.select(
+        "term", "id", "tf", "dl", "idf_milli",
+        F.lit(n_docs).cast("bigint").alias("n_docs"),
+        F.lit(total).cast("bigint").alias("total"),
+        F.lit(snap).cast("bigint").alias("snap_id"),
+    )
+    if n_buckets:
+        out = out.select(
+            "*",
+            _bm25_bucket(F.col("term"), n_buckets).alias("bucket"),
+            F.lit(n_buckets).cast("int").alias("n_buckets"),
+        ).unionByName(
+            _bm25_sentinel(spark, n_docs, total, snap, int(n_buckets)))
+    return out
+
+
 def bm25_index(
     df: DataFrame,
     text_col: str = "text",
@@ -1137,14 +1236,7 @@ def bm25_index(
 
     ``bm25_query(bm25_index(df), q)`` is row-identical to
     ``bm25_rank(df, q)`` (pytest-pinned), bucketed or not."""
-    tf = (
-        df.filter(F.col(text_col).isNotNull())
-        .select(F.col(id_col).alias("id"),
-                F.explode(normalized_words(F.col(text_col))).alias("term"))
-        .groupBy("id", "term")
-        .agg(F.count("*").cast("bigint").alias("tf"))
-        .localCheckpoint(eager=False)  # feeds dl, df_t, and postings
-    )
+    tf = _doc_term_tf(df, text_col, id_col)
     dl = tf.groupBy("id").agg(
         F.sum("tf").cast("bigint").alias("dl"),
         # per-id xor fold; the snapshot checksum re-folds these below —
@@ -1156,47 +1248,11 @@ def bm25_index(
         F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias("total"),
         F.expr("bit_xor(chk_id)").alias("chk"),
     ).collect()[0]
-    n_docs, total = stats["n"], stats["total"]
-    if n_docs == 0:
-        return df.sparkSession.createDataFrame(
-            [], _BM25_INDEX_SCHEMA_BUCKETED if n_buckets
-            else _BM25_INDEX_SCHEMA)
-    snap = _bm25_snap_id(int(stats["chk"]), int(n_docs), int(total),
-                         n_buckets)
-    idf = (
-        tf.groupBy("term")
-        .agg(F.countDistinct("id").cast("bigint").alias("df_t"))
-        .select(
-            "term",
-            F.floor(
-                F.log(
-                    F.lit(1.0)
-                    + (F.lit(float(n_docs)) - F.col("df_t") + F.lit(0.5))
-                    / (F.col("df_t") + F.lit(0.5))
-                )
-                * 1000
-            ).cast("bigint").alias("idf_milli"),
-        )
-    )
-    out = (
-        tf.join(idf, "term")
-        .join(dl.select("id", "dl"), "id")
-        .select(
-            "term", "id", "tf", "dl", "idf_milli",
-            F.lit(int(n_docs)).cast("bigint").alias("n_docs"),
-            F.lit(int(total)).cast("bigint").alias("total"),
-            F.lit(snap).cast("bigint").alias("snap_id"),
-        )
-    )
-    if n_buckets:
-        out = out.select(
-            "*",
-            _bm25_bucket(F.col("term"), n_buckets).alias("bucket"),
-            F.lit(int(n_buckets)).cast("int").alias("n_buckets"),
-        ).unionByName(_bm25_sentinel(
-            df.sparkSession, int(n_docs), int(total), snap,
-            int(n_buckets)))
-    return out
+    n_docs = int(stats["n"])
+    return _bm25_snapshot(
+        tf.join(_bm25_idf(tf, n_docs), "term")
+        .join(dl.select("id", "dl"), "id"),
+        n_docs, int(stats["total"]), stats["chk"], n_buckets)
 
 
 def _bm25_constants(index: DataFrame) -> tuple[int, int, int | None] | None:
@@ -1205,8 +1261,6 @@ def _bm25_constants(index: DataFrame) -> tuple[int, int, int | None] | None:
     bounded action.  None for an empty index; ExecutionError on a
     mixed-snapshot union or partial index (r6 ADVICE: scoring against
     an arbitrary row's constants would be silently wrong)."""
-    from dbt_core_spark.exceptions import ExecutionError
-
     bucketed = "n_buckets" in index.columns
     # legacy (pre-snap_id) persisted indexes lack the column; every
     # build/append/delete path stamps it now
@@ -1297,8 +1351,6 @@ def bm25_index_append(
     refresh — this operator keeps the one-self-contained-table
     contract instead, trading a full (integer-column) index rewrite
     for zero extra serving machinery."""
-    from dbt_core_spark.exceptions import ExecutionError
-
     consts = _bm25_constants(index)
     if consts is None:  # appending to an empty index is a build
         # an EMPTY index has no rows to read n_buckets from, but its
@@ -1325,14 +1377,7 @@ def bm25_index_append(
         )
     n_docs, total, n_buckets = idx_n_docs, idx_total, idx_buckets
 
-    new_tf = (
-        new_docs.filter(F.col(text_col).isNotNull())
-        .select(F.col(id_col).alias("id"),
-                F.explode(normalized_words(F.col(text_col))).alias("term"))
-        .groupBy("id", "term")
-        .agg(F.count("*").cast("bigint").alias("tf"))
-        .localCheckpoint(eager=False)  # feeds dl, overlap probe, postings
-    )
+    new_tf = _doc_term_tf(new_docs, text_col, id_col)
     new_dl = new_tf.groupBy("id").agg(
         F.sum("tf").cast("bigint").alias("dl"))
     new_ids = new_dl.select("id")
@@ -1372,43 +1417,34 @@ def bm25_index_append(
     # the full rebuild's checksum and append ≡ rebuild stays
     # bit-identical including the snap_id stamp
     chk2 = merged.agg(F.expr(_BM25_CHK_EXPR).alias("chk")).first()["chk"]
-    snap2 = _bm25_snap_id(int(chk2), n_docs2, total2, n_buckets)
-    idf = (
-        merged.groupBy("term")
-        # (term, id) is unique in postings, so count(*) == df_t —
-        # integer columns only, no text
-        .agg(F.count("*").cast("bigint").alias("df_t"))
-        .select(
-            "term",
-            F.floor(
-                F.log(
-                    F.lit(1.0)
-                    + (F.lit(float(n_docs2)) - F.col("df_t") + F.lit(0.5))
-                    / (F.col("df_t") + F.lit(0.5))
-                )
-                * 1000
-            ).cast("bigint").alias("idf_milli"),
-        )
+    # a bucketed index stays bucketed with the SAME mapping — the
+    # n_buckets constant was validated single-valued above
+    return _bm25_snapshot(merged.join(_bm25_idf(merged, n_docs2), "term"),
+                          n_docs2, total2, chk2, n_buckets)
+
+
+def _bm25_prune(
+    index: DataFrame, qterms: DataFrame, n_buckets: int
+) -> tuple[DataFrame, DataFrame]:
+    """Restrict a bucketed index to the query terms' buckets plus
+    bucket 0 (the sentinel ride-along, see bm25_query) as a LITERAL IN
+    on the partition column, so a partitionBy("bucket") layout prunes
+    at the file listing (PartitionFilters in the scan —
+    tests/test_plans.py).  The collect is bounded by n_buckets ints;
+    batch cost becomes (buckets touched)/N of the postings files
+    instead of all of them.  Returns (sealed qterms, pruned index):
+    the bucket collect AND the postings join both consume qterms, and
+    without the seal the query batch tokenizes twice (the ≥2-branch
+    lineage rule)."""
+    qterms = qterms.localCheckpoint(eager=False)
+    hit = (
+        qterms.select(_bm25_bucket(F.col("term"), n_buckets).alias("bucket"))
+        .distinct().collect()
     )
-    out = (
-        merged.join(idf, "term")
-        .select(
-            "term", "id", "tf", "dl", "idf_milli",
-            F.lit(n_docs2).cast("bigint").alias("n_docs"),
-            F.lit(total2).cast("bigint").alias("total"),
-            F.lit(snap2).cast("bigint").alias("snap_id"),
-        )
+    return qterms, index.filter(
+        F.col("bucket").isin(sorted({0, *(r["bucket"] for r in hit)}))
+        if hit else F.lit(False)
     )
-    if n_buckets:
-        # a bucketed index stays bucketed with the SAME mapping — the
-        # n_buckets constant was validated single-valued above
-        out = out.select(
-            "*",
-            _bm25_bucket(F.col("term"), n_buckets).alias("bucket"),
-            F.lit(n_buckets).cast("int").alias("n_buckets"),
-        ).unionByName(_bm25_sentinel(
-            index.sparkSession, n_docs2, total2, snap2, n_buckets))
-    return out
 
 
 def bm25_query(
@@ -1447,15 +1483,17 @@ def bm25_query(
     qterms = _bm25_qterms(queries, query_text_col, query_id_col)
     if consts is not None:
         n_docs, total, n_buckets = consts
-        if "n_buckets" in index.columns:
-            if n_buckets is None:
-                from dbt_core_spark.exceptions import ExecutionError
-
-                raise ExecutionError(
-                    "bm25_query: consts carries n_buckets=None but the "
-                    "index schema is bucketed — pass the tuple exactly "
-                    "as _bm25_constants returned it"
-                )
+        bucketed = "n_buckets" in index.columns
+        if bucketed != (n_buckets is not None):
+            # bucketing mismatch (r11 ADVICE): the tuple is from some
+            # other snapshot; scoring would silently use its
+            # n_docs/total, and pruning its bucket mapping
+            raise ExecutionError(
+                f"bm25_query: consts carries n_buckets={n_buckets} but "
+                f"the index schema is {'' if bucketed else 'un'}bucketed "
+                "— pass the tuple _bm25_constants returned for THIS index"
+            )
+        if bucketed:
             # stale-consts guard (r11 ADVICE): consts from a DIFFERENT
             # snapshot (different n_buckets) would prune with the wrong
             # bucket mapping and silently drop postings — keep the
@@ -1464,8 +1502,6 @@ def bm25_query(
             # disagreement, the repo's snapshot-mismatch discipline
             probe = index.select("n_buckets").limit(1).collect()
             if probe and int(probe[0]["n_buckets"]) != n_buckets:
-                from dbt_core_spark.exceptions import ExecutionError
-
                 raise ExecutionError(
                     f"bm25_query: consts n_buckets {n_buckets} disagrees "
                     f"with the index's {int(probe[0]['n_buckets'])} — the "
@@ -1474,28 +1510,7 @@ def bm25_query(
                 )
             # bucket pruning exactly as the validated path below —
             # only the per-batch probe/validation scans are skipped
-            qterms = qterms.localCheckpoint(eager=False)
-            hit = (
-                qterms.select(
-                    _bm25_bucket(F.col("term"), n_buckets).alias("bucket"))
-                .distinct().collect()
-            )
-            index = index.filter(
-                F.col("bucket").isin(
-                    sorted({0, *(r["bucket"] for r in hit)}))
-                if hit else F.lit(False)
-            )
-        elif n_buckets is not None:
-            # inverse mismatch (r11 ADVICE): bucketed consts against an
-            # unbucketed index schema — the tuple is from some other
-            # snapshot; scoring would silently use its n_docs/total
-            from dbt_core_spark.exceptions import ExecutionError
-
-            raise ExecutionError(
-                f"bm25_query: consts carries n_buckets={n_buckets} but "
-                "the index schema is unbucketed — pass the tuple "
-                "_bm25_constants returned for THIS index"
-            )
+            qterms, index = _bm25_prune(index, qterms, n_buckets)
     elif "n_buckets" in index.columns:
         # serving-cost contract (r7 ADVICE): do NOT run the full
         # constants min/max scan over every partition BEFORE the bucket
@@ -1522,34 +1537,12 @@ def bm25_query(
         if not probe:
             return index.sparkSession.createDataFrame([], out_schema)
         nb_sample = int(probe[0]["n_buckets"])
-        # sealed: the bucket collect below AND the postings join both
-        # consume qterms — without the seal the query batch tokenizes
-        # twice (the ≥2-branch lineage rule)
-        qterms = qterms.localCheckpoint(eager=False)
-        # restrict the scan to the query terms' buckets as a LITERAL IN
-        # on the partition column, so a partitionBy("bucket") layout
-        # prunes at the file listing (PartitionFilters in the scan —
-        # tests/test_plans.py).  The collect is bounded by n_buckets
-        # ints; batch cost becomes (buckets touched)/N of the postings
-        # files instead of all of them.
-        hit = (
-            qterms.select(
-                _bm25_bucket(F.col("term"), nb_sample).alias("bucket"))
-            .distinct().collect()
-        )
-        index = index.filter(
-            # bucket 0 rides along for the sentinel check (see above)
-            F.col("bucket").isin(
-                sorted({0, *(r["bucket"] for r in hit)}))
-            if hit else F.lit(False)
-        )
+        qterms, index = _bm25_prune(index, qterms, nb_sample)
         consts = _bm25_constants(index)
         if consts is None:  # no postings in the touched buckets
             return index.sparkSession.createDataFrame([], out_schema)
         n_docs, total, n_buckets = consts
         if n_buckets != nb_sample:
-            from dbt_core_spark.exceptions import ExecutionError
-
             raise ExecutionError(
                 f"bm25_query: sampled n_buckets {nb_sample} disagrees "
                 f"with the pruned postings' constant {n_buckets} — the "
@@ -1918,6 +1911,86 @@ def lexical_stats(
     )
 
 
+def _perceptron_epochs(
+    df: DataFrame,
+    ys: list[Column],
+    text_col: str,
+    dim: int,
+    epochs: int,
+    seed: str,
+) -> tuple[list[list[int]], list[list[int]]]:
+    """The ONE batch-perceptron epoch loop behind every trainer: k
+    perceptrons over the same hashed-bucket features, one per label
+    column in ``ys`` (each ±1 per doc; the binary trainer is k = 1,
+    one-vs-rest is k classes).  Returns (last, total): the final
+    k×(dim+1) weight snapshot and the sum of the per-epoch snapshots
+    w_1..w_E (the averaged perceptron's model).
+
+    Plan shape per epoch (optimization r11 — ZERO corpus-scale
+    shuffles): the featurized per-doc bucket ARRAY is sealed once (one
+    row per doc, never exploded across an exchange); all k dots are
+    computed NARROWLY per doc by ``_bucket_dot`` against ONE k×(dim+1)
+    nested weight literal (the centroid-literal convention — one
+    `lit`, never k·dim scalar expressions); only misclassified docs
+    explode, in the same stage; and the delta reduces through ONE
+    map-side-partial ``groupBy(bucket)`` with k conditional sums whose
+    exchange carries ≤ dim+1 rows per task, collected to the driver
+    (the kmeans update contract: driver state is model-sized, never
+    corpus-sized).
+
+    An epoch whose weights did not move repeats exactly, so the loop
+    stops at the first such epoch and pads the remaining snapshots
+    with the converged weights — the same result as running all
+    ``epochs``."""
+    k = len(ys)
+    ycols = [f"y{c}" for c in range(k)]
+    mis = [f"mis{c}" for c in range(k)]
+    feats = (
+        df.filter(F.col(text_col).isNotNull())
+        .select(
+            *[y.cast("bigint").alias(yc) for y, yc in zip(ys, ycols)],
+            _hashed_buckets(F.col(text_col), dim, seed).alias("bkts"),
+        )
+        .localCheckpoint(eager=False)  # tokenized once, reused per epoch
+    )
+    last = [[0] * (dim + 1) for _ in range(k)]
+    total = [[0] * (dim + 1) for _ in range(k)]
+    for e in range(epochs):
+        wlit = F.lit(last)  # ONE k×(dim+1) nested literal
+        delta = (
+            # "misclassified" is y·(w·x) <= 0 — zero counts as wrong, so
+            # epoch 1 updates on every doc from w = 0
+            feats.select(
+                "bkts", *ycols,
+                *[(F.col(yc) * _bucket_dot("bkts", F.element_at(wlit, c + 1))
+                   <= 0).alias(mis[c]) for c, yc in enumerate(ycols)])
+            # only misclassified docs explode (explode(NULL) is no
+            # rows); a Filter here would be pushed below the projection
+            # and evaluate every dot twice
+            .select(*ycols, *mis, F.explode(F.when(
+                functools.reduce(lambda a, b: a | b, map(F.col, mis)),
+                F.col("bkts"))).alias("bucket"))
+            .groupBy("bucket")
+            # Σ_tokens y ≡ Σ_docs y·cnt:  w += Σ_{misclassified} y · x
+            .agg(*[F.sum(F.when(F.col(m), F.col(yc))).alias(f"d{c}")
+                   for c, (yc, m) in enumerate(zip(ycols, mis))])
+            .collect()  # <= dim+1 rows × k columns — bounded
+        )
+        moved = False
+        for r in delta:
+            for c in range(k):
+                if r[f"d{c}"]:
+                    last[c][int(r["bucket"])] += int(r[f"d{c}"])
+                    moved = True
+        reps = 1 if moved else epochs - e  # converged: pad the rest
+        for c in range(k):
+            for b in range(dim + 1):
+                total[c][b] += last[c][b] * reps
+        if not moved:
+            break
+    return last, total
+
+
 def perceptron_train(
     df: DataFrame,
     label_col: str,
@@ -1935,8 +2008,9 @@ def perceptron_train(
     ``kmeans_centroids`` closed clustering.
 
     Integer-exact end to end, so training replays in SQL: features are
-    bucket COUNTS (``_bucket_of`` md5 hashing + a constant bias bucket
-    ``dim``), weights are bigints, and each epoch updates
+    bucket COUNTS (``_hashed_buckets``: ``_bucket_of`` md5 hashing + a
+    constant bias bucket ``dim``), weights are bigints, and each epoch
+    updates
 
         w  +=  Σ_{misclassified docs}  y · x        (y ∈ {+1, −1})
 
@@ -1944,63 +2018,19 @@ def perceptron_train(
     epoch 1 therefore updates on every doc from w = 0).  The batch sum
     is order-free — no per-sample sequential updates, so the epoch
     parallelizes over any number of executors and two engines agree
-    bit-for-bit (the driver gate replays all epochs in DuckDB).
-
-    Plan shape per epoch (optimization r11 — ZERO corpus-scale
-    shuffles; the old shape exchanged the featurized corpus twice per
-    epoch, once for the groupBy(id) dot pass and once for the
-    misclassified-id semi-join): the tokenized per-doc bucket ARRAY is
-    sealed once (one row per doc, never exploded across an exchange);
-    each epoch computes the dot product NARROWLY per doc with a
-    higher-order ``aggregate`` against the ≤ dim+1 weight literal
-    (element_at, zero broadcast machinery), filters misclassified docs
-    in the same stage, and reduces the per-bucket delta through one
-    map-side-partial ``groupBy(bucket)`` whose exchange carries
-    ≤ dim+1 rows per task, collected to the driver (the kmeans update
-    contract: driver state is model-sized, never corpus-sized).
+    bit-for-bit (the driver gate replays all epochs in DuckDB).  The
+    per-epoch plan is ``_perceptron_epochs``'s: zero corpus-scale
+    shuffles, one ≤ dim+1-row delta collect.
 
     Returns the model as a (bucket int, w bigint) table — persist it
     and serve with ``perceptron_apply`` (or feed classifier_score-style
     pipelines).  Rows with NULL text or NULL label are excluded from
     training; ``label_col`` must hold +1 / −1."""
-    spark = df.sparkSession
-    feats = (
-        df.filter(
-            F.col(text_col).isNotNull() & F.col(label_col).isNotNull())
-        .select(
-            F.col(label_col).cast("bigint").alias("y"),
-            F.concat(
-                F.transform(
-                    normalized_words(F.col(text_col)),
-                    lambda x: _bucket_of(x, dim, seed),
-                ),
-                F.array(F.lit(dim).cast("bigint")),  # bias bucket
-            ).alias("bkts"),
-        )
-        .localCheckpoint(eager=False)  # tokenized once, reused per epoch
-    )
-    w = [0] * (dim + 1)
-    for _ in range(epochs):
-        wcol = F.lit(w)  # <= dim+1 ints — a tiny literal, rebuilt per epoch
-        # dot = sum over tokens of w[bucket] ≡ the old sum(cnt·w[bucket])
-        dot = F.aggregate(
-            "bkts", F.lit(0).cast("bigint"),
-            lambda acc, b: acc + F.element_at(wcol, b.cast("int") + 1),
-        )
-        delta = (
-            feats.withColumn("_dot", dot)
-            .filter(F.col("y") * F.col("_dot") <= 0)
-            .select("y", F.explode("bkts").alias("bucket"))
-            .groupBy("bucket")
-            .agg(F.sum("y").alias("d"))  # Σ_tokens y ≡ Σ_docs y·cnt
-            .collect()  # <= dim+1 rows — bounded
-        )
-        if not delta:
-            break  # converged: nothing misclassified
-        for r in delta:
-            w[int(r["bucket"])] += int(r["d"])
-    return spark.createDataFrame(
-        [(b, int(wb)) for b, wb in enumerate(w)], "bucket int, w bigint")
+    (w,), _ = _perceptron_epochs(
+        df.filter(F.col(label_col).isNotNull()), [F.col(label_col)],
+        text_col, dim, epochs, seed)
+    return df.sparkSession.createDataFrame(
+        list(enumerate(w)), "bucket int, w bigint")
 
 
 def perceptron_apply(
@@ -2030,20 +2060,11 @@ def perceptron_apply(
     for r in weights.collect():  # model-sized by contract: <= dim+1 rows
         b = int(r["bucket"])
         wmap[b] = wmap.get(b, 0) + int(r["w"])  # dup rows sum, as the join did
-    warr = F.lit([wmap.get(b, 0) for b in range(dim + 1)])
-    bkts = F.concat(
-        F.transform(
-            normalized_words(F.col(text_col)),
-            lambda x: _bucket_of(x, dim, seed),
-        ),
-        F.array(F.lit(dim).cast("bigint")),
-    )
-    score = F.aggregate(
-        "_bkts", F.lit(0).cast("bigint"),
-        lambda acc, b: acc + F.element_at(warr, b.cast("int") + 1),
-    )
+    score = _bucket_dot(
+        "_bkts", F.lit([wmap.get(b, 0) for b in range(dim + 1)]))
     out = df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("id"), bkts.alias("_bkts"))
+        F.col(id_col).alias("id"),
+        _hashed_buckets(F.col(text_col), dim, seed).alias("_bkts"))
     if set(wmap) < set(range(dim + 1)):
         # sparse model: the old inner join dropped docs having NO
         # bucket in the weights table — preserve that contract
@@ -2077,56 +2098,15 @@ def perceptron_train_averaged(
     Integer-exact and SQL-replayable: every snapshot is already exact
     bigints, so the sum is too (the sign of Σ_e w_e·x equals the sign
     of the averaged score — no division anywhere).  The training loop
-    is byte-for-byte ``perceptron_train``'s (same featurize pass, same
-    epoch plan); only the returned table differs.  Serve with
-    ``perceptron_apply`` as usual.  Returns (bucket int, w bigint)
-    where w = Σ_e w_e[bucket]."""
-    spark = df.sparkSession
-    feats = (
-        df.filter(
-            F.col(text_col).isNotNull() & F.col(label_col).isNotNull())
-        .select(
-            F.col(label_col).cast("bigint").alias("y"),
-            F.concat(
-                F.transform(
-                    normalized_words(F.col(text_col)),
-                    lambda x: _bucket_of(x, dim, seed),
-                ),
-                F.array(F.lit(dim).cast("bigint")),
-            ).alias("bkts"),
-        )
-        .localCheckpoint(eager=False)  # tokenized once, reused per epoch
-    )
-    w = [0] * (dim + 1)
-    acc = [0] * (dim + 1)
-    for _ in range(epochs):
-        wcol = F.lit(w)
-        dot = F.aggregate(
-            "bkts", F.lit(0).cast("bigint"),
-            lambda a, b: a + F.element_at(wcol, b.cast("int") + 1),
-        )
-        delta = (
-            feats.withColumn("_dot", dot)
-            .filter(F.col("y") * F.col("_dot") <= 0)
-            .select("y", F.explode("bkts").alias("bucket"))
-            .groupBy("bucket")
-            .agg(F.sum("y").alias("d"))
-            .collect()
-        )
-        for r in delta:
-            w[int(r["bucket"])] += int(r["d"])
-        for b in range(dim + 1):
-            acc[b] += w[b]
-        if not delta:
-            # converged: every remaining epoch's snapshot equals w, and
-            # the accumulator above already added THIS epoch's copy —
-            # add the rest so early exit equals running all E epochs
-            remaining = epochs - 1 - _
-            for b in range(dim + 1):
-                acc[b] += w[b] * remaining
-            break
-    return spark.createDataFrame(
-        [(b, int(a)) for b, a in enumerate(acc)], "bucket int, w bigint")
+    is ``perceptron_train``'s (the same ``_perceptron_epochs`` call);
+    only the returned table differs.  Serve with ``perceptron_apply``
+    as usual.  Returns (bucket int, w bigint) where
+    w = Σ_e w_e[bucket]."""
+    _, (acc,) = _perceptron_epochs(
+        df.filter(F.col(label_col).isNotNull()), [F.col(label_col)],
+        text_col, dim, epochs, seed)
+    return df.sparkSession.createDataFrame(
+        list(enumerate(acc)), "bucket int, w bigint")
 
 
 def perceptron_train_ovr(
@@ -2145,17 +2125,12 @@ def perceptron_train_ovr(
     routing — the multi-class step of the quality-classifier story).
 
     Per-class result is BIT-IDENTICAL to running ``perceptron_train``
-    with ``y = +1 if class==c else −1`` (pytest-pinned), but the k
-    classifiers share the work: ONE featurize pass (the per-doc bucket
-    array, sealed), and per epoch all k dots computed NARROWLY per doc
-    by higher-order ``aggregate`` against a k×(dim+1) nested weight
-    literal (the centroid-literal convention — one `lit`, never k·dim
-    scalar expressions; optimization r11: zero corpus-scale exchanges
-    per epoch, where the old shape paid a groupBy(id) pass plus a
-    mis-flag join) plus ONE map-side-partial groupBy(bucket) delta
-    aggregation with k conditional sums, collected as ≤ dim+1 rows of
-    k columns.  Driver state is k·(dim+1) bigints — model-sized, the
-    kmeans contract.
+    with ``y = +1 if class==c else −1`` (pytest-pinned): both are one
+    ``_perceptron_epochs`` loop, here with k label columns, so the k
+    classifiers share ONE featurize pass and, per epoch, one nested
+    weight literal and ONE groupBy(bucket) delta aggregation with k
+    conditional sums, collected as ≤ dim+1 rows of k columns.  Driver
+    state is k·(dim+1) bigints — model-sized, the kmeans contract.
 
     ``classes`` pins the classifier set (and the SQL oracle); when
     None it is the sorted distinct non-NULL class values (one bounded
@@ -2171,85 +2146,15 @@ def perceptron_train_ovr(
             .select(F.col(class_col).cast("string")).distinct().collect()
         )
     classes = [str(c) for c in classes]
-    k = len(classes)
-    if k == 0:
+    if not classes:
         return spark.createDataFrame([], "cls string, bucket int, w bigint")
-    feats = (
-        df.filter(F.col(text_col).isNotNull())
-        .select(
-            F.col(class_col).cast("string").alias("cls"),
-            F.concat(
-                F.transform(
-                    normalized_words(F.col(text_col)),
-                    lambda x: _bucket_of(x, dim, seed),
-                ),
-                F.array(F.lit(dim).cast("bigint")),  # bias bucket
-            ).alias("bkts"),
-        )
-        .localCheckpoint(eager=False)  # tokenized once, reused per epoch
-    )
-
-    def _y(ci: int):
-        # NULL class is a negative for every classifier (NULL == never
-        # equal), matching the binary gate's `else -1` label rule
-        return (
-            F.when(F.col("cls") == F.lit(classes[ci]), F.lit(1))
-            .otherwise(F.lit(-1)).cast("bigint")
-        )
-
-    W = [[0] * (dim + 1) for _ in range(k)]
-    for _ in range(epochs):
-        wlit = F.lit(W)  # ONE k×(dim+1) nested literal
-        # all k dots per doc, NARROW (optimization r11 — the old shape
-        # exchanged the featurized corpus twice per epoch: the
-        # groupBy(id) dot pass + the mis-flag join); delta reduces
-        # through one map-side-partial groupBy(bucket) whose exchange
-        # carries <= dim+1 rows per task
-        def _dot(ci: int) -> Column:
-            wrow = F.element_at(wlit, ci + 1)
-            return F.aggregate(
-                "bkts", F.lit(0).cast("bigint"),
-                lambda a, b: a + F.element_at(wrow, b.cast("int") + 1),
-            )
-
-        flagged = feats.select(
-            "cls", "bkts",
-            *[(_y(ci) * _dot(ci) <= 0).alias(f"mis{ci}")
-              for ci in range(k)],
-        )
-        delta = (
-            flagged.filter(
-                functools.reduce(
-                    lambda x, y: x | y,
-                    [F.col(f"mis{ci}") for ci in range(k)]))
-            .select("cls",
-                    *[f"mis{ci}" for ci in range(k)],
-                    F.explode("bkts").alias("bucket"))
-            .groupBy("bucket")
-            .agg(*[
-                F.sum(
-                    F.when(F.col(f"mis{ci}"), _y(ci))
-                ).alias(f"d{ci}")
-                for ci in range(k)
-            ])
-            .collect()  # <= dim+1 rows × k columns — bounded
-        )
-        moved = False
-        for r in delta:
-            b = int(r["bucket"])
-            for ci in range(k):
-                d = r[f"d{ci}"]
-                if d:
-                    W[ci][b] += int(d)
-                    moved = True
-        if not moved:
-            break  # every classifier converged
+    # NULL class is a negative for every classifier (NULL == never
+    # equal), matching the binary gate's `else -1` label rule
+    ys = [F.when(F.col(class_col).cast("string") == F.lit(c), F.lit(1))
+          .otherwise(F.lit(-1)) for c in classes]
+    W, _ = _perceptron_epochs(df, ys, text_col, dim, epochs, seed)
     return spark.createDataFrame(
-        [
-            (classes[ci], b, int(wb))
-            for ci in range(k)
-            for b, wb in enumerate(W[ci])
-        ],
+        [(c, b, wb) for c, w in zip(classes, W) for b, wb in enumerate(w)],
         "cls string, bucket int, w bigint",
     )
 
@@ -2290,20 +2195,9 @@ def perceptron_apply_ovr(
     full = set(range(dim + 1))
     wlit = F.lit([[per_cls[c].get(b, 0) for b in range(dim + 1)]
                   for c in classes])
-    bkts = F.concat(
-        F.transform(
-            normalized_words(F.col(text_col)),
-            lambda x: _bucket_of(x, dim, seed),
-        ),
-        F.array(F.lit(dim).cast("bigint")),
-    )
 
     def _score(ci: int) -> Column:
-        wrow = F.element_at(wlit, ci + 1)
-        return F.aggregate(
-            "_bkts", F.lit(0).cast("bigint"),
-            lambda a, b: a + F.element_at(wrow, b.cast("int") + 1),
-        )
+        return _bucket_dot("_bkts", F.element_at(wlit, ci + 1))
 
     def _competes(ci: int) -> Column:
         # class ci competes for a doc iff >= 1 doc bucket has a weights
@@ -2329,7 +2223,8 @@ def perceptron_apply_ovr(
                                  x["score"].alias("score"))))
     return (
         df.filter(F.col(text_col).isNotNull())
-        .select(F.col(id_col).alias("id"), bkts.alias("_bkts"))
+        .select(F.col(id_col).alias("id"),
+                _hashed_buckets(F.col(text_col), dim, seed).alias("_bkts"))
         .select("id", best.alias("_k"))
         .filter(F.col("_k").isNotNull())  # no class competes -> no row
         .select(
@@ -2909,6 +2804,23 @@ def scrub_credit_cards(
     )
 
 
+def _micro_rates() -> list[Column]:
+    """precision / recall / F1 of bigint ``tp``, ``fp``, ``fn`` columns
+    as bigint divisions in micro units, 0 on an empty denominator —
+    the one rate definition of classification_metrics and pr_curve."""
+    return [
+        F.expr("case when tp + fp = 0 then 0 "
+               "else (tp * 1000000) div (tp + fp) end")
+        .cast("bigint").alias("precision_micro"),
+        F.expr("case when tp + fn = 0 then 0 "
+               "else (tp * 1000000) div (tp + fn) end")
+        .cast("bigint").alias("recall_micro"),
+        F.expr("case when 2 * tp + fp + fn = 0 then 0 "
+               "else (2 * tp * 1000000) div (2 * tp + fp + fn) end")
+        .cast("bigint").alias("f1_micro"),
+    ]
+
+
 def classification_metrics(
     predictions: DataFrame,
     labels: DataFrame,
@@ -2978,19 +2890,7 @@ def classification_metrics(
             F.coalesce("n_gold", F.lit(0)).cast("bigint").alias("n_gold"),
             F.coalesce("n_pred", F.lit(0)).cast("bigint").alias("n_pred"),
         )
-        .withColumn(
-            "precision_micro",
-            F.expr("case when tp + fp = 0 then 0 "
-                   "else (tp * 1000000) div (tp + fp) end").cast("bigint"))
-        .withColumn(
-            "recall_micro",
-            F.expr("case when tp + fn = 0 then 0 "
-                   "else (tp * 1000000) div (tp + fn) end").cast("bigint"))
-        .withColumn(
-            "f1_micro",
-            F.expr("case when 2 * tp + fp + fn = 0 then 0 "
-                   "else (2 * tp * 1000000) div (2 * tp + fp + fn) end")
-            .cast("bigint"))
+        .select("*", *_micro_rates())
     )
 
 
@@ -3030,15 +2930,10 @@ def classification_summary(
         F.expr("case when coalesce(sum(n_gold), 0) = 0 then 0 "
                "else (sum(tp) * 1000000) div sum(n_gold) end")
         .cast("bigint").alias("accuracy_micro"),
-        F.expr("case when count(*) = 0 then 0 "
-               "else sum(precision_micro) div count(*) end")
-        .cast("bigint").alias("macro_precision_micro"),
-        F.expr("case when count(*) = 0 then 0 "
-               "else sum(recall_micro) div count(*) end")
-        .cast("bigint").alias("macro_recall_micro"),
-        F.expr("case when count(*) = 0 then 0 "
-               "else sum(f1_micro) div count(*) end")
-        .cast("bigint").alias("macro_f1_micro"),
+        *[F.expr(f"case when count(*) = 0 then 0 "
+                 f"else sum({m}) div count(*) end")
+          .cast("bigint").alias(f"macro_{m}")
+          for m in ("precision_micro", "recall_micro", "f1_micro")],
     )
 
 
@@ -3062,75 +2957,69 @@ def bm25_index_delete(
     scalars + one vocabulary-sized df/idf re-aggregation — the
     dominant build cost (corpus tokenize) is never paid again.
     Bucketed indexes keep their bucket mapping (the term hash is
-    unchanged)."""
-    surv = index.filter(F.col("tf") > 0).join(
+    unchanged).  The input snapshot is validated by
+    ``_bm25_constants`` first, as ``bm25_index_append`` does, so a
+    union of two snapshots fails loudly instead of being re-stamped as
+    one."""
+    # validate BEFORE the sentinels are dropped below: a self-union's
+    # only evidence is its doubled bucket-0 sentinel, and re-stamping
+    # one fresh sentinel would serve its doubled postings as valid
+    consts = _bm25_constants(index)
+    if consts is None:  # an empty index has nothing to delete
+        return index
+    nb = consts[2]
+    surv = (
         # tf > 0 drops the bucket-0 sentinel stamp (not a posting; a
         # fresh one for the shrunken snapshot is re-added below)
-        ids.select(F.col(ids.columns[0] if id_col not in ids.columns
-                         else id_col).alias("id")).distinct(),
-        "id", "left_anti"
-    ).localCheckpoint(eager=False)  # read by scalars, idf, output
-    bucketed = "n_buckets" in surv.columns
-    # ONE driver barrier for all four scalars (n_docs, total, chk,
-    # n_buckets) — the bm25_index build shape: per-id re-fold (dl and
-    # n_buckets are constant per id; the xor checksum re-folds exactly
-    # because xor is associative/commutative), then one k-row aggregate.
-    # The previous shape paid THREE blocking driver actions (distinct
-    # docs agg + n_buckets first() + checksum agg), i.e. three separate
-    # passes over the surviving postings before the output plan existed
-    # (optimization r11; guide §5 — the driver should do almost no
-    # data work, and §1.2 — count the passes).
+        index.filter(F.col("tf") > 0)
+        .join(ids.select(F.col(ids.columns[0] if id_col not in ids.columns
+                               else id_col).alias("id")).distinct(),
+              "id", "left_anti")
+        .select("term", "id", "tf", "dl")
+        .localCheckpoint(eager=False)  # read by scalars, idf, output
+    )
+    # ONE driver barrier for the three scalars (n_docs, total, chk) —
+    # the bm25_index build shape: per-id re-fold (dl is constant per
+    # id; the xor checksum re-folds exactly because xor is
+    # associative/commutative), then one k-row aggregate (optimization
+    # r11; guide §5 — the driver should do almost no data work, and
+    # §1.2 — count the passes).
     per_id = surv.groupBy("id").agg(
         F.first("dl").alias("dl"),
         F.expr(_BM25_CHK_EXPR).alias("chk_id"),
-        *([F.first("n_buckets").alias("nb")] if bucketed else []),
     )
     stats = per_id.agg(
         F.count("*").cast("bigint").alias("n"),
         F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias("total"),
         F.expr("bit_xor(chk_id)").alias("chk"),
-        *([F.first("nb").alias("nb")] if bucketed else []),
     ).collect()[0]
-    n_docs, total = int(stats["n"]), int(stats["total"])
-    if n_docs == 0:
-        return index.sparkSession.createDataFrame(
-            [], _BM25_INDEX_SCHEMA_BUCKETED if bucketed
-            else _BM25_INDEX_SCHEMA)
+    n_docs = int(stats["n"])
     # surviving-postings checksum: identical xor fold to bm25_index, so
     # the recomputed snap_id equals the rebuild's stamp and
     # delete ≡ rebuild stays bit-identical including snap_id
-    nb = int(stats["nb"]) if bucketed else None
-    snap = _bm25_snap_id(int(stats["chk"]), n_docs, total, nb)
-    # identical idf expression shape to bm25_index — the rebuild
-    # bit-identity depends on it
-    idf = (
-        surv.groupBy("term")
-        .agg(F.countDistinct("id").cast("bigint").alias("df_t"))
-        .select(
-            "term",
-            F.floor(
-                F.log(
-                    F.lit(1.0)
-                    + (F.lit(float(n_docs)) - F.col("df_t") + F.lit(0.5))
-                    / (F.col("df_t") + F.lit(0.5))
-                )
-                * 1000
-            ).cast("bigint").alias("idf_milli"),
-        )
+    return _bm25_snapshot(surv.join(_bm25_idf(surv, n_docs), "term"),
+                          n_docs, int(stats["total"]), stats["chk"], nb)
+
+
+def _flag_positives(
+    scored: DataFrame, positives: DataFrame, id_col: str, score_col: str
+) -> DataFrame:
+    """(_score bigint, _is_pos 0/1) per non-NULL-score row of ``scored``
+    — the one flag join of the score-evaluation verbs.  The gold ids
+    are ``positives[id_col]`` (its first column when absent), deduped,
+    LEFT-joined so unlabeled rows count as negatives; AQE broadcasts a
+    small positive set."""
+    pos = positives.select(
+        F.col(positives.columns[0] if id_col not in positives.columns
+              else id_col).alias("_id")
+    ).distinct().withColumn("_is_pos", F.lit(1))
+    return (
+        scored.filter(F.col(score_col).isNotNull())
+        .select(F.col(id_col).alias("_id"),
+                F.col(score_col).cast("bigint").alias("_score"))
+        .join(pos, "_id", "left")
+        .select("_score", F.coalesce("_is_pos", F.lit(0)).alias("_is_pos"))
     )
-    out = surv.drop(
-        "idf_milli", "n_docs", "total", "snap_id"
-    ).join(idf, "term").select(
-        "term", "id", "tf", "dl", "idf_milli",
-        F.lit(n_docs).cast("bigint").alias("n_docs"),
-        F.lit(total).cast("bigint").alias("total"),
-        F.lit(snap).cast("bigint").alias("snap_id"),
-        *(["bucket", "n_buckets"] if bucketed else []),
-    )
-    if bucketed:
-        out = out.unionByName(_bm25_sentinel(
-            index.sparkSession, n_docs, total, snap, nb))
-    return out
 
 
 def pr_curve(
@@ -3176,22 +3065,12 @@ def pr_curve(
     f1_micro)."""
     if quantize is not None and quantize < 1:
         raise ValueError(f"pr_curve: quantize must be >= 1, got {quantize}")
-    pos = positives.select(
-        F.col(positives.columns[0] if id_col not in positives.columns
-              else id_col).alias("_id")
-    ).distinct().withColumn("_is_pos", F.lit(1))
     thr_expr = F.col("_score") if quantize is None else F.expr(
         # floor-to-lattice for signed ints (truncated % on both
         # engines: subtract the positive residue)
         f"_score - ((_score % {quantize}) + {quantize}) % {quantize}")
-    lab = (
-        scored.filter(F.col(score_col).isNotNull())
-        .select(F.col(id_col).alias("_id"),
-                F.col(score_col).cast("bigint").alias("_score"))
-        .join(pos, "_id", "left")
-        .select(thr_expr.cast("bigint").alias("threshold"),
-                F.coalesce("_is_pos", F.lit(0)).alias("_is_pos"))
-    )
+    lab = _flag_positives(scored, positives, id_col, score_col).select(
+        thr_expr.cast("bigint").alias("threshold"), "_is_pos")
     per = lab.groupBy("threshold").agg(
         F.count("*").cast("bigint").alias("_n"),
         F.sum("_is_pos").cast("bigint").alias("_np"),
@@ -3211,17 +3090,8 @@ def pr_curve(
             "threshold", "n_pred", "tp",
             (F.col("n_pred") - F.col("tp")).cast("bigint").alias("fp"),
             (F.col("_total_pos") - F.col("tp")).cast("bigint").alias("fn"),
-            F.expr("(tp * 1000000) div n_pred").cast("bigint")
-            .alias("precision_micro"),
-            F.expr("case when _total_pos = 0 then 0 "
-                   "else (tp * 1000000) div _total_pos end").cast("bigint")
-            .alias("recall_micro"),
-            F.expr("case when 2 * tp + (n_pred - tp) "
-                   "+ (_total_pos - tp) = 0 then 0 "
-                   "else (2 * tp * 1000000) div (2 * tp + (n_pred - tp) "
-                   "+ (_total_pos - tp)) end").cast("bigint")
-            .alias("f1_micro"),
         )
+        .select("*", *_micro_rates())
     )
 
 
@@ -3286,18 +3156,8 @@ def auc_score(
     per-score aggregate, one cumulative window over DISTINCT scores
     only, then a single global fold.  Returns ONE row
     (n_pos, n_neg, auc_micro)."""
-    pos = positives.select(
-        F.col(positives.columns[0] if id_col not in positives.columns
-              else id_col).alias("_id")
-    ).distinct().withColumn("_is_pos", F.lit(1))
-    lab = (
-        scored.filter(F.col(score_col).isNotNull())
-        .select(F.col(id_col).alias("_id"),
-                F.col(score_col).cast("bigint").alias("_score"))
-        .join(pos, "_id", "left")
-        .select("_score", F.coalesce("_is_pos", F.lit(0)).alias("_is_pos"))
-    )
-    per = lab.groupBy("_score").agg(
+    per = _flag_positives(scored, positives, id_col, score_col).groupBy(
+        "_score").agg(
         F.count("*").cast("bigint").alias("_n"),
         F.sum("_is_pos").cast("bigint").alias("_np"),
     )
@@ -3356,18 +3216,8 @@ def score_calibration(
     if n_bins < 1:
         raise ValueError(f"score_calibration: n_bins must be >= 1, "
                          f"got {n_bins}")
-    pos = positives.select(
-        F.col(positives.columns[0] if id_col not in positives.columns
-              else id_col).alias("_id")
-    ).distinct().withColumn("_is_pos", F.lit(1))
-    lab = (
-        scored.filter(F.col(score_col).isNotNull())
-        .select(F.col(id_col).alias("_id"),
-                F.col(score_col).cast("bigint").alias("_score"))
-        .join(pos, "_id", "left")
-        .select("_score", F.coalesce("_is_pos", F.lit(0)).alias("_is_pos"))
-        .localCheckpoint(eager=False)  # feeds the range scan AND bins
-    )
+    lab = _flag_positives(scored, positives, id_col, score_col
+                          ).localCheckpoint(eager=False)  # range scan AND bins
     rng = lab.agg(F.min("_score").alias("lo"),
                   F.max("_score").alias("hi")).first()
     if rng["lo"] is None:

@@ -1657,7 +1657,6 @@ def test_perceptron_matches_python_reference(spark):
     run()
 
 
-@_mark_slow
 def test_perceptron_ovr_matches_per_class_binary(spark, sf_dir):
     """The jointly-trained one-vs-rest model must be BIT-IDENTICAL,
     class by class, to running the binary perceptron_train with
@@ -2745,7 +2744,6 @@ def test_auc_score_no_int64_overflow_past_2m_rows(spark):
     assert got["auc_micro"] == expect
 
 
-@_mark_slow
 def test_bm25_constants_rejects_unstamped_rows_and_self_union(spark):
     """The r10 ADVICE snap_id blind spots, closed: (a) a legacy
     pre-snap_id index unioned in via
@@ -2753,13 +2751,16 @@ def test_bm25_constants_rejects_unstamped_rows_and_self_union(spark):
     min/max check cannot see — the count(*)==count(snap_id) guard
     catches it; (b) a raw self-union of two builds of the IDENTICAL
     corpus shares one content-derived snap_id and would serve doubled
-    postings — the bucket-0 sentinel count (exactly 1) catches it."""
+    postings — the bucket-0 sentinel count (exactly 1) catches it, on
+    the serving path and on delete, which would otherwise drop both
+    sentinels and re-stamp the doubled postings as one snapshot."""
     import pytest
 
     from dbt_core_spark.exceptions import ExecutionError
     from dbt_core_spark.operators.textstats import (
         _bm25_constants,
         bm25_index,
+        bm25_index_delete,
         bm25_query,
     )
 
@@ -2786,6 +2787,9 @@ def test_bm25_constants_rejects_unstamped_rows_and_self_union(spark):
         [(100, "engine")], "doc_id long, text string")
     with pytest.raises(ExecutionError, match="mixed corpus constants"):
         bm25_query(doubled, queries, top_k=3).count()
+    with pytest.raises(ExecutionError, match="sentinel"):
+        bm25_index_delete(
+            doubled, spark.createDataFrame([], "id long")).count()
 
     # healthy indexes still validate clean through both paths
     assert _bm25_constants(idx) is not None
@@ -3281,10 +3285,12 @@ def oracle_con(sf_dir):
     con.close()
 
 
-# The embedding-similarity (IVF/ANN/dedup/serve) gates run in the quick
-# tier: they re-prove the shared BLAS kernels of operators/similarity.py
-# against their oracles on every plain test run (~80 s of Spark time at
-# sf0.001 on 4 vCPUs).  Every other gate stays in the slow tier.
+# The embedding-similarity (IVF/ANN/dedup/serve) gates and the text
+# gates below run in the quick tier: they re-prove the shared BLAS
+# kernels of operators/similarity.py and the shared text kernels of
+# operators/textstats.py against their oracles on every plain test run
+# (~80 s and ~61 s of Spark time at sf0.001 on 4 vCPUs).  Every other
+# gate stays in the slow tier.
 _QUICK_GATES = {
     "cosine_topk_blas_embeddings",
     "ann_lsh_topk_embeddings",
@@ -3301,6 +3307,26 @@ _QUICK_GATES = {
     "ann_ivf_lifecycle_embeddings",
     "knn_classify_ivf_embeddings",
     "streaming_knn_serve_embeddings",
+    # BM25 snapshot lifecycle and retrieval
+    "bm25_rank_docs",
+    "hybrid_retrieval_docs",
+    "bm25_index_append_docs",
+    "streaming_bm25_serve_docs",
+    "bm25_index_delete_docs",
+    "retrieval_eval_docs",
+    # ... the perceptron trainers
+    "perceptron_language_docs",
+    "perceptron_ovr_language_docs",
+    "perceptron_avg_language_docs",
+    # ... and the score/classifier evaluation verbs
+    "pr_curve_language_docs",
+    "threshold_select_language_docs",
+    "auc_language_docs",
+    "calibration_language_docs",
+    "classifier_eval_docs",
+    "langid_eval_docs",
+    "knn_eval_embeddings",
+    "classifier_summary_docs",
 }
 
 
