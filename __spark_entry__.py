@@ -3379,7 +3379,6 @@ def streaming_ann_serve_embeddings(spark: SparkSession, sf_dir: str) -> DataFram
         ivf_centroid_matrix,
         ivf_index_build,
         ivf_index_search,
-        ivf_member_counts,
     )
     from dbt_core_spark.streaming.structured import (
         stream_serve_foreach_batch,
@@ -3393,13 +3392,9 @@ def streaming_ann_serve_embeddings(spark: SparkSession, sf_dir: str) -> DataFram
     # assignments — without the seal each batch would replay the
     # whole build assignment pass (the ≥2-branch lineage rule)
     assigns = assigns.localCheckpoint(eager=False)
-    # snapshot-constant state once per snapshot, not once per batch:
-    # per-cell populations (optimization r11) AND the driver-side
-    # centroid matrix (optimization r12 — the in-search collect was one
-    # scheduled job per micro-batch); bounded_batch then drops the
-    # per-batch probe-count aggregate + probe split (trigger-bounded
-    # micro-batches are the declaration's exact use case)
-    mcounts = ivf_member_counts(assigns)
+    # the driver-side centroid matrix once per snapshot, not once per
+    # batch; bounded_batch serves each trigger-bounded micro-batch in
+    # one Arrow pass over its probed cells (no member shuffle)
     cmat = ivf_centroid_matrix(cents)
     stream = stream_source(
         spark, path, spark.read.parquet(path).schema, fmt="parquet",
@@ -3411,7 +3406,6 @@ def streaming_ann_serve_embeddings(spark: SparkSession, sf_dir: str) -> DataFram
         stream.filter("vec_id % 20 = 0"),
         lambda batch: ivf_index_search(cents, assigns, batch,
                                        k=3, n_probe=4,
-                                       member_counts=mcounts,
                                        centroid_matrix=cmat,
                                        bounded_batch=True),
         out, ckpt,
@@ -4079,7 +4073,6 @@ def streaming_knn_serve_embeddings(
         ivf_centroid_matrix,
         ivf_index_build,
         ivf_index_search,
-        ivf_member_counts,
         knn_classify,
     )
     from dbt_core_spark.streaming.structured import (
@@ -4096,11 +4089,8 @@ def streaming_knn_serve_embeddings(
     # ≥2-branch lineage rule — without the seal each batch replays
     # the corpus assignment pass)
     assigns = assigns.localCheckpoint(eager=False)
-    # snapshot-constant state hoisted out of the per-batch plan:
-    # per-cell populations (r11) + the centroid matrix, and the
-    # bounded-batch probe fast path (optimization r12; see
-    # streaming_ann_serve_embeddings)
-    mcounts = ivf_member_counts(assigns)
+    # the centroid matrix hoisted out of the per-batch plan and the
+    # bounded-batch serve (see streaming_ann_serve_embeddings)
     cmat = ivf_centroid_matrix(cents)
     # the per-batch vote join needs only (vec_id, label) — a sealed
     # 2-column projection, so each micro-batch scans narrow label
@@ -4122,7 +4112,6 @@ def streaming_knn_serve_embeddings(
             labels, batch,
             neighbors=ivf_index_search(cents, assigns, batch,
                                        k=5, n_probe=4,
-                                       member_counts=mcounts,
                                        centroid_matrix=cmat,
                                        bounded_batch=True)),
         out, ckpt,

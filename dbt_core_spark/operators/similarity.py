@@ -17,9 +17,12 @@ the ``ivf_index_*`` lifecycle and both BLAS semantic dedups) shares one
 kernel per job:
 
 - ``_fit_centroids`` — the bounded id-ordered sample and numpy Lloyd fit;
-- ``_assign_cells`` — the one nearest-centroid ``mapInPandas`` pass
-  (cells ranked on ``round(cos, 6)``, ties to the lowest index);
-- ``_topk_score_kernel`` — the per-group probe × member top-k matmul;
+- ``_nearest_cells`` — the nearest-centroid rule (cells ranked on
+  ``round(cos, 6)``, ties to the lowest index), applied by the
+  ``_assign_cells`` ``mapInPandas`` pass and the bounded serve's driver;
+- ``_local_topk`` — the chunked probe × member top-k matmul, run per
+  group by ``_topk_score_kernel`` and per (cell, Arrow batch) by
+  ``_probed_topk_kernel``;
 - ``_pair_kernel`` + ``_keepers`` — the dedup pair block and its
   lowest-id keeper aggregate;
 - ``_rounded_topk`` — the per-query rounded top-k window merge.
@@ -34,6 +37,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 logger = logging.getLogger(__name__)
+
+# the top-k result and the per-block candidate schemas of the ANN tiers
+_TOPK_SCHEMA = "query_id long, nbr_id long, cosine double, rank int"
+_CAND_SCHEMA = "query_id long, nbr_id long, cosine double"
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -363,13 +370,6 @@ def _sharded_topk_blas(
 # holds.  Module-level so tests can shrink it to force chunking.
 _MATMUL_BUDGET = 16_000_000
 
-# _skew_split_2d's serve-many fast path inlines per-cell block counts
-# as a literal map when the index has at most this many cells — two
-# ints per cell keeps the expression tree ~KBs; bigger indexes keep the
-# broadcast-join shape (a multi-MB literal would bloat every per-batch
-# plan and slow analysis, guide §7.3)
-_BLOCKS_INLINE_MAX_CELLS = 4096
-
 
 def _resolve_n_cells(
     df: DataFrame, n_cells: int | None, max_cell_rows: int
@@ -436,15 +436,16 @@ def _np_finite_pos_rows(pdf):
     surviving rows and their unit-normalized float64 matrix — or
     ``(pdf, None)`` when nothing survives.
 
-    ``_assign_cells`` applies it to every IVF assignment pass.  The
-    serving paths (ivf_index_search / semantic_dedup_incremental /
-    ivf_index_append) rely on it alone, with no JVM HOF pre-filter:
-    the norm is computed inside the Arrow kernel anyway, so doing the
-    validity mask here removes a whole plan node (HOF analysis +
-    an extra evaluation over the batch) from every serving call —
-    r8 profile: ~0.3 s/batch at sf0.1.  Semantics are identical:
-    norm==0, norm==inf (component overflow included — the JVM fold's
-    sum of squares overflows the same way), and norm==NaN all drop."""
+    ``_assign_cells`` applies it to every IVF assignment pass, and the
+    bounded serve to its collected batch.  The serving paths
+    (ivf_index_search / semantic_dedup_incremental / ivf_index_append)
+    rely on it alone, with no JVM HOF pre-filter: the norm is computed
+    inside the Arrow kernel anyway, so doing the validity mask here
+    removes a whole plan node (HOF analysis + an extra evaluation over
+    the batch) from every serving call — r8 profile: ~0.3 s/batch at
+    sf0.1.  Semantics are identical: norm==0, norm==inf (component
+    overflow included — the JVM fold's sum of squares overflows the
+    same way), and norm==NaN all drop."""
     import numpy as np
 
     pdf = pdf[pdf["v"].notna()]
@@ -468,7 +469,6 @@ def _skew_split_2d(
     max_cell_rows: int,
     counts: DataFrame | None = None,
     member_counts: DataFrame | None = None,
-    bounded_probes: bool = False,
 ) -> DataFrame:
     """2-D block a per-cell member × probe pairing so every pandas
     frame's EXPECTED population is ≤ ``max_cell_rows`` rows per side,
@@ -514,67 +514,13 @@ def _skew_split_2d(
     ``ivf_member_counts`` over the sealed assignments is the one
     supported producer.
 
-    ``bounded_probes`` declares the probe side's per-cell population
-    ≤ ``max_cell_rows`` (the serve-many fast path: a micro-batch is
-    trigger-bounded by construction), so probes never split (_np = 1)
-    and the per-batch probe-side count aggregate disappears entirely
-    (optimization r12; guide §1.2).  Result-invariant by construction:
-    probe blocking only PARTITIONS probes across psub groups — every
-    (probe, member) pair still meets in exactly one group — and a
-    probe row in a cell with no members (absent from member_counts)
-    produced no pairs anyway, so dropping it at the inner blocks join
-    changes nothing.  Only the kernel frame's probe-side row bound
-    relies on the declaration.
-
     Returns the union frame (id, v, cell, msub, psub, is_member) to be
     grouped by ``("cell", "msub", "psub")``."""
-    if counts is None and bounded_probes and member_counts is not None:
-        # serve-many fast path: member_counts is a LocalRelation by
-        # contract (ivf_member_counts materializes tiny), so for
-        # plan-literal-sized indexes the per-cell block counts inline
-        # as a LITERAL map — the per-batch broadcast build + two
-        # broadcast joins disappear from the micro-batch plan
-        # (optimization r12; guide §1.2).  The collect here is a
-        # LocalTableScan (driver-only, no cluster job).  Probe rows in
-        # cells absent from the map get a NULL sequence and drop at
-        # the explode — exactly the rows the inner blocks join dropped
-        # (memberless cells, zero pairs either way).  Indexes past the
-        # literal budget keep the broadcast-join shape below.
-        rows = member_counts.collect()
-        if len(rows) <= _BLOCKS_INLINE_MAX_CELLS:
-            ns = {
-                int(r["cell"]): max(1, -(-int(r["_mc"]) // max_cell_rows))
-                for r in rows
-            }
-            pairs: list = []
-            for c in sorted(ns):
-                pairs.extend((F.lit(c), F.lit(ns[c])))
-            ns_map = F.create_map(*pairs) if pairs else F.create_map()
-            m = members.select(
-                "id", "v", "cell",
-                F.pmod(F.xxhash64("id"),
-                       F.element_at(ns_map, F.col("cell")))
-                .cast("int").alias("msub"),
-                F.lit(0).alias("psub"),
-                F.lit(True).alias("is_member"),
-            )
-            p = probes.select(
-                "id", "v", "cell",
-                F.explode(F.sequence(
-                    F.lit(0), F.element_at(ns_map, F.col("cell")) - 1))
-                .alias("msub"),
-                F.lit(0).alias("psub"),
-                F.lit(False).alias("is_member"),
-            )
-            return m.unionByName(p)
     if counts is None:
         mc = (member_counts if member_counts is not None
               else members.groupBy("cell").agg(F.count("*").alias("_mc")))
-        if bounded_probes:
-            counts = mc.withColumn("_pc", F.lit(None).cast("bigint"))
-        else:
-            pc = probes.groupBy("cell").agg(F.count("*").alias("_pc"))
-            counts = mc.join(pc, "cell", "full_outer")
+        pc = probes.groupBy("cell").agg(F.count("*").alias("_pc"))
+        counts = mc.join(pc, "cell", "full_outer")
     blocks = counts.select(
         "cell",
         F.greatest(
@@ -644,16 +590,25 @@ def _fit_centroids(
     return Cn, spdf["id"].to_numpy()[:len(Cn)].astype("int64")
 
 
+def _nearest_cells(Vn, Cn, n: int):
+    """Indices of each unit row's ``n`` nearest unit centroids, nearest
+    first: ranked on ``round(Vn @ Cn.T, 6)`` — stable descending, ties
+    to the lowest centroid index — so BLAS-vs-fold ulp noise cannot
+    flip a cell choice at a mathematical tie (the rounded-rank contract
+    of ``_rounded_topk_cols``), and an appended or searched vector
+    lands exactly where a rebuild would put it."""
+    import numpy as np
+
+    S = np.round(Vn @ Cn.T, 6)
+    if n == 1:  # argmax keeps the first maximum: the stable sort's pick
+        return S.argmax(axis=1)[:, None]
+    return np.argsort(-S, kind="stable", axis=1)[:, :n]
+
+
 def _assign_cells(frame: DataFrame, Cn, labels, n_probe: int | None = None) -> DataFrame:
     """The one IVF cell-assignment pass: one Arrow ``mapInPandas`` over
-    an (id, v) frame, scoring each batch against the broadcast unit
-    centroids ``Cn`` with one matmul.
-
-    Cells rank on ``round(Vn @ Cn.T, 6)`` — stable descending, ties to
-    the lowest centroid index — so BLAS-vs-fold ulp noise cannot flip a
-    cell choice at a mathematical tie (the rounded-rank contract of
-    ``_rounded_topk_cols``), and an appended or searched vector lands
-    exactly where a rebuild would put it.  Invalid rows
+    an (id, v) frame, ranking each batch's cells against the broadcast
+    unit centroids ``Cn`` with ``_nearest_cells``.  Invalid rows
     (NULL/empty/zero-norm/NaN/Inf) drop inside the kernel
     (``_np_finite_pos_rows``).  ``labels[i]`` is centroid ``i``'s cell
     id; its dtype sets the ``cell`` column (int32 → int, int64 → long).
@@ -676,9 +631,7 @@ def _assign_cells(frame: DataFrame, Cn, labels, n_probe: int | None = None) -> D
             pdf, Vn = _np_finite_pos_rows(pdf)
             if Vn is None:
                 continue
-            S = np.round(Vn @ Cb.T, 6)
-            top = (S.argmax(axis=1)[:, None] if n_probe is None
-                   else np.argsort(-S, kind="stable", axis=1)[:, :n_probe])
+            top = _nearest_cells(Vn, Cb, n_probe or 1)
             rows = np.repeat(np.arange(len(pdf)), top.shape[1])
             out = pd.DataFrame({
                 "id": pdf["id"].to_numpy().astype("int64")[rows],
@@ -700,46 +653,76 @@ def _unit_block(side):
     return side["id"].to_numpy(), M / np.linalg.norm(M, axis=1, keepdims=True)
 
 
+def _local_topk(qid_all, Qn_all, mid, Mn, k: int, budget: int, dp: int) -> list:
+    """Each probe row's local top-``k`` members on ``round(cosine,
+    dp)`` as (query_id, nbr_id, cosine) tuples, self-matches excluded.
+    Members are id-sorted first: the rounded-rank cut breaks ties by
+    index, which must mean ascending nbr_id (see _rounded_topk_cols).
+    The probe side is chunked so each score matrix stays ~``budget``
+    cells; a query's top-k is unaffected (its full member row is
+    computed within its chunk)."""
+    import numpy as np
+
+    order = np.argsort(mid, kind="stable")
+    mid, Mn = mid[order], Mn[order]
+    rows = []
+    step = max(1, budget // max(1, len(mid)))
+    for s in range(0, len(qid_all), step):
+        qid = qid_all[s:s + step]
+        S = Qn_all[s:s + step] @ Mn.T
+        S[qid[:, None] == mid[None, :]] = -np.inf
+        kk = min(k, S.shape[1])
+        for i in range(len(qid)):
+            for c in _rounded_topk_cols(S[i], kk, dp):
+                if np.isfinite(S[i, c]):
+                    rows.append((int(qid[i]), int(mid[c]), float(S[i, c])))
+    return rows
+
+
 def _topk_score_kernel(k: int, budget: int, dp: int = 6):
     """Build the per-group applyInPandas kernel shared by
-    ``ivf_topk_blas``, ``ivf_index_search`` and the sharded exact path:
-    score the group's probes (``is_member`` false) against its members
-    with probe-chunked matmuls (score matrix ≤ ``budget`` cells) and
-    emit each probe's local top-k on ``round(cosine, dp)``, self-matches
-    excluded.  ``budget`` is captured as a plain value at DRIVER time so
-    it serializes by value with the closure (tests pin it
-    deterministically)."""
-    import numpy as np
+    ``ivf_topk_blas``, the unbounded ``ivf_index_search`` and the
+    sharded exact path: the group's probes (``is_member`` false) against
+    its members through ``_local_topk``.  ``budget`` is captured as a
+    plain value at DRIVER time so it serializes by value with the
+    closure (tests pin it deterministically)."""
     import pandas as pd
+
+    cols = ["query_id", "nbr_id", "cosine"]
 
     def score_cell(pdf: "pd.DataFrame") -> "pd.DataFrame":
         members = pdf[pdf["is_member"]]
         qs = pdf[~pdf["is_member"]]
         if len(members) == 0 or len(qs) == 0:
-            return pd.DataFrame(columns=["query_id", "nbr_id", "cosine"])
-        mid, Mn = _unit_block(members)
-        # id-sort members: the rounded-rank local cut breaks ties by
-        # index, which must mean ascending nbr_id (see _rounded_topk_cols)
-        order = np.argsort(mid, kind="stable")
-        mid, Mn = mid[order], Mn[order]
-        qid_all, Qn_all = _unit_block(qs)
-        rows = []
-        # chunk the probe side so the score matrix stays ~budget cells;
-        # per-query top-k is unaffected (each query's full member row
-        # is computed within its chunk)
-        step = max(1, budget // max(1, len(mid)))
-        for s in range(0, len(qid_all), step):
-            qid = qid_all[s:s + step]
-            S = Qn_all[s:s + step] @ Mn.T
-            S[qid[:, None] == mid[None, :]] = -np.inf
-            kk = min(k, S.shape[1])
-            for i in range(len(qid)):
-                for c in _rounded_topk_cols(S[i], kk, dp):
-                    if np.isfinite(S[i, c]):
-                        rows.append((int(qid[i]), int(mid[c]), float(S[i, c])))
-        return pd.DataFrame(rows, columns=["query_id", "nbr_id", "cosine"])
+            return pd.DataFrame(columns=cols)
+        return pd.DataFrame(_local_topk(*_unit_block(qs), *_unit_block(members),
+                                        k, budget, dp), columns=cols)
 
     return score_cell
+
+
+def _probed_topk_kernel(bq, k: int, budget: int, dp: int = 6):
+    """Build the ``mapInPandas`` kernel of the bounded-batch serve: for
+    each (cell, Arrow batch) of probed members, the broadcast queries
+    ``bq = (qids, Qn, probed)`` that probe the cell (``probed`` maps a
+    cell to its query row indices) score against the block through
+    ``_local_topk``.  A member's block is one cell of one batch, so its
+    candidates are exact local top-k and ``_rounded_topk`` merges them
+    (a global top-k member is top-k of its own block a fortiori)."""
+    import pandas as pd
+
+    def score(batches):
+        qids, Qn, probed = bq.value
+        for pdf in batches:
+            rows = []
+            for cell, block in pdf.groupby("cell", sort=False):
+                qi = probed[int(cell)]  # the JVM filter kept probed cells only
+                rows += _local_topk(qids[qi], Qn[qi], *_unit_block(block),
+                                    k, budget, dp)
+            if rows:
+                yield pd.DataFrame(rows, columns=["query_id", "nbr_id", "cosine"])
+
+    return score
 
 
 def _pair_kernel(tau: float, budget: int, id_rule):
@@ -909,13 +892,11 @@ def ivf_index_build(
     - ``assignments``: (id long, v array<double>, cell int) — every
       corpus vector with its nearest cell.
 
-    Both are plain DataFrames: ``saveAsTable``/parquet them once, then
-    search any number of later query batches with ``ivf_index_search``
-    WITHOUT re-assigning the corpus — per batch the cost is the batch's
-    own assignment pass plus joins against the probed cells only, never
-    a corpus pass.  At 100 TB the corpus assignment is the expensive
-    step; amortizing it across every ingest batch is the production
-    design.
+    Both are plain DataFrames (``centroids`` an Arrow-built
+    ``LocalRelation``): ``saveAsTable``/parquet them once, then search
+    any number of later query batches with ``ivf_index_search`` WITHOUT
+    re-assigning the corpus — at 100 TB the corpus assignment is the
+    expensive step, amortized across every ingest batch.
 
     Centroids fit on a bounded id-ordered driver sample (numpy Lloyd,
     as in ``ivf_topk_blas``); the corpus assignment is ONE Arrow
@@ -937,10 +918,12 @@ def ivf_index_build(
             spark.createDataFrame([], "cell int, cv array<double>"),
             spark.createDataFrame([], "id long, v array<double>, cell int"),
         )
+    import pyarrow as pa
+
+    # Arrow-built, so a LocalRelation: collecting it launches no job
     centroids = spark.createDataFrame(
-        [(i, [float(x) for x in row]) for i, row in enumerate(Cn)],
-        "cell int, cv array<double>",
-    )
+        pa.table({"cell": np.arange(len(Cn), dtype="int32"), "cv": list(Cn)}),
+        "cell int, cv array<double>")
     base = ensure_parallelism(
         df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     )
@@ -962,84 +945,100 @@ def ivf_index_search(
     bounded_batch: bool = False,
 ) -> DataFrame:
     """Search a prebuilt IVF index (``ivf_index_build`` output, usually
-    reloaded from tables) with a query batch — NO corpus pass.
-
-    ``member_counts`` — optional precomputed (cell, _mc) populations of
-    the assignment table (``ivf_member_counts``).  A serve-many caller
-    (the streaming gates) computes it once per index snapshot so each
-    query batch skips the per-batch assignment-table count scan that
-    the skew blocking otherwise needs (optimization r11).  It MUST be
-    derived from the same assignments snapshot (the _skew_split_2d
-    trust contract — stale counts silently degrade the blocking).
+    reloaded from tables) with a query batch — no corpus assignment
+    pass.  Each query probes its ``n_probe`` nearest cells
+    (``_nearest_cells``, the build's rule); ids shared between batch and
+    corpus are one document, so self-matches are excluded.
 
     ``centroid_matrix`` — the ``ivf_centroid_matrix(centroids)`` tuple,
-    precollected once per index snapshot: without it every query batch
-    pays one centroid-table collect job before its plan exists
-    (optimization r12; the member_counts precedent — the centroid
-    table is n_cells rows, snapshot-constant).
+    precollected once per index snapshot instead of once per batch.
 
-    ``bounded_batch`` declares the query batch bounded (per probed
-    cell ≤ ``max_cell_rows`` probe rows — true of any trigger-bounded
-    micro-batch): the probe side then skips the per-batch cell-count
-    aggregate AND the probe-side skew split (result-invariant — probe
-    blocking only partitions probes; see _skew_split_2d), and the
-    probe frame, now single-consumer, skips its localCheckpoint seal
-    (optimization r12; ~2 fewer stages per micro-batch).
+    ``bounded_batch=False`` (any batch size): one Arrow pass assigns
+    the batch's probe cells, then every member row of the index joins
+    the ``(cell, msub, psub)`` exchange of ``_skew_split_2d`` (hot
+    cells 2-D blocked on both sides) and the shared chunked-matmul
+    kernel scores each group.  ``member_counts`` (``ivf_member_counts``
+    of the same assignments snapshot) saves its per-batch member count.
 
-    The centroid matrix is collected to the driver (n_cells rows —
-    bounded, the MLlib-KMeans precedent) and broadcast; queries get
-    their ``n_probe`` nearest cells in one Arrow pass over the BATCH.
-    Scoring then joins only the probed cells' assignment rows, 2-D
-    blocked by ``_skew_split_2d`` (hot cells stay bounded on both
-    sides) and scored with the shared chunked-matmul kernel.  Ids
-    shared between batch and corpus are treated as the same document —
-    self-matches are excluded, like ``ivf_topk_blas``.
+    ``bounded_batch=True`` declares the batch at most ``max_cell_rows``
+    rows (any trigger-bounded micro-batch; a larger batch raises
+    ``ExecutionError``) and serves it in one Arrow pass over the probed
+    cells only (``_serve_bounded``): member vectors never cross an
+    exchange, only (query_id, nbr_id, cosine) candidates do, and hot
+    cells need no blocking since members are never grouped.
 
     Returns (query_id, nbr_id, cosine, rank), rank ≤ k per query."""
-    # invalid vectors (NULL/empty/zero-norm/NaN/Inf — cosine
-    # undefined) drop INSIDE the assignment kernel
-    # (_np_finite_pos_rows): same exclusion set as _finite_pos_norm
-    # with no JVM HOF pass over the batch
+    # invalid vectors (NULL/empty/zero-norm/NaN/Inf) drop inside
+    # _np_finite_pos_rows: no JVM HOF pass over the batch
     spark = queries.sparkSession
     Cn, cells = (centroid_matrix if centroid_matrix is not None
                  else _centroid_matrix(centroids))
     if Cn is None:  # index built on an empty corpus — gate-fuzz
-        return spark.createDataFrame(
-            [], "query_id long, nbr_id long, cosine double, rank int"
-        )
+        return spark.createDataFrame([], _TOPK_SCHEMA)
     qbase = queries.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    # the probe side is derived here and scanned twice (count + block
-    # side): seal it — it is bounded by batch × n_probe.  The
-    # ASSIGNMENTS side is caller-owned and usually table-backed (re-scan
-    # is a columnar read); when composing build+search in one job, seal
-    # it yourself (localCheckpoint) or write it out first — otherwise
-    # the build's assignment pass replays per branch.  Under
-    # bounded_batch the probe frame has exactly ONE consumer (no count
-    # branch, no probe split) — the seal would only add a persist pass.
-    probes = _assign_cells(qbase, Cn, cells.astype("int32"), n_probe)
-    if not bounded_batch:
-        probes = _seal(probes)
-    grouped = _skew_split_2d(
-        assignments.select("id", "v", "cell"), probes, max_cell_rows,
-        member_counts=member_counts, bounded_probes=bounded_batch,
-    )
+    members = assignments.select("id", "v", "cell")
+    if bounded_batch:
+        return _serve_bounded(members, qbase, Cn, cells, k, n_probe, max_cell_rows)
+    # the probe side is scanned twice (count + block side): seal it.
+    # The caller owns the ASSIGNMENTS side: seal it or write it out when
+    # composing build+search in one job, or the build pass replays.
+    probes = _seal(_assign_cells(qbase, Cn, cells.astype("int32"), n_probe))
+    grouped = _skew_split_2d(members, probes, max_cell_rows,
+                             member_counts=member_counts)
     scored = grouped.groupBy("cell", "msub", "psub").applyInPandas(
-        _topk_score_kernel(k, int(_MATMUL_BUDGET)),
-        schema="query_id long, nbr_id long, cosine double",
-    )
+        _topk_score_kernel(k, int(_MATMUL_BUDGET)), schema=_CAND_SCHEMA)
+    return _rounded_topk(scored, k, 6)
+
+
+def _serve_bounded(members: DataFrame, qbase: DataFrame, Cn, cells, k: int,
+                   n_probe: int, max_cell_rows: int) -> DataFrame:
+    """The ``bounded_batch=True`` serve of ``ivf_index_search``: collect
+    the batch once, pick its probe cells on the driver, broadcast
+    (query ids, unit vectors, probed cells) and run one
+    ``_probed_topk_kernel`` ``mapInPandas`` over the probed cells'
+    members.  The cell filter is ``array_contains`` over an array
+    literal: one compiled class serves every probed set (an ``isin``
+    inlines its values) and it adds no job (a semi join broadcasts).
+    Its per-row cost is linear in the probed set (≤ n_cells)."""
+    import numpy as np
+
+    from dbt_core_spark.exceptions import ExecutionError
+
+    spark = qbase.sparkSession
+    # one task, no shuffle; a wrong declaration costs ≤ max_cell_rows+1 rows
+    qpdf = qbase.coalesce(1).limit(max_cell_rows + 1).toPandas()
+    if len(qpdf) > max_cell_rows:
+        raise ExecutionError(
+            "ivf_index_search(bounded_batch=True) got a batch of more than "
+            f"max_cell_rows={max_cell_rows} rows: the declaration is wrong "
+            "— pass bounded_batch=False for unbounded batches")
+    qpdf, Qn = _np_finite_pos_rows(qpdf)
+    if Qn is None:  # empty or all-invalid batch
+        return spark.createDataFrame([], _TOPK_SCHEMA)
+    # probed cell -> the (ascending) batch rows probing it
+    top = cells[_nearest_cells(Qn, Cn, n_probe)]
+    order = np.argsort(top.ravel(), kind="stable")
+    rows = np.repeat(np.arange(len(top)), top.shape[1])[order]
+    probe_cells, starts = np.unique(top.ravel()[order], return_index=True)
+    probed = dict(zip(probe_cells.tolist(), np.split(rows, starts[1:])))
+    bq = spark.sparkContext.broadcast(
+        (qpdf["id"].to_numpy().astype("int64"), Qn, probed))
+    scored = members.filter(
+        F.array_contains(F.lit(sorted(probed)), F.col("cell"))).mapInPandas(
+        _probed_topk_kernel(bq, k, int(_MATMUL_BUDGET)), schema=_CAND_SCHEMA)
     return _rounded_topk(scored, k, 6)
 
 
 def ivf_member_counts(assignments: DataFrame) -> DataFrame:
-    """Per-cell population of an IVF assignment table, materialized
-    tiny (n_cells rows by contract — the centroid-table size class).
+    """Per-cell population (cell, _mc) of an IVF assignment table,
+    collected once into an Arrow-built ``LocalRelation`` (n_cells rows
+    by contract — the centroid-table size class).
 
-    Serve-many callers compute this ONCE per index snapshot and pass
-    it to every ``ivf_index_search(member_counts=...)`` call: the skew
-    blocking needs the member-side counts, and deriving them inside
-    the search costs one full scan of the assignment table PER QUERY
-    BATCH — per-batch cost at 100 TB should be the probed cells only
-    (optimization r11; guide §1.2)."""
+    An unbounded ``ivf_index_search(member_counts=...)`` uses it for
+    its skew blocking instead of re-aggregating the assignment table
+    per query batch.  That search still shuffles every member row per
+    batch; the ``bounded_batch=True`` serve does not read the counts
+    at all."""
     return _materialize_tiny(
         assignments.groupBy("cell").agg(F.count("*").alias("_mc")))
 
@@ -1047,12 +1046,11 @@ def ivf_member_counts(assignments: DataFrame) -> DataFrame:
 def ivf_centroid_matrix(centroids: DataFrame):
     """Collect an IVF centroid table to the driver-side ``(Cn, cells)``
     numpy pair ``ivf_index_search(centroid_matrix=...)`` consumes —
-    once per index snapshot, the ``ivf_member_counts`` counterpart for
-    the centroid side: the table is n_cells rows by contract
-    (MLlib-KMeans tiny-state precedent), but collecting it INSIDE the
-    search costs one scheduled driver job per query batch
-    (optimization r12; guide §1.2 — hoist snapshot-constant work out
-    of the per-batch plan)."""
+    once per index snapshot, not once per query batch.  The table is
+    n_cells rows by contract (MLlib-KMeans tiny-state precedent);
+    ``ivf_index_build`` makes it a ``LocalRelation``, so this collect
+    launches no job, while a table-backed centroid frame costs one
+    scan job per collect."""
     return _centroid_matrix(centroids)
 
 
@@ -1073,9 +1071,9 @@ def semantic_dedup_incremental(
     IVF index (``ivf_index_build`` output, usually reloaded from
     tables).
 
-    Per batch the cost is the batch's own assignment pass plus joins
-    against its cells' members; the corpus is never re-assigned or
-    re-scanned beyond the touched cells.  Batch rows are assigned by
+    Per batch the cost is the batch's own assignment pass plus one
+    ``_skew_split_2d`` exchange of the batch and the index's member
+    rows; the corpus is never re-assigned.  Batch rows are assigned by
     the SAME argmax rule as the corpus, so a near-duplicate pair lands
     in the same cell exactly when plain ``semantic_dedup`` would have
     compared them.  (Within-batch duplicates are out of scope here —
@@ -1190,13 +1188,15 @@ def lsh_cosine_topk(
 
 
 def _materialize_tiny(df: DataFrame) -> DataFrame:
-    """Collect-and-recreate a tiny DataFrame (centroids: n_cells rows).
+    """Collect-and-recreate a tiny DataFrame (centroids: n_cells rows)
+    as an Arrow-built ``LocalRelation``: collecting it launches no Spark
+    job, where a ``createDataFrame(list)`` frame is an RDD scan.
 
     Iterative algorithms must seal each iteration's result — otherwise
     every downstream action replays the whole lineage (all prior Lloyd
     passes) per branch.  MLlib's KMeans collects centroids to the driver
     each iteration for the same reason; n_cells rows is O(KB)."""
-    return df.sparkSession.createDataFrame(df.collect(), df.schema)
+    return df.sparkSession.createDataFrame(df.toArrow(), df.schema)
 
 
 def _lloyd_refine(

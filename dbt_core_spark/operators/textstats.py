@@ -1013,8 +1013,10 @@ def tfidf_cosine_pairs(
     n_docs = tf.select("id").distinct().count()  # one tiny action
     max_df = int(n_docs * max_df_frac)
     idf = (
+        # (term, id) is unique in tf: count(*) is the document frequency
+        # with no distinct-aggregate exchange
         tf.groupBy("term")
-        .agg(F.countDistinct("id").cast("bigint").alias("df_t"))
+        .agg(F.count("*").cast("bigint").alias("df_t"))
         .filter(F.col("df_t") <= max_df)
         .select(
             "term",

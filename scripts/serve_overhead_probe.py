@@ -79,22 +79,15 @@ def main() -> None:
     # warm one full serve so JVM/stream codepaths don't bias batch 1
     serve_once(spark, src, schema, cents, assigns, n_files, "vec_id % 20 = 0")
 
-    # SPARK_GRAFT_SERVE_FAST=1 probes the r12 gate-equivalent fast path
-    # (snapshot-constant member counts + centroid matrix, declared-
-    # bounded batches); default probes the plain per-batch path so the
-    # r10/r11 numbers stay comparable
+    # SPARK_GRAFT_SERVE_FAST=1 probes the gate's serve (snapshot-constant
+    # centroid matrix, bounded-batch broadcast serve); default probes the
+    # unbounded per-batch path so the r10/r11 numbers stay comparable
     kw = {}
     if os.environ.get("SPARK_GRAFT_SERVE_FAST") == "1":
-        from dbt_core_spark.operators.similarity import (
-            ivf_centroid_matrix,
-            ivf_member_counts,
-        )
+        from dbt_core_spark.operators.similarity import ivf_centroid_matrix
 
-        kw = {
-            "member_counts": ivf_member_counts(assigns),
-            "centroid_matrix": ivf_centroid_matrix(cents),
-            "bounded_batch": True,
-        }
+        kw = {"centroid_matrix": ivf_centroid_matrix(cents),
+              "bounded_batch": True}
     w_setup, b_setup, _ = serve_once(
         spark, src, schema, cents, assigns, n_files, "vec_id < 0", kw)
     w_one, b_one, rows1 = serve_once(

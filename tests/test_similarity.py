@@ -165,51 +165,131 @@ def test_ivf_index_search_precomputed_member_counts(spark):
     assert capped_with == without
 
 
-@_mark_slow
-def test_ivf_index_search_bounded_batch_fast_path(spark):
-    """``bounded_batch=True`` + ``centroid_matrix=`` (the r12 serve
-    fast path: no per-batch centroid collect, no per-batch probe-side
-    count aggregate, no probe split, no probe seal) must be
-    result-invariant — probe blocking only PARTITIONS probes across
-    psub groups, and a probe row in a memberless cell produced no
-    pairs anyway — including under a tiny member-side cap that forces
-    real member-block multiplication, and on an empty batch."""
+def _sin_index(spark, n=80, n_cells=8):
+    """An 80-vector sine corpus and its kmeans_iters=0 IVF index, the
+    assignments sealed."""
     import math
 
+    from dbt_core_spark.operators.similarity import ivf_index_build
+
+    rows = [(i, [math.sin(i * 0.37 + d) for d in range(6)]) for i in range(n)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents, assigns = ivf_index_build(df, n_cells=n_cells, kmeans_iters=0)
+    return df, cents, assigns.localCheckpoint(eager=False)
+
+
+def test_ivf_index_search_bounded_batch_fast_path(spark):
+    """``bounded_batch=True`` + ``centroid_matrix=`` (the broadcast
+    serve: one batch collect, driver-side probe cells, one Arrow pass
+    over the probed cells' members) must equal the unbounded exchange
+    path, on an empty batch too."""
     from dbt_core_spark.operators.similarity import (
         ivf_centroid_matrix,
-        ivf_index_build,
         ivf_index_search,
-        ivf_member_counts,
     )
 
-    rows = [(i, [math.sin(i * 0.37 + d) for d in range(6)]) for i in range(80)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents, assigns = ivf_index_build(df, n_cells=8, kmeans_iters=0)
-    assigns = assigns.localCheckpoint(eager=False)
+    df, cents, assigns = _sin_index(spark)
     batch = df.filter("vec_id % 5 = 0")
-    mcounts = ivf_member_counts(assigns)
     cmat = ivf_centroid_matrix(cents)
     base = sorted(map(tuple, ivf_index_search(
         cents, assigns, batch, k=3, n_probe=3).collect()))
     fast = sorted(map(tuple, ivf_index_search(
-        cents, assigns, batch, k=3, n_probe=3,
-        member_counts=mcounts, centroid_matrix=cmat,
+        cents, assigns, batch, k=3, n_probe=3, centroid_matrix=cmat,
         bounded_batch=True).collect()))
     assert fast == base and len(fast) == 16 * 3
-    # member-side blocking still engages under the fast path (the cap
-    # splits members; probes stay unsplit by declaration)
+    # members are never grouped on this path, so there is no member
+    # blocking: max_cell_rows only sets the checked batch bound, and a
+    # bound equal to the batch size passes
     capped = sorted(map(tuple, ivf_index_search(
-        cents, assigns, batch, k=3, n_probe=3, max_cell_rows=4,
-        member_counts=mcounts, centroid_matrix=cmat,
-        bounded_batch=True).collect()))
+        cents, assigns, batch, k=3, n_probe=3, max_cell_rows=16,
+        centroid_matrix=cmat, bounded_batch=True).collect()))
     assert capped == base
-    # empty batch: schema-stable empty result, no jobs against members
+    # empty batch: schema-stable empty result
     empty = ivf_index_search(
         cents, assigns, batch.filter("vec_id < 0"), k=3, n_probe=3,
-        member_counts=mcounts, centroid_matrix=cmat,
-        bounded_batch=True).collect()
-    assert empty == []
+        centroid_matrix=cmat, bounded_batch=True)
+    assert empty.columns == ["query_id", "nbr_id", "cosine", "rank"]
+    assert empty.collect() == []
+
+
+def test_ivf_index_search_bounded_batch_declaration_checked(spark):
+    """A batch larger than ``max_cell_rows`` under ``bounded_batch=True``
+    is a wrong declaration: it raises instead of serving unbounded."""
+    from dbt_core_spark.exceptions import ExecutionError
+    from dbt_core_spark.operators.similarity import ivf_index_search
+
+    df, cents, assigns = _sin_index(spark)
+    with pytest.raises(ExecutionError, match="bounded_batch"):
+        ivf_index_search(cents, assigns, df.filter("vec_id % 5 = 0"),
+                         k=3, n_probe=3, max_cell_rows=15, bounded_batch=True)
+
+
+def test_ivf_index_search_bounded_batch_plan(spark):
+    """The bounded serve is one Arrow pass: the executed plan has exactly
+    one MapInPandas and no FlatMapGroupsInPandas, and no exchange input
+    carries the vector column ``v`` — only (query_id, nbr_id, cosine)
+    candidates are shuffled."""
+    from dbt_core_spark.operators.similarity import ivf_index_search
+
+    df, cents, assigns = _sin_index(spark)
+    out = ivf_index_search(cents, assigns, df.filter("vec_id % 5 = 0"),
+                           k=3, n_probe=3, bounded_batch=True)
+    qe = out._jdf.queryExecution()
+    plan = qe.executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+
+    def nodes(p):
+        yield p
+        kids = p.children()
+        for i in range(kids.size()):
+            yield from nodes(kids.apply(i))
+
+    exchanges = [p for p in nodes(qe.executedPlan().initialPlan())
+                 if p.nodeName().endswith("Exchange")]
+    assert exchanges, plan
+    for ex in exchanges:
+        child = ex.children().apply(0).output()
+        names = {child.apply(i).name() for i in range(child.size())}
+        assert "v" not in names, names
+
+
+def test_tiny_index_state_is_jobless(spark):
+    """``_materialize_tiny`` output and ``ivf_index_build`` centroids are
+    Arrow-built LocalRelations: collecting them launches no job, so
+    neither does building an ingest call against the build centroids."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    from dbt_core_spark.operators.similarity import (
+        _materialize_tiny,
+        ivf_index_append,
+        semantic_dedup_incremental,
+    )
+
+    df, cents, assigns = _sin_index(spark)
+    tiny = _materialize_tiny(df.groupBy((F.col("vec_id") % 4).alias("g"))
+                             .agg(F.count("*").alias("n")))
+    batch = df.filter("vec_id % 7 = 0")
+    sc = spark.sparkContext
+
+    def jobs(fn):
+        group = f"tiny_{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, "tiny state")
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    for frame in (tiny, cents):
+        plan = frame._jdf.queryExecution().optimizedPlan()
+        assert plan.nodeName() == "LocalRelation", plan.toString()
+        rows, ids = jobs(frame.collect)
+        assert rows and ids == []
+    assert jobs(lambda: ivf_index_append(cents, batch))[1] == []
+    assert jobs(lambda: semantic_dedup_incremental(cents, assigns, batch))[1] == []
 
 
 @_mark_slow

@@ -374,17 +374,18 @@ def test_streaming_decontaminate_empty_probes(spark, tmp_path):
     assert spark.table(name).count() == 0
 
 
-@_mark_slow
 def test_streaming_ann_serve_forced_split_matches_one_shot(
     spark, sf_dir, tmp_path
 ):
     """Dense serving split-invariance pin (the bm25-serve precedent):
-    ivf_index_search served per micro-batch under a forced
-    1-file-per-trigger split must equal the one-shot batch search over
-    the same standing index — per-query top-k is request-row-local."""
+    the bounded-batch ivf_index_search served per micro-batch under a
+    forced 1-file-per-trigger split must equal the one-shot unbounded
+    search over the same standing index — per-query top-k is
+    request-row-local."""
     from pyspark.sql import functions as F
 
     from dbt_core_spark.operators.similarity import (
+        ivf_centroid_matrix,
         ivf_index_build,
         ivf_index_search,
     )
@@ -398,6 +399,7 @@ def test_streaming_ann_serve_forced_split_matches_one_shot(
     emb.repartition(5).write.parquet(src)  # 5 files -> 5 micro-batches
     cents, assigns = ivf_index_build(emb, n_cells=8, kmeans_iters=0)
     assigns = assigns.localCheckpoint(eager=True)
+    cmat = ivf_centroid_matrix(cents)
 
     stream = stream_source(
         spark, src, spark.read.parquet(src).schema, fmt="parquet",
@@ -406,7 +408,8 @@ def test_streaming_ann_serve_forced_split_matches_one_shot(
     out = str(tmp_path / "out"); ckpt = str(tmp_path / "ckpt")
     stream_serve_foreach_batch(
         stream.filter("vec_id % 20 = 0"),
-        lambda b: ivf_index_search(cents, assigns, b, k=3, n_probe=4),
+        lambda b: ivf_index_search(cents, assigns, b, k=3, n_probe=4,
+                                   centroid_matrix=cmat, bounded_batch=True),
         out, ckpt,
     )
     served = sorted(
