@@ -3299,7 +3299,7 @@ def streaming_bm25_serve_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     index = bm25_index(docs).localCheckpoint(eager=False)
     # validate the snapshot's constants ONCE, serve many: each batch
     # otherwise re-scans the full index for the invariant check
-    # (optimization r11; the ivf_member_counts precedent)
+    # (optimization r11; the ivf_centroid_matrix precedent)
     consts = _bm25_constants(index)
     stream = stream_source(
         spark, path, spark.read.parquet(path).schema, fmt="parquet",
@@ -3393,8 +3393,9 @@ def streaming_ann_serve_embeddings(spark: SparkSession, sf_dir: str) -> DataFram
     # whole build assignment pass (the ≥2-branch lineage rule)
     assigns = assigns.localCheckpoint(eager=False)
     # the driver-side centroid matrix once per snapshot, not once per
-    # batch; bounded_batch serves each trigger-bounded micro-batch in
-    # one Arrow pass over its probed cells (no member shuffle)
+    # batch; a micro-batch of at most max_cell_rows rows (any trigger-
+    # bounded one here) is served in one Arrow pass over its probed
+    # cells, with no member shuffle
     cmat = ivf_centroid_matrix(cents)
     stream = stream_source(
         spark, path, spark.read.parquet(path).schema, fmt="parquet",
@@ -3406,8 +3407,7 @@ def streaming_ann_serve_embeddings(spark: SparkSession, sf_dir: str) -> DataFram
         stream.filter("vec_id % 20 = 0"),
         lambda batch: ivf_index_search(cents, assigns, batch,
                                        k=3, n_probe=4,
-                                       centroid_matrix=cmat,
-                                       bounded_batch=True),
+                                       centroid_matrix=cmat),
         out, ckpt,
     )
     if not os.path.isdir(out):  # no query rows arrived at all
@@ -3874,10 +3874,11 @@ def knn_classify_ivf_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)  # feeds build AND the vote join
     queries = emb.filter("vec_id % 3 = 0")
     cents, assigns = ivf_index_build(labeled, n_cells=16, kmeans_iters=0)
-    # sealed: the search consumes the standing assignments ≥2 ways
-    # (skew-split cell counts + the member block side) — without the
-    # seal the corpus assignment Arrow pass replays per consumer, the
-    # same rule every other IVF gate already applies (optimization r11)
+    # sealed: a batch over max_cell_rows takes the exchange search,
+    # which consumes the standing assignments ≥2 ways (skew-split cell
+    # counts + the member block side) — without the seal the corpus
+    # assignment Arrow pass replays per consumer, the same rule every
+    # other IVF gate already applies (optimization r11)
     assigns = assigns.localCheckpoint(eager=False)
     nbrs = ivf_index_search(cents, assigns, queries, k=5, n_probe=4)
     return knn_classify(labeled, queries, neighbors=nbrs)
@@ -4089,8 +4090,9 @@ def streaming_knn_serve_embeddings(
     # ≥2-branch lineage rule — without the seal each batch replays
     # the corpus assignment pass)
     assigns = assigns.localCheckpoint(eager=False)
-    # the centroid matrix hoisted out of the per-batch plan and the
-    # bounded-batch serve (see streaming_ann_serve_embeddings)
+    # the centroid matrix hoisted out of the per-batch plan; each
+    # micro-batch takes the broadcast serve (see
+    # streaming_ann_serve_embeddings)
     cmat = ivf_centroid_matrix(cents)
     # the per-batch vote join needs only (vec_id, label) — a sealed
     # 2-column projection, so each micro-batch scans narrow label
@@ -4112,8 +4114,7 @@ def streaming_knn_serve_embeddings(
             labels, batch,
             neighbors=ivf_index_search(cents, assigns, batch,
                                        k=5, n_probe=4,
-                                       centroid_matrix=cmat,
-                                       bounded_batch=True)),
+                                       centroid_matrix=cmat)),
         out, ckpt,
     )
     if not os.path.isdir(out):  # no request rows arrived at all

@@ -19,7 +19,7 @@ kernel per job:
 - ``_fit_centroids`` — the bounded id-ordered sample and numpy Lloyd fit;
 - ``_nearest_cells`` — the nearest-centroid rule (cells ranked on
   ``round(cos, 6)``, ties to the lowest index), applied by the
-  ``_assign_cells`` ``mapInPandas`` pass and the bounded serve's driver;
+  ``_assign_cells`` ``mapInPandas`` pass and the broadcast serve's driver;
 - ``_local_topk`` — the chunked probe × member top-k matmul, run per
   group by ``_topk_score_kernel`` and per (cell, Arrow batch) by
   ``_probed_topk_kernel``;
@@ -437,7 +437,7 @@ def _np_finite_pos_rows(pdf):
     ``(pdf, None)`` when nothing survives.
 
     ``_assign_cells`` applies it to every IVF assignment pass, and the
-    bounded serve to its collected batch.  The serving paths
+    broadcast serve to its collected batch.  The serving paths
     (ivf_index_search / semantic_dedup_incremental / ivf_index_append)
     rely on it alone, with no JVM HOF pre-filter: the norm is computed
     inside the Arrow kernel anyway, so doing the validity mask here
@@ -468,7 +468,6 @@ def _skew_split_2d(
     probes: DataFrame,
     max_cell_rows: int,
     counts: DataFrame | None = None,
-    member_counts: DataFrame | None = None,
 ) -> DataFrame:
     """2-D block a per-cell member × probe pairing so every pandas
     frame's EXPECTED population is ≤ ``max_cell_rows`` rows per side,
@@ -500,37 +499,25 @@ def _skew_split_2d(
 
     ``counts`` may supply a precomputed (cell, _mc, _pc) frame so the
     caller can derive both sides' counts in ONE pass over its sealed
-    input (both kernels do) instead of two aggregate scans here.
-    ``member_counts`` may supply just the (cell, _mc) side — the
-    standing-index serving case: the member population is fixed across
-    query batches, so a serve-many caller aggregates it ONCE instead
-    of re-scanning the assignment table per batch (optimization r11;
-    guide §1.2 — at 100 TB that per-batch scan is a full pass over
-    the index's cell metadata).  TRUST CONTRACT (r11 ADVICE):
-    ``member_counts`` MUST be derived from the same assignments
-    snapshot as ``members`` — a stale/partial counts frame degrades
-    silently (a hot cell missing from it gets _ns=1 and loses its
-    blocking; member rows in cells absent from the blocks join drop).
-    ``ivf_member_counts`` over the sealed assignments is the one
-    supported producer.
+    input (both one-shot kernels do).  Without it the member and probe
+    counts inner-join, so the rows of a cell only one side reaches
+    (the members of every unprobed cell, above all) drop before the
+    exchange: both group kernels return nothing for a one-sided group.
 
     Returns the union frame (id, v, cell, msub, psub, is_member) to be
     grouped by ``("cell", "msub", "psub")``."""
     if counts is None:
-        mc = (member_counts if member_counts is not None
-              else members.groupBy("cell").agg(F.count("*").alias("_mc")))
+        mc = members.groupBy("cell").agg(F.count("*").alias("_mc"))
         pc = probes.groupBy("cell").agg(F.count("*").alias("_pc"))
-        counts = mc.join(pc, "cell", "full_outer")
+        counts = mc.join(pc, "cell")
+    # greatest(1, …): ivf_topk_blas's counts hold _mc = 0 for a cell
+    # that only probes reach
     blocks = counts.select(
         "cell",
-        F.greatest(
-            F.lit(1),
-            F.ceil(F.coalesce(F.col("_mc"), F.lit(0)) / F.lit(max_cell_rows)),
-        ).cast("int").alias("_ns"),
-        F.greatest(
-            F.lit(1),
-            F.ceil(F.coalesce(F.col("_pc"), F.lit(0)) / F.lit(max_cell_rows)),
-        ).cast("int").alias("_np"),
+        F.greatest(F.lit(1), F.ceil(F.col("_mc") / F.lit(max_cell_rows)))
+        .cast("int").alias("_ns"),
+        F.greatest(F.lit(1), F.ceil(F.col("_pc") / F.lit(max_cell_rows)))
+        .cast("int").alias("_np"),
     )
     m = members.join(F.broadcast(blocks), "cell").select(
         "id", "v", "cell",
@@ -681,9 +668,9 @@ def _local_topk(qid_all, Qn_all, mid, Mn, k: int, budget: int, dp: int) -> list:
 
 def _topk_score_kernel(k: int, budget: int, dp: int = 6):
     """Build the per-group applyInPandas kernel shared by
-    ``ivf_topk_blas``, the unbounded ``ivf_index_search`` and the
-    sharded exact path: the group's probes (``is_member`` false) against
-    its members through ``_local_topk``.  ``budget`` is captured as a
+    ``ivf_topk_blas``, the exchange path of ``ivf_index_search`` and
+    the sharded exact path: the group's probes (``is_member`` false)
+    against its members through ``_local_topk``.  ``budget`` is captured as a
     plain value at DRIVER time so it serializes by value with the
     closure (tests pin it deterministically)."""
     import pandas as pd
@@ -702,7 +689,7 @@ def _topk_score_kernel(k: int, budget: int, dp: int = 6):
 
 
 def _probed_topk_kernel(bq, k: int, budget: int, dp: int = 6):
-    """Build the ``mapInPandas`` kernel of the bounded-batch serve: for
+    """Build the ``mapInPandas`` kernel of the broadcast serve: for
     each (cell, Arrow batch) of probed members, the broadcast queries
     ``bq = (qids, Qn, probed)`` that probe the cell (``probed`` maps a
     cell to its query row indices) score against the block through
@@ -940,9 +927,7 @@ def ivf_index_search(
     k: int = 5,
     n_probe: int = 4,
     max_cell_rows: int = 100_000,
-    member_counts: DataFrame | None = None,
     centroid_matrix=None,
-    bounded_batch: bool = False,
 ) -> DataFrame:
     """Search a prebuilt IVF index (``ivf_index_build`` output, usually
     reloaded from tables) with a query batch — no corpus assignment
@@ -953,19 +938,24 @@ def ivf_index_search(
     ``centroid_matrix`` — the ``ivf_centroid_matrix(centroids)`` tuple,
     precollected once per index snapshot instead of once per batch.
 
-    ``bounded_batch=False`` (any batch size): one Arrow pass assigns
-    the batch's probe cells, then every member row of the index joins
-    the ``(cell, msub, psub)`` exchange of ``_skew_split_2d`` (hot
-    cells 2-D blocked on both sides) and the shared chunked-matmul
-    kernel scores each group.  ``member_counts`` (``ivf_member_counts``
-    of the same assignments snapshot) saves its per-batch member count.
+    The serve path follows the batch it sees.  The batch is collected
+    once, at most ``max_cell_rows + 1`` rows, through ``coalesce(1)``:
+    one stage and one task, so the batch's own scan runs in one task
+    until it finds ``max_cell_rows + 1`` rows.
 
-    ``bounded_batch=True`` declares the batch at most ``max_cell_rows``
-    rows (any trigger-bounded micro-batch; a larger batch raises
-    ``ExecutionError``) and serves it in one Arrow pass over the probed
-    cells only (``_serve_bounded``): member vectors never cross an
-    exchange, only (query_id, nbr_id, cosine) candidates do, and hot
-    cells need no blocking since members are never grouped.
+    - A batch of at most ``max_cell_rows`` rows is served from the
+      collected rows in one Arrow pass over the probed cells only
+      (``_serve_bounded``): member vectors never cross an exchange,
+      only (query_id, nbr_id, cosine) candidates do, and hot cells
+      need no blocking since members are never grouped.
+    - A larger batch is re-read by one Arrow pass that assigns its
+      probe cells; the probed cells' members and the probes then meet
+      in the ``(cell, msub, psub)`` exchange of ``_skew_split_2d``
+      (hot cells 2-D blocked on both sides) and the shared
+      chunked-matmul kernel scores each group.
+
+    ``max_cell_rows`` is the most rows a pandas frame holds on one
+    side on either path: the broadcast batch, or a skew block.
 
     Returns (query_id, nbr_id, cosine, rank), rank ≤ k per query."""
     # invalid vectors (NULL/empty/zero-norm/NaN/Inf) drop inside
@@ -977,23 +967,26 @@ def ivf_index_search(
         return spark.createDataFrame([], _TOPK_SCHEMA)
     qbase = queries.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     members = assignments.select("id", "v", "cell")
-    if bounded_batch:
-        return _serve_bounded(members, qbase, Cn, cells, k, n_probe, max_cell_rows)
+    # one stage, one task; a larger batch costs ≤ max_cell_rows + 1 rows
+    qpdf = qbase.coalesce(1).limit(max_cell_rows + 1).toPandas()
+    if len(qpdf) <= max_cell_rows:
+        return _serve_bounded(members, qpdf, Cn, cells, k, n_probe)
     # the probe side is scanned twice (count + block side): seal it.
     # The caller owns the ASSIGNMENTS side: seal it or write it out when
     # composing build+search in one job, or the build pass replays.
     probes = _seal(_assign_cells(qbase, Cn, cells.astype("int32"), n_probe))
-    grouped = _skew_split_2d(members, probes, max_cell_rows,
-                             member_counts=member_counts)
+    grouped = _skew_split_2d(members, probes, max_cell_rows)
     scored = grouped.groupBy("cell", "msub", "psub").applyInPandas(
         _topk_score_kernel(k, int(_MATMUL_BUDGET)), schema=_CAND_SCHEMA)
     return _rounded_topk(scored, k, 6)
 
 
-def _serve_bounded(members: DataFrame, qbase: DataFrame, Cn, cells, k: int,
-                   n_probe: int, max_cell_rows: int) -> DataFrame:
-    """The ``bounded_batch=True`` serve of ``ivf_index_search``: collect
-    the batch once, pick its probe cells on the driver, broadcast
+def _serve_bounded(members: DataFrame, qpdf, Cn, cells, k: int,
+                   n_probe: int) -> DataFrame:
+    """The broadcast serve of ``ivf_index_search``, taken when the
+    search's one-task ``coalesce(1).limit(max_cell_rows + 1)`` collect
+    returns at most ``max_cell_rows`` rows: ``qpdf`` is that pandas
+    frame (id, v).  Pick its probe cells on the driver, broadcast
     (query ids, unit vectors, probed cells) and run one
     ``_probed_topk_kernel`` ``mapInPandas`` over the probed cells'
     members.  The cell filter is ``array_contains`` over an array
@@ -1002,16 +995,7 @@ def _serve_bounded(members: DataFrame, qbase: DataFrame, Cn, cells, k: int,
     Its per-row cost is linear in the probed set (≤ n_cells)."""
     import numpy as np
 
-    from dbt_core_spark.exceptions import ExecutionError
-
-    spark = qbase.sparkSession
-    # one task, no shuffle; a wrong declaration costs ≤ max_cell_rows+1 rows
-    qpdf = qbase.coalesce(1).limit(max_cell_rows + 1).toPandas()
-    if len(qpdf) > max_cell_rows:
-        raise ExecutionError(
-            "ivf_index_search(bounded_batch=True) got a batch of more than "
-            f"max_cell_rows={max_cell_rows} rows: the declaration is wrong "
-            "— pass bounded_batch=False for unbounded batches")
+    spark = members.sparkSession
     qpdf, Qn = _np_finite_pos_rows(qpdf)
     if Qn is None:  # empty or all-invalid batch
         return spark.createDataFrame([], _TOPK_SCHEMA)
@@ -1027,20 +1011,6 @@ def _serve_bounded(members: DataFrame, qbase: DataFrame, Cn, cells, k: int,
         F.array_contains(F.lit(sorted(probed)), F.col("cell"))).mapInPandas(
         _probed_topk_kernel(bq, k, int(_MATMUL_BUDGET)), schema=_CAND_SCHEMA)
     return _rounded_topk(scored, k, 6)
-
-
-def ivf_member_counts(assignments: DataFrame) -> DataFrame:
-    """Per-cell population (cell, _mc) of an IVF assignment table,
-    collected once into an Arrow-built ``LocalRelation`` (n_cells rows
-    by contract — the centroid-table size class).
-
-    An unbounded ``ivf_index_search(member_counts=...)`` uses it for
-    its skew blocking instead of re-aggregating the assignment table
-    per query batch.  That search still shuffles every member row per
-    batch; the ``bounded_batch=True`` serve does not read the counts
-    at all."""
-    return _materialize_tiny(
-        assignments.groupBy("cell").agg(F.count("*").alias("_mc")))
 
 
 def ivf_centroid_matrix(centroids: DataFrame):
@@ -1072,11 +1042,11 @@ def semantic_dedup_incremental(
     tables).
 
     Per batch the cost is the batch's own assignment pass plus one
-    ``_skew_split_2d`` exchange of the batch and the index's member
-    rows; the corpus is never re-assigned.  Batch rows are assigned by
-    the SAME argmax rule as the corpus, so a near-duplicate pair lands
-    in the same cell exactly when plain ``semantic_dedup`` would have
-    compared them.  (Within-batch duplicates are out of scope here —
+    ``_skew_split_2d`` exchange of the batch and the member rows of
+    the cells it lands in; the corpus is never re-assigned.  Batch
+    rows are assigned by the SAME argmax rule as the corpus, so a
+    near-duplicate pair lands in the same cell exactly when plain
+    ``semantic_dedup`` would have compared them.  (Within-batch duplicates are out of scope here —
     run ``semantic_dedup_blas`` over the deduped batch before appending
     it to the index, the same composition the MinHash incremental path
     documents.)

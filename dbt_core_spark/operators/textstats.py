@@ -1476,7 +1476,7 @@ def bm25_query(
     then skips the full-index constants scan — per-batch cost at
     100 TB should be the query terms' postings only, not an index
     metadata pass per micro-batch (optimization r11; the
-    ivf_member_counts precedent).  None (the default) keeps the
+    ivf_centroid_matrix precedent).  None (the default) keeps the
     per-call validation — the right choice for one-shot callers and
     any index not validated this session."""
     out_schema = (
@@ -1993,6 +1993,16 @@ def _perceptron_epochs(
     return last, total
 
 
+def _weights_frame(spark, cols: dict, schema: str) -> DataFrame:
+    """A perceptron model as an Arrow-built ``LocalRelation``: the
+    ``perceptron_apply*`` collect of it launches no Spark job, where a
+    ``createDataFrame(list)`` frame is an RDD scan (the
+    ``ivf_index_build`` centroid precedent)."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table(cols), schema)
+
+
 def perceptron_train(
     df: DataFrame,
     label_col: str,
@@ -2031,8 +2041,9 @@ def perceptron_train(
     (w,), _ = _perceptron_epochs(
         df.filter(F.col(label_col).isNotNull()), [F.col(label_col)],
         text_col, dim, epochs, seed)
-    return df.sparkSession.createDataFrame(
-        list(enumerate(w)), "bucket int, w bigint")
+    return _weights_frame(df.sparkSession,
+                          {"bucket": list(range(len(w))), "w": w},
+                          "bucket int, w bigint")
 
 
 def perceptron_apply(
@@ -2107,8 +2118,9 @@ def perceptron_train_averaged(
     _, (acc,) = _perceptron_epochs(
         df.filter(F.col(label_col).isNotNull()), [F.col(label_col)],
         text_col, dim, epochs, seed)
-    return df.sparkSession.createDataFrame(
-        list(enumerate(acc)), "bucket int, w bigint")
+    return _weights_frame(df.sparkSession,
+                          {"bucket": list(range(len(acc))), "w": acc},
+                          "bucket int, w bigint")
 
 
 def perceptron_train_ovr(
@@ -2149,16 +2161,18 @@ def perceptron_train_ovr(
         )
     classes = [str(c) for c in classes]
     if not classes:
-        return spark.createDataFrame([], "cls string, bucket int, w bigint")
+        return _weights_frame(spark, {"cls": [], "bucket": [], "w": []},
+                              "cls string, bucket int, w bigint")
     # NULL class is a negative for every classifier (NULL == never
     # equal), matching the binary gate's `else -1` label rule
     ys = [F.when(F.col(class_col).cast("string") == F.lit(c), F.lit(1))
           .otherwise(F.lit(-1)) for c in classes]
     W, _ = _perceptron_epochs(df, ys, text_col, dim, epochs, seed)
-    return spark.createDataFrame(
-        [(c, b, wb) for c, w in zip(classes, W) for b, wb in enumerate(w)],
-        "cls string, bucket int, w bigint",
-    )
+    return _weights_frame(spark, {
+        "cls": [c for c in classes for _ in range(dim + 1)],
+        "bucket": [b for _ in classes for b in range(dim + 1)],
+        "w": [wb for w in W for wb in w],
+    }, "cls string, bucket int, w bigint")
 
 
 def perceptron_apply_ovr(

@@ -10,7 +10,11 @@ index, so
     data_cost          ≈ wall_1 − per_batch_overhead − t_setup
 
 where t_setup (index build + stream/source listing) is measured by a
-0-row serve (a filter no request matches).  Run per-round alongside
+0-row serve (a filter no request matches).  Every batch is served as
+``streaming_ann_serve_embeddings`` serves it: ``ivf_index_search``
+with the centroid matrix collected once per index snapshot, which
+picks the broadcast serve for any batch of at most ``max_cell_rows``
+rows.  Run per-round alongside
 bench.py; a rise in `data_cost` is a real serving regression even when
 total wall sits inside the trigger-noise floor.
 
@@ -27,6 +31,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dbt_core_spark.operators.similarity import (  # noqa: E402
+    ivf_centroid_matrix,
     ivf_index_build,
     ivf_index_search,
 )
@@ -39,19 +44,19 @@ from dbt_core_spark.streaming.structured import (  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def serve_once(spark, src, schema, cents, assigns, files_per_trigger,
-               predicate, search_kwargs=None) -> tuple[float, int, int]:
+def serve_once(spark, src, schema, cents, assigns, cmat, files_per_trigger,
+               predicate) -> tuple[float, int, int]:
     work = tempfile.mkdtemp(prefix="serve_probe_")
     stream = stream_source(
         spark, src, schema, fmt="parquet",
         options={"maxFilesPerTrigger": str(files_per_trigger)},
     )
-    kw = search_kwargs or {}
     batches: list[int] = []
     t0 = time.time()
     stream_serve_foreach_batch(
         stream.filter(predicate),
-        lambda b: ivf_index_search(cents, assigns, b, k=3, n_probe=4, **kw),
+        lambda b: ivf_index_search(cents, assigns, b, k=3, n_probe=4,
+                                   centroid_matrix=cmat),
         f"{work}/out", f"{work}/ckpt",
         on_batch_result=lambda r, bid: batches.append(bid),
     )
@@ -76,24 +81,18 @@ def main() -> None:
     assigns = assigns.localCheckpoint(eager=True)
     n_files = len([f for f in os.listdir(src) if f.endswith(".parquet")])
 
+    # the gate's serve: the centroid matrix once per index snapshot
+    cmat = ivf_centroid_matrix(cents)
     # warm one full serve so JVM/stream codepaths don't bias batch 1
-    serve_once(spark, src, schema, cents, assigns, n_files, "vec_id % 20 = 0")
+    serve_once(spark, src, schema, cents, assigns, cmat, n_files,
+               "vec_id % 20 = 0")
 
-    # SPARK_GRAFT_SERVE_FAST=1 probes the gate's serve (snapshot-constant
-    # centroid matrix, bounded-batch broadcast serve); default probes the
-    # unbounded per-batch path so the r10/r11 numbers stay comparable
-    kw = {}
-    if os.environ.get("SPARK_GRAFT_SERVE_FAST") == "1":
-        from dbt_core_spark.operators.similarity import ivf_centroid_matrix
-
-        kw = {"centroid_matrix": ivf_centroid_matrix(cents),
-              "bounded_batch": True}
     w_setup, b_setup, _ = serve_once(
-        spark, src, schema, cents, assigns, n_files, "vec_id < 0", kw)
+        spark, src, schema, cents, assigns, cmat, n_files, "vec_id < 0")
     w_one, b_one, rows1 = serve_once(
-        spark, src, schema, cents, assigns, n_files, "vec_id % 20 = 0", kw)
+        spark, src, schema, cents, assigns, cmat, n_files, "vec_id % 20 = 0")
     w_many, b_many, rows_n = serve_once(
-        spark, src, schema, cents, assigns, 1, "vec_id % 20 = 0", kw)
+        spark, src, schema, cents, assigns, cmat, 1, "vec_id % 20 = 0")
     assert rows1 == rows_n, (rows1, rows_n)
     per_batch = (w_many - w_one) / max(b_many - b_one, 1)
     data_cost = w_one - per_batch * b_one - max(

@@ -1613,6 +1613,37 @@ def test_perceptron_separable_sanity(spark):
     assert all(out[100 + i] == -1 for i in range(10))
 
 
+def test_perceptron_weights_are_jobless(spark):
+    """Every perceptron trainer returns its model as an Arrow-built
+    LocalRelation, so the ``perceptron_apply*`` collect of it launches
+    no Spark job."""
+    import uuid
+
+    from dbt_core_spark.operators.textstats import (
+        perceptron_train,
+        perceptron_train_averaged,
+        perceptron_train_ovr,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "good clean prose", 1, "en"), (2, "spam junk noise", -1, "de")],
+        "doc_id long, text string, y int, lang string")
+    sc = spark.sparkContext
+    for w in (perceptron_train(df, "y", dim=8, epochs=2),
+              perceptron_train_averaged(df, "y", dim=8, epochs=2),
+              perceptron_train_ovr(df, "lang", dim=8, epochs=2),
+              perceptron_train_ovr(df, "lang", classes=[], dim=8)):
+        plan = w._jdf.queryExecution().optimizedPlan()
+        assert plan.nodeName() == "LocalRelation", plan.toString()
+        group = f"weights_{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, "perceptron weights")
+        try:
+            w.collect()
+        finally:
+            sc.setJobGroup(None, None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 @_mark_slow
 def test_perceptron_matches_python_reference(spark):
     """Property: the distributed batch perceptron is bit-identical to a

@@ -180,8 +180,9 @@ def test_skew_split_2d_every_pair_exactly_once(spark, m_cells, p_cells, cap):
     """The 2-D hot-cell blocking invariant every BLAS kernel relies on:
     for any member/probe cell assignment and any cap, each same-cell
     (member, probe) pair appears in EXACTLY ONE (cell, msub, psub)
-    group, and each cell splits into exactly ceil(n/cap) blocks per
-    side (block population is hash-balanced in expectation)."""
+    group, each cell splits into exactly ceil(n/cap) blocks per side
+    (block population is hash-balanced in expectation), and a cell
+    only one side reaches emits no row."""
     from pyspark.sql import functions as F
 
     from dbt_core_spark.operators.similarity import _skew_split_2d
@@ -222,6 +223,8 @@ def test_skew_split_2d_every_pair_exactly_once(spark, m_cells, p_cells, cap):
     }
     assert set(seen) == expected
     assert all(v == 1 for v in seen.values()), seen.most_common(3)
+    # no row from a one-sided cell: it could meet no pair
+    assert {cell for cell, _, _ in groups} <= set(m_cells) & set(p_cells)
 
 
 # ---------------- session-5 operators ----------------

@@ -103,7 +103,6 @@ def test_quantize_embeddings_roundtrip_error_bounded(spark, emb):
             assert abs(q * step - float(x)) <= step / 2 + 1e-9
 
 
-@_mark_slow
 def test_ivf_index_build_search_matches_oneshot(spark):
     """The persisted-index path must return exactly what ivf_topk_blas
     returns for the same queries: same centroids, same corpus
@@ -131,40 +130,6 @@ def test_ivf_index_build_search_matches_oneshot(spark):
     assert via_index == oneshot and len(via_index) == 16 * 3
 
 
-@_mark_slow
-def test_ivf_index_search_precomputed_member_counts(spark):
-    """``member_counts=`` (the serve-many fast path: per-cell
-    populations aggregated once per index snapshot instead of once per
-    query batch — optimization r11) must be result-invariant: the
-    counts only parameterize the skew blocking, never the scores."""
-    import math
-
-    from dbt_core_spark.operators.similarity import (
-        ivf_index_build,
-        ivf_index_search,
-        ivf_member_counts,
-    )
-
-    rows = [(i, [math.sin(i * 0.37 + d) for d in range(6)]) for i in range(80)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents, assigns = ivf_index_build(df, n_cells=8, kmeans_iters=0)
-    assigns = assigns.localCheckpoint(eager=False)
-    batch = df.filter("vec_id % 5 = 0")
-    mcounts = ivf_member_counts(assigns)
-    with_counts = sorted(map(tuple, ivf_index_search(
-        cents, assigns, batch, k=3, n_probe=3,
-        member_counts=mcounts).collect()))
-    without = sorted(map(tuple, ivf_index_search(
-        cents, assigns, batch, k=3, n_probe=3).collect()))
-    assert with_counts == without and len(with_counts) == 16 * 3
-    # ... including under a tiny cap that actually exercises the 2-D
-    # blocking with multiplied member/probe sub-blocks
-    capped_with = sorted(map(tuple, ivf_index_search(
-        cents, assigns, batch, k=3, n_probe=3, max_cell_rows=4,
-        member_counts=mcounts).collect()))
-    assert capped_with == without
-
-
 def _sin_index(spark, n=80, n_cells=8):
     """An 80-vector sine corpus and its kmeans_iters=0 IVF index, the
     assignments sealed."""
@@ -178,12 +143,20 @@ def _sin_index(spark, n=80, n_cells=8):
     return df, cents, assigns.localCheckpoint(eager=False)
 
 
-def test_ivf_index_search_bounded_batch_fast_path(spark):
-    """``bounded_batch=True`` + ``centroid_matrix=`` (the broadcast
-    serve: one batch collect, driver-side probe cells, one Arrow pass
-    over the probed cells' members) must equal the unbounded exchange
-    path, on an empty batch too."""
+def test_ivf_index_search_serve_threshold(spark):
+    """The serve path follows the batch size: a 16-row batch at
+    ``max_cell_rows=16`` takes the broadcast serve (exactly one
+    MapInPandas, no FlatMapGroupsInPandas), at 15 and at 4 the
+    ``_skew_split_2d`` exchange (at 4 blocked on both sides), and all
+    three give the same rows; an empty batch gives a schema-stable
+    empty result."""
+    import numpy as np
+
+    from pyspark.sql import functions as F
+
     from dbt_core_spark.operators.similarity import (
+        _assign_cells,
+        _skew_split_2d,
         ivf_centroid_matrix,
         ivf_index_search,
     )
@@ -191,41 +164,54 @@ def test_ivf_index_search_bounded_batch_fast_path(spark):
     df, cents, assigns = _sin_index(spark)
     batch = df.filter("vec_id % 5 = 0")
     cmat = ivf_centroid_matrix(cents)
-    base = sorted(map(tuple, ivf_index_search(
-        cents, assigns, batch, k=3, n_probe=3).collect()))
-    fast = sorted(map(tuple, ivf_index_search(
-        cents, assigns, batch, k=3, n_probe=3, centroid_matrix=cmat,
-        bounded_batch=True).collect()))
-    assert fast == base and len(fast) == 16 * 3
-    # members are never grouped on this path, so there is no member
-    # blocking: max_cell_rows only sets the checked batch bound, and a
-    # bound equal to the batch size passes
-    capped = sorted(map(tuple, ivf_index_search(
-        cents, assigns, batch, k=3, n_probe=3, max_cell_rows=16,
-        centroid_matrix=cmat, bounded_batch=True).collect()))
-    assert capped == base
+    out = {}
+    for cap in (16, 15, 4):
+        res = ivf_index_search(cents, assigns, batch, k=3, n_probe=3,
+                               max_cell_rows=cap, centroid_matrix=cmat)
+        plan = res._jdf.queryExecution().executedPlan().toString()
+        if cap == 16:
+            assert plan.count("MapInPandas") == 1, plan
+            assert "FlatMapGroupsInPandas" not in plan, plan
+        else:
+            assert "FlatMapGroupsInPandas" in plan, plan
+        out[cap] = sorted(map(tuple, res.collect()))
+    assert out[16] == out[15] == out[4] and len(out[16]) == 16 * 3
+    # the cap of 4 really blocks both sides of some cell
+    Cn, cells = cmat
+    probes = _assign_cells(
+        batch.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v")),
+        Cn, cells.astype(np.int32), 3)
+    blocks = _skew_split_2d(assigns.select("id", "v", "cell"), probes, 4).agg(
+        F.max("msub"), F.max("psub")).first()
+    assert blocks[0] > 0 and blocks[1] > 0, blocks
     # empty batch: schema-stable empty result
     empty = ivf_index_search(
         cents, assigns, batch.filter("vec_id < 0"), k=3, n_probe=3,
-        centroid_matrix=cmat, bounded_batch=True)
+        centroid_matrix=cmat)
     assert empty.columns == ["query_id", "nbr_id", "cosine", "rank"]
     assert empty.collect() == []
 
 
-def test_ivf_index_search_bounded_batch_declaration_checked(spark):
-    """A batch larger than ``max_cell_rows`` under ``bounded_batch=True``
-    is a wrong declaration: it raises instead of serving unbounded."""
-    from dbt_core_spark.exceptions import ExecutionError
-    from dbt_core_spark.operators.similarity import ivf_index_search
+def test_skew_split_2d_drops_unprobed_cells(spark):
+    """Without precomputed counts the member and probe counts
+    inner-join: with probes only in cell 0, no member row of any other
+    cell reaches the ``(cell, msub, psub)`` exchange."""
+    from dbt_core_spark.operators.similarity import _skew_split_2d
 
-    df, cents, assigns = _sin_index(spark)
-    with pytest.raises(ExecutionError, match="bounded_batch"):
-        ivf_index_search(cents, assigns, df.filter("vec_id % 5 = 0"),
-                         k=3, n_probe=3, max_cell_rows=15, bounded_batch=True)
+    members = spark.createDataFrame(
+        [(i, [float(i)], i % 4) for i in range(12)],
+        "id long, v array<double>, cell int")
+    probes = spark.createDataFrame(
+        [(100 + i, [float(i)], 0) for i in range(3)],
+        "id long, v array<double>, cell int")
+    rows = _skew_split_2d(members, probes, 2).collect()
+    assert {r["cell"] for r in rows} == {0}
+    assert {r["id"] for r in rows if r["is_member"]} == {0, 4, 8}
 
 
-def test_ivf_index_search_bounded_batch_plan(spark):
-    """The bounded serve is one Arrow pass: the executed plan has exactly
+def test_ivf_index_search_broadcast_plan(spark):
+    """The broadcast serve of a batch within ``max_cell_rows`` is one
+    Arrow pass: the executed plan has exactly
     one MapInPandas and no FlatMapGroupsInPandas, and no exchange input
     carries the vector column ``v`` — only (query_id, nbr_id, cosine)
     candidates are shuffled."""
@@ -233,7 +219,7 @@ def test_ivf_index_search_bounded_batch_plan(spark):
 
     df, cents, assigns = _sin_index(spark)
     out = ivf_index_search(cents, assigns, df.filter("vec_id % 5 = 0"),
-                           k=3, n_probe=3, bounded_batch=True)
+                           k=3, n_probe=3)
     qe = out._jdf.queryExecution()
     plan = qe.executedPlan().toString()
     assert plan.count("MapInPandas") == 1, plan

@@ -378,10 +378,11 @@ def test_streaming_ann_serve_forced_split_matches_one_shot(
     spark, sf_dir, tmp_path
 ):
     """Dense serving split-invariance pin (the bm25-serve precedent):
-    the bounded-batch ivf_index_search served per micro-batch under a
-    forced 1-file-per-trigger split must equal the one-shot unbounded
-    search over the same standing index — per-query top-k is
-    request-row-local."""
+    ivf_index_search served per micro-batch under a forced
+    1-file-per-trigger split (each batch within max_cell_rows: the
+    broadcast serve) must equal the one-shot search over the same
+    standing index with max_cell_rows below its batch size (the
+    exchange path) — per-query top-k is request-row-local."""
     from pyspark.sql import functions as F
 
     from dbt_core_spark.operators.similarity import (
@@ -409,7 +410,7 @@ def test_streaming_ann_serve_forced_split_matches_one_shot(
     stream_serve_foreach_batch(
         stream.filter("vec_id % 20 = 0"),
         lambda b: ivf_index_search(cents, assigns, b, k=3, n_probe=4,
-                                   centroid_matrix=cmat, bounded_batch=True),
+                                   centroid_matrix=cmat),
         out, ckpt,
     )
     served = sorted(
@@ -417,11 +418,14 @@ def test_streaming_ann_serve_forced_split_matches_one_shot(
         for r in spark.read.parquet(out)
         .select("query_id", "nbr_id", "cosine", "rank").collect()
     )
+    reqs = emb.filter(F.col("vec_id") % 20 == 0)
+    n_req = reqs.count()
+    assert n_req > 1
     one_shot = sorted(
         (r["query_id"], r["nbr_id"], round(r["cosine"], 9), r["rank"])
         for r in ivf_index_search(
-            cents, assigns, emb.filter(F.col("vec_id") % 20 == 0),
-            k=3, n_probe=4).collect()
+            cents, assigns, reqs, k=3, n_probe=4,
+            max_cell_rows=n_req - 1).collect()
     )
     assert served == one_shot and len(served) > 0
 
