@@ -3393,7 +3393,8 @@ def streaming_ann_serve_embeddings(spark: SparkSession, sf_dir: str) -> DataFram
     # whole build assignment pass (the ≥2-branch lineage rule)
     assigns = assigns.localCheckpoint(eager=False)
     # the driver-side centroid matrix once per snapshot, not once per
-    # batch; a micro-batch of at most max_cell_rows rows (any trigger-
+    # batch; a micro-batch within the search's broadcast cap
+    # (max_cell_rows rows and _BROADCAST_BYTES of vectors; any trigger-
     # bounded one here) is served in one Arrow pass over its probed
     # cells, with no member shuffle
     cmat = ivf_centroid_matrix(cents)
@@ -3874,7 +3875,7 @@ def knn_classify_ivf_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)  # feeds build AND the vote join
     queries = emb.filter("vec_id % 3 = 0")
     cents, assigns = ivf_index_build(labeled, n_cells=16, kmeans_iters=0)
-    # sealed: a batch over max_cell_rows takes the exchange search,
+    # sealed: a batch over the broadcast cap takes the exchange search,
     # which consumes the standing assignments ≥2 ways (skew-split cell
     # counts + the member block side) — without the seal the corpus
     # assignment Arrow pass replays per consumer, the same rule every

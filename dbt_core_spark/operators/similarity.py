@@ -370,6 +370,10 @@ def _sharded_topk_blas(
 # holds.  Module-level so tests can shrink it to force chunking.
 _MATMUL_BUDGET = 16_000_000
 
+# Byte cap of the broadcast serve's float64 query batch, collected to
+# the driver and sent to every Python worker (1536-d: 5 461 rows).
+_BROADCAST_BYTES = 64 * 2**20
+
 
 def _resolve_n_cells(
     df: DataFrame, n_cells: int | None, max_cell_rows: int
@@ -938,13 +942,14 @@ def ivf_index_search(
     ``centroid_matrix`` — the ``ivf_centroid_matrix(centroids)`` tuple,
     precollected once per index snapshot instead of once per batch.
 
-    The serve path follows the batch it sees.  The batch is collected
-    once, at most ``max_cell_rows + 1`` rows, through ``coalesce(1)``:
-    one stage and one task, so the batch's own scan runs in one task
-    until it finds ``max_cell_rows + 1`` rows.
+    The serve path follows the batch it sees.  The broadcast cap is
+    ``min(max_cell_rows, _BROADCAST_BYTES // (8·dim))`` rows at the
+    index's dimension.  The batch is collected once, at most cap + 1
+    rows, through ``coalesce(1)``: one stage and one task, so the
+    batch's own scan runs in one task until it finds cap + 1 rows.
 
-    - A batch of at most ``max_cell_rows`` rows is served from the
-      collected rows in one Arrow pass over the probed cells only
+    - A batch of at most cap rows is served from the collected rows
+      in one Arrow pass over the probed cells only
       (``_serve_bounded``): member vectors never cross an exchange,
       only (query_id, nbr_id, cosine) candidates do, and hot cells
       need no blocking since members are never grouped.
@@ -967,9 +972,10 @@ def ivf_index_search(
         return spark.createDataFrame([], _TOPK_SCHEMA)
     qbase = queries.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     members = assignments.select("id", "v", "cell")
-    # one stage, one task; a larger batch costs ≤ max_cell_rows + 1 rows
-    qpdf = qbase.coalesce(1).limit(max_cell_rows + 1).toPandas()
-    if len(qpdf) <= max_cell_rows:
+    cap = min(max_cell_rows, _BROADCAST_BYTES // (8 * Cn.shape[1]))
+    # one stage, one task; a larger batch costs ≤ cap + 1 rows
+    qpdf = qbase.coalesce(1).limit(cap + 1).toPandas()
+    if len(qpdf) <= cap:
         return _serve_bounded(members, qpdf, Cn, cells, k, n_probe)
     # the probe side is scanned twice (count + block side): seal it.
     # The caller owns the ASSIGNMENTS side: seal it or write it out when
@@ -984,15 +990,19 @@ def ivf_index_search(
 def _serve_bounded(members: DataFrame, qpdf, Cn, cells, k: int,
                    n_probe: int) -> DataFrame:
     """The broadcast serve of ``ivf_index_search``, taken when the
-    search's one-task ``coalesce(1).limit(max_cell_rows + 1)`` collect
-    returns at most ``max_cell_rows`` rows: ``qpdf`` is that pandas
-    frame (id, v).  Pick its probe cells on the driver, broadcast
-    (query ids, unit vectors, probed cells) and run one
-    ``_probed_topk_kernel`` ``mapInPandas`` over the probed cells'
-    members.  The cell filter is ``array_contains`` over an array
-    literal: one compiled class serves every probed set (an ``isin``
-    inlines its values) and it adds no job (a semi join broadcasts).
-    Its per-row cost is linear in the probed set (≤ n_cells)."""
+    search's one-task ``coalesce(1).limit(cap + 1)`` collect returns
+    at most cap rows (``max_cell_rows`` and ``_BROADCAST_BYTES``
+    bound it): ``qpdf`` is that pandas frame (id, v).  Pick its probe
+    cells on the driver, broadcast (query ids, unit vectors, probed
+    cells) and run one ``_probed_topk_kernel`` ``mapInPandas`` over
+    the probed cells' members.  The cell filter is ``array_contains``
+    over an array literal: one compiled class serves every probed set
+    (an ``isin`` inlines its values) and it adds no job (a semi join
+    broadcasts).  Its per-row cost is linear in the probed set
+    (≤ n_cells).  Members are coalesced (no shuffle) to at most
+    ``defaultParallelism`` Arrow tasks, as each pays a fixed worker
+    cost: 100 member partitions served a 40-query batch in 8 s on a
+    4-vCPU ``local[4]`` session, 0.7–1.0 s coalesced."""
     import numpy as np
 
     spark = members.sparkSession
@@ -1008,7 +1018,8 @@ def _serve_bounded(members: DataFrame, qpdf, Cn, cells, k: int,
     bq = spark.sparkContext.broadcast(
         (qpdf["id"].to_numpy().astype("int64"), Qn, probed))
     scored = members.filter(
-        F.array_contains(F.lit(sorted(probed)), F.col("cell"))).mapInPandas(
+        F.array_contains(F.lit(sorted(probed)), F.col("cell"))).coalesce(
+        spark.sparkContext.defaultParallelism).mapInPandas(
         _probed_topk_kernel(bq, k, int(_MATMUL_BUDGET)), schema=_CAND_SCHEMA)
     return _rounded_topk(scored, k, 6)
 

@@ -585,9 +585,12 @@ def main() -> None:
                     .collect()}
 
         sizes = _sizes(assigns)
+        # max_cell_rows below the query batch: the search takes the
+        # hot-cell (cell, msub, psub) exchange this probe measures, not
+        # the broadcast serve a batch within the cap gets
         _, w_before, _ = run(
-            lambda: ivf_index_search(cents, assigns, queries,
-                                     k=3, n_probe=4))
+            lambda: ivf_index_search(cents, assigns, queries, k=3,
+                                     n_probe=4, max_cell_rows=n_queries - 1))
         import gc as _gc
 
         # rebalance to CONVERGENCE (ivf_index_rebalance_converged
@@ -614,8 +617,8 @@ def main() -> None:
             rounds += 1
         reb_wall = round(time.time() - t0, 2)
         _, w_after, _ = run(
-            lambda: ivf_index_search(c_cur, a_cur, queries,
-                                     k=3, n_probe=4))
+            lambda: ivf_index_search(c_cur, a_cur, queries, k=3,
+                                     n_probe=4, max_cell_rows=n_queries - 1))
         reb[factor] = {
             "rows": rows_total,
             "hot": sum(1 for n in sizes.values() if n > REB_MAX_CELL),
@@ -1217,7 +1220,10 @@ def main() -> None:
         "past the built 16-cell layout; the probe serves the SAME "
         f"fixed {n_queries}-query batch on the skew-hot index BEFORE "
         f"and AFTER `ivf_index_rebalance(max_cell_rows={REB_MAX_CELL})`"
-        ", plus the rebalance's own one-time cost.",
+        ", plus the rebalance's own one-time cost.  The search runs "
+        f"with `max_cell_rows={n_queries - 1}`, below the batch, so it "
+        "takes the `(cell, msub, psub)` exchange, not the broadcast "
+        "serve.",
         "",
         "| scale | rows | hot cells | max-cell trajectory "
         "(per round) | cells before→after | rounds | rebalance s "

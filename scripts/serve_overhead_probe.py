@@ -13,10 +13,10 @@ where t_setup (index build + stream/source listing) is measured by a
 0-row serve (a filter no request matches).  Every batch is served as
 ``streaming_ann_serve_embeddings`` serves it: ``ivf_index_search``
 with the centroid matrix collected once per index snapshot, which
-picks the broadcast serve for any batch of at most ``max_cell_rows``
-rows.  Run per-round alongside
-bench.py; a rise in `data_cost` is a real serving regression even when
-total wall sits inside the trigger-noise floor.
+picks the broadcast serve for any batch within its cap
+(``max_cell_rows`` rows and ``_BROADCAST_BYTES`` of vectors).  Run
+per-round alongside bench.py; a rise in `data_cost` is a real serving
+regression even when total wall sits inside the trigger-noise floor.
 
 Usage: PYTHONPATH=/root/repo python3 scripts/serve_overhead_probe.py
 """

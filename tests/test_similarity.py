@@ -192,6 +192,74 @@ def test_ivf_index_search_serve_threshold(spark):
     assert empty.collect() == []
 
 
+def test_ivf_index_search_broadcast_byte_budget(spark, monkeypatch):
+    """The broadcast batch is capped in bytes too: with
+    ``_BROADCAST_BYTES`` at 10 six-dim float64 rows, a 16-row batch
+    takes the exchange even at the default ``max_cell_rows``, the
+    driver collect holds at most 11 rows, and the rows match the
+    broadcast serve."""
+    from dbt_core_spark.operators import similarity
+    from dbt_core_spark.operators.similarity import (
+        ivf_centroid_matrix,
+        ivf_index_search,
+    )
+
+    df, cents, assigns = _sin_index(spark)
+    batch = df.filter("vec_id % 5 = 0")
+    cmat = ivf_centroid_matrix(cents)
+    broadcast = sorted(map(tuple, ivf_index_search(
+        cents, assigns, batch, k=3, n_probe=3,
+        centroid_matrix=cmat).collect()))
+    collected = []
+    to_pandas = type(batch).toPandas
+
+    def _spy(self):
+        pdf = to_pandas(self)
+        collected.append(len(pdf))
+        return pdf
+
+    monkeypatch.setattr(similarity, "_BROADCAST_BYTES", 8 * 6 * 10)
+    monkeypatch.setattr(type(batch), "toPandas", _spy)
+    res = ivf_index_search(cents, assigns, batch, k=3, n_probe=3,
+                           centroid_matrix=cmat)
+    assert collected == [11], collected
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" in plan, plan
+    assert sorted(map(tuple, res.collect())) == broadcast
+    assert len(broadcast) == 16 * 3
+
+
+def test_ivf_index_search_invalid_queries_both_paths(spark):
+    """NULL, empty, zero-norm, NaN and Inf query vectors drop on both
+    serve paths: the broadcast serve (default cap) and the exchange
+    (``max_cell_rows=2``, below the batch) return the rows of the
+    valid queries alone."""
+    from dbt_core_spark.operators.similarity import (
+        ivf_centroid_matrix,
+        ivf_index_search,
+    )
+
+    df, cents, assigns = _sin_index(spark)
+    valid = df.filter("vec_id % 10 = 0")
+    bad = spark.createDataFrame(
+        [(1000, None), (1001, []), (1002, [0.0] * 6),
+         (1003, [float("nan")] + [1.0] * 5),
+         (1004, [float("inf")] + [1.0] * 5)],
+        "vec_id long, embedding array<double>")
+    cmat = ivf_centroid_matrix(cents)
+    want = sorted(map(tuple, ivf_index_search(
+        cents, assigns, valid, k=3, n_probe=3,
+        centroid_matrix=cmat).collect()))
+    assert len(want) == 8 * 3
+    for cap in (100_000, 2):
+        res = ivf_index_search(cents, assigns, valid.unionByName(bad),
+                               k=3, n_probe=3, max_cell_rows=cap,
+                               centroid_matrix=cmat)
+        plan = res._jdf.queryExecution().executedPlan().toString()
+        assert ("FlatMapGroupsInPandas" in plan) == (cap == 2), plan
+        assert sorted(map(tuple, res.collect())) == want
+
+
 def test_skew_split_2d_drops_unprobed_cells(spark):
     """Without precomputed counts the member and probe counts
     inner-join: with probes only in cell 0, no member row of any other
@@ -214,16 +282,20 @@ def test_ivf_index_search_broadcast_plan(spark):
     Arrow pass: the executed plan has exactly
     one MapInPandas and no FlatMapGroupsInPandas, and no exchange input
     carries the vector column ``v`` — only (query_id, nbr_id, cosine)
-    candidates are shuffled."""
+    candidates are shuffled.  An index of 3 × ``defaultParallelism``
+    partitions is served by ``defaultParallelism`` Arrow tasks."""
     from dbt_core_spark.operators.similarity import ivf_index_search
 
+    par = spark.sparkContext.defaultParallelism
     df, cents, assigns = _sin_index(spark)
+    assigns = assigns.repartition(3 * par).localCheckpoint(eager=True)
     out = ivf_index_search(cents, assigns, df.filter("vec_id % 5 = 0"),
                            k=3, n_probe=3)
     qe = out._jdf.queryExecution()
     plan = qe.executedPlan().toString()
     assert plan.count("MapInPandas") == 1, plan
     assert "FlatMapGroupsInPandas" not in plan, plan
+    assert f"Coalesce {par}" in plan, plan
 
     def nodes(p):
         yield p
