@@ -3057,8 +3057,9 @@ def bpe_train_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch_size=8 provably-exact merges per vocabulary-wide pair-count
     scan instead of one Spark job per merge — the production-vocab
     throughput fix, r10 verdict item 2; merge-for-merge identical to
-    bpe_train_distributed, pytest-pinned incl. the created-pair
-    adversarial corpus a naive independent-set batcher gets wrong).
+    the one-merge-per-scan form and to bpe_train, pytest-pinned incl.
+    the created-pair adversarial corpus a naive independent-set batcher
+    gets wrong).
     The vocabulary never reaches the driver (operators/corpus.py:
     bpe_train_batched — collects ≤ scan_top_k pair rows per scan).
     The DuckDB oracle replays all 8 training steps ONE MERGE AT A

@@ -1084,54 +1084,9 @@ def oov_rate(
     )
 
 
-def bpe_train_distributed(
-    df: DataFrame,
-    text_col: str = "text",
-    n_merges: int = 20,
-    checkpoint_every: int = 4,
-) -> list[tuple[str, str]]:
-    """BPE merge training WITHOUT the driver-side vocabulary cap — the
-    100 TB form of ``bpe_train``: the corpus collapses to the
-    word-frequency vocabulary once (the only corpus-scale pass), and
-    every merge step is one DISTRIBUTED pair-count aggregate over the
-    full vocabulary plus a single-row TakeOrdered collect (argmax pair
-    by count desc, then lexicographic — the bpe_train tie rule).  The
-    winning merge applies to the vocabulary as the boundary-safe
-    double-space replace (`_bpe_merge_seq`'s rank step), so a
-    100-million-word vocabulary never reaches the driver.
-
-    Identical output to ``bpe_train`` whenever the cap there is not
-    binding (pytest-pinned), and SQL-replayable per step (the
-    perceptron replayed-training precedent): each step's argmax and
-    replace are plain aggregates and string ops.
-
-    ``checkpoint_every`` seals the evolving vocabulary lineage every k
-    steps — the replace chain otherwise re-derives the corpus
-    wordcount per step.  Returns the ranked merge list for
-    ``bpe_token_counts`` / ``bpe_tokenize``."""
-    state = _bpe_vocab_state(df, text_col)
-    merges: list[tuple[str, str]] = []
-    for step in range(n_merges):
-        # TakeOrdered(1): no global sort materialization
-        top = _bpe_pair_counts(state).orderBy(
-            F.col("cnt").desc(), F.col("a"), F.col("b")).limit(1).collect()
-        if not top:
-            break
-        a, b = top[0]["a"], top[0]["b"]
-        merges.append((a, b))
-        state = state.select(
-            "n",
-            F.replace(F.col("seq"), F.lit(f" {a}  {b} "),
-                      F.lit(f" {a + b} ")).alias("seq"),
-        )
-        if (step + 1) % checkpoint_every == 0:
-            state = state.localCheckpoint(eager=True)
-    return merges
-
-
 def _bpe_vocab_state(df: DataFrame, text_col: str) -> DataFrame:
-    """The one corpus-scale pass shared by the distributed/batched BPE
-    trainers: collapse the corpus to its word-frequency vocabulary with
+    """The one corpus-scale pass of the distributed BPE trainer:
+    collapse the corpus to its word-frequency vocabulary with
     each word exploded to a double-space token sequence (the
     boundary-safe `_bpe_merge_seq` encoding), sealed."""
     return (
@@ -1180,13 +1135,21 @@ def bpe_train_batched(
     scan_top_k: int = 256,
     checkpoint_every: int = 4,
 ) -> list[tuple[str, str]]:
-    """``bpe_train_distributed`` with PROVABLY-EXACT merge batching —
-    the production-throughput form (r10 verdict, item 2): a 32k-merge
-    tokenizer run as one Spark job per merge is ~32k sequential
+    """BPE merge training WITHOUT ``bpe_train``'s collected-vocabulary
+    cap — the 100 TB form of ``bpe_train``, identical to it wherever the
+    cap there is not binding (pytest-pinned).  The corpus collapses to the
+    word-frequency vocabulary once (the only corpus-scale pass); each
+    pair-count scan is one DISTRIBUTED aggregate plus a ≤
+    ``scan_top_k``-row TakeOrdered collect in the bpe_train order
+    (count desc, then lexicographic), and merges apply as the
+    boundary-safe double-space replace (`_bpe_merge_seq`'s rank step),
+    so the vocabulary is never collected.
+
+    PROVABLY-EXACT merge batching (r10 verdict, item 2): one Spark job
+    per merge makes a 32k-merge tokenizer ~32k sequential
     vocabulary-scale jobs; this trainer applies up to ``batch_size``
-    merges per pair-count scan and stays merge-for-merge identical to
-    the 1-merge-per-step form (pytest-pinned on gate and adversarial
-    corpora).
+    merges per scan and stays merge-for-merge identical to the
+    one-merge-per-scan form (``batch_size=1``).
 
     Exactness rule — note a plain greedy independent set ("top-B pairs
     sharing no token") is NOT sufficient: merging (a,b) can CREATE a
@@ -1216,12 +1179,14 @@ def bpe_train_batched(
 
     Batch sizes are corpus-dependent (adjacent top pairs end batches
     early on natural text); the scan count is reported by
-    ``bpe_train_batched_stats`` and measured in SCALING.md.  Collects
-    ≤ ``scan_top_k`` rows per scan — driver-bounded, no vocabulary cap.
+    ``bpe_train_batched_stats`` and measured in SCALING.md.
+    ``checkpoint_every`` seals the evolving vocabulary lineage every k
+    merges — the replace chain otherwise re-derives the corpus
+    wordcount per scan.  Returns the ranked merge list for
+    ``bpe_token_counts`` / ``bpe_tokenize``.
     """
-    merges, _scans = _bpe_train_batched_impl(
-        df, text_col, n_merges, batch_size, scan_top_k, checkpoint_every)
-    return merges
+    return bpe_train_batched_stats(
+        df, text_col, n_merges, batch_size, scan_top_k, checkpoint_every)[0]
 
 
 def bpe_train_batched_stats(
@@ -1234,18 +1199,6 @@ def bpe_train_batched_stats(
 ) -> tuple[list[tuple[str, str]], int]:
     """``bpe_train_batched`` returning ``(merges, n_scans)`` — the
     scheduling-cost observable for SCALING.md (jobs ≈ n_merges / B̄)."""
-    return _bpe_train_batched_impl(
-        df, text_col, n_merges, batch_size, scan_top_k, checkpoint_every)
-
-
-def _bpe_train_batched_impl(
-    df: DataFrame,
-    text_col: str,
-    n_merges: int,
-    batch_size: int,
-    scan_top_k: int,
-    checkpoint_every: int,
-) -> tuple[list[tuple[str, str]], int]:
     if batch_size < 1:
         raise ValueError(f"bpe_train_batched: batch_size must be >= 1, "
                          f"got {batch_size}")
@@ -1333,7 +1286,7 @@ def corpus_profile(
 
     Scale shape: ONE corpus pass into a per-(source, lang) partial
     aggregate plus a per-source distinct-md5 count — the costliest
-    leg, count(distinct) over 16-byte keys, the dedup_exact shuffle
+    leg, count(distinct) over 32-char md5 keys, the dedup_exact shuffle
     shape; the lang argmax runs over the (sources × langs)-sized
     frame, never corpus rows."""
     t = F.col(text_col)

@@ -1,18 +1,29 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-These are engine extensions beyond dbt parity (driver north star,
-SURVEY §7 phase 4): exact dedup, n-gram Jaccard similarity, MinHash+LSH
-near-dup detection, and SimHash fingerprints — all expressed with
-built-in Spark SQL functions (no Python UDFs), so every path stays in
-WholeStageCodegen and scales by partitioning:
+Engine extensions beyond dbt parity (SURVEY §7 phase 4): exact, n-gram
+Jaccard/containment, MinHash+LSH, winnowing and SimHash dedup,
+benchmark decontamination and substring-level span dedup — all
+built-in Spark SQL functions (no Python UDFs).  Each shared job has one
+private helper:
 
-- Hashes are **md5-based** (not Spark's ``hash()``) so results are
-  engine-portable and verifiable bit-for-bit against any SQL oracle.
-- MinHash signatures are computed per-row with higher-order array
-  functions — zero shuffles until the band-bucket join.
-- The LSH band join shuffles on (band_idx, band_hash): at 100 TB that
-  shuffle carries only doc_id + 32 band hashes per doc (~300 B/doc),
-  never the text.
+- ``_gram_seq``: the ordered word n-grams (shifted slices zipped) —
+  distinct in ``word_ngrams``, hashed in order by
+  ``winnow_fingerprints`` and ``_positional_gram_hashes``;
+- ``_shingle_table``: the sealed ``(id, shingles)`` table of the exact
+  pair counts, ``minhash_lsh_pairs`` and ``minhash_index``;
+- ``_minhash_signatures``: xxhash64 each shingle once, then min-reduce
+  ``num_perm`` universal hashes (``_minhash_coefs``) per document in
+  an aggregate; ``_banded`` keys bands by an 8-byte xxhash64 and
+  ``_verify_jaccard`` confirms candidates by exact Jaccard;
+- ``_shingle_rows``: one row per distinct n-gram of a text, the corpus
+  and probe sides of the decontamination legs; ``_probe_shingles`` the
+  distinct probe set; ``_bloom_matches`` is the Bloom prefilter +
+  exact confirm of the batch and streaming Bloom legs, and
+  ``_hit_summary`` the ``(id, n_hits, sample_hit)`` rollup.
+
+Hashes that reach an output (exact dedup, winnowing, SimHash, span
+grams) are md5-derived, so DuckDB oracles match bit-for-bit.  MinHash
+and Bloom hashes only propose candidates that are confirmed exactly.
 """
 
 from __future__ import annotations
@@ -52,8 +63,8 @@ def normalized_words(col: str | Column) -> Column:
     return F.filter(F.split(cleaned, "\\s+"), lambda w: w != "")
 
 
-def word_ngrams(words: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles from a words array (JVM-side).
+def _gram_seq(words: Column, n: int) -> Column:
+    """The ordered word n-grams of a words array, one per start position.
 
     zip_with over n shifted slices, not element_at-in-a-lambda: the
     slice form references ``words`` only n times, so even when Catalyst
@@ -67,7 +78,12 @@ def word_ngrams(words: Column, n: int = 3) -> Column:
     for j in range(1, n):
         z = F.zip_with(z, F.slice(words, j + 1, cnt),
                        lambda x, y: F.concat_ws(" ", x, y))
-    return F.array_distinct(z)
+    return z
+
+
+def word_ngrams(words: Column, n: int = 3) -> Column:
+    """Distinct word n-gram shingles from a words array (JVM-side)."""
+    return F.array_distinct(_gram_seq(words, n))
 
 
 def winnow_fingerprints(
@@ -89,12 +105,6 @@ def winnow_fingerprints(
     hash array is materialized once per row, not re-inlined per window
     (CollapseProject keeps the boundary).  Shuffle-free until the caller
     aggregates: fingerprinting is a pure per-row map."""
-    words = F.col("words")
-    cnt = F.greatest(F.size(words) - k + 1, F.lit(0))
-    grams = F.slice(words, 1, cnt)
-    for j in range(1, k):
-        grams = F.zip_with(grams, F.slice(words, j + 1, cnt),
-                           lambda x, y: F.concat_ws(" ", x, y))
     n = F.size("hs")
     wins = F.when(
         n >= w,
@@ -110,7 +120,7 @@ def winnow_fingerprints(
         .select(F.col(id_col).alias("doc_id"),
                 normalized_words(text_col).alias("words"))
         .filter(F.size("words") >= k)  # cheap filter BELOW the gram expr
-        .select("doc_id", grams.alias("grams"))
+        .select("doc_id", _gram_seq(F.col("words"), k).alias("grams"))
         # md5 in its own projection: _hex_to_int references its input 8×
         # (once per hex digit) — inlined, the digest would be recomputed
         # 8× per gram
@@ -129,8 +139,8 @@ def winnow_fingerprints(
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Keep the lowest-id document per exact text; deterministic (unlike
     ``dropDuplicates``, which keeps an arbitrary row).  One shuffle on the
-    md5 of the text — at scale, hash first so the shuffle key is 16 bytes,
-    not the document."""
+    md5 of the text — at scale, hash first so the shuffle key is a
+    32-char hex digest, not the document."""
     h = F.md5(F.col(text_col))
     w = Window.partitionBy(h).orderBy(F.col(id_col))
     return (
@@ -144,6 +154,34 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 # n-gram Jaccard (exact pairwise, restricted to pairs sharing a shingle)
 # --------------------------------------------------------------------------
 
+def _shingle_table(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+    """The sealed ``(id, shingles)`` table: each document's distinct
+    word n-grams, documents shorter than ``n`` words dropped.
+
+    - two-step projection: materialize the words array BEFORE
+      n-gramming — inlined, the tokenizer would re-evaluate inside
+      every element_at of the transform lambda (measured 30× slower);
+      as separate projections CollapseProject keeps the boundary
+      (multi-referenced non-cheap expr), so tokenization runs once;
+    - filter on size(words), not size(shingles), so predicate pushdown
+      can't inline the full n-gram expression into the filter;
+    - SEALED: every caller reads it from several branches (pair counts:
+      sizes + both self-join sides; MinHash: signatures + both verify
+      sides); without the checkpoint Catalyst replays the regex
+      tokenizer + n-gram HOF once per branch (same defect the r3
+      verdict flagged in the BLAS kernels).  Lazy: the first action to
+      touch it materializes and persists the partitions in the same
+      job — one job instead of an eager checkpoint job + that action
+      (the connected_components discipline; optimization r11).
+    """
+    return (
+        ensure_parallelism(df)
+        .select(F.col(id_col).alias("id"), normalized_words(text_col).alias("words"))
+        .filter(F.size("words") >= n)
+        .select("id", word_ngrams(F.col("words"), n).alias("shingles"))
+    ).localCheckpoint(eager=False)
+
+
 def _shingle_pair_counts(
     df: DataFrame,
     text_col: str,
@@ -153,24 +191,8 @@ def _shingle_pair_counts(
 ) -> DataFrame:
     """Shared machinery for exact pairwise shingle-set similarity:
     (id_a, id_b, shared, n_a, n_b) for every pair of documents sharing
-    at least one word-n-gram shingle (a < b).
-
-    - two-step projection: materialize the words array BEFORE
-      n-gramming — inlined, the tokenizer would re-evaluate inside
-      every element_at of the transform lambda (measured 30× slower);
-    - filter on size(words), not size(shingles), so predicate pushdown
-      can't inline the full n-gram expression into the filter;
-    - SEALED: shingled feeds sizes + both sides of the self-join —
-      four downstream branches; without the checkpoint Catalyst
-      replays the regex tokenizer + n-gram HOF once per branch (same
-      defect the r3 verdict flagged in the BLAS kernels).
-    """
-    shingled = (
-        ensure_parallelism(df)
-        .select(F.col(id_col).alias("id"), normalized_words(text_col).alias("words"))
-        .filter(F.size("words") >= n)
-        .select("id", word_ngrams(F.col("words"), n).alias("shingles"))
-    ).localCheckpoint(eager=False)
+    at least one word-n-gram shingle (a < b)."""
+    shingled = _shingle_table(df, text_col, id_col, n)
     sizes = shingled.select("id", F.size("shingles").alias("n_sh"))
     pairs_src = shingled.select(
         "id", F.explode("shingles").alias("sh")
@@ -258,17 +280,86 @@ def ngram_containment_pairs(
 # MinHash + LSH
 # --------------------------------------------------------------------------
 
-def minhash_signature(shingles: Column, num_perm: int = 64) -> Column:
-    """num_perm-wide MinHash signature: permutation *i* is the lexical min
-    of ``md5(i || '_' || shingle)`` — portable, deterministic, computed
-    entirely per-row (no shuffle, no UDF)."""
-    return F.array(
+_MERSENNE = (1 << 31) - 1  # modulus of the MinHash universal hashes
+
+
+def _minhash_coefs(num_perm: int) -> list[tuple[int, int]]:
+    """Deterministic universal-hash coefficients shared by every MinHash
+    signer (one Random(42) family — an index built yesterday matches a
+    batch signed today)."""
+    import random as _random
+
+    rnd = _random.Random(42)
+    return [(rnd.randrange(1, _MERSENNE), rnd.randrange(0, _MERSENNE))
+            for _ in range(num_perm)]
+
+
+def _minhash_signatures(shingled: DataFrame, num_perm: int) -> DataFrame:
+    """MinHash signatures ``(id, s0..s{num_perm-1})`` of a sealed
+    ``(id, shingles)`` table.
+
+    Aggregate form: explode shingles, take num_perm mins per doc,
+    computed in parallel across the exploded rows with map-side partial
+    aggregation — unlike the per-row array form, whose nested
+    transforms serialize on one expression tree per document (measured
+    10× slower).
+
+    Each shingle is string-hashed ONCE (xxhash64); the num_perm
+    permutations are universal hashes (a_i·h + b_i mod 2³¹−1) over that
+    integer — 64 multiply-adds instead of 64 string hashes (measured ~2×
+    on the signature stage), and products of two 31-bit values cannot
+    overflow ANSI bigint math.  The hash family is an INTERNAL
+    candidate-generation detail: output pairs are verified with exact
+    Jaccard, so results are hash-family-independent (P[miss at j≥0.7]
+    ≈ 5e-10 with 64/32 banding)."""
+    p = _MERSENNE
+    ex = shingled.select("id", F.explode("shingles").alias("sh")).select(
+        # pmod, not abs(x)%p: abs(Long.MIN_VALUE) overflows ANSI math
+        "id", F.pmod(F.xxhash64("sh"), F.lit(p)).alias("h")
+    )
+    return ex.groupBy("id").agg(
         *[
-            F.array_min(
-                F.transform(shingles, lambda s: F.md5(F.concat(F.lit(f"{i}_"), s)))
-            )
-            for i in range(num_perm)
+            F.min((F.lit(a) * F.col("h") + F.lit(b)) % p).alias(f"s{i}")
+            for i, (a, b) in enumerate(_minhash_coefs(num_perm))
         ]
+    )
+
+
+def _banded(index: DataFrame, num_perm: int, bands: int) -> DataFrame:
+    """LSH band rows ``(id, band, h)``: each band's r = num_perm/bands
+    signature values hashed to one 8-byte xxhash64 key."""
+    r = num_perm // bands
+    band_cols = F.array(
+        *[
+            F.struct(
+                F.lit(i).alias("band"),
+                F.xxhash64(*[F.col(f"s{i * r + j}") for j in range(r)]).alias("h"),
+            )
+            for i in range(bands)
+        ]
+    )
+    return index.select("id", F.explode(band_cols).alias("b")).select(
+        "id", F.col("b.band").alias("band"), F.col("b.h").alias("h")
+    )
+
+
+def _verify_jaccard(pairs: DataFrame, left: DataFrame, right: DataFrame,
+                    left_id: str, right_id: str, threshold: float) -> DataFrame:
+    """Exact-Jaccard verify of candidate ``pairs (left_id, right_id)``
+    against the ``(id, shingles)`` tables ``left`` / ``right``:
+    ``(left_id, right_id, jaccard ≥ threshold)``."""
+    return (
+        pairs.join(left.select(F.col("id").alias(left_id),
+                               F.col("shingles").alias("sh_l")), left_id)
+        .join(right.select(F.col("id").alias(right_id),
+                           F.col("shingles").alias("sh_r")), right_id)
+        .withColumn(
+            "jaccard",
+            F.size(F.array_intersect("sh_l", "sh_r"))
+            / F.size(F.array_union("sh_l", "sh_r")),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select(left_id, right_id, "jaccard")
     )
 
 
@@ -287,75 +378,17 @@ def minhash_lsh_pairs(
     rows-per-band r = num_perm/bands; P(candidate) = 1-(1-j^r)^bands —
     with the 64/32 default, a pair at j=0.7 is caught with
     P ≈ 1-5e-10, so verified output matches exact Jaccard pairing.
-    Scale shape: per-row signature (no shuffle) → explode 32 bands →
-    shuffle on 16-byte band hash → tiny bucket self-joins → verify only
-    candidates (the expensive exact Jaccard runs on ~0.1% of pairs).
+    Scale shape: signature aggregate (map-side partial mins) → explode
+    32 bands → shuffle on the 8-byte band hash → tiny bucket self-joins
+    → verify only candidates (the expensive exact Jaccard runs on ~0.1%
+    of pairs).  At warehouse scale the sealed shingle table is the LSH
+    "index build" stage.
     """
-    r = num_perm // bands
-    # two-step projection: materialize the words array BEFORE n-gramming.
-    # Inlined, the tokenizer expression would be re-evaluated inside every
-    # element_at of the transform lambda (~3x per gram) — measured 30x
-    # slower.  As separate projections CollapseProject keeps the boundary
-    # (multi-referenced non-cheap expr), so tokenization runs once per row.
-    # filter on size(words), not size(shingles): predicate pushdown would
-    # inline the full n-gram expression into the filter otherwise
-    shingled = (
-        ensure_parallelism(df)
-        .select(F.col(id_col).alias("id"), normalized_words(text_col).alias("words"))
-        .filter(F.size("words") >= n)
-        .select("id", word_ngrams(F.col("words"), n).alias("shingles"))
-        # seal the shingle table: three consumers below (signatures +
-        # both sides of candidate verification) would each re-tokenize
-        # and re-n-gram the corpus otherwise.  At warehouse scale this
-        # materialization is the LSH "index build" stage.  Lazy: the
-        # signature aggregate (the first action to touch it)
-        # materializes and persists the partitions in the same job —
-        # one job instead of an eager checkpoint job + the aggregate
-        # (the connected_components discipline; optimization r11).
-        .localCheckpoint(eager=False)
-    )
-    # Aggregate-form signature: explode shingles, take num_perm mins per
-    # doc, computed in parallel across the exploded rows with map-side
-    # partial aggregation — unlike the per-row array form, whose nested
-    # transforms serialize on one expression tree per document (measured
-    # 10× slower).
-    #
-    # Each shingle is string-hashed ONCE (xxhash64); the num_perm
-    # permutations are universal hashes (a_i·h + b_i mod 2³¹−1) over
-    # that integer — 64 multiply-adds instead of 64 string hashes
-    # (measured ~2× on the signature stage), and products of two 31-bit
-    # values cannot overflow ANSI bigint math.  The hash family is an
-    # INTERNAL candidate-generation detail: output pairs are verified
-    # with exact Jaccard, so results are hash-family-independent
-    # (P[miss at j≥0.7] ≈ 5e-10 with 64/32 banding).
-    p = (1 << 31) - 1  # Mersenne prime
-    rnd = __import__("random").Random(42)
-    coef = [(rnd.randrange(1, p), rnd.randrange(0, p)) for _ in range(num_perm)]
-    ex = (
-        shingled.select("id", F.explode("shingles").alias("sh"))
-        # pmod, not abs(x)%p: abs(Long.MIN_VALUE) overflows ANSI math
-        .select("id", F.pmod(F.xxhash64("sh"), F.lit(p)).alias("h"))
-    )
-    sig = ex.groupBy("id").agg(
-        *[
-            F.min((F.lit(a) * F.col("h") + F.lit(b)) % p).alias(f"s{i}")
-            for i, (a, b) in enumerate(coef)
-        ]
-        # sealed: sig feeds the banding AND the agreement prefilter —
-        # unsealed, the explode + 64-way min aggregate executes twice
-    ).localCheckpoint(eager=False)
-    band_cols = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.xxhash64(*[F.col(f"s{i * r + j}") for j in range(r)]).alias("h"),
-            )
-            for i in range(bands)
-        ]
-    )
-    banded = sig.select("id", F.explode(band_cols).alias("b")).select(
-        "id", F.col("b.band").alias("band"), F.col("b.h").alias("h")
-    )
+    shingled = _shingle_table(df, text_col, id_col, n)
+    # sealed: sig feeds the banding AND the agreement prefilter —
+    # unsealed, the explode + 64-way min aggregate executes twice
+    sig = _minhash_signatures(shingled, num_perm).localCheckpoint(eager=False)
+    banded = _banded(sig, num_perm, bands)
     a = banded.alias("a")
     b = banded.alias("b")
     candidates = (
@@ -400,19 +433,8 @@ def minhash_lsh_pairs(
         .filter(F.col("_agree") >= min_agree)
         .select("id_a", "id_b")
     )
-    sh = shingled
-    verified = (
-        prefiltered.join(sh.withColumnsRenamed({"id": "id_a", "shingles": "sh_a"}), "id_a")
-        .join(sh.withColumnsRenamed({"id": "id_b", "shingles": "sh_b"}), "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    return verified
+    return _verify_jaccard(prefiltered, shingled, shingled, "id_a", "id_b",
+                           threshold)
 
 
 def connected_components(
@@ -593,20 +615,30 @@ def decontaminate(
     the inner join; one corpus-side explode, no pairwise comparison.
     Returns (id, n_hits, sample_hit) per CONTAMINATED document —
     anti-join the ids to clean the corpus."""
-    corpus = df.select(
-        F.col(id_col),
-        F.explode(
-            word_ngrams(normalized_words(F.col(text_col)), n)
-        ).alias("shingle"),
+    corpus = df.select(F.col(id_col), _shingle_rows(text_col, n))
+    return _hit_summary(
+        corpus.join(_probe_shingles(probes, probe_text_col, n), "shingle", "inner"),
+        id_col,
     )
-    probe_set = probes.select(
-        F.explode(
-            word_ngrams(normalized_words(F.col(probe_text_col)), n)
-        ).alias("shingle")
-    ).distinct()
+
+
+def _shingle_rows(text_col: str, n: int) -> Column:
+    """One ``shingle`` row per distinct word n-gram of a text column."""
+    return F.explode(
+        word_ngrams(normalized_words(F.col(text_col)), n)).alias("shingle")
+
+
+def _probe_shingles(probes: DataFrame, probe_text_col: str, n: int) -> DataFrame:
+    """The distinct probe (benchmark) n-gram set ``(shingle)`` the
+    whole-document decontamination legs check corpus n-grams against."""
+    return probes.select(_shingle_rows(probe_text_col, n)).distinct()
+
+
+def _hit_summary(matches: DataFrame, id_col: str) -> DataFrame:
+    """Per contaminated document ``(id, n_hits, sample_hit)`` from its
+    ``(id, shingle)`` probe matches."""
     return (
-        corpus.join(probe_set, "shingle", "inner")
-        .groupBy(id_col)
+        matches.groupBy(id_col)
         .agg(
             F.count("*").alias("n_hits"),
             F.min("shingle").alias("sample_hit"),
@@ -617,6 +649,35 @@ def decontaminate(
             "sample_hit",
         )
     )
+
+
+def _bloom_matches(shingled: DataFrame, probes: DataFrame, probe_text_col: str,
+                   n: int, bits_per_key: int, num_hashes: int) -> DataFrame | None:
+    """The Bloom decontamination leg shared by the batch and streaming
+    operators: ``shingled`` ``(id, shingle)`` rows prefiltered by a
+    Bloom bitset of the probe n-gram set, then confirmed by an exact
+    inner join against that set — ``(shingle, id)`` match rows.  None
+    when the probe set is empty (nothing can be contaminated)."""
+    probe_set = (
+        _probe_shingles(
+            ensure_parallelism(probes),  # narrow probe file → 1-core explode
+            probe_text_col, n)
+        # lazy seal: the count() right below materializes and persists
+        # the shingle set in the SAME job — an eager checkpoint paid a
+        # separate full job first (optimization r11)
+        .localCheckpoint(eager=False)
+    )
+    n_keys = probe_set.count()
+    if n_keys == 0:
+        return None
+    bits_df, might_contain = _bloom_bitset(
+        probe_set, n_keys, bits_per_key, num_hashes)
+    candidates = (
+        shingled.crossJoin(F.broadcast(bits_df))  # single-row scalar broadcast
+        .filter(might_contain(F.col("shingle")))
+        .drop("bf")
+    )
+    return candidates.join(probe_set, "shingle", "inner")
 
 
 def _bloom_bitset(
@@ -726,66 +787,16 @@ def decontaminate_bloom(
     ref parity: same surface as decontaminate (GPT-3 appendix C
     recipe); reference has no engine analog (dbt-core executes no
     queries)."""
-    probe_set = (
-        ensure_parallelism(probes)  # narrow probe file → 1-core explode
-        .select(
-            F.explode(
-                word_ngrams(normalized_words(F.col(probe_text_col)), n)
-            ).alias("shingle")
-        )
-        .distinct()
-        # lazy seal: the count() right below materializes and persists
-        # the shingle set in the SAME job — an eager checkpoint paid a
-        # separate full job first (optimization r11)
-        .localCheckpoint(eager=False)
-    )
-    n_keys = probe_set.count()
-    out_schema = (
-        f"{id_col} bigint, n_hits bigint, sample_hit string"
-    )
-    if n_keys == 0:
-        return df.sparkSession.createDataFrame([], out_schema)
-    bits_df, might_contain = _bloom_bitset(
-        probe_set, n_keys, bits_per_key, num_hashes)
-
-    # widen a narrow corpus scan first: the shingle explode + 7-hash
-    # membership filter is CPU-heavy per row, and a single-file corpus
-    # would otherwise run it on one core (no-op at production width)
-    corpus = ensure_parallelism(df).select(
-        F.col(id_col),
-        F.explode(
-            word_ngrams(normalized_words(F.col(text_col)), n)
-        ).alias("shingle"),
-    )
-    candidates = (
-        corpus.join(F.broadcast(bits_df))  # single-row scalar broadcast
-        .filter(might_contain(F.col("shingle")))
-        .drop("bf")
-    )
-    return (
-        candidates.join(probe_set, "shingle", "inner")
-        .groupBy(id_col)
-        .agg(
-            F.count("*").alias("n_hits"),
-            F.min("shingle").alias("sample_hit"),
-        )
-        .select(
-            id_col,
-            F.col("n_hits").cast("bigint").alias("n_hits"),
-            "sample_hit",
-        )
-    )
-
-
-def _minhash_coefs(num_perm: int) -> list[tuple[int, int]]:
-    """Deterministic universal-hash coefficients shared by index build
-    and match (same Random(42) family as minhash_lsh_pairs — an index
-    built yesterday matches a batch signed today)."""
-    import random as _random
-
-    p = (1 << 31) - 1
-    rnd = _random.Random(42)
-    return [(rnd.randrange(1, p), rnd.randrange(0, p)) for _ in range(num_perm)]
+    matches = _bloom_matches(
+        # widen a narrow corpus scan first: the shingle explode + 7-hash
+        # membership filter is CPU-heavy per row, and a single-file corpus
+        # would otherwise run it on one core (no-op at production width)
+        ensure_parallelism(df).select(F.col(id_col), _shingle_rows(text_col, n)),
+        probes, probe_text_col, n, bits_per_key, num_hashes)
+    if matches is None:
+        return df.sparkSession.createDataFrame(
+            [], f"{id_col} bigint, n_hits bigint, sample_hit string")
+    return _hit_summary(matches, id_col)
 
 
 def minhash_index(
@@ -802,26 +813,11 @@ def minhash_index(
     the stored index (minhash_match) without re-tokenizing 100 TB of
     history.  Write this DataFrame as a table partitioned however the
     corpus is partitioned; only the new batch is ever signed again."""
-    p = (1 << 31) - 1
-    shingled = (
-        ensure_parallelism(df)
-        .select(F.col(id_col).alias("id"), normalized_words(text_col).alias("words"))
-        .filter(F.size("words") >= n)
-        .select("id", word_ngrams(F.col("words"), n).alias("shingles"))
-        # lazy: the index seal below materializes shingles + signatures
-        # in ONE job (eager here scheduled a dedicated tokenize job per
-        # index build; optimization r11)
-        .localCheckpoint(eager=False)
-    )
-    ex = shingled.select("id", F.explode("shingles").alias("sh")).select(
-        "id", F.pmod(F.xxhash64("sh"), F.lit(p)).alias("h")
-    )
-    sig = ex.groupBy("id").agg(
-        *[
-            F.min((F.lit(a) * F.col("h") + F.lit(b)) % p).alias(f"s{i}")
-            for i, (a, b) in enumerate(_minhash_coefs(num_perm))
-        ]
-    )
+    # lazy seals: the index seal below materializes shingles +
+    # signatures in ONE job (eager here scheduled a dedicated tokenize
+    # job per index build; optimization r11)
+    shingled = _shingle_table(df, text_col, id_col, n)
+    sig = _minhash_signatures(shingled, num_perm)
     # sealed: every consumer (minhash_match reads each index TWICE —
     # the banded candidate side AND the exact-Jaccard shingle side;
     # delete anti-joins then matches) replayed the explode + 64-way min
@@ -832,22 +828,6 @@ def minhash_index(
     # This IS the "persistable index" contract: one materialization,
     # signature rows never recomputed.
     return shingled.join(sig, "id").localCheckpoint(eager=False)
-
-
-def _banded(index: DataFrame, num_perm: int, bands: int) -> DataFrame:
-    r = num_perm // bands
-    band_cols = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.xxhash64(*[F.col(f"s{i * r + j}") for j in range(r)]).alias("h"),
-            )
-            for i in range(bands)
-        ]
-    )
-    return index.select("id", F.explode(band_cols).alias("b")).select(
-        "id", F.col("b.band").alias("band"), F.col("b.h").alias("h")
-    )
 
 
 def minhash_match(
@@ -877,27 +857,8 @@ def minhash_match(
         .select(F.col("c.id").alias("corpus_id"), F.col("n.id").alias("batch_id"))
         .distinct()
     )
-    verified = (
-        candidates
-        .join(
-            corpus_index.select(F.col("id").alias("corpus_id"),
-                                F.col("shingles").alias("sh_c")),
-            "corpus_id",
-        )
-        .join(
-            batch_index.select(F.col("id").alias("batch_id"),
-                               F.col("shingles").alias("sh_b")),
-            "batch_id",
-        )
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_c", "sh_b"))
-            / F.size(F.array_union("sh_c", "sh_b")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("corpus_id", "batch_id", "jaccard")
-    )
-    return verified
+    return _verify_jaccard(candidates, corpus_index, batch_index,
+                           "corpus_id", "batch_id", threshold)
 
 
 def minhash_index_delete(
@@ -952,10 +913,11 @@ def dup_ngram_spans(
 
     Scale shape — wordcount-class, nothing quadratic:
 
-    - positional k-grams come from the same shifted-slice zip_with used
-      by :func:`word_ngrams` (linear, no element_at re-evaluation);
+    - positional k-grams come from the same shifted-slice sequence
+      (``_gram_seq``) :func:`word_ngrams` uses (linear, no element_at
+      re-evaluation);
     - each gram is md5-hashed BEFORE the shuffle, so the global
-      distinct-doc count shuffles 16-byte keys, never k-word strings;
+      distinct-doc count shuffles 32-char digests, never k-word strings;
     - the duplicated-gram set (≪ corpus gram count — only grams seen in
       ≥ min_docs docs) comes back via a left-semi join on the hash;
     - span merging is a per-document window (running max of span end →
@@ -983,22 +945,18 @@ def _positional_gram_hashes(
 ) -> DataFrame:
     """Per-document positional k-gram hashes ``(id, start, gh)`` —
     1-based word index into the normalized token stream, md5 of the
-    k-word gram.  The shifted-slice zip_with keeps it linear (no
-    element_at re-evaluation), the md5 happens BEFORE any shuffle so
-    downstream joins carry 16-byte keys, and the result is SEALED: it
+    k-word gram.  ``_gram_seq`` keeps it linear (no element_at
+    re-evaluation), the md5 happens BEFORE any shuffle so downstream
+    joins carry fixed 32-char digests, and the result is SEALED: it
     feeds two branches in every caller (count + membership probe for
     dup spans; probe join + span merge for contamination)."""
     words = ensure_parallelism(
         df.filter(F.col(text_col).isNotNull())
     ).select(F.col(id_col), normalized_words(text_col).alias("ws"))
-    cnt = F.greatest(F.size("ws") - k + 1, F.lit(0))
-    z = F.slice(F.col("ws"), 1, cnt)
-    for j in range(1, k):
-        z = F.zip_with(z, F.slice(F.col("ws"), j + 1, cnt),
-                       lambda x, y: F.concat_ws(" ", x, y))
     return (
         words.filter(F.size("ws") >= k)
-        .select(F.col(id_col), F.posexplode(z).alias("p0", "gram"))
+        .select(F.col(id_col),
+                F.posexplode(_gram_seq(F.col("ws"), k)).alias("p0", "gram"))
         .select(
             id_col,
             (F.col("p0") + 1).cast("bigint").alias("start"),
@@ -1071,7 +1029,7 @@ def contamination_spans(
     span_words, n_grams)``.
 
     Scale shape: corpus-side positional n-grams are the shared
-    ``_positional_gram_hashes`` pass (linear, 16-byte keys, sealed);
+    ``_positional_gram_hashes`` pass (linear, 32-char md5 keys, sealed);
     the probe side reduces to its DISTINCT shingle hashes — probe
     corpora (benchmarks) are small relative to training corpora, so
     the left-semi membership join broadcasts; span merging is the
@@ -1080,11 +1038,8 @@ def contamination_spans(
     grams = _positional_gram_hashes(df, text_col, id_col, n)
     probe_sh = (
         ensure_parallelism(probes.filter(F.col(probe_text_col).isNotNull()))
-        .select(
-            F.explode(
-                word_ngrams(normalized_words(F.col(probe_text_col)), n)
-            ).alias("shingle")
-        )
+        .select(_shingle_rows(probe_text_col, n))
+        # distinct on the md5 join key, so the set arrives partitioned by it
         .select(F.md5("shingle").alias("gh"))
         .distinct()
     )

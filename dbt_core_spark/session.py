@@ -25,8 +25,11 @@ def get_spark(
     master: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with engine defaults."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Build (or reuse) a SparkSession with engine defaults.
+
+    Local mode runs one task slot and one shuffle partition per host
+    CPU (``os.cpu_count()``); ``SPARK_GRAFT_CPUS`` overrides the count."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")

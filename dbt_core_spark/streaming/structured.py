@@ -243,9 +243,10 @@ def streaming_decontaminate(
     STATELESS by construction, so it runs in append mode with zero
     streaming state and no watermark: a document's shingles are
     row-local, the Bloom bitset (built ONCE from the static probe side
-    at plan time — ``dedup._bloom_bitset``) rides a one-row broadcast
-    cross join, and the exact confirm is a stream-static inner join
-    against the distinct probe shingles.  Emits the MATCH stream
+    at plan time — ``dedup._bloom_matches``, the batch leg's code) rides
+    a one-row broadcast cross join, and the exact confirm is a
+    stream-static inner join against the distinct probe shingles.
+    Emits the MATCH stream
     ``(id, shingle)`` — one row per (document, contaminated shingle),
     exactly the rows batch decontaminate aggregates into n_hits;
     downstream either counts per doc or anti-joins the distinct ids to
@@ -253,44 +254,14 @@ def streaming_decontaminate(
     operator's: shingle explode + 7 JVM hash probes + ~fp·batch
     confirm-join rows.  Returns an empty-schema stream when the probe
     corpus is empty (nothing can be contaminated)."""
-    from dbt_core_spark.operators.dedup import (
-        _bloom_bitset,
-        ensure_parallelism,
-        normalized_words,
-        word_ngrams,
-    )
+    from dbt_core_spark.operators.dedup import _bloom_matches, _shingle_rows
 
-    probe_set = (
-        ensure_parallelism(probes)
-        .select(
-            F.explode(
-                word_ngrams(normalized_words(F.col(probe_text_col)), n)
-            ).alias("shingle")
-        )
-        .distinct()
-        # lazy seal: the count() right below materializes and persists
-        # the shingle set in the SAME job (optimization r11)
-        .localCheckpoint(eager=False)
-    )
-    n_keys = probe_set.count()
-    shingled = stream.select(
-        F.col(id_col),
-        F.explode(
-            word_ngrams(normalized_words(F.col(text_col)), n)
-        ).alias("shingle"),
-    )
-    if n_keys == 0:
+    shingled = stream.select(F.col(id_col), _shingle_rows(text_col, n))
+    matches = _bloom_matches(
+        shingled, probes, probe_text_col, n, bits_per_key, num_hashes)
+    if matches is None:
         return shingled.filter(F.lit(False))
-    bits_df, might_contain = _bloom_bitset(
-        probe_set, n_keys, bits_per_key, num_hashes)
-    candidates = (
-        shingled.crossJoin(F.broadcast(bits_df))
-        .filter(might_contain(F.col("shingle")))
-        .drop("bf")
-    )
-    return candidates.join(probe_set, "shingle", "inner").select(
-        id_col, "shingle"
-    )
+    return matches.select(id_col, "shingle")
 
 
 def serve_write_batch(result: DataFrame, out_path: str,

@@ -3,12 +3,13 @@ across the ×1/×10/×100 perturbed-docs decades (the scale_probe
 replicate_docs corpus — within-replica vocabulary structure preserved,
 cross-replica text diverges, so the vocabulary grows ~linearly).
 
-The observable is SCHEDULING COST: the sequential trainer runs one
-vocabulary-scale Spark job per merge (a 32k-merge production tokenizer
-= ~32k sequential jobs); the batched trainer certifies up to B merges
-per pair-count scan with the exact-prefix rule (corpus.py:
-bpe_train_batched — merge-for-merge identical, pytest-pinned) and runs
-n_merges/B̄ scans, B̄ corpus-dependent.
+The observable is SCHEDULING COST: the sequential trainer
+(``batch_size=1``) runs one vocabulary-scale pair-count scan per merge
+(a 32k-merge production tokenizer = ~32k sequential jobs); the batched
+trainer certifies up to B merges per pair-count scan with the
+exact-prefix rule (corpus.py: bpe_train_batched — merge-for-merge
+identical, pytest-pinned) and runs n_merges/B̄ scans, B̄
+corpus-dependent.
 
 Usage: PYTHONPATH=/root/repo python3 scripts/bpe_probe.py
 """
@@ -21,10 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from dbt_core_spark.operators.corpus import (  # noqa: E402
-    bpe_train_batched_stats,
-    bpe_train_distributed,
-)
+from dbt_core_spark.operators.corpus import bpe_train_batched_stats  # noqa: E402
 from dbt_core_spark.session import get_spark  # noqa: E402
 
 N_MERGES = 32
@@ -44,7 +42,8 @@ def main() -> None:
         docs = spark.read.parquet(replicate_docs(spark, factor))
         n = docs.count()
         t0 = time.time()
-        seq = bpe_train_distributed(docs, n_merges=N_MERGES)
+        seq, seq_scans = bpe_train_batched_stats(
+            docs, n_merges=N_MERGES, batch_size=1)
         t_seq = time.time() - t0
         t0 = time.time()
         merges, scans = bpe_train_batched_stats(
@@ -52,7 +51,7 @@ def main() -> None:
         t_bat = time.time() - t0
         assert merges == seq, f"x{factor}: batched != sequential"
         print(
-            f"x{factor}: docs={n} seq_jobs={N_MERGES} seq_wall={t_seq:.2f}s"
+            f"x{factor}: docs={n} seq_scans={seq_scans} seq_wall={t_seq:.2f}s"
             f" batched_scans={scans} batched_wall={t_bat:.2f}s"
             f" avg_batch={len(merges) / scans:.2f} equal=True"
         )

@@ -2719,14 +2719,15 @@ def test_bpe_merge_application_is_token_boundary_safe(spark):
 
 
 @_mark_slow
-def test_bpe_train_distributed_equals_driver_trainer(spark):
-    """The uncapped distributed trainer must reproduce bpe_train
+def test_bpe_train_batched_b1_equals_bpe_train(spark):
+    """The uncapped distributed trainer, one merge per scan
+    (bpe_train_batched at batch_size=1), must reproduce bpe_train
     exactly whenever the driver trainer's max_words cap is not binding
     — same merges, same order, ties included — and keep going past the
     point where a tiny corpus runs out of pairs."""
     from dbt_core_spark.operators.corpus import (
         bpe_train,
-        bpe_train_distributed,
+        bpe_train_batched,
     )
 
     df = spark.createDataFrame(
@@ -2734,11 +2735,11 @@ def test_bpe_train_distributed_equals_driver_trainer(spark):
          for i in range(3)] + [(99, "zz qq zz")],
         "doc_id long, text string")
     for n in (3, 8):
-        assert (bpe_train_distributed(df, n_merges=n)
+        assert (bpe_train_batched(df, n_merges=n, batch_size=1)
                 == bpe_train(df, n_merges=n, max_words=100_000)), n
     # pair exhaustion: a one-word corpus stops early on both
     tiny = spark.createDataFrame([(1, "ab")], "doc_id long, text string")
-    assert (bpe_train_distributed(tiny, n_merges=5)
+    assert (bpe_train_batched(tiny, n_merges=5, batch_size=1)
             == bpe_train(tiny, n_merges=5))
 
 
@@ -2827,21 +2828,43 @@ def test_bm25_constants_rejects_unstamped_rows_and_self_union(spark):
     assert _bm25_constants(bidx) is not None
 
 
+# a bpe_train vocabulary cap no test corpus reaches, so bpe_train is
+# the exact sequential reference for the distributed trainer
+_BPE_UNCAPPED = 1_000_000
+
+
+def test_bpe_train_batched_created_pair_tiny(spark):
+    """Quick-tier pin of batched ≡ sequential BPE on the created-pair
+    corpus ("x a b"×10 + "c d"×9): merging (a, b) creates (x, ab),
+    which outranks (c, d), so every batch size must stop its batch
+    there and reproduce bpe_train merge for merge."""
+    from dbt_core_spark.operators.corpus import bpe_train, bpe_train_batched
+
+    df = spark.createDataFrame(
+        [(i, "xab") for i in range(10)] + [(100 + i, "cd") for i in range(9)],
+        "doc_id long, text string")
+    seq = bpe_train(df, n_merges=4, max_words=_BPE_UNCAPPED)
+    assert seq[:2] == [("a", "b"), ("x", "ab")]
+    for bs in (1, 2, 8):
+        assert bpe_train_batched(df, n_merges=4, batch_size=bs) == seq, bs
+
+
 @_mark_slow
 def test_bpe_train_batched_equals_sequential(spark, sf_dir):
     """The r10 verdict item 2 'Done' pin: bpe_train_batched(B=8) is
-    merge-for-merge identical to bpe_train_distributed on the GATE
-    corpus (the full documents table bpe_train_docs trains on), and on
-    mixed natural-text corpora, at several batch sizes — while running
-    no more pair-count scans than merges."""
+    merge-for-merge identical to the sequential reference trainer
+    (bpe_train, its vocabulary cap not binding) on the GATE corpus (the
+    full documents table bpe_train_docs trains on), and on mixed
+    natural-text corpora, at several batch sizes — while running no
+    more pair-count scans than merges."""
     from dbt_core_spark.operators.corpus import (
+        bpe_train,
         bpe_train_batched,
         bpe_train_batched_stats,
-        bpe_train_distributed,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    seq = bpe_train_distributed(docs, n_merges=16)
+    seq = bpe_train(docs, n_merges=16, max_words=_BPE_UNCAPPED)
     for bs in (2, 4, 8):
         assert bpe_train_batched(docs, n_merges=16, batch_size=bs) == seq, bs
     merges, scans = bpe_train_batched_stats(docs, n_merges=16, batch_size=8)
@@ -2852,7 +2875,7 @@ def test_bpe_train_batched_equals_sequential(spark, sf_dir):
         [(i, "the then there and other another xab aaaa qq zz")
          for i in range(4)] + [(99, "banana bandana cabana")],
         "doc_id long, text string")
-    seq2 = bpe_train_distributed(mixed, n_merges=12)
+    seq2 = bpe_train(mixed, n_merges=12, max_words=_BPE_UNCAPPED)
     assert bpe_train_batched(mixed, n_merges=12, batch_size=8) == seq2
 
 
@@ -2866,14 +2889,14 @@ def test_bpe_train_batched_rejects_naive_independent_set(spark):
     exact batcher must stop the batch instead and match sequential
     output, at every batch size."""
     from dbt_core_spark.operators.corpus import (
+        bpe_train,
         bpe_train_batched,
-        bpe_train_distributed,
     )
 
     rows = [(i, "xab") for i in range(10)] + \
            [(100 + i, "cd") for i in range(9)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    seq = bpe_train_distributed(df, n_merges=4)
+    seq = bpe_train(df, n_merges=4, max_words=_BPE_UNCAPPED)
     assert seq[:2] == [("a", "b"), ("x", "ab")]  # the trap, confirmed
     for bs in (2, 4, 8):
         assert bpe_train_batched(df, n_merges=4, batch_size=bs) == seq, bs
@@ -2887,8 +2910,8 @@ def test_bpe_train_batched_fuzz_vs_sequential(spark):
     tokens between frequent words) — batched must equal sequential on
     every draw; ties and created-pair hazards are the point."""
     from dbt_core_spark.operators.corpus import (
+        bpe_train,
         bpe_train_batched,
-        bpe_train_distributed,
     )
 
     x = 7
@@ -2901,7 +2924,7 @@ def test_bpe_train_batched_fuzz_vs_sequential(spark):
             w2 = words[(x >> 8) % len(words)]
             rows.append((trial * 100 + i, f"{w1} {w2}"))
         df = spark.createDataFrame(rows, "doc_id long, text string")
-        seq = bpe_train_distributed(df, n_merges=10)
+        seq = bpe_train(df, n_merges=10, max_words=_BPE_UNCAPPED)
         got = bpe_train_batched(df, n_merges=10, batch_size=6)
         assert got == seq, (trial, got, seq)
 
@@ -3316,12 +3339,13 @@ def oracle_con(sf_dir):
     con.close()
 
 
-# The embedding-similarity (IVF/ANN/dedup/serve) gates and the text
-# gates below run in the quick tier: they re-prove the shared BLAS
-# kernels of operators/similarity.py and the shared text kernels of
-# operators/textstats.py against their oracles on every plain test run
-# (~80 s and ~61 s of Spark time at sf0.001 on 4 vCPUs).  Every other
-# gate stays in the slow tier.
+# The embedding-similarity (IVF/ANN/dedup/serve) gates, the text gates
+# and the near-duplicate gates below run in the quick tier: they
+# re-prove the shared BLAS kernels of operators/similarity.py, the
+# shared text kernels of operators/textstats.py and the shared
+# near-duplicate kernels of operators/dedup.py against their oracles on
+# every plain test run (~80 s and ~61 s of Spark time at sf0.001 on 4
+# vCPUs for the first two).  Every other gate stays in the slow tier.
 _QUICK_GATES = {
     "cosine_topk_blas_embeddings",
     "ann_lsh_topk_embeddings",
@@ -3358,6 +3382,22 @@ _QUICK_GATES = {
     "langid_eval_docs",
     "knn_eval_embeddings",
     "classifier_summary_docs",
+    # the near-duplicate family of operators/dedup.py and the BPE trainer
+    "dedup_exact_docs",
+    "ngram_jaccard_docs",
+    "containment_pairs_docs",
+    "minhash_lsh_docs",
+    "incremental_dedup_docs",
+    "minhash_index_delete_docs",
+    "winnow_fingerprint_docs",
+    "cc_dedup_docs",
+    "decontaminate_docs",
+    "decontaminate_bloom_docs",
+    "decontaminate_cut_docs",
+    "streaming_decontaminate_docs",
+    "dup_span_docs",
+    "dup_span_cut_docs",
+    "bpe_train_docs",
 }
 
 

@@ -575,6 +575,76 @@ def test_minhash_index_delete_equals_rebuild(spark, sf_dir):
     assert matched.filter("corpus_id % 6 = 0").count() == 0
 
 
+def _planted_near_dups(spark):
+    """~30 tiny docs: distinct LCG word strings, each base followed by
+    planted near-duplicates (one word appended, one word replaced, five
+    words replaced — above, above and below a 0.7 3-gram Jaccard), one
+    exact duplicate, plus NULL, empty and shorter-than-n texts."""
+    pool = [f"w{i}" for i in range(40)]
+    x, rows = 11, []
+    for d in range(6):
+        words = []
+        for _ in range(24):
+            x = (x * 1103515245 + 12345) % (2 ** 31)
+            words.append(pool[(x >> 7) % len(pool)])
+        rows.append((d * 10, " ".join(words)))
+        rows.append((d * 10 + 1, " ".join(words + ["tail"])))
+        swapped = list(words)
+        swapped[12] = "zz"
+        rows.append((d * 10 + 2, " ".join(swapped)))
+        far = list(words)
+        for j in (2, 6, 10, 14, 18):
+            far[j] = f"q{j}"
+        rows.append((d * 10 + 3, " ".join(far)))
+    rows += [(90, rows[0][1]), (91, None), (92, ""), (93, "two words")]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_minhash_lsh_matches_exact_jaccard_tiny(spark):
+    """Quick-tier pin: on ~30 docs with planted near-duplicates the
+    banded MinHash pairs (prefilter + exact verify) equal exact
+    n-gram Jaccard pairing row for row, Jaccard values included."""
+    from dbt_core_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        ngram_jaccard_pairs,
+    )
+
+    df = _planted_near_dups(spark)
+    got = sorted(tuple(r) for r in minhash_lsh_pairs(df, threshold=0.7).collect())
+    exact = sorted(
+        tuple(r) for r in ngram_jaccard_pairs(df, threshold=0.7).collect())
+    assert got == exact
+    # the appended and single-swap copies and the exact duplicate are found
+    assert {(0, 1), (0, 2), (0, 90)} <= {(a, b) for a, b, _ in got}
+    assert (0, 3) not in {(a, b) for a, b, _ in got}  # five swaps: J < 0.7
+
+
+def test_minhash_index_delete_equals_rebuild_tiny(spark):
+    """Quick-tier pin of delete ≡ rebuild: tombstoning ids from a
+    MinHash index gives the same shingle and signature rows as indexing
+    the surviving docs.  Band rows and matches are functions of those
+    rows; the slow-tier pin checks them on the gate corpus."""
+    from dbt_core_spark.operators.dedup import (
+        minhash_index,
+        minhash_index_delete,
+    )
+
+    corpus = _planted_near_dups(spark).filter("doc_id % 10 != 1")
+    dead = corpus.filter("doc_id % 10 = 0").selectExpr("doc_id as id")
+    deleted = minhash_index_delete(minhash_index(corpus), dead)
+    rebuilt = minhash_index(corpus.filter("doc_id % 10 != 0"))
+
+    def rows(ix):
+        return sorted(
+            tuple(r[c] for c in sorted(ix.columns) if c != "shingles")
+            + (tuple(sorted(r["shingles"])),)
+            for r in ix.collect()
+        )
+
+    kept = rows(deleted)
+    assert kept == rows(rebuilt) and len(kept) > 0
+
+
 def test_minhash_index_delete_edges(spark):
     """Deleting every id empties the index; an empty tombstone list is
     the identity; ids absent from the index are ignored; the id column

@@ -71,3 +71,49 @@ def test_engine_uses_profile_target(tmp_path, spark):
         spark.sql(f"DROP DATABASE IF EXISTS {s} CASCADE")
         spark.sql(f"DROP DATABASE IF EXISTS {s}__sources CASCADE")
     assert load_profiles(root)["myproj"]["target"] == "dev"
+
+
+class _RecordingBuilder:
+    """Stands in for ``SparkSession.builder``: records the master and
+    conf get_spark asks for and starts no JVM."""
+
+    def __init__(self):
+        self.conf = {}
+
+    def appName(self, _name):
+        return self
+
+    def master(self, master):
+        self.conf["master"] = master
+        return self
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def getOrCreate(self):
+        from types import SimpleNamespace
+
+        return SimpleNamespace(
+            sparkContext=SimpleNamespace(setLogLevel=lambda _level: None))
+
+
+@pytest.mark.parametrize("env, expect", [(None, "5"), ("3", "3")])
+def test_get_spark_sizes_local_mode_to_host_cpus(monkeypatch, env, expect):
+    """Without SPARK_GRAFT_CPUS the local master and the shuffle
+    partition count follow the host CPU count; the variable overrides
+    both."""
+    from types import SimpleNamespace
+
+    from dbt_core_spark import session
+
+    rec = _RecordingBuilder()
+    monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=rec))
+    monkeypatch.setattr(session.os, "cpu_count", lambda: 5)
+    if env is None:
+        monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", env)
+    session.get_spark()
+    assert rec.conf["master"] == f"local[{expect}]"
+    assert rec.conf["spark.sql.shuffle.partitions"] == expect
