@@ -4,6 +4,12 @@
 Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
+``queries_profile`` holds each query's profile record (audit.SparkWork)
+from its last timed repeat: ``build_s`` (the gate function building its
+DataFrame, eager driver actions included), ``exec_s`` (the ``count()``
+action), and the jobs, stages, tasks, shuffle-write bytes and input
+bytes of both.  ``SPARK_GRAFT_ONLY=a,b`` limits the run to those gates.
+
 The headline set is a fixed 72-gate sample of the registry, kept
 unchanged so per-query medians stay comparable across BENCH records:
 heavy relational TPC-H, windows and time rollups, the engine
@@ -27,6 +33,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
+from dbt_core_spark.audit import read_spark_work, spark_work
 from dbt_core_spark.session import get_spark
 
 HEADLINE = [
@@ -190,6 +197,7 @@ def main() -> None:
     firsts: dict[str, float] = {}
     sigmas: dict[str, float] = {}
     noops: dict[str, float] = {}
+    profiles: dict[str, dict] = {}
     import gc
 
     for name in only or HEADLINE:
@@ -204,10 +212,16 @@ def main() -> None:
             # don't (ivfpq measured 2.5 s alone vs 6.9 s in-session)
             df = None
             gc.collect()
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            n = df.count()  # force full execution
-            samples.append(time.time() - t0)
+            with spark_work(spark) as work:
+                df = fn(spark, sf_dir)
+                work.mark("build")
+                n = df.count()  # force full execution
+                work.mark("exec")
+            samples.append(work.seconds("build") + work.seconds("exec"))
+        read_spark_work(spark, [work])
+        profiles[name] = {"build_s": round(work.seconds("build"), 3),
+                          "exec_s": round(work.seconds("exec"), 3),
+                          **work.adapter_response()}
         # first_s = iteration 1 (session-warm but query-cold) so both
         # cold/cold and median/median round-over-round deltas are
         # adjudicable from the durable record (r5 verdict item 3 —
@@ -234,7 +248,10 @@ def main() -> None:
             nsamples.sort()
             noops[name] = round(nsamples[len(nsamples) // 2], 3)
         spark.sparkContext.setJobDescription(None)
+        prof = profiles[name]
         print(f"# {name}: {times[name]}s ({n} rows) first={firsts[name]}s"
+              f" jobs={prof['jobs']} stages={prof['stages']}"
+              f" tasks={prof['tasks']}"
               + (f" sigma={sigmas[name]}s n={repeats}" if repeats > 1 else "")
               + (f" noop={noops[name]}s n={noop_repeats}" if nsamples else ""),
               file=sys.stderr)
@@ -305,6 +322,8 @@ def main() -> None:
         "parse_warm_ms_per_model": parse_warm_ms,
         "total_first_s": total_first,
         "queries_first": firsts,
+        # the last timed repeat's profile record per query
+        "queries_profile": profiles,
         # first-run > 5× median: name -> first/median ratio (box-load
         # artifacts; judge the steady state by `value`, the medians)
         "cold_outliers": outliers,

@@ -167,18 +167,23 @@ class Engine:
     def compile_analyses(self) -> dict[str, str]:
         """Compile analysis nodes without running them
         (ref: NodeType.Analysis — compile only)."""
+        relations = self._compile_relations()
+        return {
+            n.name: compile_node(self.manifest, n, self.spark, relations,
+                                 cli_vars=self.cli_vars)
+            for n in self.manifest.nodes.values()
+            if n.resource_type is NodeType.Analysis
+        }
+
+    def _compile_relations(self) -> dict[str, str]:
+        """Relations for compile-only paths: sources registered, and
+        every refable node resolved to its catalog name, built or not."""
         runner = self._runner()
         runner._prepare(None, None)
         for uid, n in self.manifest.nodes.items():
             if n.is_refable and not n.is_ephemeral:
                 runner.relations.setdefault(uid, runner.relation_for(n))
-        out = {}
-        for uid, n in self.manifest.nodes.items():
-            if n.resource_type is NodeType.Analysis:
-                out[n.name] = compile_node(
-                    self.manifest, n, self.spark, runner.relations,
-                    cli_vars=self.cli_vars)
-        return out
+        return runner.relations
 
     def _runner(self, full_refresh: bool = False, **kw) -> GraphRunner:
         kw.setdefault("event_manager", self.event_manager)
@@ -269,21 +274,28 @@ class Engine:
         return res
 
     def seed(self, select: Optional[str] = None) -> RunResults:
-        return self._runner().run(select=select, resource_types={NodeType.Seed})
+        res = self._runner().run(select=select, resource_types={NodeType.Seed})
+        self._write_artifacts(res)
+        return res
 
     def snapshot(self, select: Optional[str] = None) -> RunResults:
-        return self._runner().run(select=select, resource_types={NodeType.Snapshot})
+        res = self._runner().run(select=select,
+                                 resource_types={NodeType.Snapshot})
+        self._write_artifacts(res)
+        return res
 
     def test(self, select: Optional[str] = None,
              selector: Optional[str] = None, defer: bool = False,
              favor_state: bool = False, fail_fast: bool = False,
              warn_error: bool = False,
              indirect_selection: str = "eager") -> RunResults:
-        return self._runner(fail_fast=fail_fast, warn_error=warn_error,
-                            **self._defer_kw(defer, favor_state)).run(
+        res = self._runner(fail_fast=fail_fast, warn_error=warn_error,
+                           **self._defer_kw(defer, favor_state)).run(
             select=self._sel(select, selector),
             resource_types={NodeType.Test, NodeType.UnitTest},
             indirect_selection=indirect_selection)
+        self._write_artifacts(res)
+        return res
 
     def build(self, select: Optional[str] = None, full_refresh: bool = False,
               selector: Optional[str] = None, defer: bool = False,
@@ -327,14 +339,9 @@ class Engine:
             name="inline", package=self.project.name,
             resource_type=NodeType.SqlOperation, raw_code=sql,
         )
-        runner = self._runner()
-        runner._prepare(None, None)
         # inline SQL may ref anything already built; resolve via catalog names
-        for uid, n in self.manifest.nodes.items():
-            if n.is_refable and not n.is_ephemeral:
-                runner.relations.setdefault(uid, runner.relation_for(n))
-        return compile_node(self.manifest, node, self.spark, runner.relations,
-                            cli_vars=self.cli_vars)
+        return compile_node(self.manifest, node, self.spark,
+                            self._compile_relations(), cli_vars=self.cli_vars)
 
     def show(self, sql: str, limit: int = 5) -> DataFrame:
         """`dbt show --inline` (ref: task/show.py:19-58; default limit 5
@@ -511,6 +518,7 @@ class Engine:
                     event_time_end=_dtm.datetime.fromisoformat(b["start"]),
                 )
                 out.results.extend(res.results)
+        self._write_artifacts(out)
         return out
 
     def run_operation(self, macro_name: str, args: Optional[dict] = None):
@@ -589,20 +597,22 @@ class Engine:
         from dbt_core_spark.run.tasks import modified_nodes
 
         uids = modified_nodes(self.manifest, other)
-        if not uids:
-            return RunResults()
-        names = " ".join(
-            (self.manifest.nodes[u].name + ("+" if include_children else ""))
-            for u in uids if u in self.manifest.nodes
-        )
-        defer_relations = {
-            uid: n.relation_name
-            for uid, n in other.nodes.items()
-            if n.relation_name and uid not in uids
-        }
-        return self._runner(
-            defer_relations=defer_relations, favor_state=favor_state,
-        ).run(select=names)
+        res = RunResults()
+        if uids:
+            names = " ".join(
+                (self.manifest.nodes[u].name + ("+" if include_children else ""))
+                for u in uids if u in self.manifest.nodes
+            )
+            defer_relations = {
+                uid: n.relation_name
+                for uid, n in other.nodes.items()
+                if n.relation_name and uid not in uids
+            }
+            res = self._runner(
+                defer_relations=defer_relations, favor_state=favor_state,
+            ).run(select=names)
+        self._write_artifacts(res)
+        return res
 
     def drop_schema(self) -> None:
         self.spark.sql(f"DROP DATABASE IF EXISTS `{self.schema}` CASCADE")

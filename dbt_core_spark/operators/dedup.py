@@ -615,7 +615,7 @@ def decontaminate(
     the inner join; one corpus-side explode, no pairwise comparison.
     Returns (id, n_hits, sample_hit) per CONTAMINATED document —
     anti-join the ids to clean the corpus."""
-    corpus = df.select(F.col(id_col), _shingle_rows(text_col, n))
+    corpus = ensure_parallelism(df).select(F.col(id_col), _shingle_rows(text_col, n))
     return _hit_summary(
         corpus.join(_probe_shingles(probes, probe_text_col, n), "shingle", "inner"),
         id_col,

@@ -51,7 +51,9 @@ def write_perf_info(manifest, project_root: str) -> str:
 
 
 def write_run_results(results: "RunResults", path: str, elapsed: float | None = None) -> str:
-    """run_results.json analog (ref: artifacts/schemas/run/)."""
+    """run_results.json analog (ref: artifacts/schemas/run/): per node
+    the status, dbt's ``timing`` (compile/execute) and, as
+    ``adapter_response``, the node's Spark work (audit.SparkWork)."""
     doc = {
         "metadata": {
             "generated_at": _dt.datetime.now(_dt.timezone.utc).isoformat(),
@@ -69,6 +71,8 @@ def write_run_results(results: "RunResults", path: str, elapsed: float | None = 
                 "relation_name": r.relation,
                 "failures": r.failures,
                 "batch_results": r.batch_results,
+                "timing": r.timing,
+                "adapter_response": r.adapter_response,
             }
             for r in results.results
         ],
@@ -156,6 +160,8 @@ def load_run_results(path: str):
             relation=r.get("relation_name"),
             failures=r.get("failures"),
             batch_results=r.get("batch_results"),
+            timing=r.get("timing") or [],
+            adapter_response=r.get("adapter_response") or {},
         ))
     return out
 

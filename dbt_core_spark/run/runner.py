@@ -15,6 +15,11 @@ Spark-side concurrency: all workers share one SparkSession (job
 submission is thread-safe); each worker tags its jobs into a FAIR
 scheduler pool so concurrent model builds interleave on the cluster
 instead of convoying (SURVEY §4 "thread-pool pipelining").
+
+Each node runs inside an ``audit.spark_work`` record: its compile and
+execute phases become dbt's ``timing``, and once the pool drains one
+status-store read fills every node's ``adapter_response`` (jobs,
+stages, tasks, shuffle-write and input bytes).
 """
 
 from __future__ import annotations
@@ -23,12 +28,13 @@ import datetime as _dt
 import time
 import traceback
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any, Optional
 
 import networkx as nx
 from pyspark.sql import SparkSession
 
+from dbt_core_spark import audit as A
 from dbt_core_spark import events as E
 from dbt_core_spark.exceptions import ExecutionError
 from dbt_core_spark.operators import relations as R
@@ -52,6 +58,9 @@ class NodeResult:
     relation: Optional[str] = None
     failures: Optional[int] = None
     batch_results: Optional[list] = None
+    # dbt's TimingInfo list and the node's Spark work (audit.SparkWork)
+    timing: list = field(default_factory=list)
+    adapter_response: dict = field(default_factory=dict)
 
 
 @dataclass
@@ -189,6 +198,13 @@ class GraphRunner:
         self._run_hooks(self.on_run_start, "on-run-start")
         failed: set[str] = set()
         aborted: list[bool] = []  # non-empty once fail-fast tripped
+        works: list[tuple[NodeResult, A.SparkWork]] = []
+        sc = self.spark.sparkContext
+        # threads=1 runs the worker on the caller's thread: give it back
+        # the pool and description it had (the job group is restored per
+        # node by spark_work)
+        saved = {k: sc.getLocalProperty(k)
+                 for k in ("spark.scheduler.pool", "spark.job.description")}
 
         def worker() -> None:
             while True:
@@ -211,20 +227,24 @@ class GraphRunner:
                     )
                     queue.mark_done(uid)
                     continue
-                self.spark.sparkContext.setLocalProperty("spark.scheduler.pool", uid)
+                sc.setLocalProperty("spark.scheduler.pool", uid)
                 # query-comment analog (ref: config/project.py:633):
                 # tag Spark jobs with the node id for cluster-UI attribution
-                self.spark.sparkContext.setJobDescription(
-                    f"{self.manifest.project_name}: {uid}")
+                sc.setJobDescription(f"{self.manifest.project_name}: {uid}")
                 self._emit(E.node_start(
                     uid, resource_type=node.resource_type.value))
-                res = self._run_node(node)
+                with A.spark_work(self.spark) as work:
+                    # compile opens at zero length; a node with SQL to
+                    # compile extends it once that SQL is ready
+                    work.mark("compile")
+                    res = self._run_node(node, work)
+                    work.mark("execute")
                 if res.status == "warn" and self.warn_error:
                     # --warn-error: warnings are promoted to failures
                     # (ref: flags.WARN_ERROR)
-                    res = NodeResult(res.unique_id, "fail", res.execution_time,
-                                     res.message or "warning escalated by warn_error",
-                                     res.relation, res.failures, res.batch_results)
+                    res = replace(res, status="fail", message=res.message
+                                  or "warning escalated by warn_error")
+                res.timing = work.timing
                 if res.status in ("error", "fail"):
                     # mark every descendant once, before mark_done can
                     # release any of them (ref: runnable.py:445-458)
@@ -233,17 +253,27 @@ class GraphRunner:
                         aborted.append(True)
                 self._emit(E.node_finished(
                     uid, res.status,
-                    execution_time=round(res.execution_time, 3)))
+                    execution_time=round(res.execution_time, 3),
+                    timing=res.timing))
                 results.results.append(res)
+                works.append((res, work))
                 queue.mark_done(uid)
 
-        if self.threads <= 1:
-            worker()
-        else:
-            with ThreadPoolExecutor(max_workers=self.threads) as pool:
-                futs = [pool.submit(worker) for _ in range(self.threads)]
-                for f in futs:
-                    f.result()
+        try:
+            if self.threads <= 1:
+                worker()
+            else:
+                with ThreadPoolExecutor(max_workers=self.threads) as pool:
+                    futs = [pool.submit(worker) for _ in range(self.threads)]
+                    for f in futs:
+                        f.result()
+        finally:
+            for k, v in saved.items():
+                sc.setLocalProperty(k, v)
+        # one status-store read per run, after every node's jobs ended
+        A.read_spark_work(self.spark, [w for _, w in works])
+        for res, work in works:
+            res.adapter_response = work.adapter_response()
         self._run_hooks(self.on_run_end, "on-run-end")
         results.elapsed = time.time() - t0
         counts = {"pass": 0, "warn": 0, "error": 0, "skip": 0,
@@ -273,7 +303,7 @@ class GraphRunner:
 
     # -- node execution ------------------------------------------------------
 
-    def _run_node(self, node: Node) -> NodeResult:
+    def _run_node(self, node: Node, work: A.SparkWork) -> NodeResult:
         t0 = time.time()
         rel = self.relation_for(node)
         try:
@@ -284,6 +314,7 @@ class GraphRunner:
             elif node.resource_type is NodeType.Snapshot:
                 self.relations[node.unique_id] = rel
                 sql = self._compile(node)
+                work.mark("compile")
                 materialize_snapshot(self.spark, node, rel, sql)
                 status, msg = "success", "snapshot"
             elif node.resource_type is NodeType.UnitTest:
@@ -306,6 +337,7 @@ class GraphRunner:
                 )
             elif node.resource_type is NodeType.Test:
                 sql = self._compile(node)
+                work.mark("compile")
                 outcome = execute_test(
                     self.spark, node, sql, audit_schema=f"{self.schema}_dbt_test__audit"
                 )
@@ -317,15 +349,17 @@ class GraphRunner:
                 )
             elif node.language == "python":
                 mat = node.config.get("materialized")
+                sql = self._python_model_sql(node, rel)
+                work.mark("compile")
                 # the model's DataFrame lives only in this session, so a
                 # python model is never a view: table is the default
-                self._materialize(node, rel, "table" if mat == "view" else mat,
-                                  self._python_model_sql(node, rel))
+                self._materialize(node, rel, "table" if mat == "view" else mat, sql)
                 status, msg = "success", "python"
             else:
                 mat = node.config.get("materialized", "view")
                 if mat == "streaming_table":
                     sql = self._compile_with_stream_sources(node)
+                    work.mark("compile")
                     from dbt_core_spark.operators.contracts import enforce_contract
                     from dbt_core_spark.operators.streaming_table import (
                         materialize_streaming_table,
@@ -377,6 +411,7 @@ class GraphRunner:
                         and not self.full_refresh
                     )
                     sql = self._compile(node, is_incremental=is_inc)
+                    work.mark("compile")
                     self._materialize(node, rel, mat, sql)
                     status, msg = "success", mat
             self.relations[node.unique_id] = rel

@@ -1617,8 +1617,7 @@ def test_perceptron_weights_are_jobless(spark):
     """Every perceptron trainer returns its model as an Arrow-built
     LocalRelation, so the ``perceptron_apply*`` collect of it launches
     no Spark job."""
-    import uuid
-
+    from dbt_core_spark.audit import read_spark_work, spark_work
     from dbt_core_spark.operators.textstats import (
         perceptron_train,
         perceptron_train_averaged,
@@ -1628,20 +1627,16 @@ def test_perceptron_weights_are_jobless(spark):
     df = spark.createDataFrame(
         [(1, "good clean prose", 1, "en"), (2, "spam junk noise", -1, "de")],
         "doc_id long, text string, y int, lang string")
-    sc = spark.sparkContext
     for w in (perceptron_train(df, "y", dim=8, epochs=2),
               perceptron_train_averaged(df, "y", dim=8, epochs=2),
               perceptron_train_ovr(df, "lang", dim=8, epochs=2),
               perceptron_train_ovr(df, "lang", classes=[], dim=8)):
         plan = w._jdf.queryExecution().optimizedPlan()
         assert plan.nodeName() == "LocalRelation", plan.toString()
-        group = f"weights_{uuid.uuid4().hex[:8]}"
-        sc.setJobGroup(group, "perceptron weights")
-        try:
+        with spark_work(spark) as work:
             w.collect()
-        finally:
-            sc.setJobGroup(None, None)
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        read_spark_work(spark, [work])
+        assert work.jobs == 0
 
 
 @_mark_slow

@@ -345,6 +345,7 @@ def test_sort_by_and_analyze_configs(spark, schema, sf_dir):
 def test_relation_type_is_one_jobless_catalog_lookup(spark, schema):
     """relation_type answers from one catalog lookup, not a scan of the
     schema: right answers in a 24-relation schema, and no Spark job."""
+    from dbt_core_spark.audit import read_spark_work, spark_work
     from dbt_core_spark.operators import relations as R
 
     spark.sql(f"create database {schema}")
@@ -353,48 +354,40 @@ def test_relation_type_is_one_jobless_catalog_lookup(spark, schema):
         spark.sql(f"create view {schema}.v{i} as select 1 as id")
     tmp = f"tmp_{schema}"
     spark.createDataFrame([(1,)], "id int").createOrReplaceTempView(tmp)
-    sc = spark.sparkContext
-    group = f"relation_type_{schema}"
-    sc.setJobGroup(group, "relation_type lookups")
     try:
-        got = {rel: R.relation_type(spark, rel) for rel in (
-            f"{schema}.t3", f"{schema}.v7", f"{schema}.missing",
-            f"no_such_db_{schema}.t3", tmp)}
+        with spark_work(spark) as work:
+            got = {rel: R.relation_type(spark, rel) for rel in (
+                f"{schema}.t3", f"{schema}.v7", f"{schema}.missing",
+                f"no_such_db_{schema}.t3", tmp)}
     finally:
-        sc.setJobGroup(None, None)
         spark.catalog.dropTempView(tmp)
     assert got == {
         f"{schema}.t3": "table", f"{schema}.v7": "view",
         f"{schema}.missing": None, f"no_such_db_{schema}.t3": None,
         tmp: "table",  # temporary views keep mapping to "table"
     }
-    # job starts reach the status store through the listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    read_spark_work(spark, [work])
+    assert work.jobs == 0
 
 
 def test_partition_columns_is_jobless(spark, schema):
     """partition_columns reads the catalog's DESCRIBE TABLE answer:
     right columns for partitioned, unpartitioned and missing tables,
     and no Spark job (catalog.listColumns launches one or two)."""
+    from dbt_core_spark.audit import read_spark_work, spark_work
     from dbt_core_spark.operators import relations as R
 
     spark.sql(f"create database {schema}")
     spark.sql(f"create table {schema}.flat (id int, d string) using parquet")
     spark.sql(f"create table {schema}.part (id int, d string, h int) "
               "using parquet partitioned by (d, h)")
-    sc = spark.sparkContext
-    group = f"partition_columns_{schema}"
-    sc.setJobGroup(group, "partition_columns lookups")
-    try:
+    with spark_work(spark) as work:
         got = {rel: R.partition_columns(spark, rel) for rel in (
             f"{schema}.flat", f"{schema}.part", f"{schema}.missing")}
-    finally:
-        sc.setJobGroup(None, None)
     assert got == {f"{schema}.flat": [], f"{schema}.part": ["d", "h"],
                    f"{schema}.missing": []}
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    read_spark_work(spark, [work])
+    assert work.jobs == 0
 
 
 def test_inject_ctes_preserves_with_recursive():
@@ -512,3 +505,25 @@ def test_python_model_runs_llm_pipeline_operators(spark, schema, sf_dir):
     n_clean = eng.table("clean_corpus").count()
     assert 0 < n_clean <= n_docs
     assert eng.table("by_lang").count() >= 1
+
+
+def test_single_thread_run_restores_caller_properties(spark, schema):
+    """``threads=1`` runs the nodes on the caller's thread; afterwards
+    its scheduler pool, job description and job group are what they
+    were before the run."""
+    p = ProjectDef(name="leak")
+    p.models["v"] = "select 1 as id"
+    p.models["t"] = ("{{ config(materialized='table') }} "
+                     "select * from {{ ref('v') }}")
+    sc = spark.sparkContext
+    keys = ("spark.scheduler.pool", "spark.job.description",
+            "spark.jobGroup.id")
+    sc.setLocalProperty("spark.job.description", "caller")
+    sc.setLocalProperty("spark.jobGroup.id", "caller-group")
+    try:
+        before = {k: sc.getLocalProperty(k) for k in keys}
+        assert Engine(spark, p, schema=schema, threads=1).run().ok()
+        assert {k: sc.getLocalProperty(k) for k in keys} == before
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.jobGroup.id", None)

@@ -345,3 +345,96 @@ def test_parse_writes_perf_info(tmp_path, spark, schema):
         doc2 = json.load(f)
     assert doc2["node_count"] == 3
     assert "generated_at" in doc2["metadata"]
+
+
+def _record_project(root: str) -> str:
+    """A view, a table over it and a schema test on the table."""
+    _write(root, "dbt_project.yml", "name: rec\n")
+    _write(root, "models/v.sql", "select 1 as id union all select 2 as id")
+    _write(root, "models/t.sql", """
+        {{ config(materialized='table') }}
+        select id from {{ ref('v') }}
+    """)
+    _write(root, "models/schema.yml", """
+        models:
+          - name: t
+            columns:
+              - name: id
+                tests: [not_null]
+    """)
+    return root
+
+
+def _run_results(root: str) -> dict:
+    import json
+
+    with open(os.path.join(root, "target", "run_results.json")) as f:
+        return {r["unique_id"]: r for r in json.load(f)["results"]}
+
+
+def test_run_results_record_timing_and_spark_work(tmp_path, spark, schema):
+    """Every executed node's run_results.json entry carries dbt's
+    compile/execute ``timing`` and its Spark work as
+    ``adapter_response``: a table launches jobs, a view none, and a
+    second build counts only its own jobs.  NodeFinished carries the
+    same ``timing``."""
+    import datetime as dt
+
+    root = _record_project(str(tmp_path / "rec"))
+    seen = []
+    eng = Engine(spark, ProjectDef.from_dir(root), schema=schema,
+                 callbacks=[seen.append])
+    jsc = spark.sparkContext._jsc.sc()
+    store = jsc.statusStore()
+
+    def jobs():
+        """Every job the status store holds, newest first."""
+        jsc.listenerBus().waitUntilEmpty()
+        listed = store.jobsList(None)
+        return [listed.apply(i) for i in range(listed.size())]
+
+    keys = {"jobs", "stages", "tasks", "shuffle_write_bytes", "input_bytes"}
+    for _ in range(2):
+        before = {j.jobId() for j in jobs()}
+        assert eng.build().ok()
+        rr = _run_results(root)
+        assert {uid.split(".")[0] for uid in rr} == {"model", "test"}
+        for r in rr.values():
+            assert [t["name"] for t in r["timing"]] == ["compile", "execute"]
+            at = [dt.datetime.fromisoformat(t[k]) for t in r["timing"]
+                  for k in ("started_at", "completed_at")]
+            assert at == sorted(at), r["timing"]
+            assert set(r["adapter_response"]) == keys
+        assert rr["model.rec.t"]["adapter_response"]["jobs"] > 0
+        assert rr["model.rec.v"]["adapter_response"]["jobs"] == 0
+        # the build's grouped jobs are exactly its nodes' jobs: none
+        # from the previous build is counted again
+        assert sum(r["adapter_response"]["jobs"] for r in rr.values()) == sum(
+            1 for j in jobs()
+            if j.jobId() not in before and j.jobGroup().isDefined())
+    finished = [e for e in seen if e.name == "NodeFinished"]
+    assert len(finished) == 2 * len(rr)
+    assert all([t["name"] for t in e.data["timing"]] == ["compile", "execute"]
+               for e in finished)
+
+
+def test_test_verb_writes_run_results(tmp_path, spark, schema):
+    """``Engine.test()`` refreshes target/run_results.json with its test
+    nodes and their timing, and the artifact round-trips through
+    ``load_run_results``."""
+    from dbt_core_spark.run.artifacts import load_run_results
+
+    root = _record_project(str(tmp_path / "rec"))
+    eng = Engine(spark, ProjectDef.from_dir(root), schema=schema)
+    assert eng.run().ok()
+    res = eng.test()
+    assert res.ok()
+    rr = _run_results(root)
+    assert set(rr) == {r.unique_id for r in res.results}
+    assert {uid.split(".")[0] for uid in rr} == {"test"}
+    loaded = load_run_results(os.path.join(root, "target"))
+    for r in loaded.results:
+        assert [t["name"] for t in r.timing] == ["compile", "execute"]
+        assert r.timing == rr[r.unique_id]["timing"]
+        assert r.adapter_response == rr[r.unique_id]["adapter_response"]
+        assert r.adapter_response["jobs"] > 0

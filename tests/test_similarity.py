@@ -316,10 +316,9 @@ def test_tiny_index_state_is_jobless(spark):
     """``_materialize_tiny`` output and ``ivf_index_build`` centroids are
     Arrow-built LocalRelations: collecting them launches no job, so
     neither does building an ingest call against the build centroids."""
-    import uuid
-
     from pyspark.sql import functions as F
 
+    from dbt_core_spark.audit import read_spark_work, spark_work
     from dbt_core_spark.operators.similarity import (
         _materialize_tiny,
         ivf_index_append,
@@ -330,24 +329,20 @@ def test_tiny_index_state_is_jobless(spark):
     tiny = _materialize_tiny(df.groupBy((F.col("vec_id") % 4).alias("g"))
                              .agg(F.count("*").alias("n")))
     batch = df.filter("vec_id % 7 = 0")
-    sc = spark.sparkContext
 
     def jobs(fn):
-        group = f"tiny_{uuid.uuid4().hex[:8]}"
-        sc.setJobGroup(group, "tiny state")
-        try:
+        with spark_work(spark) as work:
             out = fn()
-        finally:
-            sc.setJobGroup(None, None)
-        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+        read_spark_work(spark, [work])
+        return out, work.jobs
 
     for frame in (tiny, cents):
         plan = frame._jdf.queryExecution().optimizedPlan()
         assert plan.nodeName() == "LocalRelation", plan.toString()
-        rows, ids = jobs(frame.collect)
-        assert rows and ids == []
-    assert jobs(lambda: ivf_index_append(cents, batch))[1] == []
-    assert jobs(lambda: semantic_dedup_incremental(cents, assigns, batch))[1] == []
+        rows, n_jobs = jobs(frame.collect)
+        assert rows and n_jobs == 0
+    assert jobs(lambda: ivf_index_append(cents, batch))[1] == 0
+    assert jobs(lambda: semantic_dedup_incremental(cents, assigns, batch))[1] == 0
 
 
 @_mark_slow
